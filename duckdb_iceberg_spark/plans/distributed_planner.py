@@ -24,16 +24,14 @@ from ..metadata import manifest as mf
 from ..metadata.table_metadata import Snapshot, TableMetadata
 from . import predicates as P
 from .scan_plan import (
-    FileScanTask,
     PartitionSpec,
     ScanPlan,
+    _assemble_tasks,
     _file_matches,
+    _live_entries,
     _localize,
     _manifest_matches,
-    _eq_delete_bounds_overlap,
-    _eq_delete_matches_scan_filter,
-    _partitions_overlap,
-    _pos_delete_path_overlap,
+    _scan_schema,
     plan_scan,
     strip_file_stats,
 )
@@ -63,7 +61,8 @@ def plan_scan_distributed(
     ``_file_matches``."""
     pred = P.parse_where(where)
     if snapshot is None or not snapshot.manifest_list:
-        return plan_scan(tm, snapshot, where, snapshot_schema=snapshot_schema)
+        return plan_scan(tm, snapshot, where, snapshot_schema=snapshot_schema,
+                         lean=lean)
 
     ml_path = _localize(tm, snapshot.manifest_list)
     manifests = mf.read_manifest_list(ml_path)
@@ -81,15 +80,13 @@ def plan_scan_distributed(
         return plan_scan(tm, snapshot, where, snapshot_schema=snapshot_schema,
                          lean=lean)
 
-    schema_json = tm.schemas.get(
-        snapshot.schema_id if snapshot.schema_id is not None else tm.current_schema_id,
-        tm.schemas[tm.current_schema_id],
-    )
+    scan_schema_id, schema_json = _scan_schema(tm, snapshot, snapshot_schema)
     tm_blob = pickle.dumps(tm)
     pred_blob = pickle.dumps(pred)
     schema_blob = pickle.dumps(schema_json)
 
-    def prune_manifest(item: tuple[str, int, Optional[int], Optional[int]]) -> list[bytes]:
+    def prune_manifest(
+            item: tuple[str, int, Optional[int], Optional[int]]) -> tuple[int, bytes]:
         path, spec_id, m_seq, m_first_row_id = item
         tm_l: TableMetadata = pickle.loads(tm_blob)
         pred_l = pickle.loads(pred_blob)
@@ -100,13 +97,9 @@ def plan_scan_distributed(
         # offsets depend on every preceding ADDED entry
         mf.inherit_first_row_ids(entries, m_first_row_id)
         out = []
-        for e in entries:
-            if e.status == mf.STATUS_DELETED:
-                continue
-            if e.sequence_number is None:
-                e.sequence_number = m_seq
-            if e.file_sequence_number is None:
-                e.file_sequence_number = m_seq
+        live = 0
+        for e in _live_entries(entries, m_seq):
+            live += 1
             if not _file_matches(e, spec, tm_l, pred_l, schema_l):
                 continue
             if lean:
@@ -119,8 +112,9 @@ def plan_scan_distributed(
         # ONE blob per manifest (r15): per-entry pickles made the driver
         # hold 1e6 tiny bytes objects next to their unpickled twins —
         # batching + the pop()-streaming consume below cut the 1e6-entry
-        # driver peak from 1.66 GB to under budget
-        return [pickle.dumps(out)] if out else []
+        # driver peak from 1.66 GB to under budget. ``live`` counts the
+        # entries file pruning considered.
+        return live, pickle.dumps(out)
 
     items = [(m.manifest_path, m.partition_spec_id, m.sequence_number,
               m.first_row_id)
@@ -128,7 +122,7 @@ def plan_scan_distributed(
     n_slices = min(len(items), spark.sparkContext.defaultParallelism * 2)
     survivors_raw = (
         spark.sparkContext.parallelize(items, n_slices)
-        .flatMap(prune_manifest)
+        .map(prune_manifest)
         .collect()
     )
 
@@ -136,75 +130,31 @@ def plan_scan_distributed(
     pos_deletes: list[tuple[mf.ManifestEntry, int]] = []
     eq_deletes: list[tuple[mf.ManifestEntry, int]] = []
     for m in delete_manifests:
-        for e in mf.read_manifest(_localize(tm, m.manifest_path)):
-            if e.status == mf.STATUS_DELETED:
-                continue
-            if e.sequence_number is None:
-                e.sequence_number = m.sequence_number
-            if e.file_sequence_number is None:
-                e.file_sequence_number = m.sequence_number
+        for e in _live_entries(mf.read_manifest(
+                _localize(tm, m.manifest_path)), m.sequence_number):
             if e.data_file.content == mf.CONTENT_EQUALITY_DELETES:
                 eq_deletes.append((e, m.partition_spec_id))
             else:
                 pos_deletes.append((e, m.partition_spec_id))
 
-    tasks: list[FileScanTask] = []
-    from ..io import normalize_path as _np
-
-    from .scan_plan import _DeleteIndex
-
-    pos_idx = _DeleteIndex(pos_deletes)
-    eq_idx = _DeleteIndex(eq_deletes)
+    files_total = sum(live for live, _ in survivors_raw)
 
     def _stream_entries():
         # consume blobs back-to-front, releasing each after unpickling —
         # the collect result and the growing task list never coexist in
         # full (the r15 1e6-entry driver-peak fix)
         while survivors_raw:
-            for pair in pickle.loads(survivors_raw.pop()):
-                yield pair
+            yield from pickle.loads(survivors_raw.pop()[1])
 
-    for e, spec_id in _stream_entries():
-        orig_path = e.data_file.file_path
-        e.data_file.file_path = _localize(tm, e.data_file.file_path)
-        data_paths = (orig_path, e.data_file.file_path)
-        task = FileScanTask(
-            data_file=e.data_file,
-            sequence_number=e.sequence_number or 0,
-            spec_id=spec_id,
-            first_row_id=e.data_file.first_row_id,
-        )
-        data_seq = e.sequence_number or 0
-        norm_paths = {_np(p) for p in data_paths}
-        for de, dspec in pos_idx.candidates(e, spec_id, norm_paths):
-            if (de.sequence_number or 0) >= data_seq \
-                    and _partitions_overlap(e, de, spec_id, dspec, data_paths) \
-                    and _pos_delete_path_overlap(de, data_paths):
-                df2 = de.data_file
-                df2.file_path = _localize(tm, df2.file_path)
-                if df2.referenced_data_file:
-                    df2.referenced_data_file = _localize(
-                        tm, df2.referenced_data_file)
-                task.positional_deletes.append(df2)
-        for de, dspec in eq_idx.candidates(e, spec_id, norm_paths):
-            if (de.sequence_number or 0) > data_seq \
-                    and _partitions_overlap(e, de, spec_id, dspec, data_paths) \
-                    and _eq_delete_bounds_overlap(e, de, tm.schema_json()) \
-                    and _eq_delete_matches_scan_filter(de, pred, tm.schema_json()):
-                df2 = de.data_file
-                df2.file_path = _localize(tm, df2.file_path)
-                task.equality_deletes.append(((de.sequence_number or 0), df2))
-        tasks.append(task)
-
+    tasks = _assemble_tasks(tm, _stream_entries(), pos_deletes, eq_deletes,
+                            pred, schema_json, lean=lean)
     stats = {
         "manifests_total": len(manifests),
         "manifests_pruned": pruned,
-        "files_total": len(tasks),
-        "files_pruned": 0,  # executor-side pruning already applied
+        "files_total": files_total,
+        "files_pruned": files_total - len(tasks),
         "delete_files": len(pos_deletes) + len(eq_deletes),
         "distributed_manifests": len(data_manifests),
     }
     tasks.sort(key=lambda t: t.data_file.file_path)  # determinism across runs
-    return ScanPlan(tm, snapshot, tasks, where,
-                    snapshot.schema_id if snapshot.schema_id is not None else None,
-                    stats)
+    return ScanPlan(tm, snapshot, tasks, where, scan_schema_id, stats)

@@ -631,6 +631,11 @@ class _DeleteIndex:
         return out
 
 
+_STAT_FIELDS = ("column_sizes", "value_counts", "null_value_counts",
+                "nan_value_counts", "lower_bounds", "upper_bounds",
+                "split_offsets")
+
+
 def strip_file_stats(df: "mf.DataFile") -> "mf.DataFile":
     """Copy of a pruning-complete DataFile without its per-column stat
     maps (r15 — VERDICT r14 task 2). Once a file is planned IN, the read
@@ -640,10 +645,124 @@ def strip_file_stats(df: "mf.DataFile") -> "mf.DataFile":
     an in-place strip — manifest-cache objects are shared."""
     import dataclasses
 
-    return dataclasses.replace(
-        df, column_sizes=None, value_counts=None, null_value_counts=None,
-        nan_value_counts=None, lower_bounds=None, upper_bounds=None,
-        split_offsets=None)
+    if all(getattr(df, f) is None for f in _STAT_FIELDS):
+        return df  # already stripped (the distributed planner's executors)
+    return dataclasses.replace(df, **dict.fromkeys(_STAT_FIELDS))
+
+
+def _check_delete_format(d: mf.DataFile) -> None:
+    # r13: ORC/Avro delete files read through the arrow plane's
+    # format routing (sources/scan.py _read_delete_files) — beyond
+    # the reference, which refuses everything non-parquet/puffin
+    # (iceberg_delete_file_scanner.cpp:393-396)
+    if (d.file_format or "PARQUET").lower() not in (
+            "parquet", "puffin", "orc", "avro"):
+        raise NotImplementedError(
+            f"File format '{d.file_format}' not supported for deletes, "
+            "only supports 'parquet', 'puffin', 'orc' and 'avro'")
+
+
+def _scan_schema(tm: TableMetadata, snapshot: Snapshot,
+                 snapshot_schema: bool | None) -> tuple[int, dict]:
+    """(schema id, schema JSON) a scan of ``snapshot`` reads with.
+
+    Latest-snapshot reads resolve against the table's CURRENT schema (a
+    DDL-only commit advances current-schema-id without a new snapshot);
+    the snapshot's schema-id applies to explicit (time-travel) lookups.
+    ``snapshot_schema=None`` infers which one this is."""
+    if snapshot_schema is None:
+        cur = tm.current_snapshot()
+        snapshot_schema = not (
+            cur is not None and snapshot.snapshot_id == cur.snapshot_id)
+    if snapshot_schema and snapshot.schema_id is not None:
+        scan_schema_id = snapshot.schema_id
+    else:
+        scan_schema_id = tm.current_schema_id
+    return scan_schema_id, tm.schemas.get(
+        scan_schema_id, tm.schemas[tm.current_schema_id])
+
+
+def _live_entries(entries, manifest_seq: Optional[int]):
+    """The manifest's non-deleted entries, with null sequence numbers
+    inherited from the manifest (Iceberg spec: sequence-number
+    inheritance)."""
+    for e in entries:
+        if e.status == mf.STATUS_DELETED:
+            continue
+        if e.sequence_number is None:
+            e.sequence_number = manifest_seq
+        if e.file_sequence_number is None:
+            e.file_sequence_number = manifest_seq
+        yield e
+
+
+def _assemble_tasks(tm: TableMetadata, entries, pos_deletes: list,
+                    eq_deletes: list, pred, schema_json: dict, *,
+                    lean: bool = False) -> list[FileScanTask]:
+    """FileScanTasks for the ``(entry, spec_id)`` data entries that
+    survived file pruning: data-format check, path localization and
+    delete attachment. Both planners (``plan_scan`` and the executor-side
+    ``plan_scan_distributed``) assemble their tasks here."""
+    from ..io import normalize_path
+
+    has_deletes = bool(pos_deletes or eq_deletes)
+    pos_idx = _DeleteIndex(pos_deletes)
+    eq_idx = _DeleteIndex(eq_deletes)
+    tasks: list[FileScanTask] = []
+    for e, spec_id in entries:
+        fmt = (e.data_file.file_format or "PARQUET").lower()
+        if fmt not in ("parquet", "orc", "avro"):
+            # reference refuses everything non-parquet
+            # (iceberg_multi_file_list.cpp:528-529); we additionally read
+            # ORC through Spark's native source and Avro data files
+            # through the arrow plane's pure-Python codec (r12)
+            raise NotImplementedError(
+                f"File format '{e.data_file.file_format}' not supported, "
+                "only supports 'parquet', 'orc' and 'avro' currently")
+        orig_path = e.data_file.file_path
+        e.data_file.file_path = _localize(tm, e.data_file.file_path)
+        task = FileScanTask(
+            data_file=(strip_file_stats(e.data_file) if lean
+                       else e.data_file),
+            sequence_number=e.sequence_number or 0,
+            spec_id=spec_id,
+            first_row_id=e.data_file.first_row_id,
+        )
+        tasks.append(task)
+        if not has_deletes:
+            continue
+        data_paths = (orig_path, e.data_file.file_path)
+        data_seq = e.sequence_number or 0
+        norm_paths = {normalize_path(p) for p in data_paths}
+        for de, dspec in pos_idx.candidates(e, spec_id, norm_paths):
+            # positional deletes apply at delete.seq >= data.seq
+            # (reference: iceberg_file_pruner.cpp:340-356)
+            if (de.sequence_number or 0) >= data_seq \
+                    and _partitions_overlap(e, de, spec_id, dspec, data_paths) \
+                    and _pos_delete_path_overlap(de, data_paths):
+                df2 = de.data_file
+                _check_delete_format(df2)
+                df2.file_path = _localize(tm, df2.file_path)
+                if df2.referenced_data_file:
+                    # keep the DV ref joinable against the localized scan
+                    # file column (moved tables record relative refs)
+                    df2.referenced_data_file = _localize(
+                        tm, df2.referenced_data_file)
+                task.positional_deletes.append(
+                    strip_file_stats(df2) if lean else df2)
+        for de, dspec in eq_idx.candidates(e, spec_id, norm_paths):
+            # equality deletes apply strictly after: delete.seq > data.seq
+            if (de.sequence_number or 0) > data_seq \
+                    and _partitions_overlap(e, de, spec_id, dspec, data_paths) \
+                    and _eq_delete_bounds_overlap(e, de, schema_json) \
+                    and _eq_delete_matches_scan_filter(de, pred, schema_json):
+                df2 = de.data_file
+                _check_delete_format(df2)
+                df2.file_path = _localize(tm, df2.file_path)
+                task.equality_deletes.append(
+                    ((de.sequence_number or 0),
+                     strip_file_stats(df2) if lean else df2))
+    return tasks
 
 
 def plan_scan(
@@ -692,17 +811,6 @@ def _plan_scan(
     manifests = manifests_for_snapshot(tm, snapshot)
     stats["manifests_total"] = len(manifests)
 
-    def _check_delete_format(d: mf.DataFile) -> None:
-        # r13: ORC/Avro delete files read through the arrow plane's
-        # format routing (sources/scan.py _read_delete_files) — beyond
-        # the reference, which refuses everything non-parquet/puffin
-        # (iceberg_delete_file_scanner.cpp:393-396)
-        if (d.file_format or "PARQUET").lower() not in (
-                "parquet", "puffin", "orc", "avro"):
-            raise NotImplementedError(
-                f"File format '{d.file_format}' not supported for deletes, "
-                "only supports 'parquet', 'puffin', 'orc' and 'avro'")
-
     data_entries: list[tuple[mf.ManifestEntry, int]] = []  # (entry, spec_id)
     pos_deletes: list[tuple[mf.ManifestEntry, int]] = []
     eq_deletes: list[tuple[mf.ManifestEntry, int]] = []
@@ -720,13 +828,7 @@ def _plan_scan(
         entries = mf.read_manifest(_localize(tm, m.manifest_path))
         if m.content == mf.MANIFEST_DATA:
             mf.inherit_first_row_ids(entries, m.first_row_id)
-        for e in entries:
-            if e.status == mf.STATUS_DELETED:
-                continue
-            if e.sequence_number is None:
-                e.sequence_number = m.sequence_number
-            if e.file_sequence_number is None:
-                e.file_sequence_number = m.sequence_number
+        for e in _live_entries(entries, m.sequence_number):
             content = e.data_file.content
             if m.content == mf.MANIFEST_DELETES or content in (
                 mf.CONTENT_POSITION_DELETES, mf.CONTENT_EQUALITY_DELETES
@@ -741,27 +843,14 @@ def _plan_scan(
     stats["files_total"] = len(data_entries)
     stats["delete_files"] = len(pos_deletes) + len(eq_deletes)
 
-    # Latest-snapshot reads resolve against the table's CURRENT schema (a
-    # DDL-only commit advances current-schema-id without a new snapshot);
-    # the snapshot's schema-id applies to explicit (time-travel) lookups.
-    if snapshot_schema is None:
-        cur = tm.current_snapshot()
-        snapshot_schema = not (
-            cur is not None and snapshot.snapshot_id == cur.snapshot_id)
-    if snapshot_schema and snapshot.schema_id is not None:
-        scan_schema_id = snapshot.schema_id
-    else:
-        scan_schema_id = tm.current_schema_id
-    schema_json = tm.schemas.get(scan_schema_id, tm.schemas[tm.current_schema_id])
+    scan_schema_id, schema_json = _scan_schema(tm, snapshot, snapshot_schema)
 
-    tasks: list[FileScanTask] = []
-    from ..io import normalize_path as _np
-
-    pos_idx = _DeleteIndex(pos_deletes)
-    eq_idx = _DeleteIndex(eq_deletes)
-    for e, spec_id in data_entries:
-        spec = tm.partition_specs.get(spec_id, PartitionSpec(spec_id, []))
-        if not _file_matches(e, spec, tm, pred, schema_json):
+    def _surviving():
+        for e, spec_id in data_entries:
+            spec = tm.partition_specs.get(spec_id, PartitionSpec(spec_id, []))
+            if _file_matches(e, spec, tm, pred, schema_json):
+                yield e, spec_id
+                continue
             stats["files_pruned"] += 1
             if _log.isEnabledFor(logging.DEBUG):
                 _log.debug(
@@ -769,58 +858,9 @@ def _plan_scan(
                     "transform [%s] or column bounds does not match filter "
                     "%r", e.data_file.file_path,
                     ", ".join(f.transform for f in spec.fields), where)
-            continue
-        fmt = (e.data_file.file_format or "PARQUET").lower()
-        if fmt not in ("parquet", "orc", "avro"):
-            # reference refuses everything non-parquet
-            # (iceberg_multi_file_list.cpp:528-529); we additionally read
-            # ORC through Spark's native source and Avro data files
-            # through the arrow plane's pure-Python codec (r12)
-            raise NotImplementedError(
-                f"File format '{e.data_file.file_format}' not supported, "
-                "only supports 'parquet', 'orc' and 'avro' currently")
-        orig_path = e.data_file.file_path
-        e.data_file.file_path = _localize(tm, e.data_file.file_path)
-        data_paths = (orig_path, e.data_file.file_path)
-        task = FileScanTask(
-            data_file=(strip_file_stats(e.data_file) if lean
-                       else e.data_file),
-            sequence_number=e.sequence_number or 0,
-            spec_id=spec_id,
-            first_row_id=e.data_file.first_row_id,
-        )
-        data_seq = e.sequence_number or 0
-        norm_paths = {_np(p) for p in data_paths}
-        for de, dspec in pos_idx.candidates(e, spec_id, norm_paths):
-            # positional deletes apply at delete.seq >= data.seq
-            # (reference: iceberg_file_pruner.cpp:340-356)
-            if (de.sequence_number or 0) >= data_seq \
-                    and _partitions_overlap(e, de, spec_id, dspec, data_paths) \
-                    and _pos_delete_path_overlap(de, data_paths):
-                df2 = de.data_file
-                _check_delete_format(df2)
-                df2.file_path = _localize(tm, df2.file_path)
-                if df2.referenced_data_file:
-                    # keep the DV ref joinable against the localized scan
-                    # file column (moved tables record relative refs)
-                    df2.referenced_data_file = _localize(
-                        tm, df2.referenced_data_file)
-                task.positional_deletes.append(
-                    strip_file_stats(df2) if lean else df2)
-        for de, dspec in eq_idx.candidates(e, spec_id, norm_paths):
-            # equality deletes apply strictly after: delete.seq > data.seq
-            if (de.sequence_number or 0) > data_seq \
-                    and _partitions_overlap(e, de, spec_id, dspec, data_paths) \
-                    and _eq_delete_bounds_overlap(e, de, schema_json) \
-                    and _eq_delete_matches_scan_filter(de, pred, schema_json):
-                df2 = de.data_file
-                _check_delete_format(df2)
-                df2.file_path = _localize(tm, df2.file_path)
-                task.equality_deletes.append(
-                    ((de.sequence_number or 0),
-                     strip_file_stats(df2) if lean else df2))
-        tasks.append(task)
 
+    tasks = _assemble_tasks(tm, _surviving(), pos_deletes, eq_deletes, pred,
+                            schema_json, lean=lean)
     plan = ScanPlan(tm, snapshot, tasks, where, scan_schema_id, stats)
     stats["estimated_rows"] = plan.estimated_row_count()
     return plan

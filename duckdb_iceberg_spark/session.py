@@ -145,6 +145,12 @@ def get_spark(
         # any cluster size, so this is not a local-mode tune.
         .config("spark.python.sql.dataFrameDebugging.enabled",
                 os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"))
+        # Python workers import pyspark from the installed package rather
+        # than Spark's pyspark.zip: each task's importlib.invalidate_caches()
+        # re-reads every cached zip's central directory (Python 3.11: about
+        # 250 ms per task on a 4-vCPU VM). Falls back to Spark's path
+        # unless the installed versions match the archives' (see _pydaemon).
+        .config("spark.python.daemon.module", "duckdb_iceberg_spark._pydaemon")
     )
     scratch = _scratch_dir()
     if scratch:

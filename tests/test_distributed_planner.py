@@ -1,6 +1,9 @@
 """Distributed manifest pruning must agree exactly with the driver planner."""
 
+import pytest
+
 from duckdb_iceberg_spark import write_iceberg
+from duckdb_iceberg_spark.metadata import manifest as mf
 from duckdb_iceberg_spark.metadata.table_metadata import load_table_metadata
 from duckdb_iceberg_spark.plans.distributed_planner import plan_scan_distributed
 from duckdb_iceberg_spark.plans.scan_plan import plan_scan
@@ -31,11 +34,53 @@ def test_distributed_matches_driver_planner(spark, tmp_path):
         dist = plan_scan_distributed(spark, tm, snap, where, manifest_threshold=4)
         assert dist.stats["distributed_manifests"] >= 4
         assert _file_sets(dist) == _file_sets(driver), where
+        for k in ("files_total", "files_pruned"):
+            assert dist.stats[k] == driver.stats[k], (where, k)
+    # the file-level predicates above really prune
+    assert plan_scan(tm, snap, "id >= 800").stats["files_pruned"] == 8
 
     dist = plan_scan_distributed(spark, tm, snap, "id >= 800", manifest_threshold=4)
     assert len(dist.tasks) == 4  # files 800-1199 only
     got = sorted(r.id for r in scan_to_dataframe(spark, dist).collect())
     assert got == list(range(800, 1200))
+
+
+def test_distributed_rejects_unsupported_data_format(spark, tmp_path):
+    """Both planners assemble tasks through one loop, so an unsupported
+    data-file format fails the executor-side plan exactly like the
+    driver-side one."""
+    loc = str(tmp_path / "t_fmt")
+    _many_manifest_table(spark, loc, appends=3)
+    tm = load_table_metadata(loc)
+    snap = tm.select_snapshot()
+    m = mf.read_manifest_list(snap.manifest_list)[0]
+    entries = mf.read_manifest(m.manifest_path)
+    entries[0].data_file.file_format = "JSON"
+    mf.write_manifest(m.manifest_path, entries, tm,
+                      tm.partition_specs[m.partition_spec_id])
+    mf.clear_manifest_cache()
+
+    msg = "File format 'JSON' not supported"
+    with pytest.raises(NotImplementedError, match=msg):
+        plan_scan(tm, snap)
+    with pytest.raises(NotImplementedError, match=msg):
+        plan_scan_distributed(spark, tm, snap, manifest_threshold=0)
+
+
+def test_distributed_reads_current_schema_after_ddl(spark, tmp_path):
+    """A latest-snapshot scan resolves against the table's current schema
+    on both planners, so a column added by a DDL-only commit shows up."""
+    from duckdb_iceberg_spark.sources.ddl import add_column
+
+    loc = str(tmp_path / "t_ddl")
+    _many_manifest_table(spark, loc, appends=3)
+    add_column(loc, "extra", "long")
+    tm = load_table_metadata(loc)
+    snap = tm.select_snapshot()
+    driver = plan_scan(tm, snap)
+    dist = plan_scan_distributed(spark, tm, snap, manifest_threshold=0)
+    assert dist.schema_id == driver.schema_id == tm.current_schema_id
+    assert "extra" in scan_to_dataframe(spark, dist).columns
 
 
 def test_distributed_fallback_below_threshold(spark, tmp_path):
