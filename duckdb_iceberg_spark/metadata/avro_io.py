@@ -12,8 +12,9 @@ subset of Avro 1.11 needed for Iceberg metadata:
 - types: null, boolean, int, long (zigzag varint), float, double, bytes,
   string, fixed, enum, array, map, union, record
 
-Decoding is *writer-schema driven* and returns plain dicts; encoding takes a
-schema dict + dicts. Iceberg manifests are small (KBs-MBs) so driver-side
+Decoding is *writer-schema driven*: each writer schema compiles once into a
+reader (cached) that returns plain dicts; encoding takes a schema dict +
+dicts. Iceberg manifests are small (KBs-MBs) so driver-side
 Python decode is fine; at huge scale manifests can instead be read
 distributed (see plans/pruner.py notes).
 """
@@ -25,6 +26,8 @@ import json
 import os
 import struct
 import zlib
+from collections import OrderedDict
+from threading import Lock
 from typing import Any, BinaryIO, Iterable, Iterator
 
 MAGIC = b"Obj\x01"
@@ -47,7 +50,7 @@ def _write_long(out: io.BytesIO, n: int) -> None:
             break
 
 
-def _read_long(buf: memoryview, pos: int) -> tuple[int, int]:
+def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
     shift = 0
     acc = 0
     while True:
@@ -70,94 +73,207 @@ def _write_str(out: io.BytesIO, s: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# schema-driven decode
+# schema-driven decode: one compiled reader per writer schema
 # ---------------------------------------------------------------------------
+#
+# A reader is a closure ``read(buf, pos) -> (value, new_pos)`` over a
+# ``bytes`` buffer, built once per writer schema by walking the schema a
+# single time; decoding then dispatches on nothing per value. Readers are
+# closures, never source generated from the (file-supplied) schema text.
 
-class _Decoder:
-    __slots__ = ("buf", "pos")
+_unpack_float = struct.Struct("<f").unpack_from
+_unpack_double = struct.Struct("<d").unpack_from
 
-    def __init__(self, data: bytes) -> None:
-        self.buf = memoryview(data)
-        self.pos = 0
 
-    def long(self) -> int:
-        v, self.pos = _read_long(self.buf, self.pos)
-        return v
+def _read_long_fast(buf: bytes, pos: int) -> tuple[int, int]:
+    b = buf[pos]
+    if b < 0x80:  # 1-byte varint: every small int, length and union index
+        return (b >> 1) ^ -(b & 1), pos + 1
+    return _read_long(buf, pos)
 
-    def raw(self, n: int) -> bytes:
-        b = bytes(self.buf[self.pos : self.pos + n])
-        self.pos += n
-        return b
 
-    def decode(self, schema: Any) -> Any:
-        if isinstance(schema, str):
-            t = schema
-        elif isinstance(schema, list):  # union
-            idx = self.long()
-            return self.decode(schema[idx])
-        else:
-            t = schema["type"]
+def _read_null(buf: bytes, pos: int) -> tuple[None, int]:
+    return None, pos
 
-        if t == "null":
-            return None
-        if t == "boolean":
-            b = self.buf[self.pos]
-            self.pos += 1
-            return b != 0
-        if t in ("int", "long"):
-            return self.long()
-        if t == "float":
-            (v,) = struct.unpack_from("<f", self.buf, self.pos)
-            self.pos += 4
-            return v
-        if t == "double":
-            (v,) = struct.unpack_from("<d", self.buf, self.pos)
-            self.pos += 8
-            return v
-        if t == "bytes":
-            return self.raw(self.long())
-        if t == "string":
-            return self.raw(self.long()).decode("utf-8")
-        if t == "fixed":
-            return self.raw(schema["size"])
-        if t == "enum":
-            return schema["symbols"][self.long()]
-        if t == "array":
-            items = schema["items"]
-            out = []
-            while True:
-                n = self.long()
-                if n == 0:
-                    break
-                if n < 0:
-                    self.long()  # block byte size, unused
-                    n = -n
-                for _ in range(n):
-                    out.append(self.decode(items))
-            return out
-        if t == "map":
-            values = schema["values"]
-            out_m: dict[str, Any] = {}
-            while True:
-                n = self.long()
-                if n == 0:
-                    break
-                if n < 0:
-                    self.long()
-                    n = -n
-                for _ in range(n):
-                    k = self.raw(self.long()).decode("utf-8")
-                    out_m[k] = self.decode(values)
-            return out_m
-        if t == "record":
-            rec = {}
-            for f in schema["fields"]:
-                rec[f["name"]] = self.decode(f["type"])
-            return rec
-        # nested named-type reference or {"type": {...}} wrapper
-        if isinstance(t, (dict, list)):
-            return self.decode(t)
+
+def _read_boolean(buf: bytes, pos: int) -> tuple[bool, int]:
+    return buf[pos] != 0, pos + 1
+
+
+def _read_float(buf: bytes, pos: int) -> tuple[float, int]:
+    return _unpack_float(buf, pos)[0], pos + 4
+
+
+def _read_double(buf: bytes, pos: int) -> tuple[float, int]:
+    return _unpack_double(buf, pos)[0], pos + 8
+
+
+def _read_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
+    n, pos = _read_long_fast(buf, pos)
+    end = pos + n
+    return buf[pos:end], end
+
+
+def _read_string(buf: bytes, pos: int) -> tuple[str, int]:
+    n, pos = _read_long_fast(buf, pos)
+    end = pos + n
+    return buf[pos:end].decode("utf-8"), end
+
+
+_PRIMITIVE_READERS = {
+    "null": _read_null,
+    "boolean": _read_boolean,
+    "int": _read_long_fast,
+    "long": _read_long_fast,
+    "float": _read_float,
+    "double": _read_double,
+    "bytes": _read_bytes,
+    "string": _read_string,
+}
+
+
+def _is_null(schema: Any) -> bool:
+    return schema == "null" or (isinstance(schema, dict)
+                                and schema.get("type") == "null")
+
+
+def _compile(schema: Any):
+    """The reader for one (sub)schema."""
+    if isinstance(schema, list):
+        return _compile_union(schema)
+    t = schema if isinstance(schema, str) else schema["type"]
+    if isinstance(t, (dict, list)):  # {"type": {...}} wrapper
+        return _compile(t)
+    prim = _PRIMITIVE_READERS.get(t)
+    if prim is not None:
+        return prim
+    if t == "record":
+        return _compile_record(schema)
+    if t == "array":
+        return _compile_array(schema)
+    if t == "map":
+        return _compile_map(schema)
+    if t == "fixed":
+        size = schema["size"]
+
+        def read_fixed(buf, pos):
+            end = pos + size
+            return buf[pos:end], end
+        return read_fixed
+    if t == "enum":
+        symbols = list(schema["symbols"])
+        n_symbols = len(symbols)
+
+        def read_enum(buf, pos):
+            i, pos = _read_long_fast(buf, pos)
+            if not 0 <= i < n_symbols:
+                raise ValueError(f"avro enum index {i} out of range")
+            return symbols[i], pos
+        return read_enum
+
+    def read_unsupported(buf, pos):  # raise only if a value needs it
         raise ValueError(f"unsupported avro type: {t!r}")
+    return read_unsupported
+
+
+def _compile_union(schema: list):
+    branches = [_compile(s) for s in schema]
+    n = len(branches)
+    if n == 2 and (_is_null(schema[0]) or _is_null(schema[1])):
+        # the Iceberg metadata shape ["null", X] / [X, "null"]: the
+        # branch index is one zigzag byte, 0x00 (index 0) or 0x02 (1)
+        null_first = _is_null(schema[0])
+        inner = branches[1] if null_first else branches[0]
+        null_byte, value_byte = (0, 2) if null_first else (2, 0)
+
+        def read_optional(buf, pos):
+            b = buf[pos]
+            if b == null_byte:
+                return None, pos + 1
+            if b == value_byte:
+                return inner(buf, pos + 1)
+            raise ValueError(f"avro union index byte {b:#x} out of range")
+        return read_optional
+
+    def read_union(buf, pos):
+        i, pos = _read_long_fast(buf, pos)
+        if not 0 <= i < n:
+            raise ValueError(f"avro union index {i} out of range")
+        return branches[i](buf, pos)
+    return read_union
+
+
+def _compile_record(schema: dict):
+    fields = [(f["name"], _compile(f["type"])) for f in schema["fields"]]
+
+    def read_record(buf, pos):
+        rec = {}
+        for name, read in fields:
+            rec[name], pos = read(buf, pos)
+        return rec, pos
+    return read_record
+
+
+def _block_count(buf: bytes, pos: int) -> tuple[int, int]:
+    """Item count of the next array/map block; a negative count is
+    followed by the block's byte size, which we do not need."""
+    n, pos = _read_long_fast(buf, pos)
+    if n < 0:
+        _, pos = _read_long_fast(buf, pos)
+        n = -n
+    return n, pos
+
+
+def _compile_array(schema: dict):
+    items = _compile(schema["items"])
+
+    def read_array(buf, pos):
+        out = []
+        append = out.append
+        n, pos = _block_count(buf, pos)
+        while n:
+            for _ in range(n):
+                v, pos = items(buf, pos)
+                append(v)
+            n, pos = _block_count(buf, pos)
+        return out, pos
+    return read_array
+
+
+def _compile_map(schema: dict):
+    values = _compile(schema["values"])
+
+    def read_map(buf, pos):
+        out = {}
+        n, pos = _block_count(buf, pos)
+        while n:
+            for _ in range(n):
+                k, pos = _read_string(buf, pos)
+                out[k], pos = values(buf, pos)
+            n, pos = _block_count(buf, pos)
+        return out, pos
+    return read_map
+
+
+#: compiled readers by writer-schema JSON text, LRU-bounded so a long
+#: session reading many distinct schemas keeps a constant footprint
+_READERS: "OrderedDict[bytes, Any]" = OrderedDict()
+_READERS_MAX = 64
+_READERS_LOCK = Lock()
+
+
+def _reader_for(schema_text: bytes, schema: Any):
+    with _READERS_LOCK:
+        read = _READERS.get(schema_text)
+        if read is not None:
+            _READERS.move_to_end(schema_text)
+            return read
+    read = _compile(schema)
+    with _READERS_LOCK:
+        _READERS[schema_text] = read
+        while len(_READERS) > _READERS_MAX:
+            _READERS.popitem(last=False)
+    return read
 
 
 # ---------------------------------------------------------------------------
@@ -168,10 +284,10 @@ def _union_branch(schema: list, value: Any) -> tuple[int, Any]:
     """Pick the union branch for value. Iceberg metadata unions are
     ``["null", X]`` (or ``[X, "null"]``), which is all we need."""
     for i, s in enumerate(schema):
-        if (s == "null" or (isinstance(s, dict) and s.get("type") == "null")) and value is None:
+        if _is_null(s) and value is None:
             return i, s
     for i, s in enumerate(schema):
-        if s == "null" or (isinstance(s, dict) and s.get("type") == "null"):
+        if _is_null(s):
             continue
         return i, s
     raise ValueError(f"no union branch for {value!r} in {schema!r}")
@@ -250,9 +366,7 @@ def _encode(out: io.BytesIO, schema: Any, value: Any) -> None:
 
 
 def _nullable(schema: Any) -> bool:
-    return isinstance(schema, list) and any(
-        s == "null" or (isinstance(s, dict) and s.get("type") == "null") for s in schema
-    )
+    return isinstance(schema, list) and any(_is_null(s) for s in schema)
 
 
 # ---------------------------------------------------------------------------
@@ -262,44 +376,52 @@ def _nullable(schema: Any) -> bool:
 def read_avro_file(path_or_bytes: str | bytes) -> tuple[dict, dict[str, bytes], list[dict]]:
     """Read an Avro OCF. Returns (writer_schema, file_metadata, records)."""
     if isinstance(path_or_bytes, (bytes, bytearray)):
-        data = bytes(path_or_bytes)
+        data = path_or_bytes
     else:
         from .. import io as fio
 
         data = fio.get_io(path_or_bytes).read_bytes(path_or_bytes)
+    data = bytes(data)  # readers slice and decode bytes; a no-op on bytes
     if data[:4] != MAGIC:
         raise ValueError("not an Avro object container file")
-    dec = _Decoder(data)
-    dec.pos = 4
+    pos = 4
     meta: dict[str, bytes] = {}
-    while True:
-        n = dec.long()
-        if n == 0:
-            break
-        if n < 0:
-            dec.long()
-            n = -n
+    n, pos = _block_count(data, pos)
+    while n:
         for _ in range(n):
-            k = dec.raw(dec.long()).decode("utf-8")
-            meta[k] = dec.raw(dec.long())
-    sync = dec.raw(16)
-    schema = json.loads(meta["avro.schema"])
+            k, pos = _read_string(data, pos)
+            meta[k], pos = _read_bytes(data, pos)
+        n, pos = _block_count(data, pos)
+    sync = data[pos:pos + 16]
+    pos += 16
+    schema_text = meta["avro.schema"]
+    schema = json.loads(schema_text)
+    read = _reader_for(schema_text, schema)
     codec = meta.get("avro.codec", b"null").decode()
     records: list[dict] = []
+    append = records.append
     total = len(data)
-    while dec.pos < total:
-        count = dec.long()
-        size = dec.long()
-        block = dec.raw(size)
+    while pos < total:
+        count, pos = _read_long(data, pos)
+        size, pos = _read_long(data, pos)
+        block = data[pos:pos + size]
+        pos += size
+        if len(block) != size:
+            raise ValueError("truncated avro block")
         if codec == "deflate":
             block = zlib.decompress(block, -15)
         elif codec != "null":
             raise ValueError(f"unsupported avro codec {codec}")
-        bdec = _Decoder(block)
+        bpos = 0
         for _ in range(count):
-            records.append(bdec.decode(schema))
-        if dec.raw(16) != sync:
+            rec, bpos = read(block, bpos)
+            append(rec)
+        if bpos != len(block):  # slicing past the end does not raise
+            raise ValueError(f"avro block of {len(block)} bytes decoded "
+                             f"as {bpos} bytes of {count} records")
+        if data[pos:pos + 16] != sync:
             raise ValueError("avro sync marker mismatch")
+        pos += 16
     return schema, meta, records
 
 

@@ -16,7 +16,8 @@ from __future__ import annotations
 
 import os
 import uuid as _uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
+from operator import attrgetter
 from typing import Any, Optional
 
 from . import avro_io
@@ -161,6 +162,9 @@ class DataFile:
     content_size_in_bytes: Optional[int] = None
     first_row_id: Optional[int] = None
 
+    def __reduce__(self):
+        return type(self), _DATA_FILE_VALUES(self)
+
 
 @dataclass(slots=True)
 class ManifestEntry:
@@ -169,6 +173,18 @@ class ManifestEntry:
     sequence_number: Optional[int]
     file_sequence_number: Optional[int]
     data_file: DataFile
+
+    def __reduce__(self):
+        return type(self), _MANIFEST_ENTRY_VALUES(self)
+
+
+# Entries cross the executor → driver boundary in bulk (the distributed
+# planner pickles every surviving entry): a (class, positional field
+# values) reduction unpickles through one constructor call, where the
+# default slots-dataclass pickle restores attribute by attribute and
+# spells out every field name per entry.
+_DATA_FILE_VALUES = attrgetter(*(f.name for f in fields(DataFile)))
+_MANIFEST_ENTRY_VALUES = attrgetter(*(f.name for f in fields(ManifestEntry)))
 
 
 # ---------------------------------------------------------------------------

@@ -949,10 +949,12 @@ def incremental_minhash_dedup(
             # one sequential driver round-trip replaces the former two.
             # This branch (corpus_bands and corpus_signatures both None)
             # IS the rederive branch, so the fused batch frame exists —
-            # asserted locally so an edit to either branch condition
-            # fails loudly instead of leaving comb_b unmaterialized
-            # (ADVICE r15).
-            assert rederive, "shared barrier requires the fused batch side"
+            # checked locally (an explicit raise, which `python -O`
+            # keeps) so an edit to either branch condition fails loudly
+            # instead of leaving comb_b unmaterialized (ADVICE r15).
+            if not rederive:
+                raise RuntimeError(
+                    "shared barrier requires the fused batch side")
             comb_old.unionByName(comb_b).count()
             sig_old = comb_old.select(id_col, "signature")
         bo = banded_signatures(sig_old, id_col, bands) \

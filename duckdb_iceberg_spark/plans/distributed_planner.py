@@ -26,11 +26,10 @@ from . import predicates as P
 from .scan_plan import (
     PartitionSpec,
     ScanPlan,
+    _FileFilter,
     _assemble_tasks,
-    _file_matches,
     _live_entries,
     _localize,
-    _manifest_matches,
     _scan_schema,
     plan_scan,
     strip_file_stats,
@@ -58,7 +57,7 @@ def plan_scan_distributed(
     the driver's task list then carries only read-relevant fields
     (~3x smaller at 1e6 entries), and the collect ships ~3x fewer
     bytes. Pruning still sees full stats — the strip happens after
-    ``_file_matches``."""
+    file pruning."""
     pred = P.parse_where(where)
     if snapshot is None or not snapshot.manifest_list:
         return plan_scan(tm, snapshot, where, snapshot_schema=snapshot_schema,
@@ -66,12 +65,14 @@ def plan_scan_distributed(
 
     ml_path = _localize(tm, snapshot.manifest_list)
     manifests = mf.read_manifest_list(ml_path)
+    scan_schema_id, schema_json = _scan_schema(tm, snapshot, snapshot_schema)
+    filt = _FileFilter(tm, pred, schema_json)
 
     data_manifests: list[mf.ManifestFile] = []
     delete_manifests: list[mf.ManifestFile] = []
     pruned = 0
     for m in manifests:
-        if not _manifest_matches(m, tm, pred):
+        if not filt.manifest_matches(m):
             pruned += 1
             continue
         (delete_manifests if m.content == mf.MANIFEST_DELETES else data_manifests).append(m)
@@ -80,41 +81,40 @@ def plan_scan_distributed(
         return plan_scan(tm, snapshot, where, snapshot_schema=snapshot_schema,
                          lean=lean)
 
-    scan_schema_id, schema_json = _scan_schema(tm, snapshot, snapshot_schema)
     tm_blob = pickle.dumps(tm)
     pred_blob = pickle.dumps(pred)
     schema_blob = pickle.dumps(schema_json)
 
-    def prune_manifest(
-            item: tuple[str, int, Optional[int], Optional[int]]) -> tuple[int, bytes]:
-        path, spec_id, m_seq, m_first_row_id = item
+    def prune_manifests(items):
+        # one unpickle and one bound filter per task, not per manifest
         tm_l: TableMetadata = pickle.loads(tm_blob)
-        pred_l = pickle.loads(pred_blob)
-        schema_l = pickle.loads(schema_blob)
-        spec = tm_l.partition_specs.get(spec_id, PartitionSpec(spec_id, []))
-        entries = mf.read_manifest(_localize(tm_l, path))
-        # row-lineage inheritance runs over the FULL list before pruning —
-        # offsets depend on every preceding ADDED entry
-        mf.inherit_first_row_ids(entries, m_first_row_id)
-        out = []
-        live = 0
-        for e in _live_entries(entries, m_seq):
-            live += 1
-            if not _file_matches(e, spec, tm_l, pred_l, schema_l):
-                continue
-            if lean:
-                e = mf.ManifestEntry(
-                    status=e.status, snapshot_id=e.snapshot_id,
-                    sequence_number=e.sequence_number,
-                    file_sequence_number=e.file_sequence_number,
-                    data_file=strip_file_stats(e.data_file))
-            out.append((e, spec_id))
-        # ONE blob per manifest (r15): per-entry pickles made the driver
-        # hold 1e6 tiny bytes objects next to their unpickled twins —
-        # batching + the pop()-streaming consume below cut the 1e6-entry
-        # driver peak from 1.66 GB to under budget. ``live`` counts the
-        # entries file pruning considered.
-        return live, pickle.dumps(out)
+        filt_l = _FileFilter(tm_l, pickle.loads(pred_blob),
+                             pickle.loads(schema_blob))
+        for path, spec_id, m_seq, m_first_row_id in items:
+            spec = tm_l.partition_specs.get(spec_id, PartitionSpec(spec_id, []))
+            entries = mf.read_manifest(_localize(tm_l, path))
+            # row-lineage inheritance runs over the FULL list before
+            # pruning — offsets depend on every preceding ADDED entry
+            mf.inherit_first_row_ids(entries, m_first_row_id)
+            out = []
+            live = 0
+            for e in _live_entries(entries, m_seq):
+                live += 1
+                if not filt_l.matches(e, spec):
+                    continue
+                if lean:
+                    e = mf.ManifestEntry(
+                        status=e.status, snapshot_id=e.snapshot_id,
+                        sequence_number=e.sequence_number,
+                        file_sequence_number=e.file_sequence_number,
+                        data_file=strip_file_stats(e.data_file))
+                out.append((e, spec_id))
+            # ONE blob per manifest (r15): per-entry pickles made the
+            # driver hold 1e6 tiny bytes objects next to their unpickled
+            # twins — batching + the pop()-streaming consume below cut the
+            # 1e6-entry driver peak from 1.66 GB to under budget. ``live``
+            # counts the entries file pruning considered.
+            yield live, pickle.dumps(out)
 
     items = [(m.manifest_path, m.partition_spec_id, m.sequence_number,
               m.first_row_id)
@@ -122,7 +122,7 @@ def plan_scan_distributed(
     n_slices = min(len(items), spark.sparkContext.defaultParallelism * 2)
     survivors_raw = (
         spark.sparkContext.parallelize(items, n_slices)
-        .map(prune_manifest)
+        .mapPartitions(prune_manifests)
         .collect()
     )
 
@@ -147,7 +147,7 @@ def plan_scan_distributed(
             yield from pickle.loads(survivors_raw.pop()[1])
 
     tasks = _assemble_tasks(tm, _stream_entries(), pos_deletes, eq_deletes,
-                            pred, schema_json, lean=lean)
+                            filt, lean=lean)
     stats = {
         "manifests_total": len(manifests),
         "manifests_pruned": pruned,

@@ -17,7 +17,7 @@ from __future__ import annotations
 import datetime as _dt
 import re
 from dataclasses import dataclass
-from decimal import Decimal
+from decimal import Decimal, InvalidOperation
 from typing import Any, Callable, Optional
 
 from . import transforms as tr
@@ -496,8 +496,15 @@ def _cmp(a: Any, b: Any) -> Optional[int]:
                 a = a.replace(tzinfo=_dt.timezone.utc) if a.tzinfo is None else a
                 b = b.replace(tzinfo=_dt.timezone.utc) if b.tzinfo is None else b
         if isinstance(a, (int, float, Decimal)) and isinstance(b, (int, float, Decimal)):
-            a2, b2 = float(a), float(b)
-            return -1 if a2 < b2 else (1 if a2 > b2 else 0)
+            # compared natively, which Python does exactly across int,
+            # float and Decimal: a float() round trip makes distinct
+            # values past 2**53 (64-bit ids, epoch nanos, decimal(38, s))
+            # equal and pruned files holding matching rows. A NaN on
+            # either side stays "equal" (unordered, never pruned on).
+            try:
+                return -1 if a < b else (1 if a > b else 0)
+            except InvalidOperation:  # a Decimal NaN refuses to order
+                return 0
         if type(a) is not type(b) and not (
             isinstance(a, str) and isinstance(b, str)
         ):

@@ -125,9 +125,13 @@ def _localize(tm: TableMetadata, path: str) -> str:
     path would be one HEAD request per manifest/data file, a planning-time
     storm at 100 TB. Rewrites only fire when the recorded path points
     somewhere other than the table's current location (a copied table)."""
+    loc = tm.location.rstrip("/")
+    # the canonical un-moved layout, with or without a scheme: every rule
+    # below returns such a path unchanged, so decide it before any parsing
+    if path.startswith(loc + "/data/") or path.startswith(loc + "/metadata/"):
+        return path
     from .. import io as fio
 
-    loc = tm.location.rstrip("/")
     loc_scheme, _ = fio.parse_uri(loc)
     path_scheme, rest = fio.parse_uri(path)
     # files legitimately living OUTSIDE the table location under the
@@ -206,91 +210,133 @@ def _localize(tm: TableMetadata, path: str) -> str:
     return path
 
 
-def _partition_stats_for(
-    spec: PartitionSpec, tm: TableMetadata, summaries: list[mf.FieldSummary]
-):
-    """stats_for callback over manifest-list field summaries, keyed by source
-    column name, bounds in transformed space."""
-    by_col: dict[str, tuple[P.ColumnStats, str, Any]] = {}
-    for pf, summ in zip(spec.fields, summaries):
-        # nested partition sources key by their dotted path — the predicate
-        # parser emits dotted column names, so `payload.ts >= …` prunes
-        hit = tm.field_path_by_id(pf.source_id)
-        if hit is None:
-            continue
-        src_name, src = hit
-        rt = tr.transform_result_type(pf.transform, src["type"])
-        st = P.ColumnStats(
-            lower=ice_types.decode_bound(rt, summ.lower_bound) if rt else None,
-            upper=ice_types.decode_bound(rt, summ.upper_bound) if rt else None,
-            contains_null=summ.contains_null,
-            contains_nan=summ.contains_nan,
-        )
-        by_col[src_name] = (st, pf.transform, src["type"])
-    return by_col
-
-
 def _manifest_matches(
     manifest: mf.ManifestFile, tm: TableMetadata, pred: P.Predicate
 ) -> bool:
     """Manifest-level pruning on partition field summaries
     (reference: iceberg_file_pruner.cpp:396-447)."""
-    if pred is None or not manifest.partitions:
-        return True
-    spec = tm.partition_specs.get(manifest.partition_spec_id)
-    if spec is None or len(spec.fields) != len(manifest.partitions):
-        return True
-    by_col = _partition_stats_for(spec, tm, manifest.partitions)
-    # evaluate column-by-column: transform each leaf into partition space
-    return _match_transformed(pred, by_col)
-
-
-def _match_transformed(pred: P.Predicate, by_col: dict) -> bool:
-    if pred is None:
-        return True
-    if isinstance(pred, P.And):
-        return all(_match_transformed(c, by_col) for c in pred.children)
-    if isinstance(pred, P.Or):
-        return any(_match_transformed(c, by_col) for c in pred.children)
-    col = pred.column
-    ent = by_col.get(col)
-    if ent is None:
-        return True
-    st, transform, src_type = ent
-    tp = P.transform_predicate(pred, col, transform, src_type)
-    if tp is None:
-        return True
-    return P.match_bounds(tp, lambda c: st if c == col else None)
+    return _FileFilter(tm, pred, tm.schema_json()).manifest_matches(manifest)
 
 
 def _file_matches(
     entry: mf.ManifestEntry, spec: PartitionSpec, tm: TableMetadata, pred: P.Predicate,
     schema_json: dict,
 ) -> bool:
-    """File-level pruning: partition values + column zone maps + null counts
-    (reference: iceberg_file_pruner.cpp:12-172)."""
-    if pred is None:
-        return True
-    df = entry.data_file
+    """File-level pruning of one entry (see :class:`_FileFilter`)."""
+    return _FileFilter(tm, pred, schema_json).matches(entry, spec)
 
-    # 1. partition-value pruning (exact, transformed space)
-    part_by_col: dict[str, tuple[P.ColumnStats, str, Any]] = {}
-    for pf in spec.fields:
-        hit = tm.field_path_by_id(pf.source_id)
-        if hit is None or pf.name not in df.partition:
-            continue
-        src_name, src = hit
-        v = _norm_partition_value(df.partition[pf.name],
-                                  tr.transform_result_type(pf.transform, src["type"]))
-        st = P.ColumnStats(lower=v, upper=v, contains_null=v is None, all_null=v is None)
-        part_by_col[src_name] = (st, pf.transform, src["type"])
-    if part_by_col and not _match_transformed(pred, part_by_col):
-        return False
 
-    # 2. column-stat pruning in source space
-    fields_by_name = {f["name"]: f for f in schema_json["fields"]}
+_UNSET = object()
 
-    def stats_for(col) -> Optional[P.ColumnStats]:
+
+class _FileFilter:
+    """Manifest- and file-level pruning bound once per plan.
+
+    File pruning checks partition values, column zone maps and null
+    counts (reference: iceberg_file_pruner.cpp:12-172); manifest pruning
+    checks the manifest list's partition field summaries
+    (iceberg_file_pruner.cpp:396-447). Everything that depends only on
+    ``(tm, pred, scan schema)`` — the literal-coerced predicate, the
+    name/id → field maps, the name-mapping's unmapped field ids, each
+    partition spec's source columns and result types, and each predicate
+    leaf's projection into partition space —
+    is computed on first use and reused, so per entry only the entry's
+    own partition values and referenced bounds are decoded and compared.
+    Planners build one per plan; executors one per task."""
+
+    __slots__ = ("tm", "pred", "fields_by_name", "fields_by_id",
+                 "unmapped", "_coerced", "_specs")
+
+    def __init__(self, tm: TableMetadata, pred: P.Predicate,
+                 schema_json: dict) -> None:
+        self.tm = tm
+        self.pred = pred
+        self.fields_by_name = {f["name"]: f for f in schema_json["fields"]}
+        self.fields_by_id = {f["id"]: f for f in schema_json["fields"]}
+        self.unmapped = _unmapped_field_ids(tm)
+        self._coerced = _UNSET
+        self._specs: dict = {}
+
+    @property
+    def coerced(self) -> P.Predicate:
+        """The predicate with literals coerced to the scan schema's types."""
+        if self._coerced is _UNSET:
+            self._coerced = _coerce_pred(self.pred, self.fields_by_name)
+        return self._coerced
+
+    def _bind_spec(self, spec: PartitionSpec):
+        """(parts, partition-space predicate) for a spec. ``parts`` holds
+        ``(index in spec.fields, partition name, source column, result
+        type, transform, source type)`` for fields whose source resolves."""
+        bound = self._specs.get(spec.spec_id)
+        if bound is None:
+            parts = []
+            for i, pf in enumerate(spec.fields):
+                # nested partition sources key by their dotted path — the
+                # predicate parser emits dotted column names
+                hit = self.tm.field_path_by_id(pf.source_id)
+                if hit is None:
+                    continue
+                src_name, src = hit
+                parts.append((i, pf.name, src_name,
+                              tr.transform_result_type(pf.transform, src["type"]),
+                              pf.transform, src["type"]))
+            bound = self._specs[spec.spec_id] = (
+                parts, _compile_transformed(self.pred, parts))
+        return bound
+
+    def manifest_matches(self, manifest: mf.ManifestFile) -> bool:
+        if self.pred is None or not manifest.partitions:
+            return True
+        spec = self.tm.partition_specs.get(manifest.partition_spec_id)
+        if spec is None or len(spec.fields) != len(manifest.partitions):
+            return True
+        parts, part_pred = self._bind_spec(spec)
+        summaries = manifest.partitions
+        by_col = {}
+        for k, (i, _, src_name, rt, _, _) in enumerate(parts):
+            summ = summaries[i]
+            st = P.ColumnStats(
+                lower=ice_types.decode_bound(rt, summ.lower_bound) if rt else None,
+                upper=ice_types.decode_bound(rt, summ.upper_bound) if rt else None,
+                contains_null=summ.contains_null,
+                contains_nan=summ.contains_nan,
+            )
+            by_col[src_name] = (st, k)
+        return part_pred(by_col)
+
+    def matches(self, entry: mf.ManifestEntry, spec: PartitionSpec) -> bool:
+        if self.pred is None:
+            return True
+        df = entry.data_file
+
+        # 1. partition-value pruning (exact, transformed space); when two
+        # partition fields share a source column the last one wins
+        parts, part_pred = self._bind_spec(spec)
+        if parts:
+            partition = df.partition
+            by_col = {}
+            for k, (_, name, src_name, rt, _, _) in enumerate(parts):
+                if name in partition:
+                    v = _norm_partition_value(partition[name], rt)
+                    by_col[src_name] = (P.ColumnStats(
+                        lower=v, upper=v, contains_null=v is None,
+                        all_null=v is None), k)
+            if by_col and not part_pred(by_col):
+                return False
+
+        # 2. column-stat pruning in source space
+        memo = {}
+
+        def stats_for(col) -> Optional[P.ColumnStats]:
+            st = memo.get(col, _UNSET)
+            if st is _UNSET:
+                st = memo[col] = self._column_stats(df, col)
+            return st
+
+        return P.match_bounds(self.coerced, stats_for)
+
+    def _column_stats(self, df: mf.DataFile, col) -> Optional[P.ColumnStats]:
         if isinstance(col, P.VariantRef):
             # shredded-variant bounds: the variant column's lower/upper blobs
             # are serialized variant OBJECTS keyed by JSON path (reference:
@@ -298,7 +344,7 @@ def _file_matches(
             # iceberg_predicate.cpp MatchTransformedBounds)
             from ..metadata import variant as ice_variant
 
-            f = fields_by_name.get(col.column)
+            f = self.fields_by_name.get(col.column)
             if f is None or f.get("type") != "variant":
                 return None
             fid = f["id"]
@@ -315,11 +361,11 @@ def _file_matches(
             # null counts track the whole variant column, not the extracted
             # path — claim nothing about nulls (IS [NOT] NULL stays true)
             return P.ColumnStats(lower, upper, True, None, False)
-        f = fields_by_name.get(col)
+        f = self.fields_by_name.get(col)
         if f is None:
             return None
         fid = f["id"]
-        if fid in _unmapped_field_ids(tm):
+        if fid in self.unmapped:
             # the field was dropped from schema.name-mapping.default: legacy
             # files (no parquet field-ids) surface it as all-NULL regardless
             # of what the physical column's stats say — stats would prune
@@ -340,8 +386,76 @@ def _file_matches(
         )
         return P.ColumnStats(lower, upper, contains_null, None, all_null)
 
-    coerced = _coerce_pred(pred, fields_by_name)
-    return P.match_bounds(coerced, stats_for)
+    def eq_delete_matches(self, del_entry: mf.ManifestEntry) -> bool:
+        """Predicate-vs-delete-file pruning for equality deletes (reference:
+        benchmark/file_pruning_benchmarks/prune_equality_deletes.benchmark —
+        "prune equality deletes when a given predicate would not select rows
+        an equality delete would filter out"): a row this delete file removes
+        has its equality-column values inside the file's bounds, so if the
+        scan predicate is unsatisfiable within those bounds, no SELECTED row
+        can be deleted by this file — skipping it cannot resurrect a visible
+        row. Conservative (apply) when bounds are missing or the file holds
+        NULL keys (a NULL-key delete matches rows the bounds don't describe;
+        contains_null keeps IS NULL predicates honest)."""
+        if self.pred is None:
+            return True
+        dl = del_entry.data_file
+        eq_ids = set(dl.equality_ids or [])
+        if not eq_ids:
+            return True
+        fields_by_name = self.fields_by_name
+
+        def stats_for(col) -> Optional[P.ColumnStats]:
+            if isinstance(col, P.VariantRef):
+                return None
+            f = fields_by_name.get(col)
+            if f is None or f["id"] not in eq_ids or not isinstance(f["type"], str):
+                return None  # not an equality column (or nested): unknown
+            fid = f["id"]
+            try:
+                lower = ice_types.decode_bound(f["type"], (dl.lower_bounds or {}).get(fid))
+                upper = ice_types.decode_bound(f["type"], (dl.upper_bounds or {}).get(fid))
+            except (TypeError, ValueError):
+                return None
+            nulls = (dl.null_value_counts or {}).get(fid)
+            if lower is None and upper is None and nulls is None:
+                return None
+            return P.ColumnStats(lower, upper,
+                                 contains_null=nulls is None or nulls > 0,
+                                 all_null=False)
+
+        return P.match_bounds(self.coerced, stats_for)
+
+
+def _compile_transformed(pred: P.Predicate, parts: list):
+    """``pred`` as a function of ``by_col`` (source column → (ColumnStats,
+    index into ``parts``)): each leaf on a partition source column is
+    projected into partition space through that field's transform and
+    matched against its stats; any other leaf matches. A leaf's projection
+    per partition field is computed once, on first use."""
+    if isinstance(pred, P.And):
+        subs = [_compile_transformed(c, parts) for c in pred.children]
+        return lambda by_col: all(f(by_col) for f in subs)
+    if isinstance(pred, P.Or):
+        subs = [_compile_transformed(c, parts) for c in pred.children]
+        return lambda by_col: any(f(by_col) for f in subs)
+    col = pred.column
+    projected: dict[int, P.Predicate] = {}
+
+    def leaf(by_col) -> bool:
+        ent = by_col.get(col)
+        if ent is None:
+            return True
+        st, k = ent
+        tp = projected.get(k, _UNSET)
+        if tp is _UNSET:
+            transform, src_type = parts[k][4], parts[k][5]
+            tp = projected[k] = P.transform_predicate(
+                pred, col, transform, src_type)
+        if tp is None:
+            return True
+        return P.match_bounds(tp, lambda c: st if c == col else None)
+    return leaf
 
 
 def _unmapped_field_ids(tm: TableMetadata) -> frozenset:
@@ -467,15 +581,15 @@ def _pos_delete_path_overlap(del_entry: mf.ManifestEntry,
 
 def _eq_delete_bounds_overlap(data_entry: mf.ManifestEntry,
                               del_entry: mf.ManifestEntry,
-                              schema_json: dict) -> bool:
+                              fields: dict) -> bool:
     """Bounds-overlap pruning for equality deletes (reference:
     iceberg_file_pruner.cpp:248-316): if, for any equality column, the
     delete file's value range provably cannot intersect the data file's
     range, no delete row can match any data row — skip the delete.
     Conservative (apply) whenever bounds are missing, the column is
-    non-primitive, or the delete file contains NULL keys."""
+    non-primitive, or the delete file contains NULL keys. ``fields`` maps
+    the scan schema's field ids to fields."""
     df, dl = data_entry.data_file, del_entry.data_file
-    fields = {f["id"]: f for f in schema_json["fields"]}
     for fid in dl.equality_ids or []:
         f = fields.get(fid)
         if f is None or not isinstance(f["type"], str):
@@ -494,50 +608,6 @@ def _eq_delete_bounds_overlap(data_entry: mf.ManifestEntry,
         except (TypeError, ValueError):
             continue
     return True
-
-
-def _eq_delete_matches_scan_filter(del_entry: mf.ManifestEntry, pred,
-                                   schema_json: dict) -> bool:
-    """Predicate-vs-delete-file pruning for equality deletes (reference:
-    benchmark/file_pruning_benchmarks/prune_equality_deletes.benchmark —
-    "prune equality deletes when a given predicate would not select rows
-    an equality delete would filter out"): a row this delete file removes
-    has its equality-column values inside the file's bounds, so if the
-    scan predicate is unsatisfiable within those bounds, no SELECTED row
-    can be deleted by this file — skipping it cannot resurrect a visible
-    row. Conservative (apply) when bounds are missing or the file holds
-    NULL keys (a NULL-key delete matches rows the bounds don't describe;
-    contains_null keeps IS NULL predicates honest)."""
-    if pred is None:
-        return True
-    dl = del_entry.data_file
-    eq_ids = set(dl.equality_ids or [])
-    if not eq_ids:
-        return True
-    fields_by_name = {f["name"]: f for f in schema_json["fields"]
-                      if f["id"] in eq_ids}
-
-    def stats_for(col) -> Optional[P.ColumnStats]:
-        if isinstance(col, P.VariantRef):
-            return None
-        f = fields_by_name.get(col)
-        if f is None or not isinstance(f["type"], str):
-            return None  # not an equality column (or nested): unknown
-        fid = f["id"]
-        try:
-            lower = ice_types.decode_bound(f["type"], (dl.lower_bounds or {}).get(fid))
-            upper = ice_types.decode_bound(f["type"], (dl.upper_bounds or {}).get(fid))
-        except (TypeError, ValueError):
-            return None
-        nulls = (dl.null_value_counts or {}).get(fid)
-        if lower is None and upper is None and nulls is None:
-            return None
-        return P.ColumnStats(lower, upper,
-                             contains_null=nulls is None or nulls > 0,
-                             all_null=False)
-
-    coerced = _coerce_pred(pred, {f["name"]: f for f in schema_json["fields"]})
-    return P.match_bounds(coerced, stats_for)
 
 
 def manifests_for_snapshot(tm: TableMetadata,
@@ -697,11 +767,12 @@ def _live_entries(entries, manifest_seq: Optional[int]):
 
 
 def _assemble_tasks(tm: TableMetadata, entries, pos_deletes: list,
-                    eq_deletes: list, pred, schema_json: dict, *,
+                    eq_deletes: list, filt: _FileFilter, *,
                     lean: bool = False) -> list[FileScanTask]:
     """FileScanTasks for the ``(entry, spec_id)`` data entries that
     survived file pruning: data-format check, path localization and
-    delete attachment. Both planners (``plan_scan`` and the executor-side
+    delete attachment (equality deletes are pruned through the plan's
+    ``filt``). Both planners (``plan_scan`` and the executor-side
     ``plan_scan_distributed``) assemble their tasks here."""
     from ..io import normalize_path
 
@@ -754,8 +825,8 @@ def _assemble_tasks(tm: TableMetadata, entries, pos_deletes: list,
             # equality deletes apply strictly after: delete.seq > data.seq
             if (de.sequence_number or 0) > data_seq \
                     and _partitions_overlap(e, de, spec_id, dspec, data_paths) \
-                    and _eq_delete_bounds_overlap(e, de, schema_json) \
-                    and _eq_delete_matches_scan_filter(de, pred, schema_json):
+                    and _eq_delete_bounds_overlap(e, de, filt.fields_by_id) \
+                    and filt.eq_delete_matches(de):
                 df2 = de.data_file
                 _check_delete_format(df2)
                 df2.file_path = _localize(tm, df2.file_path)
@@ -810,13 +881,15 @@ def _plan_scan(
 
     manifests = manifests_for_snapshot(tm, snapshot)
     stats["manifests_total"] = len(manifests)
+    scan_schema_id, schema_json = _scan_schema(tm, snapshot, snapshot_schema)
+    filt = _FileFilter(tm, pred, schema_json)
 
     data_entries: list[tuple[mf.ManifestEntry, int]] = []  # (entry, spec_id)
     pos_deletes: list[tuple[mf.ManifestEntry, int]] = []
     eq_deletes: list[tuple[mf.ManifestEntry, int]] = []
 
     for m in manifests:
-        if not _manifest_matches(m, tm, pred):
+        if not filt.manifest_matches(m):
             # a delete manifest whose partitions can't overlap the filtered
             # data can be skipped entirely (prune_positional_deletes bench)
             stats["manifests_pruned"] += 1
@@ -843,12 +916,10 @@ def _plan_scan(
     stats["files_total"] = len(data_entries)
     stats["delete_files"] = len(pos_deletes) + len(eq_deletes)
 
-    scan_schema_id, schema_json = _scan_schema(tm, snapshot, snapshot_schema)
-
     def _surviving():
         for e, spec_id in data_entries:
             spec = tm.partition_specs.get(spec_id, PartitionSpec(spec_id, []))
-            if _file_matches(e, spec, tm, pred, schema_json):
+            if filt.matches(e, spec):
                 yield e, spec_id
                 continue
             stats["files_pruned"] += 1
@@ -859,8 +930,8 @@ def _plan_scan(
                     "%r", e.data_file.file_path,
                     ", ".join(f.transform for f in spec.fields), where)
 
-    tasks = _assemble_tasks(tm, _surviving(), pos_deletes, eq_deletes, pred,
-                            schema_json, lean=lean)
+    tasks = _assemble_tasks(tm, _surviving(), pos_deletes, eq_deletes, filt,
+                            lean=lean)
     plan = ScanPlan(tm, snapshot, tasks, where, scan_schema_id, stats)
     stats["estimated_rows"] = plan.estimated_row_count()
     return plan

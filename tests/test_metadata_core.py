@@ -47,6 +47,131 @@ def test_avro_roundtrip(tmp_path):
     assert out2 == recs
 
 
+def test_avro_roundtrip_enum_fixed_floats_nested_and_value_first_unions(tmp_path):
+    schema = {
+        "type": "record",
+        "name": "outer",
+        "fields": [
+            {"name": "e", "type": {"type": "enum", "name": "color",
+                                   "symbols": ["RED", "GREEN", "BLUE"]}},
+            {"name": "fx", "type": {"type": "fixed", "name": "f4", "size": 4}},
+            {"name": "f", "type": "float"},
+            {"name": "d", "type": "double"},
+            {"name": "b", "type": "boolean"},
+            {"name": "on", "type": ["long", "null"]},
+            {"name": "os", "type": ["string", "null"]},
+            {"name": "mid", "type": {"type": "record", "name": "mid", "fields": [
+                {"name": "inner", "type": {"type": "record", "name": "inner",
+                                           "fields": [{"name": "x", "type": "int"}]}},
+                {"name": "xs", "type": {"type": "array", "items": "double"}},
+            ]}},
+        ],
+    }
+    recs = [
+        {"e": "BLUE", "fx": b"\x00\xff\x10\x7f", "f": 1.5, "d": -2.25e300,
+         "b": True, "on": 2**40, "os": None,
+         "mid": {"inner": {"x": -7}, "xs": [0.5, float("inf")]}},
+        {"e": "RED", "fx": b"abcd", "f": -0.0, "d": 0.1, "b": False,
+         "on": None, "os": "ü", "mid": {"inner": {"x": 300}, "xs": []}},
+    ]
+    path = str(tmp_path / "t.avro")
+    for codec in ("deflate", "null"):
+        avro_io.write_avro_file(path, schema, recs, codec=codec)
+        assert avro_io.read_avro_file(path)[2] == recs
+
+
+def _ocf(schema, block, count):
+    """Hand-built one-block Avro container around a raw ``block``."""
+    import io
+    import json
+
+    out = io.BytesIO()
+    out.write(avro_io.MAGIC)
+    avro_io._write_long(out, 2)
+    avro_io._write_str(out, "avro.schema")
+    avro_io._write_bytes(out, json.dumps(schema).encode())
+    avro_io._write_str(out, "avro.codec")
+    avro_io._write_bytes(out, b"null")
+    avro_io._write_long(out, 0)
+    sync = bytes(range(16))
+    out.write(sync)
+    avro_io._write_long(out, count)
+    avro_io._write_long(out, len(block))
+    out.write(block)
+    out.write(sync)
+    return out.getvalue()
+
+
+def _longs(*values):
+    import io
+
+    out = io.BytesIO()
+    for v in values:
+        avro_io._write_long(out, v)
+    return out.getvalue()
+
+
+def test_avro_negative_block_counts():
+    """Java writers may emit array/map blocks with a negative item count
+    followed by the block's byte size; our encoder never does."""
+    schema = {"type": "record", "name": "r", "fields": [
+        {"name": "a", "type": {"type": "array", "items": "long"}},
+        {"name": "m", "type": {"type": "map", "values": "int"}},
+    ]}
+    items = _longs(5, -7)
+    kv = _longs(1) + b"k" + _longs(3)
+    block = (_longs(-2, len(items)) + items + _longs(1, 2**40, 0)
+             + _longs(-1, len(kv)) + kv + _longs(0))
+    _, _, recs = avro_io.read_avro_file(_ocf(schema, block, 1))
+    assert recs == [{"a": [5, -7, 2**40], "m": {"k": 3}}]
+
+
+def test_avro_readers_are_per_schema():
+    """A compiled reader is keyed by the writer schema's full text: equal
+    field names with different types must not share one."""
+    as_long = {"type": "record", "name": "r",
+               "fields": [{"name": "x", "type": "long"}]}
+    as_string = {"type": "record", "name": "r",
+                 "fields": [{"name": "x", "type": "string"}]}
+    long_file = _ocf(as_long, _longs(21), 1)
+    string_file = _ocf(as_string, _longs(2) + b"hi", 1)
+    for _ in range(2):
+        assert avro_io.read_avro_file(long_file)[2] == [{"x": 21}]
+        assert avro_io.read_avro_file(string_file)[2] == [{"x": "hi"}]
+
+
+def test_manifest_dataclasses_pickle_and_copy():
+    import copy
+    import dataclasses
+    import pickle
+
+    from duckdb_iceberg_spark.metadata import manifest as mf
+    from duckdb_iceberg_spark.plans.scan_plan import strip_file_stats
+
+    df = mf.DataFile(
+        content=mf.CONTENT_EQUALITY_DELETES, file_path="s3://b/t/data/f.parquet",
+        file_format="PARQUET", partition={"p": 3, "d": dt.date(2024, 1, 2)},
+        record_count=10, file_size_in_bytes=4096,
+        column_sizes={1: 100}, value_counts={1: 10}, null_value_counts={1: 0},
+        nan_value_counts={1: 0}, lower_bounds={1: b"\x01"},
+        upper_bounds={1: b"\x09"}, key_metadata=b"km", split_offsets=[4],
+        equality_ids=[1], sort_order_id=0,
+        referenced_data_file="s3://b/t/data/g.parquet", content_offset=8,
+        content_size_in_bytes=64, first_row_id=1000)
+    assert all(getattr(df, f.name) is not None
+               for f in dataclasses.fields(df))
+    e = mf.ManifestEntry(status=mf.STATUS_ADDED, snapshot_id=7,
+                         sequence_number=3, file_sequence_number=2,
+                         data_file=df)
+    for proto in (4, 5):
+        back = pickle.loads(pickle.dumps(e, protocol=proto))
+        assert back == e and back is not e
+    assert copy.deepcopy(e) == e
+    stripped = strip_file_stats(copy.deepcopy(df))
+    assert stripped.lower_bounds is None and stripped.split_offsets is None
+    assert stripped.file_path == df.file_path and df.lower_bounds == {1: b"\x01"}
+
+
 # Iceberg spec Appendix B hash test vectors
 @pytest.mark.parametrize(
     "value,src_type,expected",
@@ -319,6 +444,34 @@ def test_corrupt_manifest_clean_errors(tmp_path):
     with pytest.raises(FileNotFoundError):  # missing stays FileNotFoundError
         mf.read_manifest(str(tmp_path / "nope.avro"))
 
+    schema = {"type": "record", "name": "r", "fields": [
+        {"name": "n", "type": ["null", "long"]},
+        {"name": "u", "type": ["null", "long", "string"]},
+        {"name": "s", "type": "string"},
+    ]}
+    bad_optional = tmp_path / "bad_optional.avro"
+    bad_optional.write_bytes(_ocf(schema, _longs(2), 1))  # union index 2
+    bad_union = tmp_path / "bad_union.avro"
+    bad_union.write_bytes(_ocf(schema, _longs(0, 3), 1))  # union index 3
+    for path in (bad_optional, bad_union):
+        with pytest.raises(ValueError, match=f"{path.name}.*out of range"):
+            mf.read_manifest(str(path))
+
+    # a block whose record count and size promise more than it holds: the
+    # second record stops inside its string
+    record = _longs(1, 5, 0, 3) + b"abc"
+    cut = _ocf(schema, record + record[:-2], 2)
+    cut_block = tmp_path / "cut_block.avro"
+    cut_block.write_bytes(cut)
+    with pytest.raises(ValueError, match="cut_block.avro.*corrupt or not Avro"):
+        mf.read_manifest(str(cut_block))
+    # a file truncated inside its data block
+    full = _ocf(schema, record * 3, 3)
+    cut_file = tmp_path / "cut_file.avro"
+    cut_file.write_bytes(full[:-20])
+    with pytest.raises(ValueError, match="cut_file.avro.*truncated avro block"):
+        mf.read_manifest(str(cut_file))
+
 
 def test_manifest_record_cache(tmp_path, monkeypatch):
     """The immutable-metadata cache (reference parity:
@@ -585,6 +738,20 @@ def test_localize_custom_roots_match_across_uri_forms():
         "properties": {"write.data.path": "file:///ext/shared/data/t1"}})
     assert _localize(tm2, "/ext/shared/data/t1/u/x.parquet") == \
         "/ext/shared/data/t1/u/x.parquet"
+
+
+def test_localize_keeps_canonical_paths_under_a_marker_location():
+    """A path already under <location>/data/ or <location>/metadata/ is
+    returned as is, even when the location itself contains '/data/' —
+    the marker rewrite used to cut at the location's own '/data/' and
+    return file:///data/t/data/t/data/x.parquet."""
+    from duckdb_iceberg_spark.metadata.table_metadata import TableMetadata
+    from duckdb_iceberg_spark.plans.scan_plan import _localize
+
+    for loc in ("file:///data/t", "s3://bkt/data/t", "/data/t"):
+        tm = TableMetadata({"format-version": 2, "location": loc + "/"})
+        for path in (f"{loc}/data/x.parquet", f"{loc}/metadata/m.avro"):
+            assert _localize(tm, path) == path
 
 
 def test_snapshot_lookups_mutually_exclusive():
