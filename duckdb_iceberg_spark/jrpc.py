@@ -23,8 +23,10 @@ These helpers move the same work through O(1)-round-trip channels:
   ``functions.col`` handle: 1 round-trip per column instead of ~9.
 
 Everything returns ordinary pyspark objects; the resulting logical plans
-are identical to the chatty spellings (pinned by tests). Each helper
-falls back to the public API if the private surface it relies on moves.
+are identical to the chatty spellings (pinned by tests). The private
+surface they use is that of the pinned pyspark 4.1; an error in the JVM
+call (a bad path, an unresolvable expression) raises as the public API
+would, once.
 """
 
 from __future__ import annotations
@@ -74,24 +76,17 @@ def read_files(spark: SparkSession, files: Sequence[str], schema=None,
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    try:
-        jdf = getattr(reader._jreader, file_format)(jseq_strings(spark, files))
-        return DataFrame(jdf, spark)
-    except Exception:
-        # private-surface drift: fall back to the public (chatty) API
-        return getattr(reader, file_format)(*files)
+    jdf = getattr(reader._jreader, file_format)(jseq_strings(spark, files))
+    return DataFrame(jdf, spark)
 
 
 def select_exprs(df: DataFrame, exprs: Iterable[str]) -> DataFrame:
     """``df.selectExpr(*exprs)`` with the expression list shipped in O(1)
     round-trips — the selectExpr-string batching lever (r15 notes): a
     projection of N columns costs 3 round-trips instead of ~9N."""
-    exprs = list(exprs)
     spark = df.sparkSession
-    try:
-        return DataFrame(df._jdf.selectExpr(jseq_strings(spark, exprs)), spark)
-    except Exception:
-        return df.selectExpr(*exprs)
+    return DataFrame(df._jdf.selectExpr(jseq_strings(spark, list(exprs))),
+                     spark)
 
 
 def quote_name(name: str) -> str:
@@ -120,10 +115,8 @@ def _jfunc1(name: str):
 
 
 def _wrap_column(jc):
-    try:
-        from pyspark.sql.classic.column import Column
-    except ImportError:  # pre-4.x layout
-        from pyspark.sql.column import Column
+    from pyspark.sql.classic.column import Column
+
     return Column(jc)
 
 

@@ -80,11 +80,12 @@ def pinned_time_flag():
     calls) and each uncached call is a py4j conf.get round trip (r11
     review) — but the flag may legitimately be toggled BETWEEN passes
     (pinned by test_time_mapping_degrades_when_session_flag_off), so the
-    snapshot lives only as long as the pass, per thread."""
+    snapshot lives only as long as the pass, per thread. The probe runs
+    on first use, so a pass that decodes no ``time`` value pays none."""
     stack = getattr(_TIME_FLAG_PIN, "stack", None)
     if stack is None:
         stack = _TIME_FLAG_PIN.stack = []
-    stack.append(time_type_available())
+    stack.append(None)
     try:
         yield
     finally:
@@ -102,7 +103,13 @@ def time_type_available() -> bool:
     paths), library capability decides, matching get_spark's default."""
     stack = getattr(_TIME_FLAG_PIN, "stack", None)
     if stack:
+        if stack[-1] is None:
+            stack[-1] = _probe_time_type()
         return stack[-1]
+    return _probe_time_type()
+
+
+def _probe_time_type() -> bool:
     if not _TIME_TYPE_IN_LIB:
         return False
     try:

@@ -1,41 +1,25 @@
-"""Distributed scan planning for many-manifest tables.
+"""Scan planning for many-manifest tables.
 
-The driver-side planner (`plan_scan`) parses every surviving manifest
-serially — fine up to ~100 manifests, a bottleneck for a 100 TB table whose
-snapshot holds thousands (the reference's answer is lazy per-manifest
-batches, `iceberg_multi_file_list.cpp:437-498`; benchmarks
-`benchmark/metadata_late_materialization/`). Here the Spark-native answer:
-manifest-level pruning stays on the driver (the manifest LIST is one small
-Avro file holding the partition summaries), then the surviving manifests
-are read and file-pruned IN PARALLEL on executors — each task fastavro-
-parses its manifest, applies the same predicate truth tables, and ships
-back only the surviving entries (pickled dataclasses, KBs per manifest).
-Only file descriptors ever reach the driver; at no point do row data or
-full manifest contents concentrate anywhere."""
+The reference's answer to snapshots with thousands of manifests is lazy
+per-manifest batches (``iceberg_multi_file_list.cpp:437-498``; benchmarks
+``benchmark/metadata_late_materialization/``). Here the Spark-native
+answer: manifest pruning stays on the driver (the manifest LIST is one
+small Avro file holding the partition summaries), then the surviving data
+manifests are read and file-pruned in parallel on executors — each task
+decodes its manifests with the pure-Python Avro reader, applies the same
+bound file filter and ships back only the surviving entries, one pickled
+blob per manifest. The pipeline is the driver planner's own
+(``scan_plan._plan_scan``), given a Spark session."""
 
 from __future__ import annotations
 
-import pickle
 from typing import Optional
 
 from pyspark.sql import SparkSession
 
-from ..metadata import manifest as mf
+from ..metadata import types as ice_types
 from ..metadata.table_metadata import Snapshot, TableMetadata
-from . import predicates as P
-from .scan_plan import (
-    PartitionSpec,
-    ScanPlan,
-    _FileFilter,
-    _assemble_tasks,
-    _live_entries,
-    _localize,
-    _scan_schema,
-    plan_scan,
-    strip_file_stats,
-)
-
-DEFAULT_DISTRIBUTE_THRESHOLD = 64
+from .scan_plan import ScanPlan, _plan_scan
 
 
 def plan_scan_distributed(
@@ -44,117 +28,20 @@ def plan_scan_distributed(
     snapshot: Optional[Snapshot],
     where: str | None = None,
     *,
-    manifest_threshold: int = DEFAULT_DISTRIBUTE_THRESHOLD,
+    manifest_threshold: Optional[int] = None,
     snapshot_schema: bool | None = None,
     lean: bool = False,
 ) -> ScanPlan:
-    """Like ``plan_scan`` but parallelizes manifest parsing + file pruning
-    across executors once the (post-pruning) data-manifest count exceeds
-    ``manifest_threshold``. Falls back to the driver planner below it.
+    """Like ``plan_scan``, but the data manifests are read and
+    file-pruned on executors once more than ``manifest_threshold``
+    (default ``fanout.DRIVER_MAX``) survive manifest pruning.
 
-    ``lean=True`` (r15 — VERDICT r14 task 2) strips per-column stat maps
-    from surviving entries ON THE EXECUTOR, before they are pickled back:
-    the driver's task list then carries only read-relevant fields
-    (~3x smaller at 1e6 entries), and the collect ships ~3x fewer
-    bytes. Pruning still sees full stats — the strip happens after
-    file pruning."""
-    pred = P.parse_where(where)
-    if snapshot is None or not snapshot.manifest_list:
-        return plan_scan(tm, snapshot, where, snapshot_schema=snapshot_schema,
-                         lean=lean)
-
-    ml_path = _localize(tm, snapshot.manifest_list)
-    manifests = mf.read_manifest_list(ml_path)
-    scan_schema_id, schema_json = _scan_schema(tm, snapshot, snapshot_schema)
-    filt = _FileFilter(tm, pred, schema_json)
-
-    data_manifests: list[mf.ManifestFile] = []
-    delete_manifests: list[mf.ManifestFile] = []
-    pruned = 0
-    for m in manifests:
-        if not filt.manifest_matches(m):
-            pruned += 1
-            continue
-        (delete_manifests if m.content == mf.MANIFEST_DELETES else data_manifests).append(m)
-
-    if len(data_manifests) <= manifest_threshold:
-        return plan_scan(tm, snapshot, where, snapshot_schema=snapshot_schema,
-                         lean=lean)
-
-    tm_blob = pickle.dumps(tm)
-    pred_blob = pickle.dumps(pred)
-    schema_blob = pickle.dumps(schema_json)
-
-    def prune_manifests(items):
-        # one unpickle and one bound filter per task, not per manifest
-        tm_l: TableMetadata = pickle.loads(tm_blob)
-        filt_l = _FileFilter(tm_l, pickle.loads(pred_blob),
-                             pickle.loads(schema_blob))
-        for path, spec_id, m_seq, m_first_row_id in items:
-            spec = tm_l.partition_specs.get(spec_id, PartitionSpec(spec_id, []))
-            entries = mf.read_manifest(_localize(tm_l, path))
-            # row-lineage inheritance runs over the FULL list before
-            # pruning — offsets depend on every preceding ADDED entry
-            mf.inherit_first_row_ids(entries, m_first_row_id)
-            out = []
-            live = 0
-            for e in _live_entries(entries, m_seq):
-                live += 1
-                if not filt_l.matches(e, spec):
-                    continue
-                if lean:
-                    e = mf.ManifestEntry(
-                        status=e.status, snapshot_id=e.snapshot_id,
-                        sequence_number=e.sequence_number,
-                        file_sequence_number=e.file_sequence_number,
-                        data_file=strip_file_stats(e.data_file))
-                out.append((e, spec_id))
-            # ONE blob per manifest (r15): per-entry pickles made the
-            # driver hold 1e6 tiny bytes objects next to their unpickled
-            # twins — batching + the pop()-streaming consume below cut the
-            # 1e6-entry driver peak from 1.66 GB to under budget. ``live``
-            # counts the entries file pruning considered.
-            yield live, pickle.dumps(out)
-
-    items = [(m.manifest_path, m.partition_spec_id, m.sequence_number,
-              m.first_row_id)
-             for m in data_manifests]
-    n_slices = min(len(items), spark.sparkContext.defaultParallelism * 2)
-    survivors_raw = (
-        spark.sparkContext.parallelize(items, n_slices)
-        .mapPartitions(prune_manifests)
-        .collect()
-    )
-
-    # delete manifests: usually few — parse on the driver
-    pos_deletes: list[tuple[mf.ManifestEntry, int]] = []
-    eq_deletes: list[tuple[mf.ManifestEntry, int]] = []
-    for m in delete_manifests:
-        for e in _live_entries(mf.read_manifest(
-                _localize(tm, m.manifest_path)), m.sequence_number):
-            if e.data_file.content == mf.CONTENT_EQUALITY_DELETES:
-                eq_deletes.append((e, m.partition_spec_id))
-            else:
-                pos_deletes.append((e, m.partition_spec_id))
-
-    files_total = sum(live for live, _ in survivors_raw)
-
-    def _stream_entries():
-        # consume blobs back-to-front, releasing each after unpickling —
-        # the collect result and the growing task list never coexist in
-        # full (the r15 1e6-entry driver-peak fix)
-        while survivors_raw:
-            yield from pickle.loads(survivors_raw.pop()[1])
-
-    tasks = _assemble_tasks(tm, _stream_entries(), pos_deletes, eq_deletes,
-                            filt, lean=lean)
-    stats = {
-        "manifests_total": len(manifests),
-        "manifests_pruned": pruned,
-        "files_total": files_total,
-        "files_pruned": files_total - len(tasks),
-        "delete_files": len(pos_deletes) + len(eq_deletes),
-        "distributed_manifests": len(data_manifests),
-    }
-    tasks.sort(key=lambda t: t.data_file.file_path)  # determinism across runs
-    return ScanPlan(tm, snapshot, tasks, where, scan_schema_id, stats)
+    ``lean=True`` strips per-column stat maps from surviving entries ON
+    THE EXECUTOR, before they are pickled back: the driver's task list
+    then carries only read-relevant fields (~3x smaller at 1e6 entries),
+    and the collect ships ~3x fewer bytes. Pruning still sees full
+    stats — the strip happens after file pruning."""
+    with ice_types.pinned_time_flag():
+        return _plan_scan(tm, snapshot, where, spark=spark,
+                          manifest_threshold=manifest_threshold,
+                          snapshot_schema=snapshot_schema, lean=lean)

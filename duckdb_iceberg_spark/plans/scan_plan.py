@@ -1,25 +1,27 @@
-"""Driver-side scan planning: snapshot → manifest list → pruned file list
+"""Scan planning: snapshot → manifest list → pruned file list
 with per-file delete assignments and partition constants.
 
 This is the PySpark re-expression of the reference's planning pipeline
 (reference: src/planning/iceberg_multi_file_list.cpp:437-553 lazy file
 surfacing; src/planning/pruning/iceberg_file_pruner.cpp manifest/file/delete
 pruning; src/planning/deletes/iceberg_delete_planner.cpp per-file delete
-assignment). Everything here is metadata-sized work that runs on the driver
-before any Spark job; the data-sized work is expressed as DataFrames.
+assignment). Everything here is metadata-sized work that runs before the
+scan's Spark job; the data-sized work is expressed as DataFrames.
 
 Scale notes (100 TB design):
 - manifests are pruned *before* being opened (field summaries), mirroring the
   reference's lazy materialization — a 256-manifest table with a selective
   partition filter opens only matching manifests (BASELINE.md late-material.
   benchmark).
-- per-manifest parsing is O(entries) driver CPU; at huge manifest counts the
-  same pruning can be run as a Spark job over the Avro bytes (manifests are
-  independent), which keeps the driver O(#manifests). Hook: `parallel_threshold`.
+- per-manifest parsing is O(entries) CPU; manifests are independent, so
+  above ``fanout.DRIVER_MAX`` surviving data manifests a planner given a
+  Spark session (``plan_scan_distributed``) reads and file-prunes them in
+  one Spark job and the driver stays O(#manifests + surviving entries).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as _dt
 import logging
 import os
@@ -713,10 +715,8 @@ def strip_file_stats(df: "mf.DataFile") -> "mf.DataFile":
     routing fields); the six stat dicts are ~1 KB per entry and dominate
     the driver's retained memory at 1e6-entry scale. A fresh copy, never
     an in-place strip — manifest-cache objects are shared."""
-    import dataclasses
-
     if all(getattr(df, f) is None for f in _STAT_FIELDS):
-        return df  # already stripped (the distributed planner's executors)
+        return df  # already stripped (by the manifest reader, before pickling)
     return dataclasses.replace(df, **dict.fromkeys(_STAT_FIELDS))
 
 
@@ -772,8 +772,7 @@ def _assemble_tasks(tm: TableMetadata, entries, pos_deletes: list,
     """FileScanTasks for the ``(entry, spec_id)`` data entries that
     survived file pruning: data-format check, path localization and
     delete attachment (equality deletes are pruned through the plan's
-    ``filt``). Both planners (``plan_scan`` and the executor-side
-    ``plan_scan_distributed``) assemble their tasks here."""
+    ``filt``)."""
     from ..io import normalize_path
 
     has_deletes = bool(pos_deletes or eq_deletes)
@@ -844,9 +843,9 @@ def plan_scan(
     snapshot_schema: bool | None = None,
     lean: bool = False,
 ) -> ScanPlan:
-    """Build the file-level scan plan for a snapshot (see _plan_scan;
-    the TimeType capability probe is pinned for the pass so the
-    per-bound decode loops don't pay a py4j conf round trip per file).
+    """Build the file-level scan plan for a snapshot on the driver (see
+    _plan_scan; the TimeType capability probe is pinned for the pass so
+    the per-bound decode loops don't pay a py4j conf round trip per file).
 
     ``lean=True`` strips per-column stats from planned tasks
     (:func:`strip_file_stats`) — the scan/read path never consults them
@@ -857,15 +856,67 @@ def plan_scan(
                           snapshot_schema=snapshot_schema, lean=lean)
 
 
+def _data_manifest_reader(tm: TableMetadata, pred: P.Predicate,
+                          schema_json: dict, where: str | None, lean: bool):
+    """Per-task function for :func:`fanout.map_items` over the data
+    manifests' ``(path, spec id, sequence number, first row id)`` items.
+    Yields ``(live data entries, surviving entries, delete entries)`` per
+    manifest; delete-content entries of a data manifest are returned for
+    the caller to classify. One bound file filter per task."""
+
+    def read(items):
+        filt = _FileFilter(tm, pred, schema_json)
+        debug = _log.isEnabledFor(logging.DEBUG)
+        for path, spec_id, seq, first_row_id in items:
+            spec = tm.partition_specs.get(spec_id, PartitionSpec(spec_id, []))
+            entries = mf.read_manifest(_localize(tm, path))
+            # row-lineage inheritance runs over the FULL list before
+            # pruning — offsets depend on every preceding ADDED entry
+            mf.inherit_first_row_ids(entries, first_row_id)
+            live, kept, deletes = 0, [], []
+            for e in _live_entries(entries, seq):
+                if e.data_file.content in (mf.CONTENT_POSITION_DELETES,
+                                           mf.CONTENT_EQUALITY_DELETES):
+                    deletes.append(e)
+                    continue
+                live += 1
+                if not filt.matches(e, spec):
+                    if debug:
+                        _log.debug(
+                            "skipped data_file %s: partition column with "
+                            "transform [%s] or column bounds does not match "
+                            "filter %r", e.data_file.file_path,
+                            ", ".join(f.transform for f in spec.fields), where)
+                    continue
+                if lean:
+                    # strip before the entry is pickled back to the driver
+                    e = dataclasses.replace(
+                        e, data_file=strip_file_stats(e.data_file))
+                kept.append(e)
+            yield live, kept, deletes
+
+    return read
+
+
 def _plan_scan(
     tm: TableMetadata,
     snapshot: Optional[Snapshot],
     where: str | None = None,
     *,
+    spark=None,
+    manifest_threshold: Optional[int] = None,
     snapshot_schema: bool | None = None,
     lean: bool = False,
 ) -> ScanPlan:
     """Build the file-level scan plan for a snapshot.
+
+    Manifest list → manifest pruning on the partition summaries → per
+    data manifest read, row-lineage inheritance and file pruning →
+    delete attachment. The data manifests go through
+    :func:`fanout.map_items`: on the driver without ``spark``, on
+    executors when more than ``manifest_threshold`` (default
+    ``fanout.DRIVER_MAX``) survive pruning, and then ``stats`` gains
+    ``distributed_manifests``. Delete manifests are read on the driver.
 
     ``snapshot_schema`` mirrors the reference's lookup-source semantics
     (iceberg_table_metadata.cpp GetSnapshot): an EXPLICIT snapshot lookup
@@ -873,6 +924,8 @@ def _plan_scan(
     snapshot is also the latest; a LATEST lookup reads the table's current
     schema. ``None`` keeps the legacy inference (snapshot schema only when
     the snapshot is not current)."""
+    from .. import fanout
+
     pred = P.parse_where(where)
     stats = {"manifests_total": 0, "manifests_pruned": 0, "files_total": 0,
              "files_pruned": 0, "delete_files": 0, "estimated_rows": 0}
@@ -884,51 +937,56 @@ def _plan_scan(
     scan_schema_id, schema_json = _scan_schema(tm, snapshot, snapshot_schema)
     filt = _FileFilter(tm, pred, schema_json)
 
-    data_entries: list[tuple[mf.ManifestEntry, int]] = []  # (entry, spec_id)
+    matching: list[mf.ManifestFile] = []
+    for m in manifests:
+        if filt.manifest_matches(m):
+            matching.append(m)
+            continue
+        # a delete manifest whose partitions can't overlap the filtered
+        # data can be skipped entirely (prune_positional_deletes bench)
+        stats["manifests_pruned"] += 1
+        if _log.isEnabledFor(logging.DEBUG):
+            _log.debug(
+                "skipped manifest %s: partition field summaries do not "
+                "match filter %r", m.manifest_path, where)
+
+    items = [(m.manifest_path, m.partition_spec_id, m.sequence_number,
+              m.first_row_id)
+             for m in matching if m.content == mf.MANIFEST_DATA]
+    if fanout.on_executors(spark, len(items), tm.location,
+                           driver_max=manifest_threshold):
+        stats["distributed_manifests"] = len(items)
+    read = _data_manifest_reader(tm, pred, schema_json, where, lean)
+    results = fanout.map_items(spark, items, read, io_path=tm.location,
+                               driver_max=manifest_threshold)
+
+    survivors: list[tuple[list, int]] = []  # (entries, spec_id) per manifest
     pos_deletes: list[tuple[mf.ManifestEntry, int]] = []
     eq_deletes: list[tuple[mf.ManifestEntry, int]] = []
-
-    for m in manifests:
-        if not filt.manifest_matches(m):
-            # a delete manifest whose partitions can't overlap the filtered
-            # data can be skipped entirely (prune_positional_deletes bench)
-            stats["manifests_pruned"] += 1
-            if _log.isEnabledFor(logging.DEBUG):
-                _log.debug(
-                    "skipped manifest %s: partition field summaries do not "
-                    "match filter %r", m.manifest_path, where)
-            continue
-        entries = mf.read_manifest(_localize(tm, m.manifest_path))
+    for m in matching:
         if m.content == mf.MANIFEST_DATA:
-            mf.inherit_first_row_ids(entries, m.first_row_id)
-        for e in _live_entries(entries, m.sequence_number):
-            content = e.data_file.content
-            if m.content == mf.MANIFEST_DELETES or content in (
-                mf.CONTENT_POSITION_DELETES, mf.CONTENT_EQUALITY_DELETES
-            ):
-                if content == mf.CONTENT_EQUALITY_DELETES:
-                    eq_deletes.append((e, m.partition_spec_id))
-                else:
-                    pos_deletes.append((e, m.partition_spec_id))
+            live, kept, deletes = next(results)
+            stats["files_total"] += live
+            stats["files_pruned"] += live - len(kept)
+            survivors.append((kept, m.partition_spec_id))
+        else:
+            deletes = _live_entries(
+                mf.read_manifest(_localize(tm, m.manifest_path)),
+                m.sequence_number)
+        for e in deletes:
+            if e.data_file.content == mf.CONTENT_EQUALITY_DELETES:
+                eq_deletes.append((e, m.partition_spec_id))
             else:
-                data_entries.append((e, m.partition_spec_id))
-
-    stats["files_total"] = len(data_entries)
+                pos_deletes.append((e, m.partition_spec_id))
     stats["delete_files"] = len(pos_deletes) + len(eq_deletes)
 
     def _surviving():
-        for e, spec_id in data_entries:
-            spec = tm.partition_specs.get(spec_id, PartitionSpec(spec_id, []))
-            if filt.matches(e, spec):
+        # release each manifest's entries once its tasks exist
+        survivors.reverse()
+        while survivors:
+            kept, spec_id = survivors.pop()
+            for e in kept:
                 yield e, spec_id
-                continue
-            stats["files_pruned"] += 1
-            if _log.isEnabledFor(logging.DEBUG):
-                _log.debug(
-                    "skipped data_file %s: partition column with "
-                    "transform [%s] or column bounds does not match filter "
-                    "%r", e.data_file.file_path,
-                    ", ".join(f.transform for f in spec.fields), where)
 
     tasks = _assemble_tasks(tm, _surviving(), pos_deletes, eq_deletes, filt,
                             lean=lean)

@@ -8,8 +8,8 @@ Spark-first shape:
 - the import is METADATA-ONLY: per-file footer stats (row counts, typed
   min/max bounds, null counts) become manifest entries, so partition and
   zone-map pruning work on imported files exactly as on written ones;
-- footer-stat collection fans out to executors above the same 64-file
-  cutoff the schema sniffer uses (one mapInPandas over the path list) —
+- footer-stat collection fans out to executors above the same cutoff
+  the schema sniffer uses (``fanout.map_items`` over the path list) —
   importing a million-file lake never serializes footer reads on the
   driver;
 - imported files usually carry NO parquet field-ids, so the import sets
@@ -34,9 +34,6 @@ from ..metadata import manifest as mf
 from ..metadata import types as ice_types
 from ..metadata.table_metadata import TableMetadata, load_table_metadata
 from .writer import commit_snapshot, create_table, current_version_number
-
-#: same executor fan-out cutoff the schema sniffer uses
-_STATS_DRIVER_MAX = 64
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -111,8 +108,7 @@ _BOUND_SAFE = {"boolean", "int", "long", "string",
 def _footer_stats(path: str, fields: list[tuple[str, int, str]]) -> dict:
     """One file's footer → row count, size, and per-field (null count,
     min, max) keyed by field id. ``fields`` = (name, field_id, ice_type)
-    for the table's top-level primitive columns. Module-level so the
-    executor fan-out ships only this function."""
+    for the table's top-level primitive columns."""
     import pyarrow.parquet as pq
 
     from ..io import get_io
@@ -169,77 +165,18 @@ def _file_size(path: str) -> int:
 
 def _collect_stats(spark: SparkSession, files: list[str],
                    fields: list[tuple[str, int, str]]) -> list[dict]:
-    """Footer stats per imported file — parallel mapInPandas above the
-    driver threshold, driver-side below it. Scale note (VERDICT r12): the
-    collect() is O(#files) compact JSON stat strings, the SAME order as
-    the manifest entries the driver must author from them anyway —
-    add_files cannot commit without driver-side entries, so this bound is
-    inherent to the import, not an implementation shortcut (mirrors
-    writer.py's manifest-authoring scale notes)."""
-    from ..io import get_io, io_from_storage_options, storage_options_for
+    """Footer stats per imported file, through :func:`fanout.map_items`
+    (driver thread pool below the fan-out threshold, executors above it).
+    Scale note (VERDICT r12): the collect is O(#files) stat dicts, the
+    SAME order as the manifest entries the driver must author from them
+    anyway — add_files cannot commit without driver-side entries, so this
+    bound is inherent to the import, not an implementation shortcut
+    (mirrors writer.py's manifest-authoring scale notes)."""
+    from .. import fanout
 
-    if not get_io(files[0]).shippable or len(files) <= _STATS_DRIVER_MAX:
-        return [_footer_stats(f, fields) for f in files]
-    import json as _json
-
-    import pandas as pd
-
-    opts = storage_options_for(files[0])
-    from ..io import parse_uri
-
-    scheme = parse_uri(files[0])[0]
-    flds = list(fields)
-
-    def batches(it):
-        # absolute imports + io registration: runs in executor workers
-        from duckdb_iceberg_spark.io import (io_from_storage_options,
-                                             register_io)
-        from duckdb_iceberg_spark.sources.add_files import _footer_stats
-
-        if scheme and opts:
-            register_io(scheme, io_from_storage_options(opts))
-        for pdf in it:
-            out = []
-            for p in pdf["path"]:
-                s = _footer_stats(p, flds)
-                out.append(_json.dumps(
-                    {**s, "lo": {k: _jsonable(v) for k, v in s["lo"].items()},
-                     "hi": {k: _jsonable(v) for k, v in s["hi"].items()}},
-                    default=str))
-            yield pd.DataFrame({"s": out})
-
-    meta = spark.createDataFrame([(f,) for f in files], "path: string")
-    rows = meta.repartition(32).mapInPandas(batches, "s string").collect()
-    out = []
-    for r in rows:
-        d = _json.loads(r.s)
-        d["nulls"] = {int(k): v for k, v in d["nulls"].items()}
-        d["lo"] = {int(k): v for k, v in d["lo"].items()}
-        d["hi"] = {int(k): v for k, v in d["hi"].items()}
-        out.append(d)
-    return out
-
-
-def _jsonable(v):
-    import datetime as _dt
-
-    if isinstance(v, (_dt.date, _dt.datetime)):
-        return v.isoformat()
-    return v
-
-
-def _revive(v, ice_type: str):
-    """JSON round-trip → the python value encode_bound expects."""
-    import datetime as _dt
-
-    name = ice_types.primitive_name(ice_type)
-    if v is None or not isinstance(v, str):
-        return v
-    if name == "date":
-        return _dt.date.fromisoformat(v)
-    if name in ("timestamp", "timestamptz"):
-        return _dt.datetime.fromisoformat(v)
-    return v
+    return list(fanout.map_items(
+        spark, files, lambda paths: (_footer_stats(p, fields) for p in paths),
+        io_path=files[0], threads=True))
 
 
 def build_name_mapping(schema_json: dict) -> str:
@@ -355,13 +292,11 @@ def add_files(
         lo = {}
         hi = {}
         for fid, v in s["lo"].items():
-            b = ice_types.encode_bound(
-                types_by_fid[fid], _revive(v, types_by_fid[fid]))
+            b = ice_types.encode_bound(types_by_fid[fid], v)
             if b is not None:
                 lo[fid] = b
         for fid, v in s["hi"].items():
-            b = ice_types.encode_bound(
-                types_by_fid[fid], _revive(v, types_by_fid[fid]))
+            b = ice_types.encode_bound(types_by_fid[fid], v)
             if b is not None:
                 hi[fid] = b
         part = (_parse_hive_partition(s["path"], ident_parts)

@@ -193,7 +193,8 @@ def _write_positional_deletes(
     partitions' delete files. The write fans out as one applyInPandas
     group per data file (shuffle carries only the delta); the driver
     receives per-file summaries, never positions."""
-    from ..io import normalize_path, parse_uri, storage_options_for
+    from ..fanout import worker_io
+    from ..io import normalize_path
 
     # delete-file format (r14): explicit write.delete.format.default
     # only — parquet (default) or avro. NOT inherited from
@@ -210,8 +211,7 @@ def _write_positional_deletes(
     out_dir = fio.join(tm.data_path(), f"deletes-{str(_uuid.uuid4())[:8]}")
     io0 = fio.get_io(out_dir)
     io0.mkdirs(out_dir)
-    opts = storage_options_for(out_dir)
-    scheme = parse_uri(out_dir)[0]
+    install_io = worker_io(out_dir)
 
     def _write_group(pdf):
         import uuid as _u
@@ -219,15 +219,13 @@ def _write_positional_deletes(
         import pandas as pd
 
         # absolute imports: executes in executor Python workers
-        from duckdb_iceberg_spark.io import (get_io, io_from_storage_options,
-                                             register_io)
+        from duckdb_iceberg_spark.io import get_io
         from duckdb_iceberg_spark.sources.dml import (
             _pos_delete_avro_bytes,
             _pos_delete_parquet_bytes,
         )
 
-        if scheme and opts:
-            register_io(scheme, io_from_storage_options(opts))
+        install_io()
         fp = pdf["file_path"].iloc[0]
         positions = pdf["pos"].to_numpy(dtype="int64")
         positions.sort()
@@ -334,7 +332,7 @@ def _write_deletion_vectors(
     when file counts matter."""
     from ..metadata import puffin as pf
     from .. import io as fio
-    from ..io import parse_uri, storage_options_for
+    from ..fanout import worker_io
 
     # prior DV per affected data file, merged on executors (the spec allows
     # at most one DV per data file, so the old blob is superseded). Keys are
@@ -352,18 +350,11 @@ def _write_deletion_vectors(
                              int(d.content_size_in_bytes or 0))
                 replaced_by_file[fp] = d.file_path
 
-    opts: dict = {}
-    scheme = ""
-    if prior:
-        any_puffin = next(iter(prior.values()))[0]
-        opts = storage_options_for(any_puffin)
-        scheme = parse_uri(any_puffin)[0]
-
     dv_dir = fio.join(tm.data_path(), f"dv-{str(_uuid.uuid4())[:8]}")
     io0 = fio.get_io(dv_dir)
     io0.mkdirs(dv_dir)
-    w_opts = storage_options_for(dv_dir)
-    w_scheme = parse_uri(dv_dir)[0]
+    # the IO that reads prior DVs, then the one that writes the new Puffin
+    install_io = worker_io(*(p for p, _, _ in prior.values()), dv_dir)
 
     def _build(pdf):
         import uuid as _u
@@ -404,12 +395,7 @@ def _write_deletion_vectors(
         # worker for reading prior DVs and writing the new Puffin — ONLY
         # here: the driver fallback below must not clobber the driver's
         # already-registered IO (e.g. a test's mock object store)
-        from duckdb_iceberg_spark.io import io_from_storage_options, register_io
-
-        if scheme and opts:
-            register_io(scheme, io_from_storage_options(opts))
-        if w_scheme and w_opts and (w_scheme != scheme or not opts):
-            register_io(w_scheme, io_from_storage_options(w_opts))
+        install_io()
         return _build(pdf)
 
     keyed = pairs.select(F.col("file_path"),

@@ -513,38 +513,27 @@ def remove_orphan_files(
 
 
 def _read_manifests(tm: TableMetadata, manifests, *, counts: dict | None = None):
-    """Yield ``(manifest, entries)`` for each manifest. Above the
-    distributed-planner threshold (64) the Avro parses fan out to
-    executors — same pattern as ``plans.distributed_planner``: each task
-    fastavro-parses one manifest and ships back pickled entries (KBs),
-    so a 100k-manifest consolidation never serializes reads on the
-    driver. Below the threshold (or with no active session) reads stay
-    driver-serial."""
-    import pickle as _pickle
-
-    from ..plans.distributed_planner import DEFAULT_DISTRIBUTE_THRESHOLD
+    """Yield ``(manifest, entries)`` for each manifest, read through
+    :func:`fanout.map_items`: above its threshold, with an active session,
+    the Avro decodes fan out to executors and ship back pickled entries
+    (KBs per manifest), so a 100k-manifest consolidation never
+    serializes reads on the driver; below it they stay driver-serial.
+    ``counts["distributed_manifest_reads"]`` records an executor read."""
+    from .. import fanout
     from ..plans.scan_plan import _localize
 
-    spark = SparkSession.getActiveSession()
-    if len(manifests) > DEFAULT_DISTRIBUTE_THRESHOLD and spark is not None:
-        tm_blob = _pickle.dumps(tm)
-        items = list(enumerate(m.manifest_path for m in manifests))
-
-        def read_one(item):
-            i, path = item
-            tm_l = _pickle.loads(tm_blob)
-            return [(i, _pickle.dumps(mf.read_manifest(_localize(tm_l, path))))]
-
-        n_slices = min(len(items), spark.sparkContext.defaultParallelism * 2)
-        got = dict(spark.sparkContext.parallelize(items, n_slices)
-                   .flatMap(read_one).collect())
-        if counts is not None:
-            counts["distributed_manifest_reads"] = len(items)
-        for i, m in enumerate(manifests):
-            yield m, _pickle.loads(got[i])
-        return
-    for m in manifests:
-        yield m, mf.read_manifest(_localize(tm, m.manifest_path))
+    # the session lookup costs py4j round trips: only when it can matter
+    spark = (SparkSession.getActiveSession()
+             if len(manifests) > fanout.DRIVER_MAX else None)
+    paths = [m.manifest_path for m in manifests]
+    if counts is not None and fanout.on_executors(spark, len(paths),
+                                                  tm.location):
+        counts["distributed_manifest_reads"] = len(paths)
+    entries = fanout.map_items(
+        spark, paths,
+        lambda ps: (mf.read_manifest(_localize(tm, p)) for p in ps),
+        io_path=tm.location)
+    yield from zip(manifests, entries)
 
 
 def rewrite_manifests(

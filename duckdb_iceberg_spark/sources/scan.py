@@ -738,10 +738,6 @@ def scan_to_dataframe(
 # name-mapping fallback (files written without parquet field-ids)
 # ---------------------------------------------------------------------------
 
-#: above this many files, footer sniffing fans out to executors
-_FOOTER_SNIFF_DRIVER_MAX = 64
-
-
 def _arrow_schema_info(sch) -> tuple[list[str], list[int], str]:
     """Recursive walk of an arrow schema: (dotted field-name paths, all
     field-ids incl. nested, layout signature for grouping). List elements and
@@ -783,16 +779,14 @@ _SNIFF_CACHE: dict[str, tuple[str, bool, list[str], list[int], str]] = {}
 _SNIFF_CACHE_MAX = 1_000_000
 
 
-def _sniff_schema(path: str, fs_io, file_format: str) -> tuple[str, bool, list[str], list[int], str]:
+def _sniff_schema(path: str, file_format: str) -> tuple[str, bool, list[str], list[int], str]:
     """One file's (path, has_field_ids, dotted names, field-ids, layout
-    signature). Module-level (not a closure) so the executor fan-out path
-    ships only this function + the format string, never a driver object
-    graph. ORC carries no field-id story in Spark's source, so ORC files
-    always report has_field_ids=False (name-resolved downstream)."""
+    signature). ORC carries no field-id story in Spark's source, so ORC
+    files always report has_field_ids=False (name-resolved downstream)."""
     from ..io import get_io
     from ..io.arrow_data import _open_arrow_input
 
-    fs_io = fs_io or get_io(path)
+    fs_io = get_io(path)
     if file_format == "orc":
         import pyarrow.orc as po
 
@@ -809,67 +803,31 @@ def _sniff_schema(path: str, fs_io, file_format: str) -> tuple[str, bool, list[s
 def _sniff_footers(spark: SparkSession, files: list[str],
                    file_format: str = "parquet") -> list[tuple[str, bool, list[str], list[int], str]]:
     """(path, has_field_ids, dotted column-name paths, field-ids incl.
-    nested, layout signature) per file. Schema reads are distributed above
-    _FOOTER_SNIFF_DRIVER_MAX files so the driver never serially opens
-    thousands of footers (manifest-late-materialization posture); results
-    are cached per path. Since r12 the same fan-out serves both formats
-    (``file_format`` = parquet|orc) — an ORC table with thousands of files
-    (foreign writers) plans through the identical mapInPandas path instead
-    of a driver thread pool (VERDICT r11 task 4)."""
-
-    from ..io import get_io, io_from_storage_options, storage_options_for
+    nested, layout signature) per file, for parquet or ORC
+    (``file_format``). A schema read is one small ranged tail read, so
+    the reads go through :func:`fanout.map_items` with a driver thread
+    pool below the fan-out threshold and executors above it — the driver
+    never serially opens thousands of footers; results are cached per
+    path."""
+    from .. import fanout
 
     cached = [_SNIFF_CACHE[f] for f in files if f in _SNIFF_CACHE]
     files = [f for f in files if f not in _SNIFF_CACHE]
     if not files:
         return cached
 
-    def _remember(results):
-        if len(_SNIFF_CACHE) < _SNIFF_CACHE_MAX:
-            for r in results:
-                _SNIFF_CACHE[r[0]] = r
-        return cached + results
-
-    if not get_io(files[0]).shippable or len(files) <= _FOOTER_SNIFF_DRIVER_MAX:
-        if len(files) > 4:
-            # a schema read is one small-ranged tail read — I/O-bound, so
-            # a driver thread pool hides latency below the fan-out cutoff
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
-                return _remember(list(ex.map(
-                    lambda f: _sniff_schema(f, None, file_format), files)))
-        return _remember([_sniff_schema(f, None, file_format) for f in files])
-    import pandas as pd
-
-    opts = storage_options_for(files[0])
-    fmt = file_format
-
-    def sniff_batches(batches):
-        fs_io = io_from_storage_options(opts)
-        for pdf in batches:
-            out = [_sniff_schema(p, fs_io, fmt) for p in pdf["path"]]
-            yield pd.DataFrame(
-                {"path": [o[0] for o in out],
-                 "has_ids": [o[1] for o in out],
-                 "names": [o[2] for o in out],
-                 "fids": [o[3] for o in out],
-                 "sig": [o[4] for o in out]})
-
-    meta = spark.createDataFrame([(f,) for f in files], "path: string")
-    return _remember([
-        (r.path, r.has_ids, list(r.names), [int(i) for i in r.fids], r.sig)
-        for r in meta.repartition(32).mapInPandas(
-            sniff_batches,
-            "path string, has_ids boolean, names array<string>, "
-            "fids array<int>, sig string"
-        ).collect()
-    ])
+    results = list(fanout.map_items(
+        spark, files,
+        lambda paths: (_sniff_schema(p, file_format) for p in paths),
+        io_path=files[0], threads=True))
+    if len(_SNIFF_CACHE) < _SNIFF_CACHE_MAX:
+        for r in results:
+            _SNIFF_CACHE[r[0]] = r
+    return cached + results
 
 
 def _sniff_orc_schemas(spark: SparkSession, files: list[str]) -> list[tuple[str, bool, list[str], list[int], str]]:
-    """ORC twin of the parquet sniff — same shared fan-out path since r12
-    (driver thread pool ≤64 files, mapInPandas executor fan-out above)."""
+    """ORC twin of the parquet sniff — same shared fan-out path since r12."""
     return _sniff_footers(spark, files, file_format="orc")
 
 
@@ -1233,21 +1191,16 @@ def _dv_positions_df(spark: SparkSession, dv_blobs: dict[str, "mf.DataFile"]) ->
                                   "__del_pos": pd.Series(dtype="int64")}))
         return spark.createDataFrame(
             pdf, "`__del_file` string, `__del_pos` long")
-    from ..io import parse_uri, register_io, storage_options_for
-    from ..io import io_from_storage_options
+    from ..fanout import worker_io
 
-    opts = storage_options_for(meta[0][1]) if meta else {}
-    scheme = parse_uri(meta[0][1])[0] if meta else ""
-
+    install_io = worker_io(meta[0][1])
     meta_df = spark.createDataFrame(
         meta, "ref: string, puffin: string, offset: long, length: long")
 
     def decode(batches):
         from ..metadata.puffin import read_dv_positions
 
-        if scheme and opts:
-            # executor process: rebuild the driver's (possibly vended) IO
-            register_io(scheme, io_from_storage_options(opts))
+        install_io()  # executor process: the driver's (possibly vended) IO
         for pdf in batches:
             for r in pdf.itertuples():
                 pos = read_dv_positions(

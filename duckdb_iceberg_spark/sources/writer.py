@@ -6,9 +6,9 @@ projection (GetTransformExpression, :403-475) becomes `withColumn` of
 transform Columns, the sort order (:497-511) becomes `sortWithinPartitions`,
 the parquet copy becomes `df.write.partitionBy(...)`, per-file stats
 (AddFiles, :150-237) are collected from parquet footers — distributed via
-mapInPandas when the file count is large, so the driver never holds
-data-sized state — and Finalize (:286-329) becomes manifest + manifest-list
-+ metadata-JSON commit (COPY TO FORMAT ICEBERG analogue,
+``fanout.map_items`` when the file count is large, so the driver never
+holds data-sized state — and Finalize (:286-329) becomes manifest +
+manifest-list + metadata-JSON commit (COPY TO FORMAT ICEBERG analogue,
 src/function/copy/iceberg_copy_function.cpp:11-31).
 
 Scale notes (100 TB design):
@@ -16,7 +16,7 @@ Scale notes (100 TB design):
   co-locates rows per partition so each task writes few files (small-file
   control); AQE coalesces tiny partitions.
 - footer-stat collection reads only parquet footers: O(#files) metadata work,
-  distributed over executors above `_DISTRIBUTED_STATS_THRESHOLD` files.
+  distributed over executors above ``fanout.DRIVER_MAX`` files.
 - manifests are written per-snapshot; at many-snapshot scale, rewrite_data_
   files (maintenance.py) bin-packs.
 """
@@ -51,7 +51,6 @@ from ..metadata.table_metadata import (
 )
 from ..plans import transforms as tr
 
-_DISTRIBUTED_STATS_THRESHOLD = 64
 _TRANSFORM_CALL_RE = re.compile(r"^\s*(\w+)\s*\(\s*(.*?)\s*\)\s*$")
 
 
@@ -201,7 +200,7 @@ def create_table(
 # parquet footer stats → DataFile entries
 # ---------------------------------------------------------------------------
 
-def _footer_stats_one(path: str, fs_io=None) -> dict:
+def _footer_stats_one(path: str) -> dict:
     """Read one parquet footer: row count, size, per-field-id stats — via
     the FileIO (a footer read is one ranged GET on object stores)."""
     import pyarrow.parquet as pq
@@ -209,7 +208,7 @@ def _footer_stats_one(path: str, fs_io=None) -> dict:
     from ..io import get_io
     from ..io.arrow_data import _open_arrow_input
 
-    fs_io = fs_io or get_io(path)
+    fs_io = get_io(path)
     pf = pq.ParquetFile(_open_arrow_input(fs_io, path))
     meta = pf.metadata
     arrow_schema = pf.schema_arrow
@@ -267,32 +266,15 @@ def _stat_lt(a: Any, b: Any) -> bool:
 
 
 def _collect_stats(spark: SparkSession, paths: list[str]) -> list[dict]:
-    from ..io import get_io, io_from_storage_options, storage_options_for
+    from .. import fanout
 
     if not paths:
         return []
-    if (not get_io(paths[0]).shippable
-            or len(paths) < _DISTRIBUTED_STATS_THRESHOLD):
-        if len(paths) > 4:
-            # footer reads are IO + C-side parquet parsing (GIL released):
-            # a thread pool cuts the driver-side stats pass ~5× on
-            # many-partition writes without a Spark job
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
-                out = list(ex.map(_footer_stats_safe, paths))
-        else:
-            out = [_footer_stats_safe(p) for p in paths]
-    else:
-        # distributed footer reads: executors each open only footers
-        opts = storage_options_for(paths[0])
-
-        def one(p):
-            return _footer_stats_safe(p, io_from_storage_options(opts))
-
-        sc = spark.sparkContext
-        rdd = sc.parallelize(paths, min(len(paths), 256))
-        out = rdd.map(one).collect()
+    # footer reads are IO + C-side parquet parsing (GIL released): a
+    # driver thread pool below the fan-out threshold, executors above it
+    out = list(fanout.map_items(
+        spark, paths, lambda ps: map(_footer_stats_safe, ps),
+        io_path=paths[0], threads=True))
     failed = [s["path"] for s in out if s.get("record_count") is None]
     if failed:
         # pyarrow can't parse footers holding logical types it predates
@@ -338,15 +320,15 @@ def _collect_stats(spark: SparkSession, paths: list[str]) -> list[dict]:
     return out
 
 
-def _footer_stats_safe(path: str, fs_io=None) -> dict:
+def _footer_stats_safe(path: str) -> dict:
     try:
-        return _footer_stats_one(path, fs_io)
+        return _footer_stats_one(path)
     except Exception:
         from ..io import get_io
 
-        io = fs_io or get_io(path)
         return {
-            "path": path, "record_count": None, "file_size": io.size(path),
+            "path": path, "record_count": None,
+            "file_size": get_io(path).size(path),
             "value_counts": {}, "null_counts": {}, "col_sizes": {},
             "mins": {}, "maxs": {},
         }
@@ -1226,12 +1208,9 @@ def write_avro_dataset(
     for c in part_cols:
         sel.append(F.col(c).cast("string").alias("__part__" + c))
     cap = int(max_records_per_file) if max_records_per_file else None
-    opts = None
-    from ..io import parse_uri, storage_options_for
+    from ..fanout import worker_io
 
-    scheme = parse_uri(out_dir)[0]
-    if scheme:
-        opts = storage_options_for(out_dir)
+    install_io = worker_io(out_dir)
 
     def batches(it):
         import math
@@ -1241,12 +1220,10 @@ def write_avro_dataset(
 
         import pandas as pd
 
-        from duckdb_iceberg_spark.io import (get_io, io_from_storage_options,
-                                             register_io)
+        from duckdb_iceberg_spark.io import get_io
         from duckdb_iceberg_spark.metadata import avro_io
 
-        if scheme and opts:
-            register_io(scheme, io_from_storage_options(opts))
+        install_io()
         frames = [pdf for pdf in it]
         if not frames:
             return

@@ -21,5 +21,20 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture()
+def lfs(tmp_path):
+    """A *shippable* object-store-API filesystem on shared disk: drives the
+    executor side of the FileIO paths (arrow data plane, item fan-outs)
+    that mock:// (driver-only) can't."""
+    from pyarrow import fs as pafs
+
+    from duckdb_iceberg_spark import io as fio
+
+    io = fio.ArrowFileIO("lfs", pafs.LocalFileSystem(),
+                         options={"kind": "localfs", "scheme": "lfs"})
+    fio.register_io("lfs", io)
+    return f"lfs://{tmp_path}"
+
+
 def load(spark, sf_dir, name):
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

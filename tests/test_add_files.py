@@ -170,9 +170,10 @@ def test_build_name_mapping_nested():
 
 def test_add_files_distributed_stats_fanout(spark, sf_dir, tmp_path,
                                             monkeypatch):
-    """The footer-stat collection takes the mapInPandas executor path
-    above the cutoff (forced down to 2 here): same entries, same bounds,
-    pruning still works after the JSON round-trip."""
+    """The footer-stat collection takes the executor path above the
+    cutoff (forced down to 2 here): same entries, same bounds, pruning
+    still works."""
+    from duckdb_iceberg_spark import fanout
     from duckdb_iceberg_spark.sources import add_files as af_mod
 
     df = spark.range(0, 400).selectExpr(
@@ -183,7 +184,7 @@ def test_add_files_distributed_stats_fanout(spark, sf_dir, tmp_path,
             spark, df.filter(f"id >= {i*100} AND id < {(i+1)*100}"),
             str(tmp_path / f"part{i}"), 1)
 
-    monkeypatch.setattr(af_mod, "_STATS_DRIVER_MAX", 2)
+    monkeypatch.setattr(fanout, "DRIVER_MAX", 2)
     loc = str(tmp_path / "t_fanout")
     out = af_mod.add_files(spark, loc, files)
     assert out["added_files_count"] == 4

@@ -150,18 +150,6 @@ def test_local_tables_unaffected(spark, tmp_path):
     assert os.path.exists(os.path.join(loc, "metadata", "version-hint.text"))
 
 
-@pytest.fixture()
-def lfs(tmp_path):
-    """A *shippable* object-store-API filesystem on shared disk: drives the
-    distributed mapInArrow read/write path that mock:// (driver-only) can't."""
-    from pyarrow import fs as pafs
-
-    io = fio.ArrowFileIO("lfs", pafs.LocalFileSystem(),
-                         options={"kind": "localfs", "scheme": "lfs"})
-    fio.register_io("lfs", io)
-    return f"lfs://{tmp_path}"
-
-
 def test_distributed_arrow_write_and_read(spark, lfs, monkeypatch):
     from duckdb_iceberg_spark.io import arrow_data
 
@@ -382,3 +370,48 @@ def test_align_column_struct_uuid_member():
     out = _align_column(arr, tgt)
     assert isinstance(out, pa.Array)
     assert out.to_pylist() == [{"u": str(raw)}, None]
+
+
+# -- item fan-outs on executors read object-store tables through the
+# -- FileIO shipped from the driver
+
+
+def test_distributed_plan_reads_object_store_table(spark, lfs):
+    from duckdb_iceberg_spark.metadata.table_metadata import load_table_metadata
+    from duckdb_iceberg_spark.plans.distributed_planner import (
+        plan_scan_distributed,
+    )
+    from duckdb_iceberg_spark.plans.scan_plan import plan_scan
+    from duckdb_iceberg_spark.sources.scan import scan_to_dataframe
+
+    loc = f"{lfs}/t_ship"
+    for i in range(3):
+        write_iceberg(spark.range(i * 100, (i + 1) * 100)
+                      .selectExpr("id", "id % 7 AS k").repartition(4), loc)
+    tm = load_table_metadata(loc)
+    snap = tm.select_snapshot()
+    driver = plan_scan(tm, snap)
+    dist = plan_scan_distributed(spark, tm, snap, manifest_threshold=0)
+    assert dist.stats["distributed_manifests"] == 3
+    assert ({t.data_file.file_path for t in dist.tasks}
+            == {t.data_file.file_path for t in driver.tasks})
+    assert len(dist.tasks) == 12
+    got = sorted(r.id for r in
+                 scan_to_dataframe(spark, dist).collect())
+    assert got == list(range(300))
+
+
+def test_rewrite_manifests_distributed_on_object_store(spark, lfs):
+    from duckdb_iceberg_spark.sources.maintenance import rewrite_manifests
+
+    loc = f"{lfs}/t_rm"
+    write_iceberg(spark.range(300).selectExpr("id", "id * 2 AS v")
+                  .repartition(70), loc)
+    n = rewrite_manifests(loc, target_entries_per_manifest=1,
+                          min_input_manifests=1)["new_manifests"]
+    assert n > 64  # above the default fan-out threshold
+    out = rewrite_manifests(loc)
+    assert out["rewritten_manifests"] == n and out["new_manifests"] == 1
+    assert out["distributed_manifest_reads"] == n
+    got = sorted((r.id, r.v) for r in iceberg_scan(spark, loc).collect())
+    assert got == [(i, 2 * i) for i in range(300)]

@@ -406,12 +406,13 @@ def test_orc_schema_sniff_shares_distributed_fanout(spark, tmp_path,
                                                     monkeypatch):
     """VERDICT r11 task 4: ORC schema sniffing goes through the SAME
     fan-out path as the parquet footer sniff — driver thread pool below
-    the cutoff, mapInPandas executor fan-out above it — so a foreign ORC
+    the cutoff, executor fan-out above it — so a foreign ORC
     table with thousands of files never serializes schema reads on the
     driver. Forces the executor branch by dropping the cutoff to 2."""
     import pyarrow as pa
     import pyarrow.orc as po
 
+    from duckdb_iceberg_spark import fanout
     from duckdb_iceberg_spark.sources import scan as scan_mod
 
     files = []
@@ -420,7 +421,7 @@ def test_orc_schema_sniff_shares_distributed_fanout(spark, tmp_path,
         po.write_table(pa.table({"a": [i], "b": [f"x{i}"]}), p)
         files.append(p)
 
-    monkeypatch.setattr(scan_mod, "_FOOTER_SNIFF_DRIVER_MAX", 2)
+    monkeypatch.setattr(fanout, "DRIVER_MAX", 2)
     # bypass the process-lifetime cache (immutable-path keyed)
     monkeypatch.setattr(scan_mod, "_SNIFF_CACHE", {})
     out = scan_mod._sniff_orc_schemas(spark, files)
@@ -430,7 +431,7 @@ def test_orc_schema_sniff_shares_distributed_fanout(spark, tmp_path,
         assert names == ["a", "b"]
         assert "a:int64" in sig
     # cache: a second call must not re-read
-    monkeypatch.setattr(scan_mod, "_FOOTER_SNIFF_DRIVER_MAX", 64)
+    monkeypatch.setattr(fanout, "DRIVER_MAX", 64)
     again = scan_mod._sniff_orc_schemas(spark, files)
     assert sorted(r[0] for r in again) == sorted(files)
 
