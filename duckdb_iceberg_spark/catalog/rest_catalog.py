@@ -6,7 +6,8 @@ PySpark-native re-expression of the reference's catalog layer:
   /root/reference/src/catalog/rest/api/catalog_api.cpp:189-246 and peers
 - OAuth2 client-credentials + refresh:
   /root/reference/src/catalog/rest/storage/authorization/oauth2.cpp
-- optimistic commit retry with requirement re-validation:
+- optimistic commit retry with requirement re-validation (the loop lives
+  in ``commit.py``, shared with filesystem tables):
   /root/reference/src/catalog/rest/transaction/iceberg_transaction.cpp:93-330
 
 All catalog work happens on the Spark driver; executors only ever see file
@@ -25,16 +26,7 @@ from dataclasses import dataclass, field
 from typing import Any, Optional
 
 from ..metadata.table_metadata import Snapshot, TableMetadata
-
-
-class CatalogError(RuntimeError):
-    def __init__(self, status: int, message: str):
-        super().__init__(f"HTTP {status}: {message}")
-        self.status = status
-
-
-class CommitConflict(CatalogError):
-    """409: requirements failed — caller may refresh and retry."""
+from .commit import CatalogError, CommitConflict, commit_snapshot, committer
 
 
 @dataclass
@@ -146,34 +138,6 @@ def attach_aws_catalog_config(
                           session_token=session_token),
         **extra,
     )
-
-
-def _retry_config(properties: dict | None,
-                  default_retries: int) -> tuple[int, float, float, float]:
-    """``commit.retry.*`` table properties → (num_retries, min_wait_ms,
-    max_wait_ms, total_timeout_ms) with the reference's defaults and
-    guards (iceberg_retry.cpp FromTableMetadata: num-retries may be 0 —
-    single attempt; invalid/negative values fall back; min clamped to
-    max)."""
-    p = properties or {}
-
-    def _int(key, fallback, allow_zero):
-        v = p.get(key, "")
-        try:
-            n = int(str(v))
-        except (TypeError, ValueError):
-            return fallback
-        if n < 0 or (n == 0 and not allow_zero):
-            return fallback
-        return n
-
-    num = _int("commit.retry.num-retries", default_retries, True)
-    min_w = float(_int("commit.retry.min-wait-ms", 100, False))
-    max_w = float(_int("commit.retry.max-wait-ms", 60_000, False))
-    total = float(_int("commit.retry.total-timeout-ms", 30 * 60 * 1000, False))
-    if min_w > max_w:
-        min_w = max_w
-    return num, min_w, max_w, total
 
 
 _STALENESS_UNITS = {
@@ -779,11 +743,10 @@ class RestTable:
         from ..sources.writer import commit_snapshot, write_data_files
 
         files, _ = write_data_files(spark, df, self.metadata)
-        commit_snapshot(
-            self.metadata, operation="append", new_data_files=files,
-            commit_fn=lambda s, rebuild=None: self.commit_snapshot(
-                s.to_json(), rebuild_fn=rebuild))
-        return self  # commit_snapshot POST path refreshes on success
+        commit_snapshot(self.metadata, operation="append",
+                        new_data_files=files,
+                        commit_fn=committer(self, "append"))
+        return self  # the commit refreshes on success
 
     def delete_where(self, spark, where: str,
                      mode: str = "merge-on-read") -> "RestTable":
@@ -811,140 +774,32 @@ class RestTable:
         merge_into(spark, self, source, on, **kwargs)
         return self
 
-    def _delete_can_reapply(self, base_snapshot_id: Optional[int]) -> bool:
-        """A retried DELETE/overwrite is safe iff every commit in
-        (base, tip] was a pure append — anything else may have removed or
-        rewritten the rows the delete targeted (reference:
-        iceberg_transaction.cpp DeleteCanReapply, :210-240). Ranges over
-        sequence numbers; an unprovable history counts as not reappliable."""
-        tip_id = self.metadata.current_snapshot_id
-        if base_snapshot_id == tip_id:
-            return True
-        by_id = {s.snapshot_id: s for s in self.metadata.snapshots}
-        base = by_id.get(base_snapshot_id)
-        tip = by_id.get(tip_id)
-        if base is None or tip is None:
-            return False
-        lo, hi = base.sequence_number, tip.sequence_number
-        for s in self.metadata.snapshots:
-            if lo < s.sequence_number <= hi and s.operation != "append":
-                return False
-        return True
+    @property
+    def ident(self) -> str:
+        ns = (self.namespace if isinstance(self.namespace, str)
+              else ".".join(self.namespace))
+        return f"{ns}.{self.name}"
+
+    @property
+    def max_commit_retries(self) -> int:
+        return self.catalog.config.max_commit_retries
+
+    def commit_table(self, requirements: list[dict],
+                     updates: list[dict]) -> dict:
+        """CommitTableRequest through the catalog, then refresh; a failed
+        requirement raises CommitConflict (409)."""
+        resp = self.catalog.commit_table(
+            self.namespace, self.name, requirements, updates)
+        self.refresh()
+        return resp
 
     def commit_snapshot(self, snapshot_json: dict, *,
                         operation: str = "append", rebuild_fn=None,
                         branch: str | None = None) -> dict:
-        """Optimistic commit with retry: on 409 refresh and re-validate.
-        Appends are always retry-eligible; deletes/overwrites retry only
-        when every intervening snapshot was a pure append (reference:
-        iceberg_transaction.cpp VerifyDeleteRetryability, :243-273),
-        otherwise the conflict surfaces to the caller to re-run.
-
-        ``branch`` (r12) commits against a branch ref instead of main:
-        the CAS requirement asserts THAT ref's head (None = the ref must
-        not exist yet — a new branch forks atomically), only the branch
-        ref advances, and main never moves. Branch conflicts retry for
-        appends only; the delete-reapply analysis walks main lineage and
-        does not transfer, so non-append branch conflicts surface.
-
-        ``rebuild_fn(refreshed_metadata) -> Snapshot`` is REQUIRED for a
-        retry to actually happen: the staged snapshot's manifest list was
-        authored against the pre-conflict base, so it omits the concurrent
-        winner's manifests — re-POSTing it with a patched parent id would
-        make the tip silently drop the winner's files. The writer's
-        commit_snapshot supplies a rebuilder that re-runs carry-forward +
-        manifest-list authoring (and v3 row-id assignment) against the
-        refreshed metadata. Without one, conflicts surface immediately."""
-        append_retryable = operation == "append"
-        ref_name = branch or "main"
-        base_snapshot_id = self.metadata.current_snapshot_id
-        # retry-state fingerprint (reference: iceberg_transaction_data.cpp
-        # RetryStateMatches, :160-178): the staged data files were written
-        # under THIS schema/spec/sort-order — if a concurrent commit
-        # changed any of them, a rebase would graft old-layout files onto
-        # a new-layout table, so the conflict must surface instead
-        retry_state = (self.metadata.table_uuid,
-                       self.metadata.current_schema_id,
-                       self.metadata.default_spec_id,
-                       self.metadata.default_sort_order_id)
-        num_retries, min_wait_ms, max_wait_ms, total_wait_ms = \
-            _retry_config(self.metadata.properties,
-                          self.catalog.config.max_commit_retries)
-        attempts = num_retries + 1  # retries come AFTER the first attempt
-        started = time.time()
-        prev_sleep_ms = min_wait_ms
-        last: Exception | None = None
-        for attempt in range(attempts):
-            # v3 row lineage: a JSON-only commit (no data-plane manifests)
-            # derives its range start from the table's next-row-id; data-
-            # plane snapshots arrive with first-row-id already assigned by
-            # the build (and re-assigned by each rebuild)
-            if (self.metadata.format_version >= 3
-                    and snapshot_json.get("first-row-id") is None):
-                snapshot_json = dict(snapshot_json)
-                snapshot_json["first-row-id"] = self.metadata.next_row_id
-            if ref_name == "main":
-                cur = self.metadata.current_snapshot_id
-            else:
-                cur = (self.metadata.refs.get(ref_name) or {}).get(
-                    "snapshot-id")
-            requirements: list[dict] = [{"type": "assert-table-uuid",
-                                         "uuid": self.metadata.table_uuid}]
-            requirements.append({"type": "assert-ref-snapshot-id",
-                                 "ref": ref_name,
-                                 "snapshot-id": cur})
-            updates = [
-                {"action": "add-snapshot", "snapshot": snapshot_json},
-                {"action": "set-snapshot-ref", "ref-name": ref_name,
-                 "type": "branch",
-                 "snapshot-id": snapshot_json["snapshot-id"]},
-            ]
-            try:
-                resp = self.catalog.commit_table(
-                    self.namespace, self.name, requirements, updates)
-                self.refresh()
-                return resp
-            except CommitConflict as e:
-                last = e
-                self.refresh()
-                if retry_state != (self.metadata.table_uuid,
-                                   self.metadata.current_schema_id,
-                                   self.metadata.default_spec_id,
-                                   self.metadata.default_sort_order_id):
-                    raise CommitConflict(
-                        409,
-                        f"Table {self.namespace}.{self.name} changed "
-                        "incompatibly while retrying commit") from e
-                if branch and branch != "main" and not append_retryable:
-                    # delete-reapply analysis walks MAIN lineage — it does
-                    # not transfer to branch heads; surface the conflict
-                    raise
-                if not append_retryable and not self._delete_can_reapply(
-                        base_snapshot_id):
-                    raise
-                if rebuild_fn is None:
-                    # no rebuilder: a parent-id rebase would re-commit the
-                    # stale manifest list WITHOUT the winner's manifests —
-                    # surface the conflict instead of losing data
-                    raise
-                if attempt == attempts - 1:
-                    raise
-                # decorrelated-jitter backoff between retries, bounded by
-                # commit.retry.{min,max}-wait-ms and the total timeout
-                # (reference: iceberg_retry.cpp DecorrelatedBackoffMs;
-                # only enforced after >=1 retry, mirroring Java Tasks)
-                import random as _random
-
-                hi = min(prev_sleep_ms * 3, max_wait_ms)
-                lo = min(min_wait_ms, hi)
-                sleep_ms = lo + _random.random() * (hi - lo)
-                elapsed_ms = (time.time() - started) * 1000
-                if attempt >= 1 and elapsed_ms + sleep_ms > total_wait_ms:
-                    raise
-                time.sleep(sleep_ms / 1000.0)
-                prev_sleep_ms = sleep_ms
-                snapshot_json = rebuild_fn(self.metadata).to_json()
-        raise last  # type: ignore[misc]
+        """Optimistic snapshot commit with rebuild-and-retry on 409 — the
+        loop every catalog shares, ``catalog.commit.commit_snapshot``."""
+        return commit_snapshot(self, snapshot_json, operation=operation,
+                               rebuild_fn=rebuild_fn, branch=branch)
 
 
 class _StagedTable:

@@ -101,6 +101,16 @@ class FileIO:
     def write_bytes(self, path: str, data: bytes) -> None:
         raise NotImplementedError
 
+    def create_exclusive(self, path: str, data: bytes) -> None:
+        """Write ``data`` to ``path`` only if nothing is there yet, else
+        raise ``FileExistsError``. This default checks, then writes: it is
+        NOT atomic, so two writers racing on an object store can both pass
+        the check and the later PUT wins (pyarrow filesystems offer no
+        conditional PUT). ``LocalFileIO`` overrides it atomically."""
+        if self.exists(path):
+            raise FileExistsError(path)
+        self.write_bytes(path, data)
+
     def exists(self, path: str) -> bool:
         raise NotImplementedError
 
@@ -125,7 +135,8 @@ class FileIO:
 
 class LocalFileIO(FileIO):
     """os-based IO; writes are atomic (temp file + rename) so a concurrent
-    reader never observes a half-written metadata file."""
+    reader never observes a half-written metadata file, and an exclusive
+    create (temp file + hard link) never replaces another writer's file."""
 
     def read_bytes(self, path, offset=None, length=None):
         with open(_strip_file_scheme(path), "rb") as fh:
@@ -143,6 +154,21 @@ class LocalFileIO(FileIO):
         with open(tmp, "wb") as fh:
             fh.write(data)
         os.replace(tmp, path)
+
+    def create_exclusive(self, path, data):
+        # a hard link of a complete temp file: the name appears atomically,
+        # fully written, and link() refuses a name that already exists
+        path = _strip_file_scheme(path)
+        tmp = f"{path}.tmp-{os.getpid()}-{threading.get_ident()}"
+        try:
+            with open(tmp, "wb") as fh:
+                fh.write(data)
+            os.link(tmp, path)
+        finally:
+            try:
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass
 
     def exists(self, path):
         return os.path.exists(_strip_file_scheme(path))

@@ -10,14 +10,19 @@ its metadata-location resolution rules
 Snapshot selection — latest, by id, by timestamp via the snapshot-log —
 follows iceberg_table_metadata.cpp:23-143.
 
-Commits on plain filesystems write ``v{N+1}.metadata.json`` then swap
-``version-hint.text``; non-atomic on non-transactional stores (same caveat as
-the reference's version-hint guessing, documented in SURVEY.md §7 risk
-register).
+Every metadata change is a list of TableUpdates (the REST spec's
+``add-snapshot``, ``set-properties``, ...); :func:`apply_updates` applies
+them to a copy of the metadata, the way a REST server does. Commits on
+plain filesystems create ``v{N+1}.metadata.json`` exclusively, then swap
+``version-hint.text`` (``catalog/commit.py`` retries a lost race). The
+create is atomic on local disk only; object stores get a check-then-write
+(same caveat as the reference's version-hint guessing, documented in
+SURVEY.md §7 risk register).
 """
 
 from __future__ import annotations
 
+import copy
 import gzip
 import json
 import os
@@ -399,6 +404,99 @@ class TableMetadata:
         return j
 
 
+def _drop_stats(tm: TableMetadata, key: str, snapshot_ids) -> None:
+    if tm.raw.get(key):
+        tm.raw[key] = [s for s in tm.raw[key]
+                       if int(s.get("snapshot-id", -1)) not in snapshot_ids]
+
+
+def apply_updates(tm: TableMetadata, updates: list[dict]) -> TableMetadata:
+    """Apply REST-spec TableUpdates to a copy of ``tm`` and return it; ``tm``
+    itself is left as it was, so a commit that fails leaves the caller's
+    metadata whole. A filesystem commit applies them here; a REST server
+    applies the same list on its side. An unknown action raises."""
+    new = copy.copy(tm)
+    # every update below replaces nested values instead of mutating them,
+    # so copying the top-level containers is enough
+    for k, v in vars(tm).items():
+        if isinstance(v, (dict, list)):
+            setattr(new, k, v.copy())
+    added: dict[int, int] = {}  # snapshot id → timestamp, this batch
+    for u in updates:
+        action = u["action"]
+        if action == "add-snapshot":
+            snap = Snapshot.from_json(u["snapshot"])
+            new.snapshots.append(snap)
+            new.last_sequence_number = max(new.last_sequence_number,
+                                           snap.sequence_number)
+            if snap.first_row_id is not None:
+                rows = snap.summary.get("assigned-rows",
+                                        snap.summary.get("added-records", 0))
+                new.next_row_id = max(new.next_row_id,
+                                      snap.first_row_id + int(rows))
+            added[snap.snapshot_id] = snap.timestamp_ms
+        elif action == "set-snapshot-ref":
+            sid = u["snapshot-id"]
+            new.refs[u["ref-name"]] = {
+                "snapshot-id": sid, "type": u.get("type", "branch"),
+                **{k: u[k] for k in ("max-ref-age-ms", "max-snapshot-age-ms",
+                                     "min-snapshots-to-keep") if k in u}}
+            if u["ref-name"] == "main":
+                new.current_snapshot_id = sid
+                new.snapshot_log.append({
+                    "timestamp-ms": added.get(sid, int(time.time() * 1000)),
+                    "snapshot-id": sid})
+        elif action == "remove-snapshot-ref":
+            new.refs.pop(u["ref-name"], None)
+        elif action == "remove-snapshots":
+            dead = set(u["snapshot-ids"])
+            new.snapshots = [s for s in new.snapshots
+                             if s.snapshot_id not in dead]
+            new.snapshot_log = [e for e in new.snapshot_log
+                                if e.get("snapshot-id") not in dead]
+            _drop_stats(new, "statistics", dead)
+            _drop_stats(new, "partition-statistics", dead)
+        elif action == "add-schema":
+            new.schemas[u["schema"]["schema-id"]] = u["schema"]
+            new.last_column_id = max(new.last_column_id,
+                                     u.get("last-column-id", 0))
+        elif action == "set-current-schema":
+            new.current_schema_id = u["schema-id"]
+        elif action == "add-spec":
+            spec = PartitionSpec.from_json(u["spec"])
+            new.partition_specs[spec.spec_id] = spec
+            new.last_partition_id = max(
+                [f.field_id for f in spec.fields] + [new.last_partition_id])
+        elif action == "set-default-spec":
+            new.default_spec_id = u["spec-id"]
+        elif action == "add-sort-order":
+            order = SortOrder.from_json(u["sort-order"])
+            new.sort_orders[order.order_id] = order
+        elif action == "set-default-sort-order":
+            # order 0 is the spec's reserved 'unsorted' order
+            if u["sort-order-id"] == 0:
+                new.sort_orders.setdefault(0, SortOrder(0, []))
+            new.default_sort_order_id = u["sort-order-id"]
+        elif action == "set-properties":
+            new.properties.update(u["updates"])
+        elif action == "remove-properties":
+            for k in u["removals"]:
+                new.properties.pop(k, None)
+        elif action == "upgrade-format-version":
+            if u["format-version"] < new.format_version:
+                raise ValueError("cannot downgrade format-version")
+            new.format_version = u["format-version"]
+        elif action in ("set-statistics", "set-partition-statistics",
+                        "remove-statistics", "remove-partition-statistics"):
+            key = action.split("-", 1)[1]
+            _drop_stats(new, key, {u["snapshot-id"]})
+            if action.startswith("set-"):
+                new.raw[key] = new.raw.get(key, []) + [u[key]]
+        else:
+            raise ValueError(f"unsupported table update {action!r}")
+    return new
+
+
 def _to_ts_ms(v: Any) -> int:
     import datetime as dt
 
@@ -538,6 +636,15 @@ def resolve_metadata_location(
     hint = fio.join(meta_dir, "version-hint.text")
     if io.exists(hint):
         v = _read_text(hint).strip()
+        if v.isdigit():
+            # a writer that died between creating vN+1 and swapping the
+            # hint leaves the hint behind the newest version; walk forward
+            # like Java's HadoopTableOperations, or the next commit would
+            # build on (and race for) a version that is already taken
+            n = int(v)
+            while io.exists(fio.join(meta_dir, f"v{n + 1}.metadata.json")):
+                n += 1
+            v = str(n)
         return resolve_metadata_location(table_location, v)
     # guess latest by listing (version_name_format='v%s%s.metadata.json' plus
     # the object-store '00000-uuid.metadata.json' style)
@@ -600,30 +707,44 @@ def load_table_metadata(
     return tm
 
 
-def current_version_number(table_location: str) -> int:
-    try:
-        loc = resolve_metadata_location(table_location)
-    except FileNotFoundError:
+def _version_of(metadata_location: str | None) -> int:
+    if not metadata_location:
         return 0
-    m = _VERSIONED_RE.match(os.path.basename(loc)) or _OBJSTORE_RE.match(os.path.basename(loc))
+    base = os.path.basename(metadata_location)
+    m = _VERSIONED_RE.match(base) or _OBJSTORE_RE.match(base)
     return int(m.group(1)) if m else 0
 
 
+def current_version_number(table_location: str) -> int:
+    try:
+        return _version_of(resolve_metadata_location(table_location))
+    except FileNotFoundError:
+        return 0
+
+
 def write_table_metadata(tm: TableMetadata, table_location: str) -> str:
-    """Write v{N+1}.metadata.json + version-hint swap. Returns the path.
-    Local writes are atomic (temp + rename in FileIO); object-store PUTs are
-    atomic per object by the store's own semantics."""
+    """Create ``v{N+1}.metadata.json``, N being the version ``tm`` was
+    loaded from (0 for a table not yet on disk), then swap the version
+    hint. Returns the path. The create is exclusive: when another writer
+    already created that version this raises ``FileExistsError`` and
+    leaves ``tm`` as it was — ``catalog.commit.FileTable`` reloads and
+    retries. Only ``LocalFileIO`` makes the create atomic (see
+    ``FileIO.create_exclusive``)."""
     io = fio.get_io(table_location)
     meta_dir = fio.join(table_location, "metadata")
     io.mkdirs(meta_dir)
-    n = current_version_number(table_location) + 1
+    n = _version_of(tm.metadata_location) + 1
+    metadata_log = list(tm.metadata_log)
     if tm.metadata_location and fio.get_io(tm.metadata_location).exists(tm.metadata_location):
-        tm.metadata_log.append(
+        metadata_log.append(
             {"timestamp-ms": tm.last_updated_ms, "metadata-file": tm.metadata_location}
         )
-    tm.last_updated_ms = int(time.time() * 1000)
+    now_ms = int(time.time() * 1000)
+    j = tm.to_json()
+    j["metadata-log"], j["last-updated-ms"] = metadata_log, now_ms
     path = fio.join(meta_dir, f"v{n}.metadata.json")
-    io.write_bytes(path, json.dumps(tm.to_json(), indent=1).encode("utf-8"))
+    io.create_exclusive(path, json.dumps(j, indent=1).encode("utf-8"))
     io.write_bytes(fio.join(meta_dir, "version-hint.text"), str(n).encode())
+    tm.metadata_log, tm.last_updated_ms = metadata_log, now_ms
     tm.metadata_location = path
     return path

@@ -30,9 +30,10 @@ from typing import Any, Iterable
 
 from pyspark.sql import SparkSession
 
+from ..catalog.commit import FileTable, committer
 from ..metadata import manifest as mf
 from ..metadata import types as ice_types
-from ..metadata.table_metadata import TableMetadata, load_table_metadata
+from ..metadata.table_metadata import TableMetadata
 from .writer import commit_snapshot, create_table, current_version_number
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -239,14 +240,17 @@ def add_files(
     if not files:
         raise FileNotFoundError("add_files: empty file list")
 
-    exists = current_version_number(location) > 0
-    if exists:
-        tm = load_table_metadata(location)
-    else:
+    tm = None
+    if current_version_number(location) == 0:
         schema = spark.read.parquet(files[0]).schema
-        tm = create_table(location, schema, partition_by=partition_by,
-                          properties=properties,
-                          format_version=format_version)
+        try:
+            tm = create_table(location, schema, partition_by=partition_by,
+                              properties=properties,
+                              format_version=format_version)
+        except FileExistsError:
+            pass  # another writer created it first: import into theirs
+    table = FileTable(location, tm)
+    tm = table.metadata
 
     spec = tm.default_spec()
     ident_parts: dict[str, str] = {}
@@ -278,11 +282,6 @@ def add_files(
     fields = [(f["name"], f["id"], f["type"])
               for f in tm.schema_json()["fields"]
               if isinstance(f["type"], str)]
-
-    # imported files rarely carry parquet field-ids → name-mapping read
-    if "schema.name-mapping.default" not in tm.properties:
-        tm.properties["schema.name-mapping.default"] = \
-            build_name_mapping(tm.schema_json())
 
     stats = _collect_stats(spark, files, fields)
     types_by_fid = {fid: it for _n, fid, it in fields}
@@ -317,8 +316,17 @@ def add_files(
     extra = {"added-via": "add_files"}
     for k, v in (snapshot_properties or {}).items():
         extra[k] = v
+    # imported files rarely carry parquet field-ids → name-mapping read
+    if "schema.name-mapping.default" not in tm.properties:
+        table.commit_table(
+            [{"type": "assert-table-uuid", "uuid": tm.table_uuid}],
+            [{"action": "set-properties", "updates": {
+                "schema.name-mapping.default":
+                    build_name_mapping(tm.schema_json())}}])
+        tm = table.metadata
     snap = commit_snapshot(tm, operation="append", new_data_files=new_files,
-                           extra_summary=extra)
+                           extra_summary=extra,
+                           commit_fn=committer(table, "append"))
     return {"added_files_count": len(new_files),
             "added_rows_count": total_rows,
             "snapshot_id": snap.snapshot_id}

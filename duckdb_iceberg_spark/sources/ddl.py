@@ -18,8 +18,9 @@ from typing import Any
 
 from pyspark.sql import types as T
 
+from ..catalog.commit import committer, resolve_table
 from ..metadata import types as ice_types
-from ..metadata.table_metadata import TableMetadata, load_table_metadata, write_table_metadata
+from ..metadata.table_metadata import TableMetadata
 
 _WIDENINGS = {
     ("int", "long"),
@@ -27,25 +28,15 @@ _WIDENINGS = {
 }
 
 
-def _load(location) -> TableMetadata:
-    """DDL target: path (str) or catalog ``RestTable``. For REST tables the
-    returned metadata carries the table handle so commits go through the
-    catalog (add-schema / set-properties TableUpdates, the reference's
-    iceberg_schema_entry.cpp Alter flow), never a filesystem metadata swap."""
-    if isinstance(location, str):
-        return load_table_metadata(location)
-    table = location.refresh()
-    tm = table.metadata
-    tm._rest_table = table
-    return tm
-
-
-def _commit_rest(tm: TableMetadata, updates: list, requirements: list | None = None):
-    table = tm._rest_table
-    reqs = [{"type": "assert-table-uuid", "uuid": tm.table_uuid}]
-    reqs += requirements or []
-    table.catalog.commit_table(table.namespace, table.name, reqs, updates)
-    table.refresh()
+def _commit(table, updates: list, *requirements: dict) -> TableMetadata:
+    """Commit ``updates`` (TableUpdates, the reference's
+    iceberg_schema_entry.cpp Alter flow) through ``table`` — a REST
+    CommitTableRequest or the next filesystem metadata version — guarded
+    by the table uuid plus ``requirements``. Returns the committed
+    metadata."""
+    table.commit_table(
+        [{"type": "assert-table-uuid", "uuid": table.metadata.table_uuid},
+         *requirements], updates)
     return table.metadata
 
 
@@ -55,18 +46,16 @@ def _next_schema(tm: TableMetadata) -> dict:
     return sch
 
 
-def _commit_schema(tm: TableMetadata, sch: dict) -> TableMetadata:
-    if getattr(tm, "_rest_table", None) is not None:
-        return _commit_rest(tm, [
-            {"action": "add-schema", "schema": sch,
-             "last-column-id": tm.last_column_id},
-            {"action": "set-current-schema", "schema-id": sch["schema-id"]},
-        ], [{"type": "assert-current-schema-id",
-             "current-schema-id": tm.current_schema_id}])
-    tm.schemas[sch["schema-id"]] = sch
-    tm.current_schema_id = sch["schema-id"]
-    write_table_metadata(tm, tm.location)
-    return tm
+def _commit_schema(table, sch: dict,
+                   last_column_id: int | None = None) -> TableMetadata:
+    tm = table.metadata
+    return _commit(table, [
+        {"action": "add-schema", "schema": sch,
+         "last-column-id": (tm.last_column_id if last_column_id is None
+                            else last_column_id)},
+        {"action": "set-current-schema", "schema-id": sch["schema-id"]},
+    ], {"type": "assert-current-schema-id",
+        "current-schema-id": tm.current_schema_id})
 
 
 def add_column(location: str, name: str, ice_type: Any, *, required: bool = False,
@@ -78,7 +67,8 @@ def add_column(location: str, name: str, ice_type: Any, *, required: bool = Fals
     column defaults; reference: iceberg_column_definition.cpp:26-75) —
     existing rows then surface the default instead of NULL, and a required
     add is allowed."""
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     sch = _next_schema(tm)
     parts = name.split(".")
     fields = sch["fields"]
@@ -94,12 +84,12 @@ def add_column(location: str, name: str, ice_type: Any, *, required: bool = Fals
     if required and default is None:
         raise ValueError("adding a required column to existing rows needs a default; "
                          "add as optional (reference enforces the same)")
+    last_id = tm.last_column_id
     if isinstance(ice_type, T.DataType):
-        alloc = ice_types._IdAllocator(tm.last_column_id)
+        alloc = ice_types._IdAllocator(last_id)
         ice_type = ice_types.spark_to_iceberg(ice_type, alloc)
-        tm.last_column_id = alloc.last
-    fid = tm.last_column_id + 1
-    tm.last_column_id = fid
+        last_id = alloc.last
+    fid = last_id + 1
     f: dict[str, Any] = {"id": fid, "name": leaf, "required": bool(required),
                          "type": ice_type}
     if default is not None:
@@ -109,7 +99,7 @@ def add_column(location: str, name: str, ice_type: Any, *, required: bool = Fals
     if doc:
         f["doc"] = doc
     fields.append(f)
-    return _commit_schema(tm, sch)
+    return _commit_schema(table, sch, fid)
 
 
 def _navigate_struct(sch: dict, dotted: str) -> tuple[list[dict], str]:
@@ -159,7 +149,8 @@ def _navigate_struct(sch: dict, dotted: str) -> tuple[list[dict], str]:
 def drop_column(location: str, name: str) -> TableMetadata:
     """DROP COLUMN; dotted paths drop struct members (beyond the reference,
     which handles top level only — iceberg_schema_entry.cpp:448)."""
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     sch = _next_schema(tm)
     fields, leaf = _navigate_struct(sch, name)
     victim = next((f for f in fields if f["name"] == leaf), None)
@@ -169,14 +160,15 @@ def drop_column(location: str, name: str) -> TableMetadata:
         if any(pf.source_id == victim["id"] for pf in spec.fields):
             raise ValueError(f"cannot drop partition source column {name!r}")
     fields.remove(victim)
-    return _commit_schema(tm, sch)
+    return _commit_schema(table, sch)
 
 
 def rename_column(location: str, old: str, new: str) -> TableMetadata:
     """Field-id is preserved, so old files keep resolving (BY_FIELD_ID).
     A dotted ``old`` renames a struct member in place; ``new`` is the bare
     new name within the same parent."""
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     sch = _next_schema(tm)
     if "." in new:
         raise ValueError("new name must be a bare name, not a path")
@@ -190,7 +182,7 @@ def rename_column(location: str, old: str, new: str) -> TableMetadata:
             hit = True
     if not hit:
         raise KeyError(f"no column {old!r}")
-    return _commit_schema(tm, sch)
+    return _commit_schema(table, sch)
 
 
 def widen_column(location: str, name: str, new_type: str) -> TableMetadata:
@@ -201,7 +193,8 @@ def widen_column(location: str, name: str, new_type: str) -> TableMetadata:
     the column sources a sort-order field (any change) or, for the date
     promotions, a partition field — the transform's serialized values
     would silently change meaning."""
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     sch = _next_schema(tm)
     fields, leaf = _navigate_struct(sch, name)
     for f in fields:
@@ -230,7 +223,7 @@ def widen_column(location: str, name: str, new_type: str) -> TableMetadata:
         if not ok:
             raise ValueError(f"cannot widen {old_t} → {new_type}")
         f["type"] = new_type
-        return _commit_schema(tm, sch)
+        return _commit_schema(table, sch)
     raise KeyError(f"no column {name!r}")
 
 
@@ -239,7 +232,8 @@ def set_column_doc(location: str, name: str, doc: str | None) -> TableMetadata:
     (reference: alter_column_comment.test / test_column_doc_comment.test;
     surfaced there via duckdb_columns().comment, here via
     ``describe_table``). Dotted paths comment struct members."""
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     sch = _next_schema(tm)
     fields, leaf = _navigate_struct(sch, name)
     hit = next((f for f in fields if f["name"] == leaf), None)
@@ -249,7 +243,7 @@ def set_column_doc(location: str, name: str, doc: str | None) -> TableMetadata:
         hit.pop("doc", None)
     else:
         hit["doc"] = str(doc)
-    return _commit_schema(tm, sch)
+    return _commit_schema(table, sch)
 
 
 def set_column_default(location: str, name: str, default: Any) -> TableMetadata:
@@ -262,7 +256,8 @@ def set_column_default(location: str, name: str, default: Any) -> TableMetadata:
     after DROP DEFAULT inserts fall back to ``initial-default`` when one
     exists. ``default`` is the JSON single-value form (plain python
     bool/int/float/str)."""
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     sch = _next_schema(tm)
     fields, leaf = _navigate_struct(sch, name)
     hit = next((f for f in fields if f["name"] == leaf), None)
@@ -276,7 +271,7 @@ def set_column_default(location: str, name: str, default: Any) -> TableMetadata:
                 "Only foldable expressions are allowed as DEFAULT values")
         _validate_default(hit["type"], default)
         hit["write-default"] = default
-    return _commit_schema(tm, sch)
+    return _commit_schema(table, sch)
 
 
 def _validate_default(ice_type: Any, v: Any) -> None:
@@ -320,20 +315,21 @@ def _validate_default(ice_type: Any, v: Any) -> None:
 def set_not_null(location: str, name: str, required: bool) -> TableMetadata:
     """SET/DROP NOT NULL; dotted paths reach struct members like the other
     DDL entry points."""
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     sch = _next_schema(tm)
     fields, leaf = _navigate_struct(sch, name)
     for f in fields:
         if f["name"] == leaf:
             f["required"] = required
-            return _commit_schema(tm, sch)
+            return _commit_schema(table, sch)
     raise KeyError(f"no column {name!r}")
 
 
 # -- properties (reference: iceberg_table_properties_functions.cpp) ---------
 
 def table_properties(location) -> dict[str, str]:
-    return dict(_load(location).properties)
+    return dict(resolve_table(location).metadata.properties)
 
 
 def set_table_properties(location: str, props: dict[str, str]) -> TableMetadata:
@@ -344,14 +340,12 @@ def set_table_properties(location: str, props: dict[str, str]) -> TableMetadata:
     fv = props.pop("format-version", None)
     if fv is not None:
         upgrade_format_version(location, int(fv))
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     if props:
-        if getattr(tm, "_rest_table", None) is not None:
-            return _commit_rest(tm, [{
-                "action": "set-properties",
-                "updates": {str(k): str(v) for k, v in props.items()}}])
-        tm.properties.update({str(k): str(v) for k, v in props.items()})
-        write_table_metadata(tm, tm.location)
+        return _commit(table, [{
+            "action": "set-properties",
+            "updates": {str(k): str(v) for k, v in props.items()}}])
     return tm
 
 
@@ -362,7 +356,8 @@ def upgrade_format_version(location: str, new_version: int = 3) -> TableMetadata
     the FIRST v3 commit retroactively assigns first-row-ids to the
     carried-forward manifests (commit_snapshot), so pre-upgrade rows get
     their file positions as stable _row_id values — no data rewrite."""
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     cur = tm.format_version
     if new_version < cur:
         raise ValueError(
@@ -371,23 +366,13 @@ def upgrade_format_version(location: str, new_version: int = 3) -> TableMetadata
         raise ValueError(f"unsupported format-version {new_version}")
     if new_version == cur:
         return tm
-    if getattr(tm, "_rest_table", None) is not None:
-        return _commit_rest(tm, [{"action": "upgrade-format-version",
-                                  "format-version": new_version}])
-    tm.format_version = new_version
-    write_table_metadata(tm, tm.location)
-    return tm
+    return _commit(table, [{"action": "upgrade-format-version",
+                            "format-version": new_version}])
 
 
 def remove_table_properties(location, keys: list[str]) -> TableMetadata:
-    tm = _load(location)
-    if getattr(tm, "_rest_table", None) is not None:
-        return _commit_rest(tm, [{"action": "remove-properties",
-                                  "removals": list(keys)}])
-    for k in keys:
-        tm.properties.pop(k, None)
-    write_table_metadata(tm, tm.location)
-    return tm
+    return _commit(resolve_table(location),
+                   [{"action": "remove-properties", "removals": list(keys)}])
 
 
 # -- partition-spec / sort-order evolution ----------------------------------
@@ -402,32 +387,25 @@ def set_partitioned_by(location: str, partition_by: list[str]) -> TableMetadata:
     ``["l_shipmode", "bucket(4, l_orderkey)", "month(d)"]``."""
     from .writer import parse_partition_by
 
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     spec = parse_partition_by(partition_by, tm.schema_json(),
                               start_field_id=tm.last_partition_id + 1)
-    rest = getattr(tm, "_rest_table", None)
+    # spec ids and field ids derive from the default spec this read: a
+    # concurrent spec change must conflict, not be overwritten
+    base = {"type": "assert-default-spec-id",
+            "default-spec-id": tm.default_spec_id}
     # identical field layout → reuse an existing spec instead of a new id
     for existing in tm.partition_specs.values():
         if [(f.source_id, f.transform) for f in existing.fields] == \
            [(f.source_id, f.transform) for f in spec.fields]:
-            if rest is not None:
-                return _commit_rest(tm, [{"action": "set-default-spec",
-                                          "spec-id": existing.spec_id}])
-            tm.default_spec_id = existing.spec_id
-            write_table_metadata(tm, tm.location)
-            return tm
+            return _commit(table, [{"action": "set-default-spec",
+                                    "spec-id": existing.spec_id}], base)
     spec.spec_id = max(tm.partition_specs) + 1
-    if rest is not None:
-        return _commit_rest(tm, [
-            {"action": "add-spec", "spec": spec.to_json()},
-            {"action": "set-default-spec", "spec-id": spec.spec_id},
-        ])
-    tm.partition_specs[spec.spec_id] = spec
-    tm.default_spec_id = spec.spec_id
-    tm.last_partition_id = max(
-        [f.field_id for f in spec.fields] + [tm.last_partition_id])
-    write_table_metadata(tm, tm.location)
-    return tm
+    return _commit(table, [
+        {"action": "add-spec", "spec": spec.to_json()},
+        {"action": "set-default-spec", "spec-id": spec.spec_id},
+    ], base)
 
 
 def set_sorted_by(location: str, sort_by: list) -> TableMetadata:
@@ -441,41 +419,28 @@ def set_sorted_by(location: str, sort_by: list) -> TableMetadata:
     unsorts."""
     from .writer import parse_sort_by
 
-    tm = _load(location)
-    rest = getattr(tm, "_rest_table", None)
+    table = resolve_table(location)
+    tm = table.metadata
     order = parse_sort_by(sort_by, tm.schema_json())
+    base = {"type": "assert-default-sort-order-id",
+            "default-sort-order-id": tm.default_sort_order_id}
     if not order.fields:
-        from ..metadata.table_metadata import SortOrder
-
-        if rest is not None:
-            return _commit_rest(tm, [{"action": "set-default-sort-order",
-                                      "sort-order-id": 0}])
-        tm.default_sort_order_id = 0
-        tm.sort_orders.setdefault(0, SortOrder(0, []))
-        write_table_metadata(tm, tm.location)
-        return tm
+        return _commit(table, [{"action": "set-default-sort-order",
+                                "sort-order-id": 0}], base)
     for existing in tm.sort_orders.values():
         if [(f.source_id, f.transform, f.direction, f.null_order)
                 for f in existing.fields] == \
            [(f.source_id, f.transform, f.direction, f.null_order)
                 for f in order.fields]:
-            if rest is not None:
-                return _commit_rest(tm, [{"action": "set-default-sort-order",
-                                          "sort-order-id": existing.order_id}])
-            tm.default_sort_order_id = existing.order_id
-            write_table_metadata(tm, tm.location)
-            return tm
+            return _commit(table, [{"action": "set-default-sort-order",
+                                    "sort-order-id": existing.order_id}],
+                           base)
     order.order_id = max(tm.sort_orders) + 1
-    if rest is not None:
-        return _commit_rest(tm, [
-            {"action": "add-sort-order", "sort-order": order.to_json()},
-            {"action": "set-default-sort-order",
-             "sort-order-id": order.order_id},
-        ])
-    tm.sort_orders[order.order_id] = order
-    tm.default_sort_order_id = order.order_id
-    write_table_metadata(tm, tm.location)
-    return tm
+    return _commit(table, [
+        {"action": "add-sort-order", "sort-order": order.to_json()},
+        {"action": "set-default-sort-order",
+         "sort-order-id": order.order_id},
+    ], base)
 
 
 # -- snapshot refs: branches and tags ---------------------------------------
@@ -509,7 +474,8 @@ def _set_ref(location, name: str, kind: str,
              snapshot_id: int | None, max_ref_age_ms: int | None,
              min_snapshots_to_keep: int | None = None,
              max_snapshot_age_ms: int | None = None) -> TableMetadata:
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     if snapshot_id is None:
         cur = tm.current_snapshot()
         if cur is None:
@@ -517,23 +483,14 @@ def _set_ref(location, name: str, kind: str,
         snapshot_id = cur.snapshot_id
     else:
         tm.snapshot_by_id(snapshot_id)  # validates existence
-    ref: dict = {"snapshot-id": snapshot_id, "type": kind}
-    retention = (("max-ref-age-ms", max_ref_age_ms),
-                 ("min-snapshots-to-keep", min_snapshots_to_keep),
-                 ("max-snapshot-age-ms", max_snapshot_age_ms))
-    for key, val in retention:
+    upd = {"action": "set-snapshot-ref", "ref-name": name, "type": kind,
+           "snapshot-id": snapshot_id}
+    for key, val in (("max-ref-age-ms", max_ref_age_ms),
+                     ("min-snapshots-to-keep", min_snapshots_to_keep),
+                     ("max-snapshot-age-ms", max_snapshot_age_ms)):
         if val is not None:
-            ref[key] = int(val)
-    if getattr(tm, "_rest_table", None) is not None:
-        upd = {"action": "set-snapshot-ref", "ref-name": name, "type": kind,
-               "snapshot-id": snapshot_id}
-        for key, val in retention:
-            if val is not None:
-                upd[key] = int(val)
-        return _commit_rest(tm, [upd])
-    tm.refs[name] = ref
-    write_table_metadata(tm, tm.location)
-    return tm
+            upd[key] = int(val)
+    return _commit(table, [upd])
 
 
 def _is_ancestor(tm: TableMetadata, maybe_ancestor: int, head: int) -> bool:
@@ -559,9 +516,8 @@ def fast_forward(location, branch: str, to: str | int) -> TableMetadata:
     must go through an explicit rollback instead. Fast-forwarding
     ``main`` also advances current-snapshot-id and the snapshot log, so
     plain scans and timestamp time travel see the published state."""
-    import time as _time
-
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     if isinstance(to, str):
         ref = tm.refs.get(to)
         if ref is None:
@@ -571,6 +527,7 @@ def fast_forward(location, branch: str, to: str | int) -> TableMetadata:
         target = int(to)
         tm.snapshot_by_id(target)  # validates existence
     cur_ref = tm.refs.get(branch)
+    head = None
     if cur_ref is not None:
         head = int(cur_ref["snapshot-id"])
         if cur_ref.get("type") != "branch":
@@ -579,18 +536,14 @@ def fast_forward(location, branch: str, to: str | int) -> TableMetadata:
             raise ValueError(
                 f"cannot fast-forward {branch!r}: its head {head} is not "
                 f"an ancestor of {target}")
-    tm.refs[branch] = {"snapshot-id": target, "type": "branch"}
     if branch == "main":
-        tm.current_snapshot_id = target
-        tm.snapshot_log.append({
-            "timestamp-ms": int(_time.time() * 1000),
-            "snapshot-id": target})
-    if getattr(tm, "_rest_table", None) is not None:
-        return _commit_rest(tm, [{"action": "set-snapshot-ref",
-                                  "ref-name": branch, "type": "branch",
-                                  "snapshot-id": target}])
-    write_table_metadata(tm, tm.location)
-    return tm
+        head = tm.current_snapshot_id
+    # the ancestry check above holds only while the branch stays put
+    return _commit(table, [{"action": "set-snapshot-ref",
+                            "ref-name": branch, "type": "branch",
+                            "snapshot-id": target}],
+                   {"type": "assert-ref-snapshot-id", "ref": branch,
+                    "snapshot-id": head})
 
 
 def rollback_to_snapshot(location, snapshot_id: int) -> TableMetadata:
@@ -598,9 +551,8 @@ def rollback_to_snapshot(location, snapshot_id: int) -> TableMetadata:
     ``system.rollback_to_snapshot`` procedure analogue). Later snapshots
     stay in metadata (expire_snapshots reclaims them); the snapshot log
     records the rollback so timestamp travel stays truthful."""
-    import time as _time
-
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     tm.snapshot_by_id(snapshot_id)
     cur = tm.current_snapshot()
     if cur is not None and not _is_ancestor(tm, snapshot_id,
@@ -609,36 +561,25 @@ def rollback_to_snapshot(location, snapshot_id: int) -> TableMetadata:
             f"snapshot {snapshot_id} is not an ancestor of the current "
             f"snapshot {cur.snapshot_id}; use set_current_snapshot for "
             "non-linear moves")
-    tm.current_snapshot_id = snapshot_id
-    tm.refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    tm.snapshot_log.append({"timestamp-ms": int(_time.time() * 1000),
-                            "snapshot-id": snapshot_id})
-    if getattr(tm, "_rest_table", None) is not None:
-        return _commit_rest(tm, [{"action": "set-snapshot-ref",
-                                  "ref-name": "main", "type": "branch",
-                                  "snapshot-id": snapshot_id}])
-    write_table_metadata(tm, tm.location)
-    return tm
+    return _commit(table, [_set_main(snapshot_id)],
+                   {"type": "assert-ref-snapshot-id", "ref": "main",
+                    "snapshot-id": tm.current_snapshot_id})
+
+
+def _set_main(snapshot_id: int) -> dict:
+    # on main, applying it also moves current-snapshot-id and appends to
+    # the snapshot log, so timestamp travel sees the move
+    return {"action": "set-snapshot-ref", "ref-name": "main",
+            "type": "branch", "snapshot-id": snapshot_id}
 
 
 def set_current_snapshot(location, snapshot_id: int) -> TableMetadata:
     """Point main at ANY existing snapshot, ancestry-free (the Spark
     ``system.set_current_snapshot`` procedure analogue — the escape hatch
     rollback_to_snapshot refuses)."""
-    import time as _time
-
-    tm = _load(location)
-    tm.snapshot_by_id(snapshot_id)
-    tm.current_snapshot_id = snapshot_id
-    tm.refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    tm.snapshot_log.append({"timestamp-ms": int(_time.time() * 1000),
-                            "snapshot-id": snapshot_id})
-    if getattr(tm, "_rest_table", None) is not None:
-        return _commit_rest(tm, [{"action": "set-snapshot-ref",
-                                  "ref-name": "main", "type": "branch",
-                                  "snapshot-id": snapshot_id}])
-    write_table_metadata(tm, tm.location)
-    return tm
+    table = resolve_table(location)
+    table.metadata.snapshot_by_id(snapshot_id)
+    return _commit(table, [_set_main(snapshot_id)])
 
 
 def cherrypick_snapshot(location, snapshot_id: int) -> TableMetadata:
@@ -660,7 +601,8 @@ def cherrypick_snapshot(location, snapshot_id: int) -> TableMetadata:
     from ..plans.scan_plan import _localize
     from .writer import commit_snapshot as _commit_snapshot
 
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     src = tm.snapshot_by_id(int(snapshot_id))
     if src.operation != "append":
         raise ValueError(
@@ -705,24 +647,18 @@ def cherrypick_snapshot(location, snapshot_id: int) -> TableMetadata:
     extra = {"source-snapshot-id": str(snapshot_id)}
     if wap_id:
         extra["wap.id"] = wap_id
-    rest = getattr(tm, "_rest_table", None)
-    if rest is not None:
-        _commit_snapshot(
-            tm, operation="append", new_data_files=added,
-            extra_summary=extra,
-            commit_fn=lambda s, rebuild=None: rest.commit_snapshot(
-                s.to_json(), operation="append", rebuild_fn=rebuild))
-        return rest.refresh().metadata
     _commit_snapshot(tm, operation="append", new_data_files=added,
-                     extra_summary=extra)
-    return tm
+                     extra_summary=extra,
+                     commit_fn=committer(table, "append"))
+    return table.metadata
 
 
 def drop_ref(location, name: str, kind: str | None = None) -> TableMetadata:
     """Drop a branch or tag. ``kind`` ('branch' | 'tag'), when given,
     must match the ref's recorded type — DROP BRANCH on a tag (or vice
     versa) is an error, not a silent cross-kind drop (ADVICE r12)."""
-    tm = _load(location)
+    table = resolve_table(location)
+    tm = table.metadata
     if name == "main":
         raise ValueError("cannot drop the main branch")
     if name not in tm.refs:
@@ -732,9 +668,5 @@ def drop_ref(location, name: str, kind: str | None = None) -> TableMetadata:
         raise ValueError(
             f"ref {name!r} is a {actual}, not a {kind}; "
             f"use DROP {str(actual).upper()}")
-    if getattr(tm, "_rest_table", None) is not None:
-        return _commit_rest(tm, [{"action": "remove-snapshot-ref",
-                                  "ref-name": name}])
-    del tm.refs[name]
-    write_table_metadata(tm, tm.location)
-    return tm
+    return _commit(table, [{"action": "remove-snapshot-ref",
+                            "ref-name": name}])

@@ -34,9 +34,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import io as fio
+from ..catalog.commit import committer, resolve_table
 from ..metadata import manifest as mf
 from ..metadata import types as ice_types
-from ..metadata.table_metadata import TableMetadata, load_table_metadata
+from ..metadata.table_metadata import TableMetadata
 from ..plans import predicates as P
 from ..plans.scan_plan import ScanPlan, plan_scan, _coerce_pred
 from .scan import scan_to_dataframe, _FILE_COL, _POS_COL, _norm_path, _norm_path_py
@@ -57,23 +58,7 @@ POS_DELETE_SCHEMA = T.StructType(
 )
 
 
-def _resolve_target(location):
-    """DML target: a filesystem/object-store path (str) or a catalog
-    ``RestTable``. Returns (metadata, committer) where ``committer(op)``
-    yields a commit_fn that POSTs the snapshot through the catalog (CAS +
-    rebase retry) — None for the filesystem metadata-log path."""
-    if isinstance(location, str):
-        return load_table_metadata(location), None
-    table = location.refresh()
-
-    def committer(op: str):
-        return lambda snap, rebuild=None, branch=None: table.commit_snapshot(
-            snap.to_json(), operation=op, rebuild_fn=rebuild, branch=branch)
-
-    return table.metadata, committer
-
-
-def _branch_snapshot(tm: TableMetadata, committer, branch: str | None):
+def _branch_snapshot(tm: TableMetadata, branch: str | None):
     """The snapshot a DML should read: the branch head when ``branch``
     names an existing branch (WAP staging — a missing branch forks from
     main's head at commit time, matching the write path), else current.
@@ -504,7 +489,8 @@ def equality_delete(
     apply strictly to EARLIER data files (delete.seq > data.seq), so rows
     appended afterwards with the same keys survive — exactly the CDC upsert
     contract. ``location`` may be a path or a catalog ``RestTable``."""
-    tm, committer = _resolve_target(location)
+    table = resolve_table(location)
+    tm = table.metadata
     key_columns = key_columns or keys.columns
     schema_json = tm.schema_json()
 
@@ -618,8 +604,8 @@ def equality_delete(
     if not delete_files:
         return tm
     commit_snapshot(tm, operation="delete", new_delete_files=delete_files,
-                    commit_fn=committer("delete") if committer else None)
-    return tm
+                    commit_fn=committer(table, "delete"))
+    return table.metadata
 
 
 def upsert_equality(
@@ -636,7 +622,8 @@ def upsert_equality(
     data.seq), the new rows live in files at the same sequence number and
     are untouched by it. ``location`` may be a path or a catalog
     ``RestTable``."""
-    tm, committer = _resolve_target(location)
+    table = resolve_table(location)
+    tm = table.metadata
     schema_json = tm.schema_json()
     by_name = {f["name"]: f for f in schema_json["fields"]}
     eq_ids = [by_name[c]["id"] for c in key_columns]
@@ -673,9 +660,9 @@ def upsert_equality(
     new_files, _root = write_data_files(spark, df, tm)
     commit_snapshot(tm, operation="overwrite",
                     new_data_files=new_files, new_delete_files=delete_files,
-                    commit_fn=committer("overwrite") if committer else None,
+                    commit_fn=committer(table, "overwrite"),
                     extra_summary=snapshot_properties)
-    return tm
+    return table.metadata
 
 
 def _write_row_deletes(
@@ -727,8 +714,9 @@ def delete_from(
     ``location`` may be a path or a catalog ``RestTable`` (snapshot then
     commits through the catalog, not the filesystem metadata log).
     ``branch`` stages the delete on a branch ref (WAP)."""
-    tm, committer = _resolve_target(location)
-    snapshot = _branch_snapshot(tm, committer, branch)
+    table = resolve_table(location)
+    tm = table.metadata
+    snapshot = _branch_snapshot(tm, branch)
     plan = plan_scan(tm, snapshot, where)
     if not plan.tasks:
         return tm  # nothing can match: no-op, no new snapshot
@@ -747,9 +735,9 @@ def delete_from(
             return tm
         commit_snapshot(tm, operation="delete", new_delete_files=delete_files,
                         superseded_dv_refs=superseded or None,
-                        commit_fn=committer("delete") if committer else None,
+                        commit_fn=committer(table, "delete"),
                         branch=branch)
-        return tm
+        return table.metadata
 
     # copy-on-write: drop provably-all-match files, rewrite the rest
     drop_paths: set[str] = set()
@@ -775,10 +763,10 @@ def delete_from(
     commit_snapshot(
         tm, operation=op,
         new_data_files=new_files, removed_data_paths=removed,
-        commit_fn=committer(op) if committer else None,
+        commit_fn=committer(table, op),
         branch=branch,
     )
-    return tm
+    return table.metadata
 
 
 def delete_using(
@@ -802,8 +790,9 @@ def delete_using(
     source is small, shuffled otherwise); no driver-side row collects.
     CoW additionally collects only the distinct victim FILE paths
     (metadata-sized) to bound the rewrite to affected files."""
-    tm, committer = _resolve_target(location)
-    snapshot = _branch_snapshot(tm, committer, branch)
+    table = resolve_table(location)
+    tm = table.metadata
+    snapshot = _branch_snapshot(tm, branch)
     plan = plan_scan(tm, snapshot, None)
     if not plan.tasks:
         return tm
@@ -831,9 +820,9 @@ def delete_using(
             return tm
         commit_snapshot(tm, operation="delete", new_delete_files=delete_files,
                         superseded_dv_refs=superseded or None,
-                        commit_fn=committer("delete") if committer else None,
+                        commit_fn=committer(table, "delete"),
                         branch=branch)
-        return tm
+        return table.metadata
 
     # copy-on-write: rewrite only files that lost rows, keeping survivors
     victim_files = {r.file_path for r in
@@ -855,10 +844,10 @@ def delete_using(
     commit_snapshot(
         tm, operation=op,
         new_data_files=new_files, removed_data_paths=removed,
-        commit_fn=committer(op) if committer else None,
+        commit_fn=committer(table, op),
         branch=branch,
     )
-    return tm
+    return table.metadata
 
 
 def update_iceberg(
@@ -874,8 +863,9 @@ def update_iceberg(
     (reference: iceberg_update.cpp:46-66, AddUpdateSnapshot
     iceberg_insert.cpp:306-317). ``location`` may be a path or a catalog
     ``RestTable``. ``branch`` stages the update on a branch ref (WAP)."""
-    tm, committer = _resolve_target(location)
-    snapshot = _branch_snapshot(tm, committer, branch)
+    table = resolve_table(location)
+    tm = table.metadata
+    snapshot = _branch_snapshot(tm, branch)
     plan = plan_scan(tm, snapshot, where)
     if not plan.tasks:
         return tm
@@ -909,9 +899,9 @@ def update_iceberg(
         commit_snapshot(tm, operation="overwrite", new_data_files=new_files,
                         new_delete_files=delete_files,
                         superseded_dv_refs=superseded or None,
-                        commit_fn=committer("overwrite") if committer else None,
+                        commit_fn=committer(table, "overwrite"),
                         branch=branch)
-        return tm
+        return table.metadata
 
     # copy-on-write: rewrite candidate files with the SET applied to matches
     sub = ScanPlan(tm, snapshot, plan.tasks, None, plan.schema_id)
@@ -921,9 +911,9 @@ def update_iceberg(
     removed = {t.data_file.file_path for t in plan.tasks}
     commit_snapshot(tm, operation="overwrite", new_data_files=new_files,
                     removed_data_paths=removed,
-                    commit_fn=committer("overwrite") if committer else None,
+                    commit_fn=committer(table, "overwrite"),
                     branch=branch)
-    return tm
+    return table.metadata
 
 
 @dataclass
@@ -1184,8 +1174,9 @@ def merge_into(
     if not clauses:
         raise ValueError("MERGE INTO needs at least one WHEN clause")
 
-    tm, committer = _resolve_target(location)
-    snapshot = _branch_snapshot(tm, committer, branch)
+    table = resolve_table(location)
+    tm = table.metadata
+    snapshot = _branch_snapshot(tm, branch)
     plan = plan_scan(tm, snapshot, None)
     schema = [f.name for f in
               ice_types.schema_to_struct(plan.schema_json).fields]
@@ -1266,7 +1257,7 @@ def merge_into(
     if mode == "merge-on-read":
         return _merge_into_mor(
             spark, tm, plan, schema, clauses, affected_rows, upd_idx,
-            ins_parts, defaults, committer, branch=branch)
+            ins_parts, table, defaults, branch=branch)
 
     new_parts: list[DataFrame] = []
     affected: set[str] = set()
@@ -1317,10 +1308,10 @@ def merge_into(
     commit_snapshot(
         tm, operation="overwrite", new_data_files=new_files,
         removed_data_paths=affected or None,
-        commit_fn=committer("overwrite") if committer else None,
+        commit_fn=committer(table, "overwrite"),
         branch=branch,
     )
-    return tm
+    return table.metadata
 
 
 class MergeCardinalityError(ValueError):
@@ -1354,8 +1345,8 @@ def _merge_into_mor(
     affected_rows: DataFrame | None,
     upd_idx: list[int],
     ins_parts: list[DataFrame],
+    table,
     defaults: dict | None = None,
-    committer=None,
     branch: str | None = None,
 ) -> TableMetadata:
     """Merge-on-read MERGE: rows that fired an update/delete clause become
@@ -1405,7 +1396,7 @@ def _merge_into_mor(
         tm, operation="overwrite",
         new_data_files=new_files, new_delete_files=delete_files,
         superseded_dv_refs=superseded or None,
-        commit_fn=committer("overwrite") if committer else None,
+        commit_fn=committer(table, "overwrite"),
         branch=branch,
     )
-    return tm
+    return table.metadata

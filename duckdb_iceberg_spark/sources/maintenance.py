@@ -22,15 +22,12 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from ..catalog.commit import committer, resolve_table
 from ..metadata import manifest as mf
-from ..metadata.table_metadata import (
-    TableMetadata,
-    load_table_metadata,
-    write_table_metadata,
-)
+from ..metadata.table_metadata import TableMetadata, load_table_metadata
 from ..plans.scan_plan import ScanPlan, plan_scan
 from .scan import scan_to_dataframe
-from .writer import commit_snapshot, write_data_files
+from .writer import _inherit_before_existing, commit_snapshot, write_data_files
 
 DEFAULT_TARGET_FILE_SIZE_BYTES = 512 * 1024 * 1024
 MIN_TARGET_FILE_SIZE_BYTES = 1024
@@ -117,11 +114,10 @@ def rewrite_data_files(
     scans prune on any dimension; see operators/zorder.py), and a plain
     ``'c1, c2'`` column list range-clusters linearly. The reference's
     compaction bin-packs only (iceberg_rewrite_data_files.cpp)."""
-    from .dml import _resolve_target
-
     if min_input_files < 1:
         raise ValueError("min_input_files must be >= 1")
-    tm, committer = _resolve_target(location)
+    table = resolve_table(location)
+    tm = table.metadata
     snapshot = tm.select_snapshot()
     plan = plan_scan(tm, snapshot, None)
     target = _resolve_target_size(tm, target_file_size_bytes)
@@ -198,7 +194,7 @@ def rewrite_data_files(
         new_data_files=new_files,
         removed_data_paths=removed,
         extra_summary=extra,
-        commit_fn=committer("replace") if committer else None,
+        commit_fn=committer(table, "replace"),
         pinned_data_sequence=pinned,
     )
     summary["snapshot_id"] = snap.snapshot_id
@@ -273,12 +269,8 @@ def expire_snapshots(
     deletion is storage-side either way)."""
     import os as _os
 
-    rest = None
-    if not isinstance(location, str):
-        rest = location.refresh()
-        tm = rest.metadata
-    else:
-        tm = load_table_metadata(location)
+    table = resolve_table(location)
+    tm = table.metadata
     snaps = sorted(tm.snapshots, key=lambda s: s.timestamp_ms)
     if retain_last < 1:
         raise ValueError("retain_last must be >= 1")
@@ -364,52 +356,33 @@ def expire_snapshots(
     expired_ids = {s.snapshot_id for s in expired}
 
     # commit the metadata change FIRST, delete unreachable files only after
-    # it lands: if the commit fails (conflict, network — no retry here) the
-    # catalog/metadata log still references the expired snapshots, and
-    # deleting their manifest lists beforehand would corrupt time travel
-    # over history the table still advertises
-    if rest is not None:
-        # aged-out refs go first: their pins must vanish in the SAME commit
-        # that removes the snapshots they pointed at
-        updates: list[dict] = [{"action": "remove-snapshot-ref",
-                                "ref-name": n} for n in dropped_refs]
-        if expired_ids:
-            updates.append({"action": "remove-snapshots",
-                            "snapshot-ids": sorted(expired_ids)})
-        # statistics entries keyed by expired snapshots go with them —
-        # the spec's remove-statistics update action, one per snapshot
-        # (reference models it: rest_catalog/objects/
-        # remove_statistics_update.hpp; remove_partition_statistics_update)
-        for key, action in (("statistics", "remove-statistics"),
-                            ("partition-statistics",
-                             "remove-partition-statistics")):
-            for s in (tm.raw or {}).get(key) or []:
-                sid = int(s.get("snapshot-id", -1))
-                if sid in expired_ids:
-                    updates.append({"action": action, "snapshot-id": sid})
-        rest.catalog.commit_table(
-            rest.namespace, rest.name,
-            [{"type": "assert-table-uuid", "uuid": tm.table_uuid}],
-            updates)
-        rest.refresh()
-    else:
-        for n in dropped_refs:
-            tm.refs.pop(n, None)
-        tm.snapshots = retained
-        tm.snapshot_log = [
-            e for e in tm.snapshot_log if e.get("snapshot-id") not in expired_ids]
-        # statistics / partition-statistics entries are keyed by
-        # snapshot-id (they pass through to_json verbatim otherwise):
-        # entries of expired snapshots must go with them, like Iceberg's
-        # own expire_snapshots
-        for key in ("statistics", "partition-statistics"):
-            if tm.raw.get(key):
-                tm.raw[key] = [
-                    s for s in tm.raw[key]
-                    if int(s.get("snapshot-id", -1)) not in expired_ids]
-        write_table_metadata(tm, location)
+    # it lands: if the commit fails (conflict, network) the table still
+    # references the expired snapshots, and deleting their manifest lists
+    # beforehand would corrupt time travel over history the table still
+    # advertises. Aged-out refs go first: their pins must vanish in the
+    # SAME commit that removes the snapshots they pointed at
+    updates: list[dict] = [{"action": "remove-snapshot-ref",
+                            "ref-name": n} for n in dropped_refs]
+    if expired_ids:
+        updates.append({"action": "remove-snapshots",
+                        "snapshot-ids": sorted(expired_ids)})
+    # statistics entries keyed by expired snapshots go with them — the
+    # spec's remove-statistics update action, one per snapshot, like
+    # Iceberg's own expire_snapshots (reference models it:
+    # rest_catalog/objects/remove_statistics_update.hpp;
+    # remove_partition_statistics_update)
+    for key, action in (("statistics", "remove-statistics"),
+                        ("partition-statistics",
+                         "remove-partition-statistics")):
+        for s in (tm.raw or {}).get(key) or []:
+            sid = int(s.get("snapshot-id", -1))
+            if sid in expired_ids:
+                updates.append({"action": action, "snapshot-id": sid})
+    table.commit_table(
+        [{"type": "assert-table-uuid", "uuid": tm.table_uuid}], updates)
 
-    if rest is not None and not rest.catalog.config.remove_files_on_delete:
+    catalog = getattr(table, "catalog", None)
+    if catalog is not None and not catalog.config.remove_files_on_delete:
         # ATTACH remove_files_on_delete=false (horizon_compatible_writes):
         # catalog-managed storage cleans itself up — never touch files
         delete_files = False
@@ -557,9 +530,9 @@ def rewrite_manifests(
 
     from ..metadata.table_metadata import Snapshot
     from ..plans.scan_plan import _localize
-    from .dml import _resolve_target
 
-    tm, committer = _resolve_target(location)
+    table = resolve_table(location)
+    tm = table.metadata
     snapshot = tm.current_snapshot()
     if snapshot is None or not snapshot.manifest_list:
         return {"rewritten_manifests": 0, "new_manifests": 0}
@@ -587,22 +560,9 @@ def rewrite_manifests(
             # consolidated manifest has no per-source inheritance context,
             # and losing the ids would re-derive _row_id from the WRONG base
             mf.inherit_first_row_ids(entries, m.first_row_id)
-            for e in entries:
-                if e.status == mf.STATUS_DELETED:
-                    continue
-                # inherit sequence numbers before making the entry EXISTING —
-                # explicit values are required once detached from the original
-                # manifest's inheritance context
-                if e.sequence_number is None:
-                    e.sequence_number = m.sequence_number
-                if e.file_sequence_number is None:
-                    e.file_sequence_number = m.sequence_number
-                # EXISTING entries must carry an explicit snapshot-id (spec;
-                # strict readers reject null) — inherit the source manifest's
-                if e.snapshot_id is None:
-                    e.snapshot_id = m.added_snapshot_id
-                e.status = mf.STATUS_EXISTING
-                groups.setdefault((m.content, m.partition_spec_id), []).append(e)
+            live = [e for e in entries if e.status != mf.STATUS_DELETED]
+            _inherit_before_existing(live, m)
+            groups.setdefault((m.content, m.partition_spec_id), []).extend(live)
 
         new_manifests: list[mf.ManifestFile] = []
         for (content, spec_id), entries in sorted(groups.items()):
@@ -638,24 +598,11 @@ def rewrite_manifests(
             schema_id=tm.current_schema_id,
         )
 
-    snap = _build(tm)
-    summary = {"rewritten_manifests": counts["in"],
-               "new_manifests": counts["out"],
-               "distributed_manifest_reads":
-                   counts.get("distributed_manifest_reads", 0)}
-    if committer is not None:
-        committer("replace")(snap, _build)
-        summary["rewritten_manifests"] = counts["in"]
-        summary["new_manifests"] = counts["out"]
-        return summary
-    tm.snapshots.append(snap)
-    tm.snapshot_log.append({"timestamp-ms": snap.timestamp_ms,
-                            "snapshot-id": snap.snapshot_id})
-    tm.current_snapshot_id = snap.snapshot_id
-    tm.last_sequence_number = snap.sequence_number
-    tm.refs["main"] = {"snapshot-id": snap.snapshot_id, "type": "branch"}
-    write_table_metadata(tm, location)
-    return summary
+    committer(table, "replace")(_build(tm), _build)
+    return {"rewritten_manifests": counts["in"],
+            "new_manifests": counts["out"],
+            "distributed_manifest_reads":
+                counts.get("distributed_manifest_reads", 0)}
 
 
 def rewrite_position_delete_files(
@@ -704,12 +651,13 @@ def rewrite_position_delete_files(
 
     from ..io import normalize_path
     from ..plans.scan_plan import _localize, manifests_for_snapshot
-    from .dml import _resolve_target, _write_row_deletes
+    from .dml import _write_row_deletes
     from .scan import _norm_path
 
     if min_input_files < 1:
         raise ValueError("min_input_files must be >= 1")
-    tm, committer = _resolve_target(location)
+    table = resolve_table(location)
+    tm = table.metadata
     snapshot = tm.select_snapshot()
     summary: dict[str, Any] = {
         "rewritten_delete_files_count": 0,
@@ -815,7 +763,7 @@ def rewrite_position_delete_files(
         removed_delete_paths=removed,
         superseded_dv_refs=superseded or None,
         extra_summary=extra,
-        commit_fn=committer("replace") if committer else None,
+        commit_fn=committer(table, "replace"),
     )
     summary["rewritten_delete_files_count"] = len(cand) + len(eq_cand)
     summary["added_delete_files_count"] = len(new_files)

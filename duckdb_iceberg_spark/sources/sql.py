@@ -562,6 +562,7 @@ def _exec_alter(spark: SparkSession, stmt: str) -> DataFrame:
     type widening, SET/DROP NOT NULL, SET PARTITIONED BY / SET SORTED BY
     with transform expressions and explicit null ordering like the
     reference's sorting/ suite: day(ts) ASC NULLS LAST)."""
+    from ..catalog.commit import resolve_table
     from . import ddl
 
     m = re.match(r"ALTER\s+TABLE\s+([\w.]+)\s+(.+)$", stmt, re.I | re.S)
@@ -590,7 +591,7 @@ def _exec_alter(spark: SparkSession, stmt: str) -> DataFrame:
         except KeyError:
             if not pm.group(2):
                 raise
-            tm = ddl._load(loc)
+            tm = resolve_table(loc).metadata
         op = "ALTER DROP REF"
     elif (pm := re.match(r"SET\s+PARTITIONED\s+BY\s*\((.*)\)\s*$",
                          action, re.I | re.S)):
@@ -617,7 +618,7 @@ def _exec_alter(spark: SparkSession, stmt: str) -> DataFrame:
         except ValueError:
             if not pm.group(1):
                 raise
-            tm = ddl._load(loc)
+            tm = resolve_table(loc).metadata
         op = "ALTER ADD COLUMN"
     elif (pm := re.match(r"DROP\s+COLUMN\s+(IF\s+EXISTS\s+)?([\w.]+)\s*$",
                          action, re.I)):
@@ -626,7 +627,7 @@ def _exec_alter(spark: SparkSession, stmt: str) -> DataFrame:
         except KeyError:
             if not pm.group(1):
                 raise
-            tm = ddl._load(loc)
+            tm = resolve_table(loc).metadata
         op = "ALTER DROP COLUMN"
     elif (pm := re.match(r"RENAME\s+COLUMN\s+([\w.]+)\s+TO\s+(\w+)\s*$",
                          action, re.I)):

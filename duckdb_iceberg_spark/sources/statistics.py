@@ -12,9 +12,8 @@ statistics with their snapshots; this module adds the WRITE + READ side:
   distributed pass over the table (MoR deletes respected via
   iceberg_scan), each partition contributing k+1-bounded candidate hash
   sets per column (metadata/theta.py), the driver merging k-bounded
-  candidates, writing one Puffin statistics file, and committing the
-  spec's ``statistics`` metadata entry (filesystem tables) or a
-  ``set-statistics`` TableUpdate (REST catalog tables).
+  candidates, writing one Puffin statistics file, and committing it as
+  the spec's ``set-statistics`` TableUpdate.
 - ``table_ndv(location)`` — read back {column: ndv} from the current
   snapshot's statistics file.
 
@@ -30,9 +29,9 @@ from typing import Iterable, Optional
 
 from pyspark.sql import SparkSession
 
+from ..catalog.commit import FileTable, resolve_table
 from ..metadata import theta
 from ..metadata.puffin import read_blob, read_puffin_footer, write_puffin_file
-from ..metadata.table_metadata import load_table_metadata, write_table_metadata
 
 THETA_BLOB_TYPE = "apache-datasketches-theta-v1"
 
@@ -40,13 +39,6 @@ THETA_BLOB_TYPE = "apache-datasketches-theta-v1"
 #: nested) is skipped like Spark's own procedure skips unsupported types
 _SKETCHABLE = ("string", "long", "int", "double", "float", "boolean",
                "date", "timestamp", "binary", "decimal")
-
-
-def _resolve(location):
-    if isinstance(location, str):
-        return load_table_metadata(location), None
-    table = location.refresh()
-    return table.metadata, table
 
 
 def _sketch_df(df, cols: list[str], k: int) -> dict:
@@ -93,7 +85,16 @@ def _sketch_df(df, cols: list[str], k: int) -> dict:
     }
 
 
-def _write_stats_entry(tm, rest, snap, sketches: dict,
+def _register(table, key: str, snap, entry: dict) -> None:
+    """Commit ``entry`` as ``snap``'s statistics (``key`` 'statistics') or
+    partition statistics, replacing any earlier entry of that snapshot."""
+    table.commit_table(
+        [{"type": "assert-table-uuid", "uuid": table.metadata.table_uuid}],
+        [{"action": f"set-{key}", "snapshot-id": snap.snapshot_id,
+          key: entry}])
+
+
+def _write_stats_entry(table, snap, sketches: dict,
                        field_id_of: dict) -> dict:
     """Serialize {column: sketch} into one Puffin statistics file and
     register it for ``snap`` (replacing same-snapshot entries). Returns
@@ -113,7 +114,7 @@ def _write_stats_entry(tm, rest, snap, sketches: dict,
             "sequence-number": snap.sequence_number,
             "properties": {"ndv": str(est)},
         }))
-    path = os.path.join(tm.metadata_write_path(),
+    path = os.path.join(table.metadata.metadata_write_path(),
                         f"{_uuid.uuid4()}.stats")
     size, footer, metas = write_puffin_file(path, blobs)
     entry = {
@@ -127,19 +128,7 @@ def _write_stats_entry(tm, rest, snap, sketches: dict,
              "properties": m.properties}
             for m in metas],
     }
-    if rest is not None:
-        rest.catalog.commit_table(
-            rest.namespace, rest.name,
-            [{"type": "assert-table-uuid", "uuid": tm.table_uuid}],
-            [{"action": "set-statistics",
-              "snapshot-id": snap.snapshot_id, "statistics": entry}])
-        rest.refresh()
-    else:
-        stats = [s for s in (tm.raw.get("statistics") or [])
-                 if int(s.get("snapshot-id", -1)) != snap.snapshot_id]
-        stats.append(entry)
-        tm.raw["statistics"] = stats
-        write_table_metadata(tm, tm.location)
+    _register(table, "statistics", snap, entry)
     return ndv
 
 
@@ -168,7 +157,8 @@ def compute_table_stats(
     compute. Columns default to the BASE file's sketched columns."""
     from .scan import iceberg_scan
 
-    tm, rest = _resolve(location)
+    table = resolve_table(location)
+    tm = table.metadata
     snap = tm.current_snapshot()
     if snap is None:
         raise ValueError("table has no snapshots to analyze")
@@ -179,7 +169,7 @@ def compute_table_stats(
     field_id_of = {c: int(f["id"]) for c, f in by_name.items()}
 
     if incremental:
-        return _compute_incremental(spark, location, tm, rest, snap,
+        return _compute_incremental(spark, location, table, snap,
                                     by_name, columns, int(k))
 
     if columns is None:
@@ -194,22 +184,23 @@ def compute_table_stats(
     if not cols:
         raise ValueError("no sketchable columns")
 
-    if rest is not None:
+    if isinstance(table, FileTable):
+        df = iceberg_scan(spark, table.location)
+    else:
         from ..catalog.scan_planning import scan_rest_table
 
-        df = scan_rest_table(spark, rest, server_planning=False)
-    else:
-        df = iceberg_scan(spark, location)
+        df = scan_rest_table(spark, table, server_planning=False)
     sketches = _sketch_df(df, cols, int(k))
-    return _write_stats_entry(tm, rest, snap, sketches, field_id_of)
+    return _write_stats_entry(table, snap, sketches, field_id_of)
 
 
-def _compute_incremental(spark, location, tm, rest, snap, by_name,
+def _compute_incremental(spark, location, table, snap, by_name,
                          columns, k: int) -> dict:
     from ..plans.scan_plan import ScanPlan, plan_scan
     from ..sources.scan import scan_to_dataframe
     from ..streaming.incremental import appended_snapshots
 
+    tm = table.metadata
     names_by_id = {int(f["id"]): c for c, f in by_name.items()}
     # the newest registered statistics whose snapshot is an ancestor of
     # the current one — the merge base
@@ -286,7 +277,7 @@ def _compute_incremental(spark, location, tm, rest, snap, by_name,
     else:
         merged = {c: base_sketches[c] for c in cols}
     field_id_of = {c: int(by_name[c]["id"]) for c in cols}
-    return _write_stats_entry(tm, rest, snap, merged, field_id_of)
+    return _write_stats_entry(table, snap, merged, field_id_of)
 
 
 def compute_partition_stats(location) -> dict:
@@ -298,8 +289,8 @@ def compute_partition_stats(location) -> dict:
     spec's field ids/names (partition, spec_id, data_record_count,
     data_file_count, total_data_file_size_in_bytes,
     position/equality delete counts, last_updated_at/_snapshot_id),
-    registered under ``partition-statistics`` in table metadata (or the
-    set-partition-statistics TableUpdate on REST).
+    registered under ``partition-statistics`` in table metadata by the
+    set-partition-statistics TableUpdate.
 
     Metadata-only: aggregates manifest entries via plan_scan — no data
     file is opened, O(#partitions) driver rows. Returns
@@ -312,7 +303,8 @@ def compute_partition_stats(location) -> dict:
 
     from ..plans.scan_plan import plan_scan
 
-    tm, rest = _resolve(location)
+    table = resolve_table(location)
+    tm = table.metadata
     snap = tm.current_snapshot()
     if snap is None:
         raise ValueError("table has no snapshots to analyze")
@@ -390,14 +382,14 @@ def compute_partition_stats(location) -> dict:
     arrays = [part_struct] if part_struct is not None else []
     names += list(cols)
     arrays += list(cols.values())
-    table = pa.table(dict(zip(names, arrays)))
+    stats_table = pa.table(dict(zip(names, arrays)))
 
     path = os.path.join(tm.metadata_write_path(),
                         f"partition-stats-{_uuid.uuid4()}.parquet")
     import io as _io
 
     buf = _io.BytesIO()
-    pq.write_table(table, buf)
+    pq.write_table(stats_table, buf)
     from .. import io as fio
 
     fio.get_io(path).write_bytes(path, buf.getvalue())
@@ -406,27 +398,14 @@ def compute_partition_stats(location) -> dict:
         "statistics-path": path,
         "file-size-in-bytes": len(buf.getvalue()),
     }
-    if rest is not None:
-        rest.catalog.commit_table(
-            rest.namespace, rest.name,
-            [{"type": "assert-table-uuid", "uuid": tm.table_uuid}],
-            [{"action": "set-partition-statistics",
-              "snapshot-id": snap.snapshot_id,
-              "partition-statistics": entry}])
-        rest.refresh()
-    else:
-        stats = [s for s in (tm.raw.get("partition-statistics") or [])
-                 if int(s.get("snapshot-id", -1)) != snap.snapshot_id]
-        stats.append(entry)
-        tm.raw["partition-statistics"] = stats
-        write_table_metadata(tm, tm.location)
+    _register(table, "partition-statistics", snap, entry)
     return {"path": path, "partitions": len(keys)}
 
 
 def read_partition_stats(spark: SparkSession, location,
                          snapshot_id: int | None = None):
     """The registered partition-statistics file as a DataFrame."""
-    tm, _ = _resolve(location)
+    tm = resolve_table(location).metadata
     sid = snapshot_id if snapshot_id is not None else tm.current_snapshot_id
     entry = next((s for s in (tm.raw.get("partition-statistics") or [])
                   if int(s.get("snapshot-id", -1)) == sid), None)
@@ -440,7 +419,7 @@ def table_ndv(location, snapshot_id: int | None = None) -> dict[str, int]:
     ``snapshot_id`` (default: current). Reads the theta blobs back and
     re-estimates, so the numbers survive even if a writer dropped the
     ndv property."""
-    tm, _ = _resolve(location)
+    tm = resolve_table(location).metadata
     sid = snapshot_id if snapshot_id is not None else tm.current_snapshot_id
     entry = next((s for s in (tm.raw.get("statistics") or [])
                   if int(s.get("snapshot-id", -1)) == sid), None)

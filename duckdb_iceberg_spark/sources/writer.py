@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import io as fio
+from ..catalog.commit import FileTable, committer
 from ..metadata import manifest as mf
 from ..metadata import types as ice_types
 from ..metadata.table_metadata import (
@@ -1609,22 +1610,19 @@ def commit_snapshot(
 ) -> Snapshot:
     """Stage and commit one snapshot (append/delete/overwrite/replace).
     Mirrors the reference's Finalize + transaction commit
-    (iceberg_insert.cpp:286-329; iceberg_transaction.cpp requirements are
-    the filesystem version-hint swap here).
+    (iceberg_insert.cpp:286-329, iceberg_transaction.cpp).
 
-    ``commit_fn``: when set, the snapshot is NOT committed to the
-    filesystem metadata log — manifests and the manifest list are still
-    written to table storage, then ``commit_fn(snapshot, rebuild_fn)``
-    performs the actual commit (the REST-catalog path:
-    RestTable.commit_snapshot POSTs it with CAS requirements).
-    ``rebuild_fn(refreshed_tm)`` re-runs this whole build — carry-forward,
-    row-id assignment, manifest list — against refreshed metadata, so a
-    conflict retry carries the concurrent winner's manifests instead of
-    silently dropping them (a parent-id rebase of the stale manifest list
-    would lose the winner's files). Local ``tm`` is left unmutated on the
-    catalog path; callers refresh from the catalog."""
-    import time as _time
-
+    Manifests and the manifest list are written to table storage, then
+    ``commit_fn(snapshot, rebuild_fn)`` commits the snapshot — by default
+    through a ``FileTable`` over ``tm`` (``catalog.commit.committer``
+    builds one for any table). ``rebuild_fn(refreshed_tm)`` re-runs this
+    whole build — carry-forward, row-id assignment, manifest list —
+    against refreshed metadata, so a conflict retry carries the
+    concurrent winner's manifests instead of silently dropping them (a
+    parent-id rebase of the stale manifest list would lose the winner's
+    files). ``tm`` is not advanced: the table committed through holds the
+    new metadata. Returns the snapshot that was committed."""
+    commit_fn = commit_fn or committer(FileTable(tm.location, tm), operation)
     # first_row_id values _build assigns must be reset before a rebuild —
     # stale assignments from a conflicted attempt would otherwise survive
     # the `is None` guard and claim the wrong (pre-refresh) row-id range
@@ -1641,16 +1639,18 @@ def commit_snapshot(
             orig_data_row_ids=orig_data_row_ids,
             pinned_data_sequence=pinned_data_sequence)
 
-    if branch is not None and branch != "main":
+    build = _build
+    on_branch = branch is not None and branch != "main"
+    if on_branch:
         # Write-Audit-Publish staging (the Spark branch-write analogue):
         # the new snapshot's PARENT and carry-forward base are the BRANCH
         # head (a missing branch forks from main's current head), the
-        # branch ref alone advances, and main's current-snapshot-id +
-        # snapshot-log stay untouched — readers of main never see staged
-        # work until fast_forward publishes it. Sequence numbers are
-        # table-global per spec, so the staged snapshot still claims the
-        # next one.
-        def _build_branch(tm2: TableMetadata) -> Snapshot:
+        # commit asserts and advances the branch ref alone, and main's
+        # current-snapshot-id + snapshot-log stay untouched — readers of
+        # main never see staged work until fast_forward publishes it.
+        # Sequence numbers are table-global per spec, so the staged
+        # snapshot still claims the next one.
+        def build(tm2: TableMetadata) -> Snapshot:
             # parent + carry-forward base = the branch head of WHATEVER
             # metadata the (possibly refreshed) build runs against
             saved2 = tm2.current_snapshot_id
@@ -1665,31 +1665,17 @@ def commit_snapshot(
             finally:
                 tm2.current_snapshot_id = saved2
 
-        snap = _build_branch(tm)
-        if commit_fn is not None:
-            # REST catalog: the commit asserts/sets the BRANCH ref; a
-            # conflict rebuild re-runs against the refreshed branch head
-            commit_fn(snap, _build_branch, branch=branch)
-            return snap
-        tm.snapshots.append(snap)
-        tm.last_sequence_number = snap.sequence_number
-        tm.refs[branch] = {"snapshot-id": snap.snapshot_id,
-                           "type": "branch"}
-        write_table_metadata(tm, tm.location)
-        return snap
+    built = [build(tm)]
 
-    snap = _build(tm)
-    if commit_fn is not None:
-        commit_fn(snap, _build)
-        return snap
-    tm.snapshots.append(snap)
-    tm.snapshot_log.append({"timestamp-ms": snap.timestamp_ms,
-                            "snapshot-id": snap.snapshot_id})
-    tm.current_snapshot_id = snap.snapshot_id
-    tm.last_sequence_number = snap.sequence_number
-    tm.refs["main"] = {"snapshot-id": snap.snapshot_id, "type": "branch"}
-    write_table_metadata(tm, tm.location)
-    return snap
+    def _rebuild(tm2: TableMetadata) -> Snapshot:
+        built.append(build(tm2))
+        return built[-1]
+
+    if on_branch:
+        commit_fn(built[0], _rebuild, branch=branch)
+    else:
+        commit_fn(built[0], _rebuild)
+    return built[-1]
 
 
 #: automatic manifest-merge defaults (reference:
@@ -2098,22 +2084,27 @@ def write_iceberg(
     via ``iceberg_scan(..., ref=branch)``, publish via
     :func:`~duckdb_iceberg_spark.sources.ddl.fast_forward`)."""
     spark = df.sparkSession
-    exists = current_version_number(location) > 0
-    if exists and mode == "error":
-        raise FileExistsError(f"iceberg table already exists at {location}")
-    if exists:
+    tm = None
+    if current_version_number(location) == 0:
+        try:
+            tm = create_table(
+                location, df.schema, partition_by=partition_by,
+                sort_by=sort_by, properties=properties,
+                format_version=format_version,
+            )
+        except FileExistsError:
+            pass  # another writer created it first: write into theirs
+    overwrite = tm is None and mode == "overwrite"
+    if tm is None:
+        if mode == "error":
+            raise FileExistsError(
+                f"iceberg table already exists at {location}")
         tm = load_table_metadata(location)
-    else:
-        tm = create_table(
-            location, df.schema, partition_by=partition_by, sort_by=sort_by,
-            properties=properties, format_version=format_version,
-        )
+    table = FileTable(location, tm)
     data_files, _root = write_data_files(spark, df, tm)
-    if mode == "overwrite" and exists:
-        commit_snapshot(tm, operation="overwrite", new_data_files=data_files,
-                        keep_existing=False, extra_summary=snapshot_properties,
-                        branch=branch)
-    else:
-        commit_snapshot(tm, operation="append", new_data_files=data_files,
-                        extra_summary=snapshot_properties, branch=branch)
-    return tm
+    op = "overwrite" if overwrite else "append"
+    commit_snapshot(tm, operation=op, new_data_files=data_files,
+                    keep_existing=not overwrite,
+                    extra_summary=snapshot_properties,
+                    commit_fn=committer(table, op), branch=branch)
+    return table.metadata
