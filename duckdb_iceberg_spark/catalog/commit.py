@@ -2,9 +2,11 @@
 (reference: iceberg_transaction.cpp:93-124,184-203). A table exposes
 ``metadata``, ``refresh()`` and ``commit_table(requirements, updates)``:
 ``RestTable`` POSTs a CommitTableRequest, :class:`FileTable` creates the
-next metadata version itself. Snapshot commits on both go through the one
-retry loop, :func:`commit_snapshot`, which logs one JSON record per commit
-at DEBUG on the ``duckdb_iceberg_spark.commit`` logger."""
+next metadata version itself, and a catalog-transaction table applies them
+locally and stages them for the transaction's one commit. Snapshot commits
+on all three go through the one retry loop, :func:`commit_snapshot`, which
+logs one JSON record per commit at DEBUG on the
+``duckdb_iceberg_spark.commit`` logger."""
 
 from __future__ import annotations
 
@@ -15,6 +17,7 @@ import time
 from typing import Optional
 
 from ..metadata.table_metadata import (
+    REF_RETENTION_KEYS,
     TableMetadata,
     apply_updates,
     load_table_metadata,
@@ -78,11 +81,17 @@ _REQUIREMENTS = {
 }
 
 
+def requirement_holds(tm: TableMetadata, r: dict) -> bool:
+    """Whether ``tm`` satisfies the one requirement ``r``."""
+    key, actual = _REQUIREMENTS[r["type"]]
+    return r[key] == actual(tm, r)
+
+
 def check_requirements(tm: TableMetadata, requirements: list[dict]) -> None:
     """Raise CommitConflict on the first requirement ``tm`` fails."""
     for r in requirements:
-        key, actual = _REQUIREMENTS[r["type"]]
-        if r[key] != actual(tm, r):
+        if not requirement_holds(tm, r):
+            key, actual = _REQUIREMENTS[r["type"]]
             raise CommitConflict(
                 409, f"Requirement failed: {r['type']} expected "
                 f"{r[key]!r}, found {actual(tm, r)!r}")
@@ -137,12 +146,6 @@ class FileTable:
             409, f"{self.location}: lost the race for the next metadata "
             f"version {retries + 1} times")
 
-    def commit_snapshot(self, snapshot_json: dict, *,
-                        operation: str = "append", rebuild_fn=None,
-                        branch: str | None = None) -> dict:
-        return commit_snapshot(self, snapshot_json, operation=operation,
-                               rebuild_fn=rebuild_fn, branch=branch)
-
 
 def resolve_table(location):
     """A path becomes a FileTable; a RestTable, FileTable or
@@ -154,8 +157,8 @@ def resolve_table(location):
 
 def committer(table, operation: str):
     """``commit_fn`` for ``writer.commit_snapshot`` through ``table``."""
-    return lambda snap, rebuild=None, branch=None: table.commit_snapshot(
-        snap.to_json(), operation=operation, rebuild_fn=rebuild,
+    return lambda snap, rebuild=None, branch=None: commit_snapshot(
+        table, snap.to_json(), operation=operation, rebuild_fn=rebuild,
         branch=branch)
 
 
@@ -237,10 +240,9 @@ def commit_snapshot(table, snapshot_json: dict, *,
                     and snapshot_json.get("first-row-id") is None):
                 snapshot_json = dict(snapshot_json)
                 snapshot_json["first-row-id"] = tm.next_row_id
-            if ref_name == "main":
-                cur = tm.current_snapshot_id
-            else:
-                cur = (tm.refs.get(ref_name) or {}).get("snapshot-id")
+            ref = tm.refs.get(ref_name) or {}
+            cur = (tm.current_snapshot_id if ref_name == "main"
+                   else ref.get("snapshot-id"))
             requirements = [
                 {"type": "assert-table-uuid", "uuid": tm.table_uuid},
                 {"type": "assert-ref-snapshot-id", "ref": ref_name,
@@ -248,9 +250,12 @@ def commit_snapshot(table, snapshot_json: dict, *,
             ]
             updates = [
                 {"action": "add-snapshot", "snapshot": snapshot_json},
+                # set-snapshot-ref replaces the whole ref: the branch keeps
+                # its retention fields only when the update carries them
                 {"action": "set-snapshot-ref", "ref-name": ref_name,
                  "type": "branch",
-                 "snapshot-id": snapshot_json["snapshot-id"]},
+                 "snapshot-id": snapshot_json["snapshot-id"],
+                 **{k: ref[k] for k in REF_RETENTION_KEYS if k in ref}},
             ]
             try:
                 resp = table.commit_table(requirements, updates)

@@ -25,8 +25,15 @@ import urllib.request
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
-from ..metadata.table_metadata import Snapshot, TableMetadata
-from .commit import CatalogError, CommitConflict, commit_snapshot, committer
+from ..metadata.table_metadata import TableMetadata, apply_updates
+from .commit import (
+    CatalogError,
+    CommitConflict,
+    check_requirements,
+    commit_snapshot,
+    committer,
+    requirement_holds,
+)
 
 
 @dataclass
@@ -515,11 +522,11 @@ class RestCatalog:
                              {"table-changes": table_changes})
 
     def transaction(self) -> "CatalogTransaction":
-        """Begin a multi-table DATA-PLANE transaction: run any dml function
-        (or RestTable-style append) against ``txn.table(ns, name)`` targets
-        — data files and manifests land in storage immediately, snapshot
-        commits are STAGED — then ``txn.commit()`` applies every staged
-        snapshot atomically via CommitTransactionRequest."""
+        """Begin a multi-table transaction: run any table function (DML,
+        DDL, maintenance, statistics) against ``txn.table(ns, name)``
+        targets — files land in storage immediately, the requirements and
+        TableUpdates are staged — then ``txn.commit()`` applies every
+        staged change atomically via CommitTransactionRequest."""
         return CatalogTransaction(self)
 
     # -- views (Iceberg view spec v1 over the REST /views endpoints; the
@@ -689,15 +696,13 @@ class RestTable:
     catalog: RestCatalog
     namespace: str | tuple
     name: str
-    metadata_location: Optional[str]
     metadata: TableMetadata
     #: vended storage credentials from LoadTableResult config (may be empty)
     storage_config: dict = field(default_factory=dict)
 
     @classmethod
     def from_load_result(cls, catalog: RestCatalog, namespace, name, resp: dict) -> "RestTable":
-        meta_json = resp["metadata"]
-        tm = TableMetadata(meta_json, meta_json.get("location", ""))
+        tm = TableMetadata(resp["metadata"], resp.get("metadata-location"))
         # vended per-table storage credentials (LoadTableResult `config` /
         # `storage-credentials`; reference:
         # iceberg_table_secret_provider.cpp CreateSecret): register a
@@ -711,10 +716,13 @@ class RestTable:
             from .. import io as fio
 
             fio.io_for_storage_config(tm.location, config)
-        table = cls(catalog=catalog, namespace=namespace, name=name,
-                    metadata_location=resp.get("metadata-location"), metadata=tm)
-        table.storage_config = config
-        return table
+        return cls(catalog=catalog, namespace=namespace, name=name,
+                   metadata=tm, storage_config=config)
+
+    @property
+    def metadata_location(self) -> Optional[str]:
+        """The metadata file the catalog reported with ``metadata``."""
+        return self.metadata.metadata_location
 
     def spark_hadoop_options(self) -> dict[str, str]:
         """Per-bucket Hadoop conf for clusters reading the data plane
@@ -727,9 +735,8 @@ class RestTable:
             self.metadata.location, getattr(self, "storage_config", {}) or {})
 
     def refresh(self) -> "RestTable":
-        fresh = self.catalog.load_table(self.namespace, self.name)
-        self.metadata_location = fresh.metadata_location
-        self.metadata = fresh.metadata
+        self.metadata = self.catalog.load_table(self.namespace,
+                                                self.name).metadata
         return self
 
     # -- data-plane DML committed through the catalog -----------------------
@@ -737,8 +744,8 @@ class RestTable:
     def append(self, spark, df) -> "RestTable":
         """INSERT INTO through the catalog (the reference's IcebergInsert →
         transaction commit flow): parquet + manifests + manifest list are
-        written to the table's storage, then the snapshot commits via
-        CommitTableRequest with CAS requirements and rebase retry —
+        written to the table's storage, then the snapshot commits through
+        ``commit_table`` with CAS requirements and rebase retry —
         metadata is never swapped on the filesystem directly."""
         from ..sources.writer import commit_snapshot, write_data_files
 
@@ -803,10 +810,19 @@ class RestTable:
 
 
 class _StagedTable:
-    """A transaction-scoped table target: duck-types RestTable's
-    refresh()/metadata/commit_snapshot surface so every dml function works
-    unchanged, but snapshot commits are staged into the owning transaction
-    instead of POSTed."""
+    """One table inside a :class:`CatalogTransaction`. It has the
+    ``metadata`` / ``refresh()`` / ``commit_table`` surface of RestTable
+    and FileTable, so every function in ``sources/`` runs on it unchanged.
+
+    ``commit_table`` checks the requirements against the staged metadata,
+    replaces that metadata with ``apply_updates(metadata, updates)`` and
+    hands both lists to the transaction; nothing reaches the catalog
+    before ``CatalogTransaction.commit()``. ``refresh()`` returns the
+    staged view, so each statement chains onto the ones before it. A
+    ``remove-snapshots`` update is refused: snapshot expiry deletes files
+    as soon as its commit returns, which inside a transaction is before
+    the catalog commit, so a rollback would leave the catalog pointing at
+    deleted files."""
 
     def __init__(self, table: RestTable, txn: "CatalogTransaction"):
         self._table = table
@@ -816,206 +832,132 @@ class _StagedTable:
         self.catalog = table.catalog
 
     @property
-    def metadata(self):
-        # delegate, never alias: rollback() restores state by refreshing
-        # the underlying RestTable (which REBINDS its metadata object), and
-        # an aliased copy here would keep serving the rolled-back snapshot
-        # whose files were just deleted
+    def metadata(self) -> TableMetadata:
+        # delegate, never alias: commit() and rollback() refresh the
+        # wrapped RestTable, which rebinds its metadata object
         return self._table.metadata
 
+    ident = RestTable.ident
+    max_commit_retries = RestTable.max_commit_retries
+    append = RestTable.append
+
     def refresh(self) -> "_StagedTable":
-        # inside a transaction, "refresh" returns the STAGED view (base +
-        # staged snapshots), never the catalog tip — a mid-transaction
-        # catalog refresh would discard the chain
         return self
 
-    def commit_snapshot(self, snapshot_json: dict, *,
-                        operation: str = "append", rebuild_fn=None,
-                        branch: str | None = None) -> dict:
-        # staged: conflicts surface at CatalogTransaction.commit(); the
-        # rebuilder is unused because nothing is POSTed here. The snapshot
-        # is applied to the LOCAL metadata copy so later statements in the
-        # same transaction read and chain onto the staged state (reference:
-        # test_delete_consolidation_transactional.test — insert + two
-        # deletes on one table inside one BEGIN).
-        #
-        # ``branch`` (r13, VERDICT r12 task 5) stages onto a branch ref:
-        # the WAP audit pipeline can now stage SEVERAL DMLs on a branch
-        # atomically — only the branch ref advances locally (and at
-        # commit time), main's current-snapshot-id and snapshot log stay
-        # untouched, and one transaction may mix main- and branch-staged
-        # statements on the same table (one change entry, one CAS per
-        # touched ref).
-        ref_name = branch or "main"
-        tm = self.metadata
-        existing = tm.refs.get(ref_name)
-        if existing is not None and existing.get("type") == "tag":
-            raise ValueError(f"ref {ref_name!r} is a tag, not a branch")
-        self._txn._stage(self._table, snapshot_json, ref_name)
-        snap = Snapshot.from_json(snapshot_json)
-        tm.snapshots.append(snap)
-        tm.last_sequence_number = max(tm.last_sequence_number,
-                                      snap.sequence_number)
-        if ref_name == "main":
-            tm.current_snapshot_id = snap.snapshot_id
-        # preserve any retention fields the ref already carries
-        ref = dict(existing or {"type": "branch"})
-        ref["snapshot-id"] = snap.snapshot_id
-        tm.refs[ref_name] = ref
+    def commit_table(self, requirements: list[dict],
+                     updates: list[dict]) -> dict:
+        if any(u["action"] == "remove-snapshots" for u in updates):
+            raise ValueError(
+                "expire_snapshots cannot run on a catalog-transaction "
+                "table: it deletes files before the transaction commits; "
+                "run it on the catalog table after commit()")
+        check_requirements(self.metadata, requirements)
+        staged = apply_updates(self.metadata, updates)
+        self._txn._stage(self._table, requirements, updates)
+        self._table.metadata = staged
         return {}
-
-    # convenience parity with RestTable
-    def append(self, spark, df) -> "_StagedTable":
-        from ..sources.writer import commit_snapshot, write_data_files
-
-        files, _ = write_data_files(spark, df, self.metadata)
-        commit_snapshot(self.metadata, operation="append",
-                        new_data_files=files,
-                        commit_fn=lambda s, rebuild=None: self.commit_snapshot(
-                            s.to_json(), rebuild_fn=rebuild))
-        return self
 
 
 class CatalogTransaction:
-    """Atomic multi-table data-plane transaction (reference:
-    iceberg_transaction.cpp multi-table CommitTransactionRequest,
-    :141-145): storage writes happen as each change is staged; the
-    metadata becomes visible only when commit() lands, all tables at once
-    or none. Staged snapshots on one table chain in staging order, onto
-    main and/or branch refs (r13: the WAP audit shape — several DMLs
-    staged on a branch commit atomically, with one CAS per touched
-    ref)."""
+    """Atomic multi-table transaction (reference: iceberg_transaction.cpp
+    multi-table CommitTransactionRequest, :141-145). ``table(ns, name)``
+    returns a staged table that any function in ``sources/`` accepts.
+    Data and manifest files land in storage as each statement runs; the
+    requirements and TableUpdates each statement commits are staged here,
+    one entry per table: the table, its metadata when the transaction
+    first staged a change on it (the base), the requirements and the
+    updates.
+
+    ``commit()`` sends each table's updates in staging order, all tables
+    in one CommitTransactionRequest (one CommitTableRequest per table
+    under ``disable_multi_table_commit``, atomic per table only). A staged
+    requirement is sent once, and only when it holds on the base: one
+    that fails there asserts state the transaction produced itself (a
+    branch it created, a snapshot it staged), so the catalog is asked only
+    about its pre-transaction state. ``rollback()`` sends nothing, restores
+    each table from the catalog and deletes the files the staged snapshots
+    and statistics wrote (unless ``remove_files_on_delete`` is off)."""
 
     def __init__(self, catalog: RestCatalog):
         self.catalog = catalog
-        self._staged: list[tuple[RestTable, dict, str]] = []
-        # per (table-key, ref): the ref's head when the transaction FIRST
-        # staged onto it — the CAS base asserted at commit() (None = the
-        # ref must not exist yet, so a new branch forks atomically)
-        self._bases: dict[tuple, int | None] = {}
+        self._tables: dict[tuple, _StagedTable] = {}
+        self._changes: dict[
+            tuple, tuple[RestTable, TableMetadata, list[dict], list[dict]]] = {}
 
     def table(self, namespace: str | tuple, name: str) -> _StagedTable:
-        return _StagedTable(self.catalog.load_table(namespace, name), self)
+        """The table's staged handle; every call for one table returns the
+        same handle, so all its statements chain in one staged state."""
+        key = (self.catalog._ns(namespace), name)
+        if key not in self._tables:
+            self._tables[key] = _StagedTable(
+                self.catalog.load_table(namespace, name), self)
+        return self._tables[key]
 
-    def _stage(self, table: RestTable, snapshot_json: dict,
-               ref_name: str = "main") -> None:
-        # multiple snapshots per table chain in staging order (the staged
-        # metadata advances between them, _StagedTable.commit_snapshot)
+    def _stage(self, table: RestTable, requirements: list[dict],
+               updates: list[dict]) -> None:
         key = (self.catalog._ns(table.namespace), table.name)
-        if (key, ref_name) not in self._bases:
-            # called BEFORE the local metadata mutation, so this reads the
-            # pre-transaction head of the ref
-            tm = table.metadata
-            self._bases[(key, ref_name)] = (
-                tm.current_snapshot_id if ref_name == "main"
-                else (tm.refs.get(ref_name) or {}).get("snapshot-id"))
-        self._staged.append((table, snapshot_json, ref_name))
+        _, base, reqs, ups = self._changes.setdefault(
+            key, (table, table.metadata, [], []))
+        for r in requirements:
+            if r not in reqs and requirement_holds(base, r):
+                reqs.append(r)
+        ups.extend(updates)
 
     def commit(self) -> dict:
-        if not self._staged:
+        if not self._changes:
             return {}
-        # group chained snapshots per table, preserving staging order:
-        # one change entry per table, its updates adding every staged
-        # snapshot then pointing each touched ref at ITS last staged
-        # snapshot (r13: a transaction may stage onto main and/or branch
-        # refs). The base requirement per ref is the head recorded when
-        # the transaction first staged onto it — the catalog state when
-        # the transaction began.
-        per_table: dict[tuple, list] = {}
-        order: list[tuple] = []
-        tables: dict[tuple, RestTable] = {}
-        for table, snap, ref_name in self._staged:
-            key = (self.catalog._ns(table.namespace), table.name)
-            if key not in per_table:
-                per_table[key] = []
-                order.append(key)
-                tables[key] = table
-            per_table[key].append((snap, ref_name))
-        changes = []
-        for key in order:
-            table, staged = tables[key], per_table[key]
-            ns = (table.namespace.split(".")
-                  if isinstance(table.namespace, str) else list(table.namespace))
-            updates = []
-            refs_order: list[str] = []
-            last_by_ref: dict[str, int] = {}
-            for snap, ref_name in staged:
-                updates.append({"action": "add-snapshot", "snapshot": snap})
-                if ref_name not in last_by_ref:
-                    refs_order.append(ref_name)
-                last_by_ref[ref_name] = snap["snapshot-id"]
-            for ref_name in refs_order:
-                updates.append({"action": "set-snapshot-ref",
-                                "ref-name": ref_name, "type": "branch",
-                                "snapshot-id": last_by_ref[ref_name]})
-            requirements = [{"type": "assert-table-uuid",
-                             "uuid": table.metadata.table_uuid}]
-            for ref_name in refs_order:
-                requirements.append(
-                    {"type": "assert-ref-snapshot-id", "ref": ref_name,
-                     "snapshot-id": self._bases.get((key, ref_name))})
-            changes.append({
-                "identifier": {"namespace": ns, "name": table.name},
-                "requirements": requirements,
-                "updates": updates,
-            })
         if self.catalog.config.disable_multi_table_commit:
             # compatibility fallback (ATTACH disable_multi_table_commit,
             # horizon_compatible_writes.test): catalogs without
             # /transactions/commit take one CommitTableRequest per table —
-            # per-table atomicity only; a later failure leaves earlier
-            # tables committed
+            # a later failure leaves earlier tables committed
             resp = {}
-            for change in changes:
-                ident = change["identifier"]
+            for table, _, reqs, ups in self._changes.values():
                 resp = self.catalog.commit_table(
-                    tuple(ident["namespace"]), ident["name"],
-                    change["requirements"], change["updates"])
+                    table.namespace, table.name, reqs, ups)
         else:
-            resp = self.catalog.commit_transaction(changes)
-        staged, self._staged = self._staged, []
-        self._bases = {}
-        for table, _, _ in staged:
+            resp = self.catalog.commit_transaction([
+                {"identifier": {
+                    "namespace": (table.namespace.split(".")
+                                  if isinstance(table.namespace, str)
+                                  else list(table.namespace)),
+                    "name": table.name},
+                 "requirements": reqs, "updates": ups}
+                for table, _, reqs, ups in self._changes.values()])
+        staged, self._changes = self._changes, {}
+        for table, *_ in staged.values():
             table.refresh()
         return resp
 
     def rollback(self) -> None:
-        """Abandon the transaction: nothing was ever POSTed, so the
-        catalog state is untouched; the storage files each staged
-        snapshot wrote (data, manifests, manifest list) are deleted so a
-        rollback leaves no garbage (reference:
-        delete/delete_rollback_cleanup.test — files written by a
-        rolled-back DELETE are cleaned up). The staged tables' in-memory
-        metadata (mutated by _StagedTable.commit_snapshot) is restored from
-        the catalog first, so reusing a table handle after rollback never
-        plans scans against deleted manifests or chains a new transaction
-        onto a snapshot the catalog never saw."""
-        staged, self._staged = self._staged, []
-        self._bases = {}
-        for table in {id(t): t for t, _, _ in staged}.values():
+        """Abandon the transaction: nothing was POSTed, so the catalog is
+        untouched. Each staged table's metadata is reloaded from the
+        catalog first, so a handle reused after rollback never plans
+        against deleted files; then the files the staged changes wrote are
+        deleted, so a rollback leaves no garbage (reference:
+        delete/delete_rollback_cleanup.test)."""
+        staged, self._changes = self._changes, {}
+        for table, *_ in staged.values():
             try:
                 table.refresh()
             except Exception:
                 pass  # best-effort: a dropped table has nothing to restore
         if not self.catalog.config.remove_files_on_delete:
             return
-        for table, snap, _ in staged:
-            _cleanup_staged_snapshot(table.metadata, snap)
+        for table, _, _, updates in staged.values():
+            for u in updates:
+                _cleanup_staged_update(table.metadata, u)
 
 
-def _cleanup_staged_snapshot(tm: TableMetadata, snap: dict) -> None:
-    """Best-effort removal of everything one uncommitted snapshot wrote:
-    its ADDED data/delete files, the manifests it authored, and its
-    manifest list. Carried-forward manifests (added by earlier committed
-    snapshots) are left alone."""
+def _cleanup_staged_update(tm: TableMetadata, update: dict) -> None:
+    """Best-effort removal of the files one uncommitted update wrote. For
+    ``add-snapshot``: its ADDED data/delete files, the manifests it
+    authored and its manifest list; carried-forward manifests (added by
+    committed snapshots) are left alone. For ``set-statistics`` and
+    ``set-partition-statistics``: the statistics file."""
     from ..metadata import manifest as mf
     from ..plans.scan_plan import _localize
     from .. import io as fio
-
-    sid = snap.get("snapshot-id")
-    ml = snap.get("manifest-list")
-    if not ml:
-        return
 
     def _rm(path: str) -> None:
         try:
@@ -1023,6 +965,18 @@ def _cleanup_staged_snapshot(tm: TableMetadata, snap: dict) -> None:
         except Exception:
             pass  # best-effort: an already-missing file is fine
 
+    action = update["action"]
+    if action in ("set-statistics", "set-partition-statistics"):
+        entry = update[action.removeprefix("set-")]
+        _rm(_localize(tm, entry["statistics-path"]))
+        return
+    if action != "add-snapshot":
+        return
+    snap = update["snapshot"]
+    sid = snap.get("snapshot-id")
+    ml = snap.get("manifest-list")
+    if not ml:
+        return
     try:
         manifests = mf.read_manifest_list(_localize(tm, ml))
     except Exception:

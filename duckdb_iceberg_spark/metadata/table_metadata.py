@@ -333,6 +333,17 @@ class TableMetadata:
             raise KeyError(f"no branch or tag {ref!r}")
         return self.snapshot_by_id(int(r["snapshot-id"]))
 
+    def branch_head(self, name: str) -> Optional[int]:
+        """The snapshot id branch ``name`` points at, or None when no ref
+        of that name exists. A tag of that name raises: commits never
+        move a tag."""
+        r = self.refs.get(name)
+        if r is None:
+            return None
+        if r.get("type") != "branch":
+            raise ValueError(f"ref {name!r} is a tag, not a branch")
+        return int(r["snapshot-id"])
+
     def select_snapshot(
         self,
         snapshot_id: int | None = None,
@@ -404,6 +415,11 @@ class TableMetadata:
         return j
 
 
+#: the spec's optional retention fields of a snapshot ref
+REF_RETENTION_KEYS = ("max-ref-age-ms", "max-snapshot-age-ms",
+                      "min-snapshots-to-keep")
+
+
 def _drop_stats(tm: TableMetadata, key: str, snapshot_ids) -> None:
     if tm.raw.get(key):
         tm.raw[key] = [s for s in tm.raw[key]
@@ -439,8 +455,7 @@ def apply_updates(tm: TableMetadata, updates: list[dict]) -> TableMetadata:
             sid = u["snapshot-id"]
             new.refs[u["ref-name"]] = {
                 "snapshot-id": sid, "type": u.get("type", "branch"),
-                **{k: u[k] for k in ("max-ref-age-ms", "max-snapshot-age-ms",
-                                     "min-snapshots-to-keep") if k in u}}
+                **{k: u[k] for k in REF_RETENTION_KEYS if k in u}}
             if u["ref-name"] == "main":
                 new.current_snapshot_id = sid
                 new.snapshot_log.append({

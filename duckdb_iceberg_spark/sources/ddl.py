@@ -526,16 +526,11 @@ def fast_forward(location, branch: str, to: str | int) -> TableMetadata:
     else:
         target = int(to)
         tm.snapshot_by_id(target)  # validates existence
-    cur_ref = tm.refs.get(branch)
-    head = None
-    if cur_ref is not None:
-        head = int(cur_ref["snapshot-id"])
-        if cur_ref.get("type") != "branch":
-            raise ValueError(f"ref {branch!r} is a tag, not a branch")
-        if not _is_ancestor(tm, head, target):
-            raise ValueError(
-                f"cannot fast-forward {branch!r}: its head {head} is not "
-                f"an ancestor of {target}")
+    head = tm.branch_head(branch)
+    if head is not None and not _is_ancestor(tm, head, target):
+        raise ValueError(
+            f"cannot fast-forward {branch!r}: its head {head} is not "
+            f"an ancestor of {target}")
     if branch == "main":
         head = tm.current_snapshot_id
     # the ancestry check above holds only while the branch stays put

@@ -67,11 +67,9 @@ def _branch_snapshot(tm: TableMetadata, branch: str | None):
     several DMLs stage onto a branch atomically; commit CAS-asserts each
     touched ref's pre-transaction head)."""
     if branch and branch != "main":
-        ref = tm.refs.get(branch)
-        if ref is not None:
-            if ref.get("type") != "branch":
-                raise ValueError(f"ref {branch!r} is a tag, not a branch")
-            return tm.snapshot_by_id(ref["snapshot-id"])
+        head = tm.branch_head(branch)
+        if head is not None:
+            return tm.snapshot_by_id(head)
     return tm.select_snapshot()
 
 

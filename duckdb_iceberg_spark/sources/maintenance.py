@@ -24,7 +24,7 @@ from pyspark.sql import SparkSession
 
 from ..catalog.commit import committer, resolve_table
 from ..metadata import manifest as mf
-from ..metadata.table_metadata import TableMetadata, load_table_metadata
+from ..metadata.table_metadata import TableMetadata
 from ..plans.scan_plan import ScanPlan, plan_scan
 from .scan import scan_to_dataframe
 from .writer import _inherit_before_existing, commit_snapshot, write_data_files
@@ -430,11 +430,12 @@ def remove_orphan_files(
         older_than_ms = _ORPHAN_DEFAULT_OLDER_THAN_MS
     cutoff_ms = _time.time() * 1000 - older_than_ms
 
+    # a catalog table's snapshots come from the catalog (a transaction-
+    # staged table's include the staged ones), so every file they
+    # reference stays; the walk covers the table's storage location
+    tm = resolve_table(location).metadata
     if not isinstance(location, str):
-        # orphan scan walks the table's storage location — same walk works
-        # for catalog tables, but deletions don't touch catalog state
-        location = location.refresh().metadata.location
-    tm = load_table_metadata(location)
+        location = tm.location
     _, referenced = _reachable_files(tm, tm.snapshots, strict=True)
     orphans = []
     # scan the default data dir AND every write.data.path the table has

@@ -20,25 +20,16 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..catalog.commit import resolve_table
 from ..metadata import manifest as mf
 from ..metadata import types as ice_types
-from ..metadata.table_metadata import load_table_metadata
 from ..plans.scan_plan import _localize
 from ..plans import transforms as tr
 
 
-def _tm_of(path):
-    """Inspection target: a table path (str) or a catalog ``RestTable`` —
-    the reference's metadata table functions work on attached catalog
-    tables the same way (iceberg_snapshots.cpp bind over scan info)."""
-    if isinstance(path, str):
-        return load_table_metadata(path)
-    return path.refresh().metadata
-
-
 def iceberg_snapshots(spark: SparkSession, path: str) -> DataFrame:
     """(sequence_number, snapshot_id, timestamp_ms, manifest_list, operation)."""
-    tm = _tm_of(path)
+    tm = resolve_table(path).metadata
     schema = T.StructType([
         T.StructField("sequence_number", T.LongType()),
         T.StructField("snapshot_id", T.LongType()),
@@ -68,7 +59,7 @@ def describe_table(spark: SparkSession, path: str) -> DataFrame:
     (alter_column_comment.test:42-48 queries column_name+comment;
     test_column_doc_comment.test). ``default`` renders the effective
     insert default (write-default, falling back to initial-default)."""
-    tm = _tm_of(path)
+    tm = resolve_table(path).metadata
     schema = T.StructType([
         T.StructField("column_name", T.StringType()),
         T.StructField("column_type", T.StringType()),
@@ -114,7 +105,7 @@ def iceberg_metadata(spark: SparkSession, path: str, **scan_opts) -> DataFrame:
     file_sequence_number) plus file_size_in_bytes (ours, extra, last)."""
     from ..plans.scan_plan import manifests_for_snapshot
 
-    tm = _tm_of(path)
+    tm = resolve_table(path).metadata
     snap = tm.select_snapshot(**scan_opts)
     schema = T.StructType([
         T.StructField("manifest_path", T.StringType()),
@@ -164,7 +155,7 @@ def iceberg_metadata(spark: SparkSession, path: str, **scan_opts) -> DataFrame:
 def iceberg_column_stats(spark: SparkSession, path: str, **scan_opts) -> DataFrame:
     """Per data-file per-column stats (reference schema,
     iceberg_column_stats.cpp:79-116); bounds rendered as strings."""
-    tm = _tm_of(path)
+    tm = resolve_table(path).metadata
     snap = tm.select_snapshot(**scan_opts)
     schema = T.StructType([
         T.StructField("status", T.StringType()),
@@ -241,7 +232,7 @@ def _render(t: Any, b: bytes | None) -> str | None:
 def iceberg_partition_stats(spark: SparkSession, path: str, **scan_opts) -> DataFrame:
     """Manifest-level partition field summaries (reference schema,
     iceberg_partition_stats.cpp:77-111)."""
-    tm = _tm_of(path)
+    tm = resolve_table(path).metadata
     snap = tm.select_snapshot(**scan_opts)
     schema = T.StructType([
         T.StructField("manifest_path", T.StringType()),
@@ -290,7 +281,7 @@ def iceberg_refs(spark: SparkSession, path: str) -> DataFrame:
     """(name, type, snapshot_id, max_ref_age_ms) — branch/tag pointers
     (cf. Iceberg's ``table.refs`` metadata table; the refs map itself is
     the metadata the reference parses into IcebergTableMetadata)."""
-    tm = _tm_of(path)
+    tm = resolve_table(path).metadata
     schema = T.StructType([
         T.StructField("name", T.StringType()),
         T.StructField("type", T.StringType()),
@@ -310,7 +301,7 @@ def iceberg_history(spark: SparkSession, path: str) -> DataFrame:
     the snapshot-log lineage view (cf. Iceberg's ``table.history``).
     ``is_current_ancestor`` walks parent pointers from the current
     snapshot, marking entries on the live line of history."""
-    tm = _tm_of(path)
+    tm = resolve_table(path).metadata
     parents = {s.snapshot_id: s.parent_snapshot_id for s in tm.snapshots}
     ancestors: set[int] = set()
     cur = tm.current_snapshot_id

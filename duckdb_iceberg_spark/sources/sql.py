@@ -735,16 +735,15 @@ def _exec_insert(spark: SparkSession, stmt: str) -> DataFrame:
         # test_insert_into_supplied_columns.test): reorder the query's
         # columns to the named targets; unnamed columns take their
         # write-default (NULL when none)
+        from ..catalog.commit import resolve_table
         from ..metadata import types as ice_types
-        from ..metadata.table_metadata import load_table_metadata
 
         cols = [c.strip().strip("`") for c in m.group(3).split(",")]
         if len(cols) != len(df.columns):
             raise ValueError(
                 f"INSERT column list has {len(cols)} names for "
                 f"{len(df.columns)} query columns")
-        tm_schema = (source.metadata if not isinstance(source, str)
-                     else load_table_metadata(source)).schema_json()
+        tm_schema = resolve_table(source).metadata.schema_json()
         by_name = {f["name"]: f for f in tm_schema["fields"]}
         unknown = [c for c in cols if c not in by_name]
         if unknown:

@@ -1654,12 +1654,9 @@ def commit_snapshot(
             # parent + carry-forward base = the branch head of WHATEVER
             # metadata the (possibly refreshed) build runs against
             saved2 = tm2.current_snapshot_id
-            ref2 = tm2.refs.get(branch)
-            if ref2 is not None:
-                if ref2.get("type") != "branch":
-                    raise ValueError(
-                        f"ref {branch!r} is a tag, not a branch")
-                tm2.current_snapshot_id = ref2["snapshot-id"]
+            head = tm2.branch_head(branch)
+            if head is not None:
+                tm2.current_snapshot_id = head
             try:
                 return _build(tm2)
             finally:

@@ -33,7 +33,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..metadata.table_metadata import TableMetadata, load_table_metadata
+from ..catalog.commit import resolve_table
+from ..metadata.table_metadata import TableMetadata
 from ..plans.scan_plan import ScanPlan, plan_scan
 from ..sources.scan import scan_to_dataframe
 
@@ -71,10 +72,7 @@ def changelog_scan(
     (r14 — anything with ``refresh()`` returning an object carrying
     ``.metadata``): the plan below only needs TableMetadata, whose file
     paths resolve through the same FileIO either way."""
-    if isinstance(location, str):
-        tm = load_table_metadata(location)
-    else:
-        tm = location.refresh().metadata
+    tm = resolve_table(location).metadata
 
     # ancestor chain oldest→newest, like incremental.appended_snapshots
     # but keeping EVERY operation (deletes/overwrites are the point here)

@@ -167,6 +167,23 @@ def test_delete_racing_an_append_is_rebuilt(tmp_path):
     _no_temp_files(loc)
 
 
+def test_branch_commit_keeps_ref_retention(tmp_path):
+    """A snapshot committed onto a branch moves its head and keeps the
+    retention fields the branch was created with."""
+    from duckdb_iceberg_spark.sources import ddl
+
+    loc = _seed(tmp_path)
+    ddl.create_branch(loc, "audit", max_ref_age_ms=86_400_000,
+                      min_snapshots_to_keep=3)
+    commit_snapshot(load_table_metadata(loc), operation="append",
+                    new_data_files=[_data_file(loc, "b")], branch="audit")
+    tm = load_table_metadata(loc)
+    ref = tm.refs["audit"]
+    assert ref["snapshot-id"] != tm.current_snapshot_id
+    assert (ref["max-ref-age-ms"], ref["min-snapshots-to-keep"]) == (
+        86_400_000, 3)
+
+
 def test_delete_racing_a_delete_raises_conflict(tmp_path):
     loc = _seed(tmp_path)
     stale = FileTable(loc)

@@ -47,6 +47,130 @@ class _StubState:
         self.last_signed_request: tuple | None = None
         # vended storage credentials included in LoadTableResult as `config`
         self.vended_config: dict | None = None
+        # table key -> metadata-location loadTable reports; every commit
+        # moves it to a fresh name
+        self.metadata_locations: dict[tuple, str] = {}
+        self.commits = 0
+
+
+def _failed_requirement(meta: dict, requirements: list[dict]) -> str | None:
+    """The stub's requirement check, shared by the per-table and the
+    multi-table commit: the message of the first requirement ``meta``
+    fails, or None."""
+    cur = None
+    for s in meta.get("snapshots", []):
+        if s["snapshot-id"] == meta.get("current-snapshot-id"):
+            cur = s["snapshot-id"]
+    for r in requirements:
+        if r["type"] == "assert-ref-snapshot-id":
+            rf = r.get("ref", "main")
+            have = cur if rf == "main" else (
+                meta.get("refs", {}).get(rf, {}).get("snapshot-id"))
+            if r.get("snapshot-id") != have:
+                return "stale snapshot"
+        elif r["type"] == "assert-table-uuid":
+            if r["uuid"] != meta["table-uuid"]:
+                return "uuid mismatch"
+        elif r["type"] == "assert-current-schema-id":
+            if r.get("current-schema-id") != meta.get("current-schema-id", 0):
+                return "stale schema"
+    return None
+
+
+def _apply_table_updates(meta: dict, updates: list[dict]) -> str | None:
+    """The stub's TableUpdate applier, shared by the per-table and the
+    multi-table commit: applies ``updates`` to ``meta`` in place and
+    returns the message of a refused update, or None."""
+    for u in updates:
+        if u["action"] == "add-snapshot":
+            meta["snapshots"].append(u["snapshot"])
+            meta["last-sequence-number"] = max(
+                meta["last-sequence-number"],
+                u["snapshot"].get("sequence-number", 0))
+            fr = u["snapshot"].get("first-row-id")
+            if fr is not None:
+                summ = u["snapshot"].get("summary", {})
+                added = int(summ.get("assigned-rows",
+                                     summ.get("added-records", 0)))
+                meta["next-row-id"] = max(
+                    meta.get("next-row-id", 0), fr + added)
+        elif u["action"] == "set-snapshot-ref":
+            rn = u.get("ref-name", "main")
+            ref = {"snapshot-id": u["snapshot-id"],
+                   "type": u.get("type", "branch")}
+            # the spec's optional retention fields
+            # (reference: set_snapshot_ref_update.hpp)
+            for fk in ("max-ref-age-ms",
+                       "max-snapshot-age-ms",
+                       "min-snapshots-to-keep"):
+                if u.get(fk) is not None:
+                    ref[fk] = u[fk]
+            meta.setdefault("refs", {})[rn] = ref
+            if rn == "main":
+                meta["current-snapshot-id"] = u["snapshot-id"]
+        elif u["action"] == "remove-snapshot-ref":
+            meta.get("refs", {}).pop(u.get("ref-name"), None)
+        elif u["action"] == "add-spec":
+            meta.setdefault("partition-specs", []).append(u["spec"])
+            meta["last-partition-id"] = max(
+                [f["field-id"] for f in u["spec"].get("fields", [])]
+                + [meta.get("last-partition-id", 999)])
+        elif u["action"] == "set-default-spec":
+            meta["default-spec-id"] = u["spec-id"]
+        elif u["action"] == "add-sort-order":
+            meta.setdefault("sort-orders", []).append(u["sort-order"])
+        elif u["action"] == "set-default-sort-order":
+            meta["default-sort-order-id"] = u["sort-order-id"]
+        elif u["action"] == "add-schema":
+            meta.setdefault("schemas", []).append(u["schema"])
+            if "last-column-id" in u:
+                meta["last-column-id"] = max(
+                    meta.get("last-column-id", 0), u["last-column-id"])
+        elif u["action"] == "set-current-schema":
+            meta["current-schema-id"] = u["schema-id"]
+        elif u["action"] == "set-properties":
+            meta.setdefault("properties", {}).update(u["updates"])
+        elif u["action"] == "remove-properties":
+            for k in u.get("removals", []):
+                meta.get("properties", {}).pop(k, None)
+        elif u["action"] == "remove-snapshots":
+            dead = set(u.get("snapshot-ids", []))
+            meta["snapshots"] = [
+                sn for sn in meta.get("snapshots", [])
+                if sn["snapshot-id"] not in dead]
+        elif u["action"] == "set-statistics":
+            meta["statistics"] = [
+                s for s in meta.get("statistics", [])
+                if s.get("snapshot-id") != u["snapshot-id"]
+            ] + [u["statistics"]]
+        elif u["action"] == "set-partition-statistics":
+            meta["partition-statistics"] = [
+                s for s in
+                meta.get("partition-statistics", [])
+                if s.get("snapshot-id") != u["snapshot-id"]
+            ] + [u["partition-statistics"]]
+        elif u["action"] == "remove-statistics":
+            meta["statistics"] = [
+                s for s in meta.get("statistics", [])
+                if s.get("snapshot-id") != u["snapshot-id"]]
+        elif u["action"] == "remove-partition-statistics":
+            meta["partition-statistics"] = [
+                s for s in
+                meta.get("partition-statistics", [])
+                if s.get("snapshot-id") != u["snapshot-id"]]
+        elif u["action"] == "upgrade-format-version":
+            if u["format-version"] < meta.get("format-version", 2):
+                return "downgrade"
+            meta["format-version"] = u["format-version"]
+    return None
+
+
+def _next_metadata_location(state: _StubState, key: tuple) -> str:
+    """A fresh metadata-location for ``key`` after a commit."""
+    state.commits += 1
+    state.metadata_locations[key] = (
+        f"mem://{'/'.join(key)}/v{state.commits}.metadata.json")
+    return state.metadata_locations[key]
 
 
 def _make_handler(state: _StubState):
@@ -151,7 +275,9 @@ def _make_handler(state: _StubState):
                         "properties": b.get("properties", {}),
                     }
                     state.tables[key] = meta
-                    return self._send(200, {"metadata-location": f"mem://{b['name']}/m0.json",
+                    state.metadata_locations[key] = f"mem://{b['name']}/m0.json"
+                    return self._send(200, {"metadata-location":
+                                            state.metadata_locations[key],
                                             "metadata": meta})
             if len(rest) == 3 and rest[0] == "namespaces" \
                     and rest[2] == "register" and self.command == "POST":
@@ -173,6 +299,7 @@ def _make_handler(state: _StubState):
                     return self._send(
                         400, {"error": {"message": f"cannot read {mloc}"}})
                 state.tables[key] = meta
+                state.metadata_locations[key] = mloc
                 return self._send(200, {"metadata-location": mloc,
                                         "metadata": meta})
             if len(rest) == 4 and rest[0] == "namespaces" and rest[2] == "tables":
@@ -181,7 +308,8 @@ def _make_handler(state: _StubState):
                 if key not in state.tables:
                     return self._send(404, {"error": {"message": "no such table"}})
                 if self.command == "GET":
-                    resp = {"metadata-location": "mem://m.json",
+                    resp = {"metadata-location":
+                            state.metadata_locations.get(key, "mem://m.json"),
                             "metadata": state.tables[key]}
                     if state.vended_config:
                         resp["config"] = state.vended_config
@@ -192,24 +320,9 @@ def _make_handler(state: _StubState):
                 if self.command == "POST":  # commit
                     b = self._body()
                     meta = state.tables[key]
-                    cur = None
-                    for s in meta.get("snapshots", []):
-                        if s["snapshot-id"] == meta.get("current-snapshot-id"):
-                            cur = s["snapshot-id"]
-                    for r in b.get("requirements", []):
-                        if r["type"] == "assert-ref-snapshot-id":
-                            rf = r.get("ref", "main")
-                            have = cur if rf == "main" else (
-                                meta.get("refs", {}).get(rf, {})
-                                .get("snapshot-id"))
-                            if r.get("snapshot-id") != have:
-                                return self._send(409, {"error": {"message": "stale snapshot"}})
-                        elif r["type"] == "assert-table-uuid":
-                            if r["uuid"] != meta["table-uuid"]:
-                                return self._send(409, {"error": {"message": "uuid mismatch"}})
-                        elif r["type"] == "assert-current-schema-id":
-                            if r.get("current-schema-id") != meta.get("current-schema-id", 0):
-                                return self._send(409, {"error": {"message": "stale schema"}})
+                    failed = _failed_requirement(meta, b.get("requirements", []))
+                    if failed:
+                        return self._send(409, {"error": {"message": failed}})
                     if state.commit_conflicts_to_inject > 0:
                         state.commit_conflicts_to_inject -= 1
                         # simulate a concurrent winner: bump current snapshot
@@ -226,89 +339,12 @@ def _make_handler(state: _StubState):
                             meta["next-row-id"] = (meta.get("next-row-id", 0)
                                                    + state.conflict_winner_rows)
                         return self._send(409, {"error": {"message": "injected conflict"}})
-                    for u in b.get("updates", []):
-                        if u["action"] == "add-snapshot":
-                            meta["snapshots"].append(u["snapshot"])
-                            meta["last-sequence-number"] = max(
-                                meta["last-sequence-number"],
-                                u["snapshot"].get("sequence-number", 0))
-                            fr = u["snapshot"].get("first-row-id")
-                            if fr is not None:
-                                summ = u["snapshot"].get("summary", {})
-                                added = int(summ.get("assigned-rows",
-                                                     summ.get("added-records", 0)))
-                                meta["next-row-id"] = max(
-                                    meta.get("next-row-id", 0), fr + added)
-                        elif u["action"] == "set-snapshot-ref":
-                            rn = u.get("ref-name", "main")
-                            ref = {"snapshot-id": u["snapshot-id"],
-                                   "type": u.get("type", "branch")}
-                            # the spec's optional retention fields
-                            # (reference: set_snapshot_ref_update.hpp)
-                            for fk in ("max-ref-age-ms",
-                                       "max-snapshot-age-ms",
-                                       "min-snapshots-to-keep"):
-                                if u.get(fk) is not None:
-                                    ref[fk] = u[fk]
-                            meta.setdefault("refs", {})[rn] = ref
-                            if rn == "main":
-                                meta["current-snapshot-id"] = u["snapshot-id"]
-                        elif u["action"] == "remove-snapshot-ref":
-                            meta.get("refs", {}).pop(u.get("ref-name"), None)
-                        elif u["action"] == "add-spec":
-                            meta.setdefault("partition-specs", []).append(u["spec"])
-                            meta["last-partition-id"] = max(
-                                [f["field-id"] for f in u["spec"].get("fields", [])]
-                                + [meta.get("last-partition-id", 999)])
-                        elif u["action"] == "set-default-spec":
-                            meta["default-spec-id"] = u["spec-id"]
-                        elif u["action"] == "add-sort-order":
-                            meta.setdefault("sort-orders", []).append(u["sort-order"])
-                        elif u["action"] == "set-default-sort-order":
-                            meta["default-sort-order-id"] = u["sort-order-id"]
-                        elif u["action"] == "add-schema":
-                            meta.setdefault("schemas", []).append(u["schema"])
-                            if "last-column-id" in u:
-                                meta["last-column-id"] = max(
-                                    meta.get("last-column-id", 0), u["last-column-id"])
-                        elif u["action"] == "set-current-schema":
-                            meta["current-schema-id"] = u["schema-id"]
-                        elif u["action"] == "set-properties":
-                            meta.setdefault("properties", {}).update(u["updates"])
-                        elif u["action"] == "remove-properties":
-                            for k in u.get("removals", []):
-                                meta.get("properties", {}).pop(k, None)
-                        elif u["action"] == "remove-snapshots":
-                            dead = set(u.get("snapshot-ids", []))
-                            meta["snapshots"] = [
-                                sn for sn in meta.get("snapshots", [])
-                                if sn["snapshot-id"] not in dead]
-                        elif u["action"] == "set-statistics":
-                            meta["statistics"] = [
-                                s for s in meta.get("statistics", [])
-                                if s.get("snapshot-id") != u["snapshot-id"]
-                            ] + [u["statistics"]]
-                        elif u["action"] == "set-partition-statistics":
-                            meta["partition-statistics"] = [
-                                s for s in
-                                meta.get("partition-statistics", [])
-                                if s.get("snapshot-id") != u["snapshot-id"]
-                            ] + [u["partition-statistics"]]
-                        elif u["action"] == "remove-statistics":
-                            meta["statistics"] = [
-                                s for s in meta.get("statistics", [])
-                                if s.get("snapshot-id") != u["snapshot-id"]]
-                        elif u["action"] == "remove-partition-statistics":
-                            meta["partition-statistics"] = [
-                                s for s in
-                                meta.get("partition-statistics", [])
-                                if s.get("snapshot-id") != u["snapshot-id"]]
-                        elif u["action"] == "upgrade-format-version":
-                            if u["format-version"] < meta.get("format-version", 2):
-                                return self._send(400, {"error": {"message": "downgrade"}})
-                            meta["format-version"] = u["format-version"]
-                    return self._send(200, {"metadata-location": "mem://m2.json",
-                                            "metadata": meta})
+                    refused = _apply_table_updates(meta, b.get("updates", []))
+                    if refused:
+                        return self._send(400, {"error": {"message": refused}})
+                    return self._send(200, {
+                        "metadata-location": _next_metadata_location(state, key),
+                        "metadata": meta})
             if len(rest) >= 5 and rest[0] == "namespaces" and rest[2] == "tables" \
                     and rest[4] in ("plan", "tasks"):
                 if state.plan_response is None:
@@ -333,50 +369,23 @@ def _make_handler(state: _StubState):
                 b = self._body()
                 changes = b.get("table-changes", [])
                 # validate every table first: all-or-nothing
-                metas = []
+                keys = []
                 for ch in changes:
                     ident = ch["identifier"]
                     key = tuple(ident["namespace"]) + (ident["name"],)
                     if key not in state.tables:
                         return self._send(404, {"error": {"message": "no such table"}})
-                    meta = state.tables[key]
-                    cur = None
-                    for s in meta.get("snapshots", []):
-                        if s["snapshot-id"] == meta.get("current-snapshot-id"):
-                            cur = s["snapshot-id"]
-                    for r in ch.get("requirements", []):
-                        if r["type"] == "assert-ref-snapshot-id":
-                            rf = r.get("ref", "main")
-                            have = cur if rf == "main" else (
-                                meta.get("refs", {}).get(rf, {})
-                                .get("snapshot-id"))
-                            if r.get("snapshot-id") != have:
-                                return self._send(409, {"error": {"message": "stale snapshot"}})
-                        if r["type"] == "assert-table-uuid" \
-                                and r["uuid"] != meta["table-uuid"]:
-                            return self._send(409, {"error": {"message": "uuid mismatch"}})
-                    metas.append((meta, ch))
-                for meta, ch in metas:
-                    for u in ch.get("updates", []):
-                        if u["action"] == "add-snapshot":
-                            meta["snapshots"].append(u["snapshot"])
-                            meta["last-sequence-number"] = max(
-                                meta["last-sequence-number"],
-                                u["snapshot"].get("sequence-number", 0))
-                            fr = u["snapshot"].get("first-row-id")
-                            if fr is not None:
-                                summ = u["snapshot"].get("summary", {})
-                                added = int(summ.get("assigned-rows",
-                                                     summ.get("added-records", 0)))
-                                meta["next-row-id"] = max(
-                                    meta.get("next-row-id", 0), fr + added)
-                        elif u["action"] == "set-snapshot-ref":
-                            rn = u.get("ref-name", "main")
-                            meta.setdefault("refs", {})[rn] = {
-                                "snapshot-id": u["snapshot-id"],
-                                "type": u.get("type", "branch")}
-                            if rn == "main":
-                                meta["current-snapshot-id"] = u["snapshot-id"]
+                    failed = _failed_requirement(state.tables[key],
+                                                 ch.get("requirements", []))
+                    if failed:
+                        return self._send(409, {"error": {"message": failed}})
+                    keys.append(key)
+                for key, ch in zip(keys, changes):
+                    refused = _apply_table_updates(state.tables[key],
+                                                   ch.get("updates", []))
+                    if refused:
+                        return self._send(400, {"error": {"message": refused}})
+                    _next_metadata_location(state, key)
                 return self._send(204)
             if rest == ["tables", "rename"]:
                 b = self._body()
@@ -2120,6 +2129,249 @@ def test_compatibility_toggles(stub, spark, sf_dir, tmp_path):
     before = set(_glob.glob(f"{loc}/**/*", recursive=True))
     txn2.rollback()
     assert set(_glob.glob(f"{loc}/**/*", recursive=True)) == before
+
+
+def test_loaded_table_reports_catalog_metadata_location(stub):
+    """A catalog table's metadata_location is the metadata file the
+    catalog reported, not the table root — after the load and after a
+    commit moved it."""
+    base, state = stub
+    cat = _catalog(base)
+    cat.create_namespace("db")
+    cat.create_table("db", "mloc", SCHEMA)
+    tbl = cat.load_table("db", "mloc")
+    assert tbl.metadata.metadata_location == \
+        state.metadata_locations[("db", "mloc")]
+    assert tbl.metadata_location == tbl.metadata.metadata_location
+
+    tbl.commit_table(
+        [{"type": "assert-table-uuid", "uuid": tbl.metadata.table_uuid}],
+        [{"action": "set-properties", "updates": {"k": "v"}}])
+    moved = state.metadata_locations[("db", "mloc")]
+    assert moved.endswith(".metadata.json")
+    assert tbl.metadata_location == moved
+    assert cat.load_table("db", "mloc").metadata.metadata_location == moved
+
+
+def test_transaction_stages_data_and_ddl_in_one_commit(stub, spark, sf_dir,
+                                                        tmp_path):
+    """An append, set_table_properties and add_column on one
+    transaction-staged table stay invisible in the catalog until
+    commit(), then land together in a single /transactions/commit."""
+    from duckdb_iceberg_spark import write_iceberg
+    from duckdb_iceberg_spark.catalog import scan_rest_table
+    from duckdb_iceberg_spark.sources import ddl
+    from tests.conftest import load
+
+    base, state = stub
+    loc = str(tmp_path / "txddl")
+    region = load(spark, sf_dir, "region")
+    write_iceberg(region, loc)
+    _register_disk_table(state, loc, name="txddl")
+    state.plan_response = None
+    cat = _catalog(base)
+
+    txn = cat.transaction()
+    t = txn.table("db", "txddl")
+    t.append(spark, region.withColumn("r_regionkey",
+                                      F.col("r_regionkey") + 10))
+    ddl.set_table_properties(t, {"audit.owner": "ops"})
+    ddl.add_column(t, "r_extra", "long")
+    # staged locally: the handle sees all three, the catalog none
+    assert t.metadata.properties["audit.owner"] == "ops"
+    assert t.metadata.field_by_name("r_extra") is not None
+    meta = state.tables[("db", "txddl")]
+    assert len(meta["snapshots"]) == 1
+    assert "audit.owner" not in meta.get("properties", {})
+    assert len(meta["schemas"]) == 1
+
+    txn.commit()
+    posts = [p for m, p in state.requests if m == "POST"]
+    assert len([p for p in posts if p.endswith("/transactions/commit")]) == 1
+    assert not [p for p in posts if p.endswith("/tables/txddl")]
+    meta = state.tables[("db", "txddl")]
+    assert len(meta["snapshots"]) == 2
+    assert meta["properties"]["audit.owner"] == "ops"
+    assert meta["current-schema-id"] == 1
+    got = scan_rest_table(spark, cat.load_table("db", "txddl"),
+                          server_planning=False)
+    assert got.count() == 10 and "r_extra" in got.columns
+
+
+def test_transaction_create_branch_then_branch_dml(stub, spark, tmp_path):
+    """create_branch followed by DML on that branch commits in one
+    transaction: the DML's assertion on the branch the transaction just
+    created is not sent to the catalog, which has never seen the branch."""
+    from duckdb_iceberg_spark import write_iceberg
+    from duckdb_iceberg_spark.catalog import scan_rest_table
+    from duckdb_iceberg_spark.sources import ddl
+    from duckdb_iceberg_spark.sources.dml import delete_from
+
+    base, state = stub
+    loc = str(tmp_path / "brtx")
+    write_iceberg(spark.createDataFrame(
+        [(i, chr(96 + i)) for i in range(1, 6)], "id int, data string"), loc)
+    _register_disk_table(state, loc, name="brtx")
+    state.plan_response = None
+    cat = _catalog(base)
+    main_head = state.tables[("db", "brtx")]["current-snapshot-id"]
+
+    txn = cat.transaction()
+    t = txn.table("db", "brtx")
+    ddl.create_branch(t, "audit")
+    delete_from(spark, t, "id = 2", mode="merge-on-read", branch="audit")
+    assert "audit" not in (state.tables[("db", "brtx")].get("refs") or {})
+    txn.commit()
+
+    meta = state.tables[("db", "brtx")]
+    assert meta["current-snapshot-id"] == main_head
+    assert meta["refs"]["audit"]["snapshot-id"] != main_head
+    tbl = cat.load_table("db", "brtx")
+    assert sorted(r.id for r in scan_rest_table(
+        spark, tbl, ref="audit", server_planning=False).collect()) == \
+        [1, 3, 4, 5]
+    assert sorted(r.id for r in scan_rest_table(
+        spark, tbl, server_planning=False).collect()) == [1, 2, 3, 4, 5]
+
+
+def test_transaction_refuses_expire_snapshots(stub, spark, sf_dir, tmp_path):
+    """expire_snapshots deletes files as soon as its commit returns, so
+    on a transaction-staged table it raises before staging anything and
+    no file is deleted."""
+    import glob as _glob
+
+    from duckdb_iceberg_spark import write_iceberg
+    from duckdb_iceberg_spark.sources.maintenance import expire_snapshots
+    from tests.conftest import load
+
+    base, state = stub
+    loc = str(tmp_path / "exptx")
+    region = load(spark, sf_dir, "region")
+    for _ in range(3):
+        write_iceberg(region, loc)
+    _register_disk_table(state, loc, name="exptx")
+    state.plan_response = None
+    cat = _catalog(base)
+
+    files_before = set(_glob.glob(f"{loc}/**/*", recursive=True))
+    txn = cat.transaction()
+    t = txn.table("db", "exptx")
+    with pytest.raises(ValueError, match="expire_snapshots"):
+        expire_snapshots(t, retain_last=1)
+    assert set(_glob.glob(f"{loc}/**/*", recursive=True)) == files_before
+    assert len(t.metadata.snapshots) == 3
+    assert txn.commit() == {}
+    assert len(state.tables[("db", "exptx")]["snapshots"]) == 3
+
+
+def test_transaction_conflicts_on_concurrent_schema_change(stub, spark, sf_dir,
+                                                           tmp_path):
+    """A schema change another writer commits between staging and commit
+    fails the staged add_column's schema assertion: commit() raises
+    CommitConflict and the catalog keeps only the winner's change."""
+    from duckdb_iceberg_spark import write_iceberg
+    from duckdb_iceberg_spark.sources import ddl
+    from tests.conftest import load
+
+    base, state = stub
+    loc = str(tmp_path / "schtx")
+    region = load(spark, sf_dir, "region")
+    write_iceberg(region, loc)
+    _register_disk_table(state, loc, name="schtx")
+    state.plan_response = None
+    cat = _catalog(base)
+
+    txn = cat.transaction()
+    t = txn.table("db", "schtx")
+    t.append(spark, region)
+    ddl.add_column(t, "mine", "long")
+    ddl.add_column(cat.load_table("db", "schtx"), "theirs", "string")
+
+    with pytest.raises(CommitConflict):
+        txn.commit()
+    txn.rollback()
+    meta = state.tables[("db", "schtx")]
+    assert len(meta["snapshots"]) == 1
+    assert [f["name"] for f in meta["schemas"][-1]["fields"]][-1] == "theirs"
+
+
+def test_transaction_table_handles_share_staged_state(stub, spark, sf_dir,
+                                                      tmp_path):
+    """Two txn.table() calls for one table return one handle, so appends
+    made through either chain instead of forking from the same base."""
+    from duckdb_iceberg_spark import write_iceberg
+    from duckdb_iceberg_spark.catalog import scan_rest_table
+    from tests.conftest import load
+
+    base, state = stub
+    loc = str(tmp_path / "twoh")
+    region = load(spark, sf_dir, "region")
+    write_iceberg(region, loc)
+    _register_disk_table(state, loc, name="twoh")
+    state.plan_response = None
+    cat = _catalog(base)
+
+    txn = cat.transaction()
+    txn.table("db", "twoh").append(spark, region)
+    txn.table("db", "twoh").append(spark, region)
+    txn.commit()
+    assert scan_rest_table(spark, cat.load_table("db", "twoh"),
+                           server_planning=False).count() == 15
+
+
+def test_transaction_rollback_removes_staged_statistics(stub, spark, sf_dir,
+                                                        tmp_path):
+    """Statistics computed on a transaction-staged table are staged like
+    any other update; rollback deletes the statistics file they wrote."""
+    from duckdb_iceberg_spark import compute_partition_stats, write_iceberg
+    from tests.conftest import load
+
+    base, state = stub
+    loc = str(tmp_path / "txstats")
+    write_iceberg(load(spark, sf_dir, "nation"), loc,
+                  partition_by=["n_regionkey"])
+    _register_disk_table(state, loc, name="txstats")
+    state.plan_response = None
+    cat = _catalog(base)
+
+    txn = cat.transaction()
+    out = compute_partition_stats(txn.table("db", "txstats"))
+    assert os.path.exists(out["path"])
+    assert "partition-statistics" not in state.tables[("db", "txstats")]
+    txn.rollback()
+    assert not os.path.exists(out["path"])
+    assert "partition-statistics" not in state.tables[("db", "txstats")]
+
+
+def test_remove_orphan_files_keeps_catalog_committed_files(stub, spark, sf_dir,
+                                                           tmp_path):
+    """Orphan removal on a catalog table counts the snapshots the catalog
+    holds, so a file only a catalog commit references is not an orphan."""
+    import glob
+
+    from duckdb_iceberg_spark import write_iceberg
+    from duckdb_iceberg_spark.sources.maintenance import remove_orphan_files
+    from tests.conftest import load
+
+    base, state = stub
+    loc = str(tmp_path / "orph")
+    region = load(spark, sf_dir, "region")
+    write_iceberg(region, loc)
+    _register_disk_table(state, loc, name="orph")
+    state.plan_response = None
+    cat = _catalog(base)
+    tbl = cat.load_table("db", "orph")
+
+    def _data_files():
+        return set(glob.glob(f"{loc}/data/**/*.parquet", recursive=True))
+
+    data_before = _data_files()
+    tbl.append(spark, region)
+    added = _data_files() - data_before
+    assert added
+
+    assert remove_orphan_files(tbl, older_than_ms=0) == []
+    assert added <= _data_files()
 
 
 def test_rest_dml_program_fuzz(stub, spark, tmp_path):
