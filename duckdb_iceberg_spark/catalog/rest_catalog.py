@@ -793,11 +793,14 @@ class RestTable:
 
     def commit_table(self, requirements: list[dict],
                      updates: list[dict]) -> dict:
-        """CommitTableRequest through the catalog, then refresh; a failed
-        requirement raises CommitConflict (409)."""
+        """CommitTableRequest through the catalog; the table takes the
+        committed metadata and metadata-location the CommitTableResponse
+        carries (no re-load). A failed requirement raises CommitConflict
+        (409)."""
         resp = self.catalog.commit_table(
             self.namespace, self.name, requirements, updates)
-        self.refresh()
+        self.metadata = TableMetadata(resp["metadata"],
+                                      resp.get("metadata-location"))
         return resp
 
     def commit_snapshot(self, snapshot_json: dict, *,

@@ -252,7 +252,8 @@ def _avro_values_to_arrow(vals: list, t, src_schema=None):
     return pa.array(vals, type=t)
 
 
-def _read_one(fs_io: FileIO, path: str, target, file_format: str = "parquet"):
+def _read_one(fs_io: FileIO, path: str, target, file_format: str = "parquet",
+              path_pos: Optional[tuple[str, str]] = None):
     """Read one parquet/ORC/Avro file through the FileIO into an arrow
     table cast to the target schema — only the target's columns are
     fetched for parquet (column pruning → ranged GETs of just those
@@ -261,7 +262,9 @@ def _read_one(fs_io: FileIO, path: str, target, file_format: str = "parquet"):
     iceberg.id attributes), the same contract as the Spark-native ORC
     branch; Avro resolves BY FIELD ID first (Iceberg-Avro schemas carry
     ``field-id`` per field), exact name otherwise — renamed columns keep
-    reading old Avro files like they do parquet ones."""
+    reading old Avro files like they do parquet ones. ``path_pos`` names
+    two columns to append: the file's path as given and each row's
+    position in the file."""
     import pyarrow as pa
 
     if file_format == "avro":
@@ -287,9 +290,8 @@ def _read_one(fs_io: FileIO, path: str, target, file_format: str = "parquet"):
                 continue
             cols.append(_avro_values_to_arrow(
                 [r.get(src["name"]) for r in records], f.type, src["type"]))
-        return pa.Table.from_arrays(cols, schema=target)
 
-    if file_format == "orc":
+    elif file_format == "orc":
         import pyarrow.orc as po
 
         of = po.ORCFile(_open_arrow_input(fs_io, path))
@@ -310,40 +312,44 @@ def _read_one(fs_io: FileIO, path: str, target, file_format: str = "parquet"):
                 cols.append(_align_column(tbl.column(f.name), f))
             else:
                 cols.append(pa.nulls(n, f.type))
-        return pa.Table.from_arrays(cols, schema=target)
+    else:
+        import pyarrow.parquet as pq
 
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(_open_arrow_input(fs_io, path))
-    file_schema = pf.schema_arrow
-    # resolve target -> file column: field id first (BY_FIELD_ID, so
-    # renamed columns keep reading old files — same contract as the JVM
-    # reader), exact name otherwise. Exact top-level names stay unambiguous
-    # here even when a field name literally contains a dot (parquet-mr's
-    # dotted ColumnPath ambiguity doesn't exist on the arrow plane).
-    by_id = {}
-    for ff in file_schema:
-        fid = (ff.metadata or {}).get(b"PARQUET:field_id")
-        if fid is not None:
-            by_id[int(fid)] = ff.name
-    src_of = {}
-    for f in target:
-        tid = (f.metadata or {}).get(b"PARQUET:field_id")
-        if tid is not None and by_id:
-            # id-only when the file carries ids: a dropped+re-added name
-            # must NOT resurrect the old column's values
-            if int(tid) in by_id:
-                src_of[f.name] = by_id[int(tid)]
-        elif f.name in file_schema.names:
-            src_of[f.name] = f.name
-    tbl = pf.read(columns=sorted(set(src_of.values())))
-    cols = []
-    for f in target:
-        if f.name in src_of:
-            cols.append(_align_column(tbl.column(src_of[f.name]), f))
-        else:
-            cols.append(pa.nulls(len(tbl), f.type))
-    return pa.Table.from_arrays(cols, schema=target)
+        pf = pq.ParquetFile(_open_arrow_input(fs_io, path))
+        file_schema = pf.schema_arrow
+        # resolve target -> file column: field id first (BY_FIELD_ID, so
+        # renamed columns keep reading old files — same contract as the JVM
+        # reader), exact name otherwise. Exact top-level names stay unambiguous
+        # here even when a field name literally contains a dot (parquet-mr's
+        # dotted ColumnPath ambiguity doesn't exist on the arrow plane).
+        by_id = {}
+        for ff in file_schema:
+            fid = (ff.metadata or {}).get(b"PARQUET:field_id")
+            if fid is not None:
+                by_id[int(fid)] = ff.name
+        src_of = {}
+        for f in target:
+            tid = (f.metadata or {}).get(b"PARQUET:field_id")
+            if tid is not None and by_id:
+                # id-only when the file carries ids: a dropped+re-added name
+                # must NOT resurrect the old column's values
+                if int(tid) in by_id:
+                    src_of[f.name] = by_id[int(tid)]
+            elif f.name in file_schema.names:
+                src_of[f.name] = f.name
+        tbl = pf.read(columns=sorted(set(src_of.values())))
+        cols = []
+        for f in target:
+            if f.name in src_of:
+                cols.append(_align_column(tbl.column(src_of[f.name]), f))
+            else:
+                cols.append(pa.nulls(len(tbl), f.type))
+    t = pa.Table.from_arrays(cols, schema=target)
+    if path_pos:
+        t = t.append_column(
+            path_pos[0], pa.array([path] * len(t), pa.string())
+        ).append_column(path_pos[1], pa.array(range(len(t)), pa.int64()))
+    return t
 
 
 def _field_id(field) -> int | None:
@@ -526,17 +532,11 @@ def read_parquet(
     out_schema = _relax_nullability(out_schema)
     out_target = _target_arrow_schema(out_schema)
 
+    path_pos = (path_col, pos_col) if with_path_pos else None
     io0 = get_io(files[0])
     if not io0.shippable or len(files) <= _DRIVER_READ_MAX_FILES:
-        tables = []
-        for f in sorted(files):
-            t = _read_one(get_io(f), f, target, file_format)
-            if with_path_pos:
-                t = t.append_column(
-                    path_col, pa.array([f] * len(t), pa.string())
-                ).append_column(
-                    pos_col, pa.array(range(len(t)), pa.int64()))
-            tables.append(t.cast(out_target))
+        tables = [_read_one(get_io(f), f, target, file_format, path_pos)
+                  .cast(out_target) for f in sorted(files)]
         merged = (pa.concat_tables(tables) if tables
                   else out_target.empty_table())
         return spark.createDataFrame(merged, schema=out_schema)
@@ -549,12 +549,7 @@ def read_parquet(
         fs_io = io_from_storage_options(opts)
         for batch in batches:
             for f in batch.column("__path").to_pylist():
-                t = _read_one(fs_io, f, target, file_format)
-                if with_path_pos:
-                    t = t.append_column(
-                        path_col, pa.array([f] * len(t), pa.string())
-                    ).append_column(
-                        pos_col, pa.array(range(len(t)), pa.int64()))
+                t = _read_one(fs_io, f, target, file_format, path_pos)
                 for b in t.cast(out_target).to_batches():
                     yield b
 

@@ -722,7 +722,7 @@ def strip_file_stats(df: "mf.DataFile") -> "mf.DataFile":
 
 def _check_delete_format(d: mf.DataFile) -> None:
     # r13: ORC/Avro delete files read through the arrow plane's
-    # format routing (sources/scan.py _read_delete_files) — beyond
+    # format routing (sources/scan.py _read) — beyond
     # the reference, which refuses everything non-parquet/puffin
     # (iceberg_delete_file_scanner.cpp:393-396)
     if (d.file_format or "PARQUET").lower() not in (

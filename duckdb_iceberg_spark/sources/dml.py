@@ -40,7 +40,7 @@ from ..metadata import types as ice_types
 from ..metadata.table_metadata import TableMetadata
 from ..plans import predicates as P
 from ..plans.scan_plan import ScanPlan, plan_scan, _coerce_pred
-from .scan import scan_to_dataframe, _FILE_COL, _POS_COL, _norm_path, _norm_path_py
+from .scan import scan_to_dataframe, _FILE_COL, _POS_COL, _norm_path_py
 from .writer import (
     _collect_stats,
     commit_snapshot,

@@ -653,7 +653,6 @@ def rewrite_position_delete_files(
     from ..io import normalize_path
     from ..plans.scan_plan import _localize, manifests_for_snapshot
     from .dml import _write_row_deletes
-    from .scan import _norm_path
 
     if min_input_files < 1:
         raise ValueError("min_input_files must be >= 1")
@@ -731,13 +730,11 @@ def rewrite_position_delete_files(
         kept_n = kept.count()
         summary["converted_equality_files_count"] = len(eq_cand)
     else:
-        from .scan import _read_delete_files
+        from .scan import _position_deletes
 
         by_path = {_localize(tm, d.file_path): d.file_format for d in cand}
-        rows = (
-            _read_delete_files(spark, by_path, "file_path string, pos long")
-            .select(_norm_path(F.col("file_path")).alias("file_path"),
-                    "pos"))
+        rows = _position_deletes(spark, dict(sorted(by_path.items())),
+                                 "file_path", "pos")
         live_df = F.broadcast(spark.createDataFrame(
             [(p,) for p in sorted(live)], "file_path: string"))
         kept = rows.join(live_df, "file_path", "left_semi").distinct()

@@ -24,6 +24,20 @@ pruning. Delete application is expressed as DataFrame ops:
 Virtual columns (reference: iceberg_multi_file_reader.cpp:604-713):
 ``filename``, ``file_row_number``, and v3 row lineage ``_row_id`` /
 ``_last_updated_sequence_number`` derived from per-file first_row_id.
+
+Every file read — data, positional and equality delete, name-mapped legacy
+— goes through one reader, :func:`_read` (the reference's
+IcebergMultiFileReader). It picks one plane per file format and appends the
+normalized (file, pos) columns joins key on:
+
+    format   no real positions needed   real positions needed
+    -------  -------------------------  ----------------------------
+    parquet  Spark native *             Spark native * (row_index)
+    ORC      Spark native (pos NULL)    Arrow plane
+    Avro     Arrow plane                Arrow plane
+
+    * the Arrow plane (io/arrow_data.read_parquet) when a path's scheme is
+      not Spark-native or a dotted column name collides with a struct path.
 """
 
 from __future__ import annotations
@@ -60,11 +74,13 @@ def clear_scan_frame_memo() -> None:
     naturally through the metadata-location/snapshot key."""
     _scan_frame_memo.clear()
 
+#: the reader's normalized (file, pos) columns. Reserved: a table column
+#: with one of these names makes the reader raise instead of resolving
+#: every path join ambiguously.
 _FILE_COL = "__ice_file"
-
+_POS_COL = "__ice_pos"
 
 _qcol = ice_types.quoted_col
-_POS_COL = "__ice_pos"
 
 #: ``TIME '12:34:56.789'`` literals inside a residual filter string
 _TIME_LIT_RE = None  # compiled lazily below
@@ -109,34 +125,19 @@ def _residual_filter(df: DataFrame, residual: str) -> DataFrame:
     return df.filter(F.expr(residual))
 
 
-def _norm_path(col):
-    # Scheme canonicalization for RAW (manifest-spelled) path columns:
-    # s3a:// (the Hadoop-native rewrite of s3://) normalizes back so join
-    # keys match across writers; file: URIs become plain paths. MUST stay in
-    # lockstep with _norm_path_py below — every path-equality join in this
-    # module has one side built Spark-side and one side from manifest
-    # strings.
-    return F.regexp_replace(
-        F.regexp_replace(col, r"^file:/+", "/"), r"^s3a://", "s3://")
-
-
-def _norm_uri_path(col):
-    # For Spark's ``_metadata.file_path``, which is a URI: percent-encoded
-    # (a literal '%3A' in a directory name arrives as '%253A'). Decode back
-    # to the raw path so it joins against manifest-recorded spellings.
-    # url_decode turns '+' into space, so protect literal '+' first.
-    return F.url_decode(
-        F.regexp_replace(_norm_path(col), r"\+", "%2B"))
-
-
-#: SQL-string twins of _norm_path/_norm_uri_path (r16): scan construction
-#: batches projections into single selectExpr round-trips (guide §1.2 —
-#: driver chatter is serial latency at any cluster size), so the path
-#: normalizations need SQL spellings. The regexes avoid backslash escapes
-#: ('[+]' not '\\+') so the strings parse identically whether or not a
-#: session sets spark.sql.parser.escapedStringLiterals. MUST stay in
-#: lockstep with the Column versions above (pinned by
-#: tests/test_scan_rpc_batching.py).
+#: Path normalization in SQL (r16): scan construction batches projections
+#: into single selectExpr round-trips (guide §1.2 — driver chatter is serial
+#: latency at any cluster size). ``_norm_path_sql`` canonicalizes RAW
+#: (manifest-spelled) paths: s3a:// (the Hadoop-native rewrite of s3://)
+#: back to s3://, file: URIs to plain paths. ``_norm_uri_path_sql`` is for
+#: Spark's ``_metadata.file_path``, a percent-encoded URI (a literal '%3A'
+#: in a directory name arrives as '%253A'): it decodes back to the raw path,
+#: protecting literal '+' first since url_decode turns '+' into a space.
+#: Both MUST equal _norm_path_py, the manifest side of every path join in
+#: this module (pinned by tests/test_scan_rpc_batching.py). The regexes
+#: avoid backslash escapes ('[+]' not '\\+') so the strings parse
+#: identically whether or not a session sets
+#: spark.sql.parser.escapedStringLiterals.
 def _norm_path_sql(col_sql: str) -> str:
     return ("regexp_replace(regexp_replace(" + col_sql +
             ", '^file:/+', '/'), '^s3a://', 's3://')")
@@ -156,7 +157,7 @@ def _replace_col_sql(df: DataFrame, col: str, expr_sql: str) -> DataFrame:
 
 
 def _norm_path_py(p: str) -> str:
-    """Python twin of :func:`_norm_path` for manifest-derived literals
+    """Python twin of :func:`_norm_path_sql` for manifest-derived literals
     (sequence-number maps, equality-delete applicability pairs, row-lineage
     maps, partition-constant maps). Manifests written through s3a:// (or
     file:) URIs would otherwise never join against the normalized scan-side
@@ -201,61 +202,189 @@ def _uuidify_read_schema(schema: T.StructType) -> T.StructType:
     return conv(schema, None)
 
 
-def _read_plain_parquet(spark, files, schema, *, with_path_pos=False,
-                        path_col="__kf", pos_col="__kp"):
-    """Read auxiliary parquet (delete files, key files) with an explicit
-    schema, Spark-native when the scheme allows, else through the arrow data
-    plane. ``with_path_pos`` appends (normalized source path, row position)."""
-    st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    if _ad.is_spark_native(spark, files):
-        df = _jx.read_files(spark, [_ad.to_native_path(f) for f in files], st)
-        if with_path_pos:
-            df = _jx.select_exprs(df, ["*",
-                _norm_uri_path_sql("_metadata.file_path")
-                + " AS " + _jx.quote_name(path_col),
-                "_metadata.row_index AS " + _jx.quote_name(pos_col)])
-        return df
-    df = _ad.read_parquet(spark, files, st, with_path_pos=with_path_pos,
-                          path_col=path_col, pos_col=pos_col)
-    if with_path_pos:
-        df = _replace_col_sql(df, path_col,
-                              _norm_path_sql(_jx.quote_name(path_col)))
-    return df
+def _uuid_fmt(col):
+    h = F.lower(F.hex(col))
+    canonical = F.concat_ws(
+        "-", F.substring(h, 1, 8), F.substring(h, 9, 4),
+        F.substring(h, 13, 4), F.substring(h, 17, 4),
+        F.substring(h, 21, 12))
+    # 16 raw bytes (spec FIXED[16], foreign writers) → format; anything
+    # longer is already canonical text (our writer stores the 36-char
+    # form — parquet strings read fine as binary)
+    return (F.when(col.isNull(), F.lit(None).cast("string"))
+             .when(F.length(col) == 16, canonical)
+             .otherwise(col.cast("string")))
 
 
-def _read_delete_files(spark, delete_files, schema, *, with_path_pos=False,
-                       path_col="__kf", pos_col="__kp"):
-    """Format-routed auxiliary read for DELETE files (r13): the spec lets
-    positional/equality delete files be parquet, ORC, or Avro independent
-    of the data format — Flink's avro tables write avro equality deletes.
-    ``delete_files`` maps path → recorded file_format; parquet goes
-    through the native/arrow parquet path, ORC/Avro through the arrow
-    plane's format-general reader (by-field-id for avro)."""
-    st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    by_fmt: dict[str, list[str]] = {}
-    for p, fmt in delete_files.items():
-        by_fmt.setdefault((fmt or "PARQUET").upper(), []).append(p)
-    parts = []
-    for fmt, paths in sorted(by_fmt.items()):
-        if fmt == "PARQUET":
-            parts.append(_read_plain_parquet(
-                spark, sorted(paths), st, with_path_pos=with_path_pos,
-                path_col=path_col, pos_col=pos_col))
-        elif fmt in ("ORC", "AVRO"):
-            p = _ad.read_parquet(spark, sorted(paths), st,
-                                 with_path_pos=with_path_pos,
-                                 path_col=path_col, pos_col=pos_col,
-                                 file_format=fmt.lower())
-            if with_path_pos:
-                p = p.withColumn(path_col, _norm_path(F.col(path_col)))
-            parts.append(p)
+def _uuid_to_str(d: DataFrame, uuid_paths: list[list[str]]) -> DataFrame:
+    """Render the uuid fields read as BinaryType (_uuidify_read_schema) in
+    the canonical lowercase-hex form the schema promises — pure Column
+    expressions, no Python in the row path."""
+    for path in uuid_paths:
+        if len(path) == 1:
+            d = d.withColumn(path[0], _uuid_fmt(_qcol(path[0])))
         else:
-            raise NotImplementedError(
-                f"unsupported delete-file format {fmt!r}")
+            # struct member: rewrite in place via withField (dotted path
+            # relative to the top-level struct column)
+            top, rest = path[0], ".".join(path[1:])
+            src = _qcol(top)
+            for part in path[1:]:
+                src = src.getField(part)
+            d = d.withColumn(top, _qcol(top).withField(rest, _uuid_fmt(src)))
+    return d
+
+
+def _dotted_names(tm: TableMetadata) -> bool:
+    """Whether any schema version has a field name containing a dot, at
+    any depth. Spark's parquet field-id reader misresolves when a
+    top-level name literally contains a dot and a struct path spells the
+    same dotted string (parquet-mr ColumnPath ambiguity — the requested
+    column comes back with the struct leaf's values); a struct member
+    named 'b.c' beside a sibling struct b{c} collides one level down the
+    same way. The Arrow plane resolves by exact top-level name + field id,
+    so :func:`_read` routes such tables there. Every historical version
+    counts: after a rename the current names may be dot-free while older
+    data files still carry the dotted column."""
+    def dotted(t) -> bool:
+        if isinstance(t, dict):
+            kind = t.get("type")
+            if kind == "struct":
+                return any("." in f["name"] or dotted(f["type"])
+                           for f in t["fields"])
+            if kind == "list":
+                return dotted(t["element"])
+            if kind == "map":
+                return dotted(t["key"]) or dotted(t["value"])
+        return False
+
+    return any(dotted({"type": "struct", "fields": sch["fields"]})
+               for sch in tm.schemas.values())
+
+
+def _read(
+    spark: SparkSession,
+    files: dict[str, Optional[str]],
+    schema,
+    *,
+    pos: bool = False,
+    exact: bool | set[str] = True,
+    dotted: bool = False,
+    file_col: str = _FILE_COL,
+    pos_col: str = _POS_COL,
+) -> DataFrame:
+    """Read data, delete or legacy files into one DataFrame: the single
+    place that picks Spark's native readers or the Arrow data plane
+    (module docstring table) and appends the normalized (file, pos)
+    columns.
+
+    ``files`` maps path → recorded file format (None reads as parquet);
+    parquet keeps the given order, ORC and Avro read sorted. ``schema`` is
+    a StructType or DDL string, or None for parquet files' own schema
+    (Spark's footer inference natively, the first file's footer on the
+    Arrow plane). ``pos`` appends ``file_col`` — the path normalized to
+    equal :func:`_norm_path_py` of its manifest spelling — and
+    ``pos_col``, the row's position in its file. ``exact`` names the ORC
+    files whose positions must be real (True: every file): the rest read
+    on Spark's native ORC source, which has no row index, so their
+    position is NULL. ``dotted`` marks a table whose dotted names collide
+    on Spark's parquet field-id reader (:func:`_dotted_names`).
+
+    Raises ValueError before any Spark call when ``pos`` is set and the
+    schema already has a column named ``file_col`` or ``pos_col``."""
+    st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    if pos and st is not None:
+        reserved = {file_col.lower(), pos_col.lower()}
+        clash = [f.name for f in st.fields if f.name.lower() in reserved]
+        if clash:
+            raise ValueError(
+                f"column(s) {', '.join(clash)} use a name the scan reserves "
+                f"for its file and position columns ({file_col}, "
+                f"{pos_col}); rename the column to read this table")
+    by_fmt: dict[str, list[str]] = {}
+    for p, fmt in files.items():
+        by_fmt.setdefault((fmt or "PARQUET").upper(), []).append(p)
+    unknown = sorted(set(by_fmt) - {"PARQUET", "ORC", "AVRO"})
+    if unknown:
+        raise NotImplementedError(f"unsupported file format {unknown[0]!r}")
+    parquet = by_fmt.get("PARQUET", [])
+    orc = by_fmt.get("ORC", [])
+    orc_native = [] if exact is True else [f for f in orc if f not in exact]
+    native = bool(parquet or orc_native) and _ad.is_spark_native(spark, files)
+    if native and dotted and parquet:
+        from .. import io as _fio
+
+        try:
+            _fio.get_io(parquet[0])
+        except ValueError:
+            # no FileIO registered for this scheme (e.g. hdfs://): stay on
+            # the native reader — only the rare colliding-path case is at
+            # risk there, while failing every scan of the table would be
+            # strictly worse
+            dotted = False
+    legs: list[tuple[list[str], str, bool]] = []  # (paths, format, native)
+    if parquet:
+        legs.append((parquet, "parquet", native and not dotted))
+    if native and orc_native:
+        legs.append((sorted(orc_native), "orc", True))
+        orc = list(set(orc) - set(orc_native))
+    if orc:
+        legs.append((sorted(orc), "orc", False))
+    if "AVRO" in by_fmt:
+        legs.append((sorted(by_fmt["AVRO"]), "avro", False))
+
+    q = _jx.quote_name
+    uuid_paths = _uuid_field_paths(st) if st is not None else []
+    parts = []
+    for paths, fmt, on_spark in legs:
+        if on_spark:
+            # uuid: parquet stores FIXED_LEN_BYTE_ARRAY(16), which Spark
+            # reads only as binary — including struct MEMBERS (foreign
+            # fixture add_columns_with_defaults_in_struct). uuid inside
+            # array/map stays unsupported (no metadata slot to tag it).
+            # ORC keeps the canonical string form our writer stores.
+            fix_uuid = fmt == "parquet" and bool(uuid_paths)
+            d = _jx.read_files(
+                spark, [_ad.to_native_path(f) for f in paths],
+                _uuidify_read_schema(st) if fix_uuid else st,
+                file_format=fmt)
+            if pos:
+                row = ("_metadata.row_index" if fmt == "parquet"
+                       else "CAST(NULL AS BIGINT)")
+                # resolved while the plan leaf is still the file scan
+                d = _jx.select_exprs(d, [
+                    "*",
+                    _norm_uri_path_sql("_metadata.file_path") + " AS "
+                    + q(file_col),
+                    row + " AS " + q(pos_col)])
+            if fix_uuid:
+                d = _uuid_to_str(d, uuid_paths)
+        else:
+            d = _ad.read_parquet(
+                spark, paths,
+                st if st is not None else _ad.infer_spark_schema(paths[0]),
+                with_path_pos=pos, path_col=file_col, pos_col=pos_col,
+                file_format=fmt)
+            if pos:
+                d = _replace_col_sql(d, file_col, _norm_path_sql(q(file_col)))
+        parts.append(d)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _position_deletes(spark: SparkSession, files: dict[str, Optional[str]],
+                      file_col: str = "__del_file",
+                      pos_col: str = "__del_pos") -> DataFrame:
+    """The rows of positional delete files (path → recorded format) as
+    (normalized ``file_path``, ``pos``) under the given names. Delete files
+    may be parquet, ORC or Avro whatever the data format (Flink's Avro
+    tables write Avro deletes); schema: file_path string (field id
+    2147483546), pos long (field id 2147483545)."""
+    return _jx.select_exprs(
+        _read(spark, files, "file_path string, pos long"),
+        [_norm_path_sql("file_path") + " AS " + _jx.quote_name(file_col),
+         "CAST(pos AS BIGINT) AS " + _jx.quote_name(pos_col)])
 
 
 def iceberg_scan(
@@ -361,12 +490,13 @@ def _registered_ndv(path: str, col: str) -> int | None:
     """NDV of ``col`` from the table's registered theta-sketch
     statistics file (compute_table_stats), or None when the table has no
     statistics / the column was not sketched. Metadata-only: one Puffin
-    footer + one blob read on the driver."""
-    try:
-        from .statistics import table_ndv
+    footer + one blob read on the driver. A registered file that cannot
+    be read raises: skipping the NDV check silently would hide it."""
+    from .statistics import table_ndv
 
+    try:
         return table_ndv(path).get(col)
-    except Exception:
+    except KeyError:  # no statistics registered for the snapshot
         return None
 
 
@@ -507,35 +637,8 @@ def scan_to_dataframe(
         return attach_scan_plan(df, plan)
 
     files = [t.data_file.file_path for t in plan.tasks]
-    # ORC data files (beyond the reference, which refuses every non-parquet
-    # data file: iceberg_multi_file_list.cpp:528-529) read through Spark's
-    # native ORC source. Spark exposes _metadata.file_path for ORC but NOT
-    # _metadata.row_index; since r12, ORC files that need REAL row
-    # positions — positional deletes / DVs attached, or the caller asked
-    # for file_row_number / row lineage — route through the arrow data
-    # plane instead, which reads each file whole executor-side and
-    # synthesizes exact per-file ordinals (the spec's position semantics).
-    # That lands MoR positional deletes, v3 deletion vectors, virtual
-    # position columns AND MoR DML (which derives delete rows from
-    # file_row_number) over ORC (VERDICT r11 task 5; the r11 refusal is
-    # gone). Position-free ORC files stay on the native vectorized source.
-    orc_files = {
-        t.data_file.file_path for t in plan.tasks
-        if (t.data_file.file_format or "PARQUET").upper() == "ORC"}
-    if with_file_info or with_row_lineage:
-        orc_pos_files = set(orc_files)
-    else:
-        orc_pos_files = {
-            t.data_file.file_path for t in plan.tasks
-            if t.data_file.file_path in orc_files and t.positional_deletes}
-    # Avro data files (r12 — THIRD format beyond the reference's
-    # parquet-only): always the arrow plane, decoded executor-side by the
-    # pure-Python Avro codec with by-field-id resolution; whole-file
-    # sequential reads give exact row ordinals, so positional deletes /
-    # DVs, virtual position columns and MoR DML work like parquet.
-    avro_files = {
-        t.data_file.file_path for t in plan.tasks
-        if (t.data_file.file_format or "PARQUET").upper() == "AVRO"}
+    formats = {t.data_file.file_path: t.data_file.file_format
+               for t in plan.tasks}
     need_pos = (
         plan.has_deletes
         or with_file_info
@@ -543,162 +646,37 @@ def scan_to_dataframe(
         or _needs_partition_constants(plan)
         or bool(_defaulted_fields(plan))
     )
-
-    def _with_pos(d: DataFrame) -> DataFrame:
-        if need_pos:
-            d = _jx.select_exprs(d, ["*",
-                _norm_uri_path_sql("_metadata.file_path") + " AS " + _FILE_COL,
-                "_metadata.row_index AS " + _POS_COL])
-        return d
+    # ORC and Avro data files go beyond the reference, which refuses every
+    # non-parquet data file (iceberg_multi_file_list.cpp:528-529). Spark's
+    # native ORC source has no row index, so ORC files that need REAL row
+    # positions — positional deletes / DVs attached, or the caller asked
+    # for file_row_number / row lineage — read on the Arrow plane, which
+    # reads each file whole and counts exact per-file ordinals (the spec's
+    # position semantics). That is what lands MoR positional deletes, v3
+    # deletion vectors, virtual position columns and MoR DML over ORC; a
+    # file reads on exactly one plane, so the union never duplicates rows.
+    exact = (True if with_file_info or with_row_lineage else
+             {t.data_file.file_path for t in plan.tasks
+              if t.positional_deletes})
 
     # name-mapping fallback for files written without parquet field-ids
     # (reference: ApplyFieldMapping, iceberg_multi_file_reader.cpp:203-238):
     # such files are read by mapped column name and aliased/cast onto the
-    # current schema, then unioned with the field-id read.
-    legacy: dict[str, list[str]] = {}
+    # current schema, then unioned with the field-id read. ORC files are
+    # read by name regardless and Avro files resolve by their own embedded
+    # field-ids, so neither takes the legacy branch.
+    legacy: dict[str, str] = {}
     mapping_prop = plan.tm.properties.get("schema.name-mapping.default")
     if mapping_prop:
-        # ORC files are read by name regardless (no parquet field-ids to
-        # sniff) and Avro files resolve by their own embedded field-ids,
-        # so neither takes the legacy union branch
-        legacy = _files_without_field_ids(
-            spark, [f for f in files
-                    if f not in orc_files and f not in avro_files])
-    main_files = [f for f in files
-                  if f not in legacy and f not in orc_files
-                  and f not in avro_files]
-
-    # uuid columns: parquet stores FIXED_LEN_BYTE_ARRAY(16); Spark can read
-    # that only as binary. Read uuid fields as BinaryType — including struct
-    # MEMBERS (foreign fixture add_columns_with_defaults_in_struct; the
-    # reference's initial_default_in_struct_all_types.test) — then render
-    # the canonical lowercase-hex form the schema promises (StringType),
-    # pure Column expressions, no Python in the row path. uuid inside
-    # array/map stays unsupported (no metadata slot to tag it).
-    uuid_paths = _uuid_field_paths(schema)
-    read_schema = _uuidify_read_schema(schema) if uuid_paths else schema
-
-    def _uuid_fmt(col):
-        h = F.lower(F.hex(col))
-        canonical = F.concat_ws(
-            "-", F.substring(h, 1, 8), F.substring(h, 9, 4),
-            F.substring(h, 13, 4), F.substring(h, 17, 4),
-            F.substring(h, 21, 12))
-        # 16 raw bytes (spec FIXED[16], foreign writers) → format; anything
-        # longer is already canonical text (our writer stores the 36-char
-        # form — parquet strings read fine as binary)
-        return (F.when(col.isNull(), F.lit(None).cast("string"))
-                 .when(F.length(col) == 16, canonical)
-                 .otherwise(col.cast("string")))
-
-    def _uuid_to_str(d: DataFrame) -> DataFrame:
-        for path in uuid_paths:
-            if len(path) == 1:
-                d = d.withColumn(path[0], _uuid_fmt(_qcol(path[0])))
-            else:
-                # struct member: rewrite in place via withField (dotted path
-                # relative to the top-level struct column)
-                top, rest = path[0], ".".join(path[1:])
-                src = _qcol(top)
-                for part in path[1:]:
-                    src = src.getField(part)
-                d = d.withColumn(top, _qcol(top).withField(
-                    rest, _uuid_fmt(src)))
-        return d
-
-    # Spark's parquet field-id reader misresolves when a top-level field
-    # name literally contains a dot and a struct path spells the same
-    # dotted string (parquet-mr ColumnPath ambiguity — requested id-1
-    # column comes back with the struct leaf's values). The arrow reader
-    # resolves by exact top-level name + field id, so route such schemas
-    # through it; DuckDB reads these correctly and so must we.
-    # ... gate on every historical schema version: after a rename the
-    # CURRENT names may be dot-free while older data files still carry the
-    # dotted column. Nested names count too — a struct member literally
-    # named 'b.c' beside a sibling struct b{c} collides one level down
-    # the same way.
-    def _any_dotted(t) -> bool:
-        if isinstance(t, dict):
-            kind = t.get("type")
-            if kind == "struct":
-                return any("." in f["name"] or _any_dotted(f["type"])
-                           for f in t["fields"])
-            if kind == "list":
-                return _any_dotted(t["element"])
-            if kind == "map":
-                return _any_dotted(t["key"]) or _any_dotted(t["value"])
-        return False
-
-    dotted_names = any(
-        "." in f["name"] or _any_dotted(f["type"])
-        for sch in plan.tm.schemas.values() for f in sch["fields"])
-    if dotted_names and main_files:
-        from .. import io as _fio
-
-        try:
-            _fio.get_io(main_files[0])
-        except ValueError:
-            # no FileIO registered for this scheme (e.g. hdfs://): stay on
-            # the native reader — only the rare colliding-path case is at
-            # risk there, while failing every scan of the table would be
-            # strictly worse
-            dotted_names = False
+        legacy = _files_without_field_ids(spark, [
+            f for f, fmt in formats.items()
+            if (fmt or "PARQUET").upper() == "PARQUET"])
+    main = {f: fmt for f, fmt in formats.items() if f not in legacy}
 
     parts: list[DataFrame] = []
-    if main_files:
-        if _ad.is_spark_native(spark, main_files) and not dotted_names:
-            parts.append(_uuid_to_str(_with_pos(_jx.read_files(
-                spark, [_ad.to_native_path(f) for f in main_files],
-                read_schema))))
-        else:
-            p = _ad.read_parquet(
-                spark, main_files, schema, with_path_pos=need_pos,
-                path_col=_FILE_COL, pos_col=_POS_COL)
-            if need_pos:
-                p = _replace_col_sql(p, _FILE_COL, _norm_path_sql(_FILE_COL))
-            parts.append(p)
-    if orc_files:
-        # files carrying positional deletes / DVs need REAL row positions
-        # → arrow plane (exact per-file sequential positions); the rest
-        # stay on Spark's native ORC source. A file appears on exactly one
-        # plane, so the union never duplicates rows.
-        orc_native = sorted(orc_files - orc_pos_files)
-        if orc_native and _ad.is_spark_native(spark, orc_native):
-            # by-name read + cast onto the table schema (Spark's ORC
-            # source has no field-id resolution; our own ORC writes use
-            # current names). uuid columns stay the canonical string form
-            # our writer stores. Spark exposes no row_index for ORC, but
-            # files on this plane have no positional deletes — the NULL
-            # position is only ever carried, never joined on.
-            o = _jx.read_files(
-                spark, [_ad.to_native_path(f) for f in orc_native], schema,
-                file_format="orc")
-            if need_pos:
-                o = _jx.select_exprs(o, ["*",
-                    _norm_uri_path_sql("_metadata.file_path")
-                    + " AS " + _FILE_COL,
-                    "CAST(NULL AS BIGINT) AS " + _POS_COL])
-            parts.append(o)
-            orc_arrow = sorted(orc_pos_files)
-        else:
-            orc_arrow = sorted(orc_files)
-        if orc_arrow:
-            # the arrow data plane reads ORC executor-side (pyarrow.orc
-            # over the FileIO, by-name) and synthesizes exact row
-            # positions — the plane positional deletes / DVs join against
-            o = _ad.read_parquet(
-                spark, orc_arrow, schema, with_path_pos=need_pos,
-                path_col=_FILE_COL, pos_col=_POS_COL, file_format="orc")
-            if need_pos:
-                o = _replace_col_sql(o, _FILE_COL, _norm_path_sql(_FILE_COL))
-            parts.append(o)
-    if avro_files:
-        a = _ad.read_parquet(
-            spark, sorted(avro_files), schema, with_path_pos=need_pos,
-            path_col=_FILE_COL, pos_col=_POS_COL, file_format="avro")
-        if need_pos:
-            a = _replace_col_sql(a, _FILE_COL, _norm_path_sql(_FILE_COL))
-        parts.append(a)
+    if main:
+        parts.append(_read(spark, main, schema, pos=need_pos, exact=exact,
+                           dotted=_dotted_names(plan.tm)))
     if legacy:
         parts.extend(_read_by_name_mapping(spark, legacy, mapping_prop,
                                            plan, need_pos))
@@ -931,23 +909,9 @@ def _read_by_name_mapping(
 
     out = []
     for sig, paths in sorted(groups.items()):
-        paths = sorted(paths)
-        if _ad.is_spark_native(spark, paths):
-            raw = spark.read.parquet(*[_ad.to_native_path(p) for p in paths])
-            if need_pos:
-                # resolve the hidden _metadata column while the plan leaf is
-                # still the file scan, before the rename projection drops it
-                raw = raw.withColumn(_FILE_COL, _norm_uri_path(F.col("_metadata.file_path"))) \
-                         .withColumn(_POS_COL, F.col("_metadata.row_index"))
-        else:
-            # one layout signature per group → the first file's footer schema
-            # holds for the whole group
-            file_st = _ad.infer_spark_schema(paths[0])
-            raw = _ad.read_parquet(spark, paths, file_st,
-                                   with_path_pos=need_pos,
-                                   path_col=_FILE_COL, pos_col=_POS_COL)
-            if need_pos:
-                raw = raw.withColumn(_FILE_COL, _norm_path(F.col(_FILE_COL)))
+        # schema=None: Spark infers the footer natively; the Arrow plane
+        # takes the first file's, which holds for the whole layout group
+        raw = _read(spark, dict.fromkeys(sorted(paths)), None, pos=need_pos)
         file_st = T.StructType(
             [fl for fl in raw.schema.fields if fl.name not in (_FILE_COL, _POS_COL)])
         sel = [
@@ -1125,14 +1089,8 @@ def _apply_positional_deletes(spark: SparkSession, df: DataFrame, plan: ScanPlan
 
     parts = []
     if row_delete_files:
-        # positional-delete schema: file_path string (fid 2147483546),
-        # pos long (fid 2147483545) — files may be parquet, ORC, or Avro
-        # (r13 format routing; Flink's avro tables write avro deletes)
-        parts.append(_jx.select_exprs(
-            _read_delete_files(spark, row_delete_files,
-                               "file_path string, pos long"),
-            [_norm_path_sql("file_path") + " AS __del_file",
-             "CAST(pos AS BIGINT) AS __del_pos"]))
+        parts.append(_position_deletes(
+            spark, dict(sorted(row_delete_files.items()))))
     if dv_blobs:
         parts.append(_dv_positions_df(spark, dv_blobs))
     del_df = parts[0]
@@ -1301,9 +1259,9 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame, plan: ScanPlan) 
             "`__del_file` string, `__del_seq` long")
         key_st = _projection_struct(tm.spark_schema(), cols)
         keys = (
-            _read_delete_files(
-                spark, {p: d.file_format for p, (d, _, _) in files.items()},
-                key_st, with_path_pos=True, path_col="__kf")
+            _read(spark, {p: d.file_format
+                          for p, (d, _, _) in sorted(files.items())},
+                  key_st, pos=True, file_col="__kf", pos_col="__kp")
             .join(F.broadcast(del_meta), F.col("__kf") == F.col("__del_file"))
         )
         alias = {c: f"__eq_k{i}" for i, c in enumerate(cols)}

@@ -294,7 +294,7 @@ def _collect_stats(spark: SparkSession, paths: list[str]) -> list[dict]:
         def _norm_uri(k: str) -> str:
             # Spark's _metadata.file_path is a percent-encoded URI (a space
             # is '%20', ':' is '%3A'); manifest paths are plain. Decode
-            # before matching — scan.py's _norm_uri_path twin — or paths
+            # before matching — scan.py's _norm_uri_path_sql twin — or paths
             # with encodable characters miss and silently corrupt
             # record_count-derived answers (metadata count(*)).
             return urllib.parse.unquote(normalize_path(k))

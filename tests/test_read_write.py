@@ -726,3 +726,20 @@ def test_parquet_bloom_filter_column_properties(spark, tmp_path):
         f"{delta}) - the per-column option did not reach the writer")
     a = sorted(r.id for r in iceberg_scan(spark, bloomy).collect())
     assert a == list(range(100_000))
+
+
+def test_reserved_scan_column_names_raise(spark, tmp_path):
+    """A table column named like the scan's internal (file, pos) columns
+    raises a ValueError naming them instead of an ambiguous-reference
+    analysis error, for a file-info scan and for a merge-on-read delete;
+    a plain scan, which appends neither column, still reads it."""
+    from duckdb_iceberg_spark.sources.dml import delete_from
+
+    loc = str(tmp_path / "reserved")
+    write_iceberg(spark.range(5).selectExpr("id", "'x' AS __ice_file"), loc)
+    assert iceberg_scan(spark, loc).count() == 5
+    with pytest.raises(ValueError, match="__ice_file.*__ice_pos"):
+        iceberg_scan(spark, loc, with_file_info=True)
+    with pytest.raises(ValueError, match="__ice_file.*__ice_pos"):
+        delete_from(spark, loc, "id = 1", mode="merge-on-read")
+    assert iceberg_scan(spark, loc).count() == 5

@@ -2131,6 +2131,24 @@ def test_compatibility_toggles(stub, spark, sf_dir, tmp_path):
     assert set(_glob.glob(f"{loc}/**/*", recursive=True)) == before
 
 
+def test_commit_table_takes_metadata_from_response(stub):
+    """A successful commit rebinds the table from the CommitTableResponse's
+    metadata and metadata-location: no GET of the table follows the POST."""
+    base, state = stub
+    cat = _catalog(base)
+    cat.create_namespace("db")
+    cat.create_table("db", "nore", SCHEMA)
+    tbl = cat.load_table("db", "nore")
+    n = len(state.requests)
+    tbl.commit_table([], [{"action": "set-properties",
+                           "updates": {"k": "v"}}])
+    after = state.requests[n:]
+    assert [m for m, p in after if p.endswith("/tables/nore")] == ["POST"]
+    assert not [p for m, p in after if m == "GET"]
+    assert tbl.metadata_location == state.metadata_locations[("db", "nore")]
+    assert tbl.metadata.properties["k"] == "v"
+
+
 def test_loaded_table_reports_catalog_metadata_location(stub):
     """A catalog table's metadata_location is the metadata file the
     catalog reported, not the table root — after the load and after a

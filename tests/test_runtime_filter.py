@@ -4,6 +4,8 @@ src/planning/iceberg_multi_file_list.cpp:243-273)."""
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from tests.conftest import load
@@ -123,3 +125,27 @@ def test_runtime_filter_consults_ndv_stats(spark, tmp_path):
         spark, loc, spark.createDataFrame([(3,)], "k long"), "k",
         max_in_keys=50)
     assert len(sel.inputFiles()) < full_files
+
+
+def test_runtime_filter_unreadable_statistics_file_raises(spark, tmp_path):
+    """A registered statistics file that cannot be read fails the NDV
+    check loudly instead of silently scanning without it."""
+    from duckdb_iceberg_spark import (
+        compute_table_stats,
+        scan_with_runtime_filter,
+        write_iceberg,
+    )
+    from duckdb_iceberg_spark.metadata.table_metadata import load_table_metadata
+
+    loc = os.path.join(str(tmp_path), "t_bad_stats")
+    write_iceberg(spark.range(0, 40).selectExpr("id % 10 as k", "id"), loc)
+    compute_table_stats(spark, loc, columns=["k"])
+    (entry,) = load_table_metadata(loc).raw["statistics"]
+    path = entry["statistics-path"]
+    with open(path, "rb") as f:
+        head = f.read()[:8]
+    with open(path, "wb") as f:
+        f.write(head)  # truncated: magic only, no footer
+    dim = spark.range(0, 5).selectExpr("id as k")
+    with pytest.raises(ValueError, match="not a Puffin file"):
+        scan_with_runtime_filter(spark, loc, dim, "k", max_in_keys=1)
