@@ -42,10 +42,7 @@ _NATIVE_CONF = "spark.duckdb_iceberg.nativeSchemes"
 
 
 def native_schemes(spark: SparkSession) -> set[str]:
-    try:
-        extra = spark.conf.get(_NATIVE_CONF, "")
-    except Exception:
-        extra = ""
+    extra = spark.conf.get(_NATIVE_CONF, "")
     out = set(_DEFAULT_NATIVE)
     out.update(s.strip() for s in (extra or "").split(",") if s.strip())
     env = os.environ.get("DUCKDB_ICEBERG_NATIVE_SCHEMES", "")

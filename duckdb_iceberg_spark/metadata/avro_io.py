@@ -14,9 +14,17 @@ subset of Avro 1.11 needed for Iceberg metadata:
 
 Decoding is *writer-schema driven*: each writer schema compiles once into a
 reader (cached) that returns plain dicts; encoding takes a schema dict +
-dicts. Iceberg manifests are small (KBs-MBs) so driver-side
-Python decode is fine; at huge scale manifests can instead be read
-distributed (see plans/pruner.py notes).
+dicts.
+
+A reader can be compiled with a *projection*: a set of field names whose
+contiguous run inside a record is skip-walked instead of decoded and
+returned under the record key :data:`RAW` as one :class:`RawRun` (the
+encoded bytes plus the key of the run's own compiled reader), which
+:func:`decode_run` turns into values later, once, in any process. The manifest
+reader projects the per-column stat maps of ``data_file`` this way
+(Iceberg's key/value arrays: a run whose fields are anything else decodes
+eagerly), so a plan pays for stats only on the entries whose stats a
+predicate reads. Avro data files are always decoded eagerly.
 """
 
 from __future__ import annotations
@@ -28,7 +36,7 @@ import struct
 import zlib
 from collections import OrderedDict
 from threading import Lock
-from typing import Any, BinaryIO, Iterable, Iterator
+from typing import Any, BinaryIO, Iterable, Iterator, Optional
 
 MAGIC = b"Obj\x01"
 
@@ -137,22 +145,23 @@ def _is_null(schema: Any) -> bool:
                                 and schema.get("type") == "null")
 
 
-def _compile(schema: Any):
-    """The reader for one (sub)schema."""
+def _compile(schema: Any, run: frozenset = frozenset()):
+    """The reader for one (sub)schema; ``run`` is the projection (field
+    names kept raw, see :func:`_compile_record`)."""
     if isinstance(schema, list):
-        return _compile_union(schema)
+        return _compile_union(schema, run)
     t = schema if isinstance(schema, str) else schema["type"]
     if isinstance(t, (dict, list)):  # {"type": {...}} wrapper
-        return _compile(t)
+        return _compile(t, run)
     prim = _PRIMITIVE_READERS.get(t)
     if prim is not None:
         return prim
     if t == "record":
-        return _compile_record(schema)
+        return _compile_record(schema, run)
     if t == "array":
-        return _compile_array(schema)
+        return _compile_array(schema, run)
     if t == "map":
-        return _compile_map(schema)
+        return _compile_map(schema, run)
     if t == "fixed":
         size = schema["size"]
 
@@ -176,24 +185,13 @@ def _compile(schema: Any):
     return read_unsupported
 
 
-def _compile_union(schema: list):
-    branches = [_compile(s) for s in schema]
+def _compile_union(schema: list, run: frozenset = frozenset()):
+    branches = [_compile(s, run) for s in schema]
     n = len(branches)
     if n == 2 and (_is_null(schema[0]) or _is_null(schema[1])):
-        # the Iceberg metadata shape ["null", X] / [X, "null"]: the
-        # branch index is one zigzag byte, 0x00 (index 0) or 0x02 (1)
         null_first = _is_null(schema[0])
-        inner = branches[1] if null_first else branches[0]
-        null_byte, value_byte = (0, 2) if null_first else (2, 0)
-
-        def read_optional(buf, pos):
-            b = buf[pos]
-            if b == null_byte:
-                return None, pos + 1
-            if b == value_byte:
-                return inner(buf, pos + 1)
-            raise ValueError(f"avro union index byte {b:#x} out of range")
-        return read_optional
+        return _optional(branches[1] if null_first else branches[0],
+                         null_first)
 
     def read_union(buf, pos):
         i, pos = _read_long_fast(buf, pos)
@@ -203,15 +201,57 @@ def _compile_union(schema: list):
     return read_union
 
 
-def _compile_record(schema: dict):
-    fields = [(f["name"], _compile(f["type"])) for f in schema["fields"]]
+def _compile_record(schema: dict, run: frozenset = frozenset()):
+    """Record reader. When the fields named in ``run`` that the record has
+    are contiguous and all key/value arrays (:func:`_run_field`), that run
+    is skip-walked and returned undecoded as ``rec[RAW]``; otherwise every
+    field decodes."""
+    fields = schema["fields"]
+    at = [i for i, f in enumerate(fields) if f["name"] in run]
+    spec = [_run_field(fields[i]) for i in at]
+    if not (at and at[-1] - at[0] == len(at) - 1 and all(spec)):
+        at = []
+    lo, hi = (at[0], at[-1] + 1) if at else (len(fields), len(fields))
+    head = [(f["name"], _compile(f["type"], run)) for f in fields[:lo]]
+    tail = [(f["name"], _compile(f["type"], run)) for f in fields[hi:]]
+    if not at:
+        def read_record(buf, pos):
+            rec = {}
+            for name, read in head:
+                rec[name], pos = read(buf, pos)
+            return rec, pos
+        return read_record
 
-    def read_record(buf, pos):
+    key = json.dumps(spec, separators=(",", ":")).encode()
+    skip = _compile_run_skip(spec)
+
+    def read_record_run(buf, pos):
         rec = {}
-        for name, read in fields:
+        for name, read in head:
+            rec[name], pos = read(buf, pos)
+        end = skip(buf, pos)
+        rec[RAW] = RawRun(key, buf[pos:end])
+        pos = end
+        for name, read in tail:
             rec[name], pos = read(buf, pos)
         return rec, pos
-    return read_record
+    return read_record_run
+
+
+def _optional(inner, null_first: bool):
+    """Reader of the Iceberg metadata union shape ``["null", X]`` /
+    ``[X, "null"]``: the branch index is one zigzag byte, 0x00 (index 0)
+    or 0x02 (1)."""
+    null_byte, value_byte = (0, 2) if null_first else (2, 0)
+
+    def read_optional(buf, pos):
+        b = buf[pos]
+        if b == null_byte:
+            return None, pos + 1
+        if b == value_byte:
+            return inner(buf, pos + 1)
+        raise ValueError(f"avro union index byte {b:#x} out of range")
+    return read_optional
 
 
 def _block_count(buf: bytes, pos: int) -> tuple[int, int]:
@@ -224,8 +264,8 @@ def _block_count(buf: bytes, pos: int) -> tuple[int, int]:
     return n, pos
 
 
-def _compile_array(schema: dict):
-    items = _compile(schema["items"])
+def _compile_array(schema: dict, run: frozenset = frozenset()):
+    items = _compile(schema["items"], run)
 
     def read_array(buf, pos):
         out = []
@@ -240,8 +280,8 @@ def _compile_array(schema: dict):
     return read_array
 
 
-def _compile_map(schema: dict):
-    values = _compile(schema["values"])
+def _compile_map(schema: dict, run: frozenset = frozenset()):
+    values = _compile(schema["values"], run)
 
     def read_map(buf, pos):
         out = {}
@@ -255,22 +295,164 @@ def _compile_map(schema: dict):
     return read_map
 
 
-#: compiled readers by writer-schema JSON text, LRU-bounded so a long
-#: session reading many distinct schemas keeps a constant footprint
-_READERS: "OrderedDict[bytes, Any]" = OrderedDict()
+# --- projected runs ----------------------------------------------------------
+
+#: record key of a projected run; Avro names cannot start with a dot, so it
+#: never collides with a field name
+RAW = ".raw"
+
+
+class RawRun:
+    """A run of record fields kept encoded: ``key`` describes the run (see
+    :func:`_run_field`; it names, and can rebuild, the run's compiled
+    reader) and ``data`` is the run's bytes. One instance is shared by
+    every reader of a cached record; :func:`decode_run` decodes it once
+    and keeps the values on it (never pickled)."""
+
+    __slots__ = ("key", "data", "values")
+
+    def __init__(self, key: bytes, data: bytes):
+        self.key = key
+        self.data = data
+        self.values = None
+
+    def __reduce__(self):
+        return RawRun, (self.key, self.data)
+
+
+#: key and value types of an Iceberg stat map: field-id keys, counts or
+#: serialized bounds as values
+_RUN_KEYS = ("int", "long")
+_RUN_VALUES = ("int", "long", "bytes")
+
+
+def _run_field(field: dict) -> Optional[list]:
+    """``[name, null first, key type, value type]`` when ``field`` is an
+    optional Iceberg key/value array (``["null", {"type": "array",
+    "items": {record key, value}}]``, either branch order) with
+    :data:`_RUN_KEYS` keys and :data:`_RUN_VALUES` values, else None.
+    That is all a run's reader and skipper need, so a run's key is a
+    short list of these, not its schema."""
+    t = field["type"]
+    if not (isinstance(t, list) and len(t) == 2
+            and _is_null(t[0]) != _is_null(t[1])):
+        return None
+    arr = t[0] if _is_null(t[1]) else t[1]
+    items = arr.get("items") if isinstance(arr, dict) \
+        and arr.get("type") == "array" else None
+    if not (isinstance(items, dict) and items.get("type") == "record"
+            and [f["name"] for f in items["fields"]] == ["key", "value"]):
+        return None
+    kt, vt = (f["type"] for f in items["fields"])
+    if kt not in _RUN_KEYS or vt not in _RUN_VALUES:
+        return None
+    return [field["name"], _is_null(t[0]), kt, vt]
+
+
+def _compile_run_skip(spec: list):
+    """``skip(buf, pos) -> end`` over a run of key/value-array fields:
+    walks item boundaries inline (or jumps a block whose byte size is
+    given) without building a value; this loop runs for every entry a
+    manifest read sees. A key is a varint; a value is a varint (counts)
+    or length-prefixed bytes (bounds)."""
+    plan = [(0 if null_first else 2, 2 if null_first else 0,
+             value_type == "bytes")
+            for _, null_first, _, value_type in spec]
+
+    def skip(buf, pos):
+        for null_byte, value_byte, sized in plan:
+            b = buf[pos]
+            pos += 1
+            if b == null_byte:
+                continue
+            if b != value_byte:
+                raise ValueError(
+                    f"avro union index byte {b:#x} out of range")
+            n, pos = _read_long_fast(buf, pos)
+            while n:
+                if n < 0:  # the block's byte size follows: jump it
+                    size, pos = _read_long_fast(buf, pos)
+                    pos += size
+                elif sized:  # a varint, then length-prefixed bytes
+                    for _ in range(n):
+                        while buf[pos] > 0x7F:
+                            pos += 1
+                        size, pos = _read_long_fast(buf, pos + 1)
+                        pos += size
+                else:  # two varints per item
+                    for _ in range(n + n):
+                        while buf[pos] > 0x7F:
+                            pos += 1
+                        pos += 1
+                n, pos = _read_long_fast(buf, pos)
+        return pos
+    return skip
+
+
+def _compile_kv_dict(key_type: str, value_type: str):
+    """Reader of one key/value array straight into a ``{key: value}``
+    dict."""
+    read_key = _PRIMITIVE_READERS[key_type]
+    read_value = _PRIMITIVE_READERS[value_type]
+
+    def read_kv(buf, pos):
+        out = {}
+        n, pos = _block_count(buf, pos)
+        while n:
+            for _ in range(n):
+                k, pos = read_key(buf, pos)
+                out[k], pos = read_value(buf, pos)
+            n, pos = _block_count(buf, pos)
+        return out, pos
+    return read_kv
+
+
+def _compile_run(spec: list):
+    """Reader of a run's bytes: ``{field name: {key: value} or None}``."""
+    readers = [(name, _optional(_compile_kv_dict(key_type, value_type),
+                                null_first))
+               for name, null_first, key_type, value_type in spec]
+
+    def read_run(buf, pos):
+        out = {}
+        for name, read in readers:
+            out[name], pos = read(buf, pos)
+        return out, pos
+    return read_run
+
+
+def decode_run(raw: RawRun) -> dict:
+    """The values of a projected run: each key/value array as a
+    ``{key: value}`` dict, or None. Decoded once per run and shared:
+    callers copy what they hand out."""
+    if raw.values is None:
+        read = _cached_reader(raw.key,
+                              lambda: _compile_run(json.loads(raw.key)))
+        out, end = read(raw.data, 0)
+        if end != len(raw.data):
+            raise ValueError(f"avro field run of {len(raw.data)} bytes "
+                             f"decoded as {end} bytes")
+        raw.values = out
+    return raw.values
+
+
+#: compiled readers by writer-schema JSON text (and projection), or by run
+#: key, LRU-bounded so a long session reading many distinct schemas keeps
+#: a constant footprint
+_READERS: "OrderedDict[Any, Any]" = OrderedDict()
 _READERS_MAX = 64
 _READERS_LOCK = Lock()
 
 
-def _reader_for(schema_text: bytes, schema: Any):
+def _cached_reader(key: Any, build):
     with _READERS_LOCK:
-        read = _READERS.get(schema_text)
+        read = _READERS.get(key)
         if read is not None:
-            _READERS.move_to_end(schema_text)
+            _READERS.move_to_end(key)
             return read
-    read = _compile(schema)
+    read = build()
     with _READERS_LOCK:
-        _READERS[schema_text] = read
+        _READERS[key] = read
         while len(_READERS) > _READERS_MAX:
             _READERS.popitem(last=False)
     return read
@@ -373,8 +555,11 @@ def _nullable(schema: Any) -> bool:
 # container file
 # ---------------------------------------------------------------------------
 
-def read_avro_file(path_or_bytes: str | bytes) -> tuple[dict, dict[str, bytes], list[dict]]:
-    """Read an Avro OCF. Returns (writer_schema, file_metadata, records)."""
+def read_avro_file(path_or_bytes: str | bytes, raw: Iterable[str] = ()
+                   ) -> tuple[dict, dict[str, bytes], list[dict]]:
+    """Read an Avro OCF. Returns (writer_schema, file_metadata, records).
+    ``raw`` is the projection: field names a record keeps undecoded as one
+    :class:`RawRun` under ``rec[RAW]`` (see :func:`_compile_record`)."""
     if isinstance(path_or_bytes, (bytes, bytearray)):
         data = path_or_bytes
     else:
@@ -396,7 +581,8 @@ def read_avro_file(path_or_bytes: str | bytes) -> tuple[dict, dict[str, bytes], 
     pos += 16
     schema_text = meta["avro.schema"]
     schema = json.loads(schema_text)
-    read = _reader_for(schema_text, schema)
+    run = frozenset(raw)
+    read = _cached_reader((schema_text, run), lambda: _compile(schema, run))
     codec = meta.get("avro.codec", b"null").decode()
     records: list[dict] = []
     append = records.append

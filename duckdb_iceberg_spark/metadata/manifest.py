@@ -9,7 +9,9 @@ with partition field_summary) using our pure-Python Avro codec (avro_io.py).
 
 Iceberg's k/v stat "maps" keyed by field-id are Avro arrays of {key,value}
 records (Avro maps require string keys); we encode/decode them as Python
-dicts keyed by int field-id.
+dicts keyed by int field-id. A manifest read keeps the six of them as one
+undecoded byte run per entry and decodes it on first access (see
+:class:`DataFile`).
 """
 
 from __future__ import annotations
@@ -54,7 +56,12 @@ MANIFEST_DELETES = 1
 # cache entirely rather than risk a stale path-only hit. Raw records are
 # cached, never the ManifestEntry dataclasses: planning MUTATES entries
 # (sequence-number / first-row-id inheritance), so every call rebuilds fresh
-# dataclasses from the shared immutable records. Assumption: an in-place
+# dataclasses from the shared immutable records. A manifest's records hold
+# each entry's six stat maps as one undecoded byte run (avro_io's
+# projection), shared by every DataFile built from the record: the cache
+# holds bytes, not nested list/dict trees, and the run decodes (once, kept
+# on the run) only for entries whose stats a predicate reads; each
+# DataFile still gets its own copies. Assumption: an in-place
 # same-size rewrite is visible in st_mtime_ns — true on any ns/µs-mtime
 # filesystem; a coarse-mtime fs (1-2s FAT/HFS+) could serve one stale read
 # inside the granularity window, but the Iceberg contract already forbids
@@ -64,10 +71,11 @@ from threading import Lock as _Lock
 
 _AVRO_CACHE: "_OrderedDict[tuple, tuple]" = _OrderedDict()
 _AVRO_CACHE_MAX = 256
-#: r15: ALSO bound the cache by total decoded RECORDS — manifests hold
-#: ~1-3 KB of raw record dicts per entry, so 256 files x 1000-entry
-#: manifests would pin ~700 MB of driver heap; the record budget keeps
-#: the cache O(constant) however large individual manifests get
+#: r15: ALSO bound the cache by total decoded RECORDS — a manifest entry's
+#: record is a dict of ~15 fields plus its raw stat run, so 256 files x
+#: 1000-entry manifests would still pin hundreds of MB of driver heap; the
+#: record budget keeps the cache O(constant) however large individual
+#: manifests get
 _AVRO_CACHE_MAX_RECORDS = 200_000
 _AVRO_CACHE_RECORDS = [0]
 # planning runs concurrently (distributed fixture builders, parallel
@@ -139,8 +147,19 @@ class ManifestFile:
     first_row_id: Optional[int] = None
 
 
+#: the per-column stat maps of a data file, in manifest field order; a
+#: manifest read keeps them as one undecoded run per entry
+_LAZY_STATS = ("column_sizes", "value_counts", "null_value_counts",
+               "nan_value_counts", "lower_bounds", "upper_bounds")
+
+#: what all six stat slots of a not-yet-decoded entry hold
+_RawStats = avro_io.RawRun
+
+
 @dataclass(slots=True)
-class DataFile:
+class _DataFileFields:
+    """The fields and slots of :class:`DataFile`, without its lazy stat
+    properties."""
     content: int  # CONTENT_*
     file_path: str
     file_format: str
@@ -162,8 +181,68 @@ class DataFile:
     content_size_in_bytes: Optional[int] = None
     first_row_id: Optional[int] = None
 
+
+class DataFile(_DataFileFields):
+    """A manifest's data (or delete) file.
+
+    The six stat maps are properties over their slots. An entry built by
+    the manifest reader stores one shared :data:`_RawStats` placeholder
+    in all six slots; the first read of any of them decodes all six once
+    (:func:`_materialize`). Pruning on identity partition values alone
+    never reads them. An undecoded entry pickles its placeholder, so it
+    crosses the executor boundary as bytes."""
+
+    __slots__ = ()
+
     def __reduce__(self):
-        return type(self), _DATA_FILE_VALUES(self)
+        return _data_file, _DATA_FILE_SLOTS(self)
+
+
+def _data_file(*values) -> DataFile:
+    """A DataFile from its slot values as stored, built without running
+    the stat properties' setters (the unpickling path; the manifest reader
+    does the same inline): made as the plain dataclass and then
+    re-classed, which the identical slot layout allows."""
+    df = _DataFileFields(*values)
+    df.__class__ = DataFile
+    return df
+
+
+def _materialize(df: DataFile, raw: "_RawStats") -> None:
+    """Fill every stat slot of ``df`` that still holds ``raw``. The
+    decoded values stay on the run, which every entry read from the same
+    cached record shares, so each entry gets its own copies."""
+    values = avro_io.decode_run(raw)
+    for name, slot in _STAT_SLOTS.items():
+        if slot.__get__(df) is raw:  # a stat set since keeps its value
+            v = values.get(name)
+            slot.__set__(df, None if v is None else dict(v))
+
+
+def _lazy_stat(slot):
+    get = slot.__get__
+
+    def read(self):
+        v = get(self)
+        if type(v) is _RawStats:
+            _materialize(self, v)
+            v = get(self)
+        return v
+    return property(read, slot.__set__)
+
+
+_STAT_SLOTS = {name: getattr(_DataFileFields, name) for name in _LAZY_STATS}
+for _name, _slot in _STAT_SLOTS.items():
+    setattr(DataFile, _name, _lazy_stat(_slot))
+    # the slot itself, under a private name: read and written as stored
+    setattr(DataFile, "_" + _name, _slot)
+del _name, _slot
+
+
+def stored_stats(df: DataFile) -> tuple:
+    """The six stat slots as stored, without decoding: a not-yet-decoded
+    entry shows its placeholder."""
+    return _STORED_STATS(df)
 
 
 @dataclass(slots=True)
@@ -179,11 +258,15 @@ class ManifestEntry:
 
 
 # Entries cross the executor → driver boundary in bulk (the distributed
-# planner pickles every surviving entry): a (class, positional field
+# planner pickles every surviving entry): a (constructor, positional field
 # values) reduction unpickles through one constructor call, where the
 # default slots-dataclass pickle restores attribute by attribute and
-# spells out every field name per entry.
-_DATA_FILE_VALUES = attrgetter(*(f.name for f in fields(DataFile)))
+# spells out every field name per entry. A DataFile reduces to its slots
+# as stored, so an undecoded entry ships its raw stat run.
+_DATA_FILE_SLOTS = attrgetter(*(
+    "_" + f.name if f.name in _STAT_SLOTS else f.name
+    for f in fields(DataFile)))
+_STORED_STATS = attrgetter(*("_" + name for name in _LAZY_STATS))
 _MANIFEST_ENTRY_VALUES = attrgetter(*(f.name for f in fields(ManifestEntry)))
 
 
@@ -420,7 +503,9 @@ def _read_avro_clean(path: str, what: str):
     file — a damaged table must fail with a diagnosis, not an IndexError
     from the varint decoder (spirit of the reference's bad-data tests)."""
     try:
-        return avro_io.read_avro_file(path)
+        # a manifest's entries keep their stat maps undecoded until read
+        return avro_io.read_avro_file(
+            path, raw=_LAZY_STATS if what == "manifest" else ())
     except (FileNotFoundError, PermissionError):
         raise
     except Exception as e:
@@ -433,36 +518,40 @@ def read_manifest(path: str) -> list[ManifestEntry]:
     out = []
     for r in records:
         df = r["data_file"]
-        out.append(
-            ManifestEntry(
-                status=r.get("status", STATUS_ADDED),
-                snapshot_id=r.get("snapshot_id"),
-                sequence_number=r.get("sequence_number"),
-                file_sequence_number=r.get("file_sequence_number"),
-                data_file=DataFile(
-                    content=df.get("content", 0) or 0,
-                    file_path=df["file_path"],
-                    file_format=df.get("file_format", "PARQUET"),
-                    partition=_decode_partition(df.get("partition")),
-                    record_count=df.get("record_count", 0) or 0,
-                    file_size_in_bytes=df.get("file_size_in_bytes", 0) or 0,
-                    column_sizes=_as_int_map(df.get("column_sizes")),
-                    value_counts=_as_int_map(df.get("value_counts")),
-                    null_value_counts=_as_int_map(df.get("null_value_counts")),
-                    nan_value_counts=_as_int_map(df.get("nan_value_counts")),
-                    lower_bounds=_as_int_map(df.get("lower_bounds")),
-                    upper_bounds=_as_int_map(df.get("upper_bounds")),
-                    key_metadata=df.get("key_metadata"),
-                    split_offsets=df.get("split_offsets"),
-                    equality_ids=df.get("equality_ids"),
-                    sort_order_id=df.get("sort_order_id"),
-                    referenced_data_file=df.get("referenced_data_file"),
-                    content_offset=df.get("content_offset"),
-                    content_size_in_bytes=df.get("content_size_in_bytes"),
-                    first_row_id=df.get("first_row_id"),
-                ),
-            )
-        )
+        raw = df.get(avro_io.RAW)
+        if raw is None:  # a stats layout the projection leaves eager
+            cs, vc, nc, nan, lo, hi = (_as_int_map(df.get(name))
+                                       for name in _LAZY_STATS)
+        else:
+            cs = vc = nc = nan = lo = hi = raw
+        data_file = _DataFileFields(
+            content=df.get("content", 0) or 0,
+            file_path=df["file_path"],
+            file_format=df.get("file_format", "PARQUET"),
+            partition=_decode_partition(df.get("partition")),
+            record_count=df.get("record_count", 0) or 0,
+            file_size_in_bytes=df.get("file_size_in_bytes", 0) or 0,
+            column_sizes=cs,
+            value_counts=vc,
+            null_value_counts=nc,
+            nan_value_counts=nan,
+            lower_bounds=lo,
+            upper_bounds=hi,
+            key_metadata=df.get("key_metadata"),
+            split_offsets=df.get("split_offsets"),
+            equality_ids=df.get("equality_ids"),
+            sort_order_id=df.get("sort_order_id"),
+            referenced_data_file=df.get("referenced_data_file"),
+            content_offset=df.get("content_offset"),
+            content_size_in_bytes=df.get("content_size_in_bytes"),
+            first_row_id=df.get("first_row_id"))
+        data_file.__class__ = DataFile  # as _data_file does
+        out.append(ManifestEntry(
+            status=r.get("status", STATUS_ADDED),
+            snapshot_id=r.get("snapshot_id"),
+            sequence_number=r.get("sequence_number"),
+            file_sequence_number=r.get("file_sequence_number"),
+            data_file=data_file))
     return out
 
 

@@ -188,16 +188,6 @@ def bloom_dedup_incremental(
     return firsts.join(hits, id_col, "left_semi").drop("__fp")
 
 
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(fingerprint, n_dupes, keep_id) for groups with >1 member."""
-    return (
-        df.withColumn("fingerprint", doc_fingerprint(text_col))
-        .groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("n_dupes"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n_dupes") > 1)
-    )
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------

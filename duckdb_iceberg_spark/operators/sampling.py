@@ -341,40 +341,6 @@ def pack_sequences(
         "bin", F.floor(F.col("bin_offset") / budget).cast("long"))
 
 
-def quantile_filter(
-    df: DataFrame,
-    value_col: str,
-    q: float,
-    by: str | list[str] | None = None,
-    keep: str = "above",
-) -> DataFrame:
-    """Keep rows at or beyond the per-group EXACT interpolated quantile
-    of ``value_col`` — the "drop the bottom q of each language by
-    quality/token-count" curation pass. ``keep='above'`` keeps rows with
-    value >= the q-quantile, ``'below'`` keeps value <= it.
-
-    The threshold is Spark's exact ``percentile`` (= ANSI
-    ``quantile_cont``/``percentile_cont``), so any SQL engine reproduces
-    the same cut — no approx-sketch drift across engines or reruns.
-
-    Scale: one per-group aggregation (group-count output rows) whose
-    result broadcasts back onto the scan — the filter itself adds no
-    second shuffle. Exact percentile sorts inside the aggregation
-    buffer; fine for per-group cardinalities (docs per language), switch
-    to approx_percentile for trillion-row single groups and drop the
-    cross-engine claim."""
-    if keep not in ("above", "below"):
-        raise ValueError(f"keep must be 'above' or 'below', got {keep!r}")
-    gcols = [by] if isinstance(by, str) else list(by or [])
-    thr = df.groupBy(*gcols).agg(
-        F.percentile(F.col(value_col), F.lit(float(q))).alias("__thr"))
-    joined = (df.join(F.broadcast(thr), gcols) if gcols
-              else df.crossJoin(F.broadcast(thr)))
-    cond = (F.col(value_col) >= F.col("__thr") if keep == "above"
-            else F.col(value_col) <= F.col("__thr"))
-    return joined.filter(cond).drop("__thr")
-
-
 def cap_per_source(
     df: DataFrame,
     cap: int,

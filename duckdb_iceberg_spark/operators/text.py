@@ -41,15 +41,6 @@ def token_count(col: Column | str) -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+"))).cast("long")
 
 
-def word_punct_token_count(col: Column | str) -> Column:
-    """BPE-ish token count: words, numbers, and punctuation runs counted
-    separately (regexp-extracted, JVM-side)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(
-        F.regexp_extract_all(c, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0))
-    ).cast("long")
-
-
 def _tokens(col: Column) -> Column:
     return F.split(F.lower(F.trim(col)), r"\s+")
 

@@ -230,6 +230,14 @@ def _file_matches(
 
 _UNSET = object()
 
+#: source types whose identity partition value, once normalized
+#: (:func:`_norm_partition_value`), is the value ``decode_bound`` reads
+#: from the file's bounds. Floats are out (a NaN partition value is not a
+#: bound) and so are nanosecond timestamps (their values stay raw ints).
+_EXACT_IDENTITY_TYPES = frozenset({
+    "boolean", "int", "long", "date", "time", "timestamp", "timestamptz",
+    "string", "uuid", "fixed", "binary", "decimal"})
+
 
 class _FileFilter:
     """Manifest- and file-level pruning bound once per plan.
@@ -244,6 +252,8 @@ class _FileFilter:
     leaf's projection into partition space —
     is computed on first use and reused, so per entry only the entry's
     own partition values and referenced bounds are decoded and compared.
+    A non-null identity partition value is the column's exact stats, so
+    a leaf on such a column never reads (or decodes) the file's bounds.
     Planners build one per plan; executors one per task."""
 
     __slots__ = ("tm", "pred", "fields_by_name", "fields_by_id",
@@ -267,12 +277,14 @@ class _FileFilter:
         return self._coerced
 
     def _bind_spec(self, spec: PartitionSpec):
-        """(parts, partition-space predicate) for a spec. ``parts`` holds
-        ``(index in spec.fields, partition name, source column, result
-        type, transform, source type)`` for fields whose source resolves."""
+        """(parts, partition-space predicate, exact) for a spec. ``parts``
+        holds ``(index in spec.fields, partition name, source column,
+        result type, transform, source type)`` for fields whose source
+        resolves; ``exact`` holds the indexes into ``parts`` of identity
+        fields whose value stands in for the column's stats."""
         bound = self._specs.get(spec.spec_id)
         if bound is None:
-            parts = []
+            parts, exact = [], set()
             for i, pf in enumerate(spec.fields):
                 # nested partition sources key by their dotted path — the
                 # predicate parser emits dotted column names
@@ -280,11 +292,19 @@ class _FileFilter:
                 if hit is None:
                     continue
                 src_name, src = hit
+                f = self.fields_by_name.get(src_name)
+                if (tr.parse_transform(pf.transform)[0] == "identity"
+                        and isinstance(src["type"], str)
+                        and ice_types.primitive_name(src["type"])
+                        in _EXACT_IDENTITY_TYPES
+                        and f is not None and f["id"] == pf.source_id
+                        and f["id"] not in self.unmapped):
+                    exact.add(len(parts))
                 parts.append((i, pf.name, src_name,
                               tr.transform_result_type(pf.transform, src["type"]),
                               pf.transform, src["type"]))
             bound = self._specs[spec.spec_id] = (
-                parts, _compile_transformed(self.pred, parts))
+                parts, _compile_transformed(self.pred, parts), exact)
         return bound
 
     def manifest_matches(self, manifest: mf.ManifestFile) -> bool:
@@ -293,7 +313,7 @@ class _FileFilter:
         spec = self.tm.partition_specs.get(manifest.partition_spec_id)
         if spec is None or len(spec.fields) != len(manifest.partitions):
             return True
-        parts, part_pred = self._bind_spec(spec)
+        parts, part_pred, _ = self._bind_spec(spec)
         summaries = manifest.partitions
         by_col = {}
         for k, (i, _, src_name, rt, _, _) in enumerate(parts):
@@ -314,21 +334,24 @@ class _FileFilter:
 
         # 1. partition-value pruning (exact, transformed space); when two
         # partition fields share a source column the last one wins
-        parts, part_pred = self._bind_spec(spec)
+        memo = {}
+        parts, part_pred, exact = self._bind_spec(spec)
         if parts:
             partition = df.partition
             by_col = {}
             for k, (_, name, src_name, rt, _, _) in enumerate(parts):
                 if name in partition:
                     v = _norm_partition_value(partition[name], rt)
-                    by_col[src_name] = (P.ColumnStats(
-                        lower=v, upper=v, contains_null=v is None,
-                        all_null=v is None), k)
+                    st = P.ColumnStats(lower=v, upper=v,
+                                       contains_null=v is None,
+                                       all_null=v is None)
+                    by_col[src_name] = (st, k)
+                    if k in exact and v is not None:
+                        memo[src_name] = st  # every row holds v
             if by_col and not part_pred(by_col):
                 return False
 
         # 2. column-stat pruning in source space
-        memo = {}
 
         def stats_for(col) -> Optional[P.ColumnStats]:
             st = memo.get(col, _UNSET)
@@ -714,8 +737,10 @@ def strip_file_stats(df: "mf.DataFile") -> "mf.DataFile":
     itself needs only path/format/partition/row-count/size (+ delete
     routing fields); the six stat dicts are ~1 KB per entry and dominate
     the driver's retained memory at 1e6-entry scale. A fresh copy, never
-    an in-place strip — manifest-cache objects are shared."""
-    if all(getattr(df, f) is None for f in _STAT_FIELDS):
+    an in-place strip — manifest-cache objects are shared. An entry whose
+    stats were never decoded loses its raw run undecoded."""
+    if df.split_offsets is None and all(
+            v is None for v in mf.stored_stats(df)):
         return df  # already stripped (by the manifest reader, before pickling)
     return dataclasses.replace(df, **dict.fromkeys(_STAT_FIELDS))
 

@@ -252,11 +252,6 @@ def transform_result_type(transform: str, src_type: Any) -> Any:
     raise ValueError(kind)
 
 
-def preserves_order(transform: str) -> bool:
-    kind, _ = parse_transform(transform)
-    return kind in ("identity", "truncate", "year", "month", "day", "hour")
-
-
 # ---------------------------------------------------------------------------
 # Spark Column transforms (write side)
 # ---------------------------------------------------------------------------

@@ -25,6 +25,7 @@ def test_metadata_bench_invariants(small_scale):
     # parsed exactly one manifest
     assert out["selective_manifests_parsed"] == 1
     assert out["full_plan_sec"] >= 0 and out["full_plan_peak_mb"] > 0
+    assert 0 <= out["full_plan_gc_s"] <= out["full_plan_sec"]
 
 
 def test_metadata_bench_planner_details(small_scale):

@@ -150,6 +150,38 @@ def test_local_tables_unaffected(spark, tmp_path):
     assert os.path.exists(os.path.join(loc, "metadata", "version-hint.text"))
 
 
+def test_native_schemes_read_session_conf(spark, monkeypatch):
+    """The session conf adds Spark-native schemes; an unset conf keeps the
+    default set, and a conf read that fails raises instead of quietly
+    routing every read to the Arrow plane."""
+    from duckdb_iceberg_spark.io import arrow_data
+
+    monkeypatch.delenv("DUCKDB_ICEBERG_NATIVE_SCHEMES", raising=False)
+    conf = arrow_data._NATIVE_CONF
+    prior = spark.conf.get(conf, None)
+    try:
+        spark.conf.unset(conf)
+        assert arrow_data.native_schemes(spark) == {"", "file", "hdfs"}
+        spark.conf.set(conf, "s3a,gs")
+        assert arrow_data.native_schemes(spark) == {
+            "", "file", "hdfs", "s3a", "gs"}
+    finally:
+        if prior is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prior)
+
+    class _DeadConf:
+        def get(self, key, default=None):
+            raise ConnectionError("gateway is gone")
+
+    class _DeadSession:
+        conf = _DeadConf()
+
+    with pytest.raises(ConnectionError):
+        arrow_data.native_schemes(_DeadSession())
+
+
 def test_distributed_arrow_write_and_read(spark, lfs, monkeypatch):
     from duckdb_iceberg_spark.io import arrow_data
 

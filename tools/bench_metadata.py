@@ -16,6 +16,8 @@ Measured (all driver-side; the planner IS driver-side by design — its
 output is an O(#files) task list the executors then scan):
 - list_sec           parse the manifest list (200 entries)
 - full_plan_sec      plan with no predicate: parses all 200 manifests
+- full_plan_gc_s     of which time in the cyclic garbage collector
+                     (measured through ``gc.callbacks``)
 - full_plan_peak_mb  tracemalloc peak during the full plan
 - selective_plan_sec plan WHERE partition_id = 199: manifest-list
                      partition summaries must prune 199 of 200
@@ -34,6 +36,7 @@ block of the artifact.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import struct
@@ -186,6 +189,28 @@ def build_table(base_dir: str | None = None,
         lock.close()
 
 
+class _GcTimer:
+    """Seconds the cyclic garbage collector ran inside the ``with`` block,
+    summed from ``gc.callbacks`` start/stop events."""
+
+    def __init__(self):
+        self.seconds = 0.0
+        self._t0 = 0.0
+
+    def _on_gc(self, phase, info):
+        if phase == "start":
+            self._t0 = time.perf_counter()
+        else:
+            self.seconds += time.perf_counter() - self._t0
+
+    def __enter__(self):
+        gc.callbacks.append(self._on_gc)
+        return self
+
+    def __exit__(self, *exc):
+        gc.callbacks.remove(self._on_gc)
+
+
 def run(base_dir: str | None = None) -> dict:
     from duckdb_iceberg_spark.metadata import manifest as mf
     from duckdb_iceberg_spark.metadata.table_metadata import (
@@ -222,9 +247,10 @@ def run(base_dir: str | None = None) -> dict:
 
     # full cold plan: every manifest parses
     _cold()
-    t0 = time.time()
-    full = plan_scan(tm, snap)
-    full_s = time.time() - t0
+    with _GcTimer() as full_gc:
+        t0 = time.time()
+        full = plan_scan(tm, snap)
+        full_s = time.time() - t0
     assert len(full.tasks) == N_MANIFESTS * ENTRIES_PER_MANIFEST, \
         len(full.tasks)
 
@@ -255,6 +281,7 @@ def run(base_dir: str | None = None) -> dict:
         "build_sec": round(build_s, 3),
         "list_sec": round(list_s, 3),
         "full_plan_sec": round(full_s, 3),
+        "full_plan_gc_s": round(full_gc.seconds, 3),
         "warm_plan_sec": round(warm_s, 3),
         "full_plan_peak_mb": round(peak / (1024 * 1024), 1),
         "selective_plan_sec": round(sel_s, 3),
