@@ -7,7 +7,8 @@ items are cheapest on the driver; thousands should not serialize on it.
 :func:`map_items` makes that choice in one place, with one threshold,
 and ships the driver's FileIO to the executors so every site reads the
 same storage on both sides (reference: the lazy per-manifest batches of
-``iceberg_multi_file_list.cpp:437-498``)."""
+``iceberg_multi_file_list.cpp:437-498``). An executor fan-out is one job
+of one wave: at most one task per core."""
 
 from __future__ import annotations
 
@@ -71,7 +72,9 @@ def map_items(spark, items: list, fn: Callable[[Iterator], Iterable], *,
       mapped one at a time over a thread pool of up to 16. Nothing is
       pickled.
     - **Executors**: one ``parallelize → mapPartitions → collect`` job
-      over ``2 × defaultParallelism`` slices at most. Each task installs
+      over at most ``defaultParallelism`` slices, so its tasks run as one
+      wave and each task's fixed start-up cost is paid once per core, not
+      twice. Each task installs
       the FileIO of ``io_path`` (:func:`worker_io`) and pickles each
       result to one blob; the driver unpickles the blobs in order and
       drops each one as it is consumed, so the collected bytes and the
@@ -95,7 +98,7 @@ def map_items(spark, items: list, fn: Callable[[Iterator], Iterable], *,
             yield pickle.dumps(result, protocol=pickle.HIGHEST_PROTOCOL)
 
     sc = spark.sparkContext
-    n_slices = min(len(items), 2 * sc.defaultParallelism)
+    n_slices = min(len(items), sc.defaultParallelism)
     blobs = sc.parallelize(items, n_slices).mapPartitions(task).collect()
     blobs.reverse()
 

@@ -110,21 +110,18 @@ def time_type_available() -> bool:
 
 
 def _probe_time_type() -> bool:
+    """Neither call below raises on a healthy session: there is no active
+    session in an executor's Python worker, and ``conf.get`` with a
+    default does not raise for an unset key. A failing session raises."""
     if not _TIME_TYPE_IN_LIB:
         return False
-    try:
-        from pyspark.sql import SparkSession
+    from pyspark.sql import SparkSession
 
-        s = SparkSession.getActiveSession()
-    except Exception:
-        s = None
+    s = SparkSession.getActiveSession()
     if s is None:
         return True
-    try:
-        return str(s.conf.get("spark.sql.timeType.enabled", "false")) \
-            .lower() == "true"
-    except Exception:
-        return True
+    return str(s.conf.get("spark.sql.timeType.enabled", "false")) \
+        .lower() == "true"
 
 
 def time_to_micros(v: Any) -> int:

@@ -238,6 +238,11 @@ def _parse_literal(tk: _Tokens) -> Any:
                 return _dt.time.fromisoformat(raw)
             d = _dt.datetime.fromisoformat(raw.replace("Z", "+00:00"))
             return d
+        if up == "X" and tk.i + 1 < len(tk.toks) \
+                and tk.toks[tk.i + 1][0] == "str":
+            # X'<hex>': a binary literal
+            tk.next()
+            return bytes.fromhex(tk.next()[1][1:-1])
         if up == "TRUE":
             tk.next()
             return True

@@ -448,7 +448,8 @@ def remove_orphan_files(
     # override's stated purpose is a separate storage budget, so it may
     # live on a different scheme than the table location. A vanished
     # previous metadata file is skipped: its data roots are either the
-    # current ones or unreachable from every live snapshot anyway.
+    # current ones or unreachable from every live snapshot anyway; an
+    # unreadable one raises.
     roots = {fio.join(location, "data"), tm.data_path()}
     import json as _json
 
@@ -461,7 +462,7 @@ def remove_orphan_files(
             continue
         try:
             j = _json.loads(_read_text(_localize(tm, prev_path)))
-        except Exception:
+        except FileNotFoundError:
             continue
         prev_root = (j.get("properties") or {}).get("write.data.path")
         if prev_root:

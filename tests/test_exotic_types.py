@@ -255,3 +255,23 @@ def test_time_mapping_degrades_when_session_flag_off(spark):
     finally:
         spark.conf.set("spark.sql.timeType.enabled", old)
     assert ice_types.time_type_available() is True
+
+
+def test_time_probe_raises_when_the_session_conf_fails(monkeypatch):
+    """A failing session is not read as "TimeType available": the probe
+    raises instead of guessing."""
+    from pyspark.sql import SparkSession
+
+    from duckdb_iceberg_spark.metadata import types as ice_types
+
+    class _Conf:
+        def get(self, *a):
+            raise RuntimeError("conf unavailable")
+
+    class _Session:
+        conf = _Conf()
+
+    monkeypatch.setattr(SparkSession, "getActiveSession",
+                        staticmethod(lambda: _Session()))
+    with pytest.raises(RuntimeError, match="conf unavailable"):
+        ice_types._probe_time_type()

@@ -188,3 +188,23 @@ def test_planner_parity_with_positional_deletes_lean(spark, lfs, both_sides):
     got = sorted(r.id for r in
                  scan_mod.scan_to_dataframe(spark, executor).collect())
     assert got == [i for i in range(20, 200) if i % 5 != 1]
+
+
+def test_executor_fanout_runs_one_wave(spark, tmp_path, monkeypatch):
+    """Ten items on the 4-core test session: one job of four tasks."""
+    monkeypatch.setattr(fanout, "DRIVER_MAX", 0)
+    sc = spark.sparkContext
+    group = "test-fanout-one-wave"
+    sc.setJobGroup(group, "one wave")
+    try:
+        got = list(fanout.map_items(spark, list(range(10)),
+                                    lambda part: (x * 2 for x in part),
+                                    io_path=str(tmp_path)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == [x * 2 for x in range(10)]
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert [tracker.getStageInfo(s).numTasks
+            for s in tracker.getJobInfo(jobs[0]).stageIds] == [4]

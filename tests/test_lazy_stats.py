@@ -363,8 +363,7 @@ _IDENTITY_TYPES = {
                 ["5.25", "5.00", "6.00"]),
     # floats keep reading bounds: a NaN partition value is not a bound
     "double": (T.DoubleType(), "double", 5.5, ["5.5", "4.5", "6.5"]),
-    # the predicate parser has no binary literal, so only IS [NOT] NULL
-    # parses and every other plan keeps the file
+    # X'..' literals parse to bytes, compared with the bytes bounds
     "binary": (T.BinaryType(), "binary", b"\x05", ["X'05'", "X'04'",
                                                     "X'06'"]),
 }
@@ -373,7 +372,7 @@ _GRID = ["k = {v}", "k = {lo}", "k < {v}", "k < {hi}", "k >= {v}",
          "k IS NOT NULL", "k = {lo} OR w > 15", "k = {lo} OR w > 25",
          "k = {v} OR w > 25", "k > {v} OR w < 5"]
 #: task counts per grid predicate, recorded before partition values stood
-#: in for identity columns' stats
+#: in for identity columns' stats (binary's once X'..' literals parsed)
 _PARENT_TASKS = {
     "int": [1, 0, 0, 1, 1, 0, 1, 0, 0, 1, 1, 0, 1, 0],
     "long": [1, 0, 0, 1, 1, 0, 1, 0, 0, 1, 1, 0, 1, 0],
@@ -382,7 +381,7 @@ _PARENT_TASKS = {
     "string": [1, 0, 0, 1, 1, 0, 1, 0, 0, 1, 1, 0, 1, 0],
     "decimal": [1, 0, 0, 1, 1, 0, 1, 0, 0, 1, 1, 0, 1, 0],
     "double": [1, 0, 0, 1, 1, 0, 1, 0, 0, 1, 1, 0, 1, 0],
-    "binary": [1, 1, 1, 1, 1, 1, 1, 1, 0, 1, 1, 1, 1, 1],
+    "binary": [1, 0, 0, 1, 1, 0, 1, 0, 0, 1, 1, 0, 1, 0],
 }
 
 

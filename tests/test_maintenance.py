@@ -741,3 +741,32 @@ def test_vacuum_relative_age(spark, tmp_path):
     out = vacuum(spark, loc, older_than_ms=0, retain_last=1)
     assert out["expire_expired"] == 2
     assert len(load_table_metadata(loc).snapshots) == 1
+
+
+def test_orphan_scan_skips_a_removed_previous_metadata_file(tmp_path):
+    """The orphan scan reads every previous metadata file for its data
+    roots: one removed by expiry is skipped, a corrupt one raises."""
+    import json
+    import os
+
+    from pyspark.sql import types as T
+
+    from duckdb_iceberg_spark.sources.maintenance import remove_orphan_files
+
+    from .test_bound_file_filter import _metadata_only_table
+
+    loc = str(tmp_path / "t")
+    tm = _metadata_only_table(
+        loc, T.StructType([T.StructField("k", T.LongType())]), None,
+        [({}, [({}, {})])])
+    os.makedirs(os.path.join(loc, "data"))
+    orphan = os.path.join(loc, "data", "stray.parquet")
+    with open(orphan, "wb") as fh:
+        fh.write(b"x")
+    prev = tm.metadata_log[0]["metadata-file"]
+    with open(prev, "w") as fh:
+        fh.write("{not json")
+    with pytest.raises(json.JSONDecodeError):
+        remove_orphan_files(loc, dry_run=True, older_than_ms=0)
+    os.remove(prev)
+    assert remove_orphan_files(loc, dry_run=True, older_than_ms=0) == [orphan]

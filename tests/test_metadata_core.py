@@ -391,6 +391,18 @@ def test_predicate_parser_and_bounds():
     assert P.match_bounds(P.parse_where("x IS NULL"), lambda c: nst)
 
 
+def test_binary_literals_parse_to_bytes():
+    assert P.parse_where("k = X'04'") == P.Comparison("k", "=", b"\x04")
+    assert P.parse_where("k IN (x'0aFF', X'')") == P.InList(
+        "k", [b"\n\xff", b""])
+    assert P.parse_where("k = X'0'") is None  # odd digit count
+    assert P.coerce_literal(b"\x04", "binary") == b"\x04"
+    assert P.coerce_literal(b"\x04", "fixed[1]") == b"\x04"
+    st = P.ColumnStats(lower=b"\x02", upper=b"\x05", contains_null=False)
+    assert P.match_bounds(P.parse_where("k = X'04'"), lambda c: st)
+    assert not P.match_bounds(P.parse_where("k = X'06'"), lambda c: st)
+
+
 def test_transform_predicate_bucket():
     tp = P.transform_predicate(P.parse_where("v = 34"), "v", "bucket[16]", "int")
     assert isinstance(tp, P.Comparison)
