@@ -17,9 +17,6 @@ Scale notes (100 TB design):
   above ``fanout.DRIVER_MAX`` surviving data manifests a planner given a
   Spark session (``plan_scan_distributed``) reads and file-prunes them in
   one Spark job and the driver stays O(#manifests + surviving entries).
-- a manifest whose partition summaries on exact identity fields already
-  prove that every row matches (``_FileFilter.manifest_covers``) keeps all
-  its live data entries without pruning them one by one.
 """
 
 from __future__ import annotations
@@ -329,30 +326,6 @@ class _FileFilter:
             )
             by_col[src_name] = (st, k)
         return part_pred(by_col)
-
-    def manifest_covers(self, manifest: mf.ManifestFile) -> bool:
-        """Whether every row of ``manifest`` provably matches the predicate
-        by its partition summaries alone (Iceberg's residual-is-alwaysTrue
-        case), so its live data entries need no per-entry pruning. Only
-        the spec's exact identity fields are read; a leaf on any other
-        column is unknown, and an unknown leaf decides nothing."""
-        if self.pred is None or not manifest.partitions:
-            return False
-        spec = self.tm.partition_specs.get(manifest.partition_spec_id)
-        if spec is None or len(spec.fields) != len(manifest.partitions):
-            return False
-        parts, _, exact = self._bind_spec(spec)
-        by_col = {}
-        for k in exact:
-            i, _, src_name, rt, _, _ = parts[k]
-            summ = manifest.partitions[i]
-            by_col[src_name] = P.ColumnStats(
-                lower=_norm_partition_value(
-                    ice_types.decode_bound(rt, summ.lower_bound), rt),
-                upper=_norm_partition_value(
-                    ice_types.decode_bound(rt, summ.upper_bound), rt),
-                contains_null=summ.contains_null is not False)
-        return bool(by_col) and P.definitely_matches(self.coerced, by_col.get)
 
     def matches(self, entry: mf.ManifestEntry, spec: PartitionSpec) -> bool:
         if self.pred is None:
@@ -911,17 +884,15 @@ def plan_scan(
 def _data_manifest_reader(tm: TableMetadata, pred: P.Predicate,
                           schema_json: dict, where: str | None, lean: bool):
     """Per-task function for :func:`fanout.map_items` over the data
-    manifests' ``(path, spec id, sequence number, first row id, covered)``
-    items. Yields ``(live data entries, surviving entries, delete
-    entries)`` per manifest; delete-content entries of a data manifest are
-    returned for the caller to classify. A covered manifest
-    (:meth:`_FileFilter.manifest_covers`) keeps every live data entry
-    unpruned. One bound file filter per task."""
+    manifests' ``(path, spec id, sequence number, first row id)`` items.
+    Yields ``(live data entries, surviving entries, delete entries)`` per
+    manifest; delete-content entries of a data manifest are returned for
+    the caller to classify. One bound file filter per task."""
 
     def read(items):
         filt = _FileFilter(tm, pred, schema_json)
         debug = _log.isEnabledFor(logging.DEBUG)
-        for path, spec_id, seq, first_row_id, covered in items:
+        for path, spec_id, seq, first_row_id in items:
             spec = tm.partition_specs.get(spec_id, PartitionSpec(spec_id, []))
             entries = mf.read_manifest(_localize(tm, path))
             # row-lineage inheritance runs over the FULL list before
@@ -934,7 +905,7 @@ def _data_manifest_reader(tm: TableMetadata, pred: P.Predicate,
                     deletes.append(e)
                     continue
                 live += 1
-                if not covered and not filt.matches(e, spec):
+                if not filt.matches(e, spec):
                     if debug:
                         _log.debug(
                             "skipped data_file %s: partition column with "
@@ -1005,7 +976,7 @@ def _plan_scan(
                 "match filter %r", m.manifest_path, where)
 
     items = [(m.manifest_path, m.partition_spec_id, m.sequence_number,
-              m.first_row_id, filt.manifest_covers(m))
+              m.first_row_id)
              for m in matching if m.content == mf.MANIFEST_DATA]
     if fanout.on_executors(spark, len(items), tm.location,
                            driver_max=manifest_threshold):

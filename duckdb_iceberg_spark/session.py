@@ -53,7 +53,9 @@ def _socket_dir_base(tmp: str) -> str:
 
 def _socket_dir() -> str:
     """This process's private (mode 0700) socket directory, made on first
-    use and removed at exit."""
+    use and removed at exit. Left unset, Spark binds its sockets in the
+    JVM's ``java.io.tmpdir`` (``/tmp``), and a driver that exits without
+    ``spark.stop()`` leaves a socket file there."""
     global _socket_dir_path
     if _socket_dir_path is None:
         _socket_dir_path = tempfile.mkdtemp(
@@ -185,25 +187,27 @@ def get_spark(
         # 250 ms per task on a 4-vCPU VM). Falls back to Spark's path
         # unless the installed versions match the archives' (see _pydaemon).
         .config("spark.python.daemon.module", "duckdb_iceberg_spark._pydaemon")
-        # the JVM talks to Python workers (and serves local collects and
-        # accumulator updates) over Unix sockets instead of loopback TCP:
-        # over TCP every Python task waited 36-45 ms for its first input
-        # record on a 4-vCPU VM, over a Unix socket no measurable time.
-        # Opt out with extra_conf={"spark.python.unix.domain.socket.enabled":
-        # "false"}.
-        .config("spark.python.unix.domain.socket.enabled", "true")
     )
     scratch = _scratch_dir()
     if scratch:
         b = b.config("spark.local.dir", scratch)
     extra_conf = extra_conf or {}
-    # a local master's executors share this host, so they can use this
-    # process's private directory; elsewhere each JVM's java.io.tmpdir
-    if (master.startswith("local")
-            and str(extra_conf.get("spark.python.unix.domain.socket.enabled",
-                                   "true")).lower() == "true"
-            and "spark.python.unix.domain.socket.dir" not in extra_conf):
-        b = b.config("spark.python.unix.domain.socket.dir", _socket_dir())
+    if master.startswith("local"):
+        # the JVM talks to Python workers (and serves local collects and
+        # accumulator updates) over Unix sockets instead of loopback TCP:
+        # over TCP every Python task waited 36-45 ms for its first input
+        # record on a 4-vCPU VM, over a Unix socket no measurable time.
+        # The sockets go in this process's private directory, whose
+        # socket paths always fit in sun_path. Local masters only: a
+        # cluster executor's java.io.tmpdir (a YARN container dir, say)
+        # can be too long for sun_path, and a failed bind fails every
+        # Python task. Opt out with
+        # extra_conf={"spark.python.unix.domain.socket.enabled": "false"}.
+        b = b.config("spark.python.unix.domain.socket.enabled", "true")
+        if (str(extra_conf.get("spark.python.unix.domain.socket.enabled",
+                               "true")).lower() == "true"
+                and "spark.python.unix.domain.socket.dir" not in extra_conf):
+            b = b.config("spark.python.unix.domain.socket.dir", _socket_dir())
     for k, v in extra_conf.items():
         b = b.config(k, v)
     return b.getOrCreate()
