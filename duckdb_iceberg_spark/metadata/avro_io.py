@@ -13,18 +13,21 @@ subset of Avro 1.11 needed for Iceberg metadata:
   string, fixed, enum, array, map, union, record
 
 Decoding is *writer-schema driven*: each writer schema compiles once into a
-reader (cached) that returns plain dicts; encoding takes a schema dict +
-dicts.
+reader (cached). The record reader returns plain dicts; the columnar
+reader (``read_avro_file(..., raw=names)``, which manifests use) appends
+each record's fields to one list per field and returns a
+:class:`ColumnTable`, so a record costs no dict and a nested record no
+dict either. Encoding takes a schema dict + dicts.
 
-A reader can be compiled with a *projection*: a set of field names whose
+The columnar reader takes a *projection*: a set of field names whose
 contiguous run inside a record is skip-walked instead of decoded and
-returned under the record key :data:`RAW` as one :class:`RawRun` (the
-encoded bytes plus the key of the run's own compiled reader), which
-:func:`decode_run` turns into values later, once, in any process. The manifest
-reader projects the per-column stat maps of ``data_file`` this way
-(Iceberg's key/value arrays: a run whose fields are anything else decodes
-eagerly), so a plan pays for stats only on the entries whose stats a
-predicate reads. Avro data files are always decoded eagerly.
+kept as one ``bytes`` value per record in the column :data:`RAW`, with
+one key per table naming the run's own compiled reader; :func:`decode_run`
+turns ``RawRun(key, bytes)`` into values later, once, in any process.
+The manifest reader projects the per-column stat maps of ``data_file``
+this way (Iceberg's key/value arrays: a run whose fields are anything
+else decodes eagerly), so a plan pays for stats only on the entries whose
+stats a predicate reads. Avro data files are always decoded eagerly.
 """
 
 from __future__ import annotations
@@ -145,23 +148,22 @@ def _is_null(schema: Any) -> bool:
                                 and schema.get("type") == "null")
 
 
-def _compile(schema: Any, run: frozenset = frozenset()):
-    """The reader for one (sub)schema; ``run`` is the projection (field
-    names kept raw, see :func:`_compile_record`)."""
+def _compile(schema: Any):
+    """The reader for one (sub)schema."""
     if isinstance(schema, list):
-        return _compile_union(schema, run)
+        return _compile_union(schema)
     t = schema if isinstance(schema, str) else schema["type"]
     if isinstance(t, (dict, list)):  # {"type": {...}} wrapper
-        return _compile(t, run)
+        return _compile(t)
     prim = _PRIMITIVE_READERS.get(t)
     if prim is not None:
         return prim
     if t == "record":
-        return _compile_record(schema, run)
+        return _compile_record(schema)
     if t == "array":
-        return _compile_array(schema, run)
+        return _compile_array(schema)
     if t == "map":
-        return _compile_map(schema, run)
+        return _compile_map(schema)
     if t == "fixed":
         size = schema["size"]
 
@@ -185,8 +187,8 @@ def _compile(schema: Any, run: frozenset = frozenset()):
     return read_unsupported
 
 
-def _compile_union(schema: list, run: frozenset = frozenset()):
-    branches = [_compile(s, run) for s in schema]
+def _compile_union(schema: list):
+    branches = [_compile(s) for s in schema]
     n = len(branches)
     if n == 2 and (_is_null(schema[0]) or _is_null(schema[1])):
         null_first = _is_null(schema[0])
@@ -201,41 +203,180 @@ def _compile_union(schema: list, run: frozenset = frozenset()):
     return read_union
 
 
-def _compile_record(schema: dict, run: frozenset = frozenset()):
-    """Record reader. When the fields named in ``run`` that the record has
-    are contiguous and all key/value arrays (:func:`_run_field`), that run
-    is skip-walked and returned undecoded as ``rec[RAW]``; otherwise every
-    field decodes."""
-    fields = schema["fields"]
+def _run_bounds(fields: list, run: frozenset) -> tuple[int, int, list]:
+    """``(lo, hi, spec)``: the fields ``fields[lo:hi]`` named in ``run``
+    when they are contiguous and all key/value arrays
+    (:func:`_run_field`), with their run spec; else an empty run at the
+    end of the record."""
     at = [i for i, f in enumerate(fields) if f["name"] in run]
     spec = [_run_field(fields[i]) for i in at]
     if not (at and at[-1] - at[0] == len(at) - 1 and all(spec)):
-        at = []
-    lo, hi = (at[0], at[-1] + 1) if at else (len(fields), len(fields))
-    head = [(f["name"], _compile(f["type"], run)) for f in fields[:lo]]
-    tail = [(f["name"], _compile(f["type"], run)) for f in fields[hi:]]
-    if not at:
-        def read_record(buf, pos):
-            rec = {}
-            for name, read in head:
-                rec[name], pos = read(buf, pos)
-            return rec, pos
-        return read_record
+        return len(fields), len(fields), []
+    return at[0], at[-1] + 1, spec
 
+
+def _compile_run_bytes(spec: list):
+    """``(key, read)``: ``read(buf, pos) -> (the run's bytes, end)``."""
     key = json.dumps(spec, separators=(",", ":")).encode()
     skip = _compile_run_skip(spec)
 
-    def read_record_run(buf, pos):
-        rec = {}
-        for name, read in head:
-            rec[name], pos = read(buf, pos)
+    def read_run_bytes(buf, pos):
         end = skip(buf, pos)
-        rec[RAW] = RawRun(key, buf[pos:end])
-        pos = end
-        for name, read in tail:
+        return buf[pos:end], end
+    return key, read_run_bytes
+
+
+def _compile_record(schema: dict):
+    """Record reader: one dict per record."""
+    fields = [(f["name"], _compile(f["type"])) for f in schema["fields"]]
+
+    def read_record(buf, pos):
+        rec = {}
+        for name, read in fields:
             rec[name], pos = read(buf, pos)
         return rec, pos
-    return read_record_run
+    return read_record
+
+
+def _record_schema(t: Any) -> Optional[dict]:
+    """The record schema a field type names, unwrapped, or None."""
+    while isinstance(t, dict):
+        if t.get("type") == "record":
+            return t
+        t = t.get("type")
+    return None
+
+
+def _compile_tuple(schema: dict):
+    """Reader of a record as the tuple of its field values."""
+    readers = [_compile(f["type"]) for f in schema["fields"]]
+    if len(readers) == 1:
+        [only] = readers
+
+        def read_one(buf, pos):
+            v, pos = only(buf, pos)
+            return (v,), pos
+        return read_one
+
+    def read_tuple(buf, pos):
+        out = []
+        for read in readers:
+            v, pos = read(buf, pos)
+            out.append(v)
+        return tuple(out), pos
+    return read_tuple
+
+
+class _ColumnPlan:
+    """A columnar reader compiled from one writer schema: ``steps`` are
+    ``(column name, read)`` in record order."""
+
+    __slots__ = ("steps", "struct_names", "interned", "run_key")
+
+    def __init__(self, schema: dict, run: frozenset):
+        self.steps: list = []
+        self.struct_names: dict = {}
+        #: tuple columns whose equal values are stored once: those without
+        #: floats, whose -0.0 equals 0.0
+        self.interned: set = set()
+        self.run_key: Optional[bytes] = None
+        self._flatten(schema["fields"], run, nested=False)
+        names = [name for name, _ in self.steps]
+        if len(set(names)) != len(names):
+            raise ValueError(f"avro columns repeat a field name: {names}")
+
+    def _flatten(self, fields: list, run: frozenset, nested: bool) -> None:
+        lo, hi, spec = _run_bounds(fields, run)
+        if spec and self.run_key is not None:
+            raise ValueError("avro schema has more than one projected run")
+        for i, f in enumerate(fields):
+            if i == lo and spec:
+                self.run_key, read = _compile_run_bytes(spec)
+                self.steps.append((RAW, read))
+            if lo <= i < hi:
+                continue
+            rec = _record_schema(f["type"])
+            if rec is None:
+                self.steps.append((f["name"], _compile(f["type"])))
+            elif not nested:
+                self._flatten(rec["fields"], run, nested=True)
+            else:
+                self.struct_names[f["name"]] = tuple(
+                    g["name"] for g in rec["fields"])
+                if not _has_float(rec):
+                    self.interned.add(f["name"])
+                self.steps.append((f["name"], _compile_tuple(rec)))
+
+
+def _has_float(schema: Any) -> bool:
+    if isinstance(schema, str):
+        return schema in ("float", "double")
+    if isinstance(schema, list):
+        return any(_has_float(s) for s in schema)
+    if isinstance(schema, dict):
+        return any(_has_float(v) for k, v in schema.items()
+                   if k in ("type", "fields", "items", "values"))
+    return False
+
+
+def _interning(append):
+    """``append`` that stores one object per distinct hashable value, so
+    the rows of a partition share one tuple (and pickle it once)."""
+    seen: dict = {}
+
+    def add(v):
+        try:
+            v = seen.setdefault(v, v)
+        except TypeError:  # an unhashable value is kept as it is
+            pass
+        append(v)
+    return add
+
+
+class ColumnTable:
+    """Records as columns: ``table[name]`` is the list of one field's
+    values in record order, and ``len(table)`` is the record count.
+
+    Columns are named by field. The fields of a record-typed field of the
+    top-level record (a manifest entry's ``data_file``) are columns of
+    their own, and a record field inside those (``partition``) is one
+    column of tuples, whose field names ``struct_names[name]`` holds. The
+    projected run is the column :data:`RAW` of ``bytes``, each decoded by
+    :func:`decode_run` of ``RawRun(run_key, data)``. A table read from a
+    file is shared by every reader of the cached file: never mutate its
+    lists."""
+
+    __slots__ = ("columns", "struct_names", "run_key", "n")
+
+    def __init__(self, columns: dict, n: int, struct_names: dict,
+                 run_key: Optional[bytes]):
+        self.columns = columns
+        self.n = n
+        self.struct_names = struct_names
+        self.run_key = run_key
+
+    def __len__(self) -> int:
+        return self.n
+
+    def __getitem__(self, name: str) -> list:
+        return self.columns[name]
+
+    def __contains__(self, name: str) -> bool:
+        return name in self.columns
+
+    def get(self, name: str, default=None):
+        return self.columns.get(name, default)
+
+    def take(self, rows: list, names: Iterable[str]) -> "ColumnTable":
+        """A table of the columns in ``names`` that this one has, holding
+        ``rows`` (ascending indexes) of each; all rows share the lists."""
+        cols = self.columns
+        if len(rows) == self.n:
+            out = {name: cols[name] for name in names if name in cols}
+        else:
+            out = {name: [col[i] for i in rows]
+                   for name in names if (col := cols.get(name)) is not None}
+        return ColumnTable(out, len(rows), self.struct_names, self.run_key)
 
 
 def _optional(inner, null_first: bool):
@@ -264,8 +405,8 @@ def _block_count(buf: bytes, pos: int) -> tuple[int, int]:
     return n, pos
 
 
-def _compile_array(schema: dict, run: frozenset = frozenset()):
-    items = _compile(schema["items"], run)
+def _compile_array(schema: dict):
+    items = _compile(schema["items"])
 
     def read_array(buf, pos):
         out = []
@@ -280,8 +421,8 @@ def _compile_array(schema: dict, run: frozenset = frozenset()):
     return read_array
 
 
-def _compile_map(schema: dict, run: frozenset = frozenset()):
-    values = _compile(schema["values"], run)
+def _compile_map(schema: dict):
+    values = _compile(schema["values"])
 
     def read_map(buf, pos):
         out = {}
@@ -297,17 +438,16 @@ def _compile_map(schema: dict, run: frozenset = frozenset()):
 
 # --- projected runs ----------------------------------------------------------
 
-#: record key of a projected run; Avro names cannot start with a dot, so it
-#: never collides with a field name
+#: column name of a projected run; Avro names cannot start with a dot, so
+#: it never collides with a field name
 RAW = ".raw"
 
 
 class RawRun:
     """A run of record fields kept encoded: ``key`` describes the run (see
     :func:`_run_field`; it names, and can rebuild, the run's compiled
-    reader) and ``data`` is the run's bytes. One instance is shared by
-    every reader of a cached record; :func:`decode_run` decodes it once
-    and keeps the values on it (never pickled)."""
+    reader) and ``data`` is the run's bytes. :func:`decode_run` decodes it
+    once and keeps the values on it (never pickled)."""
 
     __slots__ = ("key", "data", "values")
 
@@ -555,11 +695,13 @@ def _nullable(schema: Any) -> bool:
 # container file
 # ---------------------------------------------------------------------------
 
-def read_avro_file(path_or_bytes: str | bytes, raw: Iterable[str] = ()
-                   ) -> tuple[dict, dict[str, bytes], list[dict]]:
-    """Read an Avro OCF. Returns (writer_schema, file_metadata, records).
-    ``raw`` is the projection: field names a record keeps undecoded as one
-    :class:`RawRun` under ``rec[RAW]`` (see :func:`_compile_record`)."""
+def read_avro_file(path_or_bytes: str | bytes,
+                   raw: Optional[Iterable[str]] = None) -> tuple:
+    """Read an Avro OCF. Returns ``(writer_schema, file_metadata,
+    records)``: a list of dicts, or with ``raw`` given a
+    :class:`ColumnTable`. ``raw`` is then the projection: field names
+    kept undecoded as the table's :data:`RAW` column (see
+    :func:`_run_bounds`; an empty projection decodes every field)."""
     if isinstance(path_or_bytes, (bytes, bytearray)):
         data = path_or_bytes
     else:
@@ -581,11 +723,36 @@ def read_avro_file(path_or_bytes: str | bytes, raw: Iterable[str] = ()
     pos += 16
     schema_text = meta["avro.schema"]
     schema = json.loads(schema_text)
-    run = frozenset(raw)
-    read = _cached_reader((schema_text, run), lambda: _compile(schema, run))
+    if raw is None:
+        read = _cached_reader(schema_text, lambda: _compile(schema))
+        out: Any = []
+        append = out.append
+
+        def decode(block, count):
+            bpos = 0
+            for _ in range(count):
+                rec, bpos = read(block, bpos)
+                append(rec)
+            return bpos
+    else:
+        run = frozenset(raw)
+        plan = _cached_reader((schema_text, run),
+                              lambda: _ColumnPlan(schema, run))
+        out = ColumnTable({}, 0, plan.struct_names, plan.run_key)
+        steps = [(read, _interning(out.columns.setdefault(name, []).append)
+                  if name in plan.interned
+                  else out.columns.setdefault(name, []).append)
+                 for name, read in plan.steps]
+
+        def decode(block, count):
+            bpos = 0
+            for _ in range(count):
+                for read, append in steps:
+                    v, bpos = read(block, bpos)
+                    append(v)
+            out.n += count
+            return bpos
     codec = meta.get("avro.codec", b"null").decode()
-    records: list[dict] = []
-    append = records.append
     total = len(data)
     while pos < total:
         count, pos = _read_long(data, pos)
@@ -598,17 +765,14 @@ def read_avro_file(path_or_bytes: str | bytes, raw: Iterable[str] = ()
             block = zlib.decompress(block, -15)
         elif codec != "null":
             raise ValueError(f"unsupported avro codec {codec}")
-        bpos = 0
-        for _ in range(count):
-            rec, bpos = read(block, bpos)
-            append(rec)
+        bpos = decode(block, count)
         if bpos != len(block):  # slicing past the end does not raise
             raise ValueError(f"avro block of {len(block)} bytes decoded "
                              f"as {bpos} bytes of {count} records")
         if data[pos:pos + 16] != sync:
             raise ValueError("avro sync marker mismatch")
         pos += 16
-    return schema, meta, records
+    return schema, meta, out
 
 
 def write_avro_file(

@@ -9,16 +9,24 @@ with partition field_summary) using our pure-Python Avro codec (avro_io.py).
 
 Iceberg's k/v stat "maps" keyed by field-id are Avro arrays of {key,value}
 records (Avro maps require string keys); we encode/decode them as Python
-dicts keyed by int field-id. A manifest read keeps the six of them as one
-undecoded byte run per entry and decodes it on first access (see
-:class:`DataFile`).
+dicts keyed by int field-id.
+
+A manifest decodes into columns (:class:`avro_io.ColumnTable`): one list
+per ``DataFile`` field, the partition values as one tuple per entry and
+the six stat maps as one undecoded byte run per entry. The planner reads
+those columns directly (``read_manifest(path).columns``) and builds no
+object for an entry it prunes; every other caller gets
+:class:`ManifestEntry` items, built from the columns on first access,
+whose stats decode on first read (see :class:`DataFile`).
 """
 
 from __future__ import annotations
 
 import os
 import uuid as _uuid
+from collections.abc import Sequence
 from dataclasses import dataclass, field, fields
+from itertools import repeat
 from operator import attrgetter
 from typing import Any, Optional
 
@@ -53,15 +61,13 @@ MANIFEST_DELETES = 1
 # constant). Bounded LRU; keyed by (path, size, mtime_ns) and ONLY for
 # stat-able local files — tmp-dir tests may rewrite a path in place (the
 # stat guard keeps those honest) and unstat-able object-store paths skip the
-# cache entirely rather than risk a stale path-only hit. Raw records are
-# cached, never the ManifestEntry dataclasses: planning MUTATES entries
-# (sequence-number / first-row-id inheritance), so every call rebuilds fresh
-# dataclasses from the shared immutable records. A manifest's records hold
-# each entry's six stat maps as one undecoded byte run (avro_io's
-# projection), shared by every DataFile built from the record: the cache
-# holds bytes, not nested list/dict trees, and the run decodes (once, kept
-# on the run) only for entries whose stats a predicate reads; each
-# DataFile still gets its own copies. Assumption: an in-place
+# cache entirely rather than risk a stale path-only hit. Decoded columns
+# are cached, never the ManifestEntry dataclasses: callers MUTATE entries
+# (sequence-number / first-row-id inheritance), so every read_manifest
+# call builds fresh entries from the shared, never-mutated columns. The
+# columns hold each entry's six stat maps as one undecoded byte run: the
+# cache holds bytes, not nested list/dict trees, and a run decodes only
+# for entries whose stats are read. Assumption: an in-place
 # same-size rewrite is visible in st_mtime_ns — true on any ns/µs-mtime
 # filesystem; a coarse-mtime fs (1-2s FAT/HFS+) could serve one stale read
 # inside the granularity window, but the Iceberg contract already forbids
@@ -71,8 +77,8 @@ from threading import Lock as _Lock
 
 _AVRO_CACHE: "_OrderedDict[tuple, tuple]" = _OrderedDict()
 _AVRO_CACHE_MAX = 256
-#: r15: ALSO bound the cache by total decoded RECORDS — a manifest entry's
-#: record is a dict of ~15 fields plus its raw stat run, so 256 files x
+#: r15: ALSO bound the cache by total decoded RECORDS — a manifest entry
+#: holds ~15 column values plus its raw stat run, so 256 files x
 #: 1000-entry manifests would still pin hundreds of MB of driver heap; the
 #: record budget keeps the cache O(constant) however large individual
 #: manifests get
@@ -455,12 +461,6 @@ def _as_int_map(v: Any) -> Optional[dict[int, Any]]:
     return {int(e["key"]): e["value"] for e in v}
 
 
-def _decode_partition(raw: Any) -> dict[str, Any]:
-    if raw is None:
-        return {}
-    return dict(raw)
-
-
 def read_manifest_list(path: str) -> list[ManifestFile]:
     _, _, records = _read_avro_cached(path, "manifest list")
     out = []
@@ -503,9 +503,9 @@ def _read_avro_clean(path: str, what: str):
     file — a damaged table must fail with a diagnosis, not an IndexError
     from the varint decoder (spirit of the reference's bad-data tests)."""
     try:
-        # a manifest's entries keep their stat maps undecoded until read
+        # a manifest decodes into columns, its stat maps left undecoded
         return avro_io.read_avro_file(
-            path, raw=_LAZY_STATS if what == "manifest" else ())
+            path, raw=_LAZY_STATS if what == "manifest" else None)
     except (FileNotFoundError, PermissionError):
         raise
     except Exception as e:
@@ -513,69 +513,164 @@ def _read_avro_clean(path: str, what: str):
                          f"(corrupt or not Avro: {e})") from e
 
 
-def read_manifest(path: str) -> list[ManifestEntry]:
-    _, _, records = _read_avro_cached(path, "manifest")
+class ManifestEntries(Sequence):
+    """A manifest's entries. ``columns`` is the manifest's
+    :class:`avro_io.ColumnTable`, shared with the manifest cache; the
+    :class:`ManifestEntry` items are built from it on first access, once
+    per read, so callers may mutate them. Compares equal to a list of the
+    same entries and pickles as that list."""
+
+    __slots__ = ("columns", "_entries")
+
+    def __init__(self, columns: avro_io.ColumnTable):
+        self.columns = columns
+        self._entries: Optional[list[ManifestEntry]] = None
+
+    def _list(self) -> list[ManifestEntry]:
+        if self._entries is None:
+            self._entries = manifest_entries(self.columns)
+        return self._entries
+
+    def __len__(self) -> int:
+        return len(self.columns)
+
+    def __getitem__(self, i):
+        return self._list()[i]
+
+    def __iter__(self):
+        return iter(self._list())
+
+    def __eq__(self, other) -> bool:
+        if isinstance(other, ManifestEntries):
+            other = other._list()
+        if not isinstance(other, list):
+            return NotImplemented
+        return self._list() == other
+
+    def __reduce__(self):
+        return list, (self._list(),)
+
+    def __repr__(self) -> str:
+        return repr(self._list())
+
+
+def read_manifest(path: str) -> ManifestEntries:
+    _, _, columns = _read_avro_cached(path, "manifest")
+    return ManifestEntries(columns)
+
+
+def column(cols: avro_io.ColumnTable, name: str, default: Any = None
+           ) -> list:
+    """Column ``name``, or ``default`` for every row when the writer
+    schema has no such field."""
+    col = cols.get(name)
+    return [default] * len(cols) if col is None else col
+
+
+#: the columns a manifest read keeps for a planned data file: the
+#: ``DataFile`` fields, the stat run and the entry's sequence number
+TASK_COLUMNS = tuple(f.name for f in fields(_DataFileFields)) + (
+    avro_io.RAW, "sequence_number")
+
+
+def data_files(cols: avro_io.ColumnTable) -> list[DataFile]:
+    """A :class:`DataFile` per row. A row's stats are, by its stat-run
+    value: ``bytes``, one undecoded run shared by the six slots; a tuple
+    of the six maps in :data:`_LAZY_STATS` order (decoded already); None
+    or no run column, the maps of the eagerly decoded stat columns, or
+    None."""
+    names = cols.struct_names.get("partition", ())
+    key = cols.run_key
+    stat_cols = [cols.get(name) for name in _LAZY_STATS]
+    eager = (zip(*(repeat(None) if c is None else map(_as_int_map, c)
+                   for c in stat_cols))
+             if any(c is not None for c in stat_cols)
+             else repeat((None,) * 6))
     out = []
-    for r in records:
-        df = r["data_file"]
-        raw = df.get(avro_io.RAW)
-        if raw is None:  # a stats layout the projection leaves eager
-            cs, vc, nc, nan, lo, hi = (_as_int_map(df.get(name))
-                                       for name in _LAZY_STATS)
-        else:
-            cs = vc = nc = nan = lo = hi = raw
-        data_file = _DataFileFields(
-            content=df.get("content", 0) or 0,
-            file_path=df["file_path"],
-            file_format=df.get("file_format", "PARQUET"),
-            partition=_decode_partition(df.get("partition")),
-            record_count=df.get("record_count", 0) or 0,
-            file_size_in_bytes=df.get("file_size_in_bytes", 0) or 0,
-            column_sizes=cs,
-            value_counts=vc,
-            null_value_counts=nc,
-            nan_value_counts=nan,
-            lower_bounds=lo,
-            upper_bounds=hi,
-            key_metadata=df.get("key_metadata"),
-            split_offsets=df.get("split_offsets"),
-            equality_ids=df.get("equality_ids"),
-            sort_order_id=df.get("sort_order_id"),
-            referenced_data_file=df.get("referenced_data_file"),
-            content_offset=df.get("content_offset"),
-            content_size_in_bytes=df.get("content_size_in_bytes"),
-            first_row_id=df.get("first_row_id"))
-        data_file.__class__ = DataFile  # as _data_file does
-        out.append(ManifestEntry(
-            status=r.get("status", STATUS_ADDED),
-            snapshot_id=r.get("snapshot_id"),
-            sequence_number=r.get("sequence_number"),
-            file_sequence_number=r.get("file_sequence_number"),
-            data_file=data_file))
+    append = out.append
+    for (content, path, fmt, partition, count, size, raw, (
+            cs, vc, nc, nan, lo, hi), key_md, splits, eq_ids, sort_id, ref,
+            offset, content_size, first_row_id) in zip(
+            column(cols, "content"), cols["file_path"],
+            column(cols, "file_format", "PARQUET"),
+            column(cols, "partition"), column(cols, "record_count"),
+            column(cols, "file_size_in_bytes"), column(cols, avro_io.RAW),
+            eager, *(column(cols, name) for name in (
+                "key_metadata", "split_offsets", "equality_ids",
+                "sort_order_id", "referenced_data_file", "content_offset",
+                "content_size_in_bytes", "first_row_id"))):
+        if type(raw) is bytes:
+            cs = vc = nc = nan = lo = hi = avro_io.RawRun(key, raw)
+        elif raw is not None:
+            cs, vc, nc, nan, lo, hi = raw
+        df = _DataFileFields(
+            content or 0, path, fmt,
+            dict(zip(names, partition)) if partition else {},
+            count or 0, size or 0, cs, vc, nc, nan, lo, hi, key_md, splits,
+            eq_ids, sort_id, ref, offset, content_size, first_row_id)
+        df.__class__ = DataFile  # as _data_file does
+        append(df)
+    return out
+
+
+def manifest_entries(cols: avro_io.ColumnTable) -> list[ManifestEntry]:
+    """A :class:`ManifestEntry` per row of a manifest's columns."""
+    return [ManifestEntry(status, snapshot_id, seq, file_seq, df)
+            for status, snapshot_id, seq, file_seq, df in zip(
+                column(cols, "status", STATUS_ADDED),
+                column(cols, "snapshot_id"),
+                column(cols, "sequence_number"),
+                column(cols, "file_sequence_number"), data_files(cols))]
+
+
+def row_stats(cols: avro_io.ColumnTable, i: int) -> tuple:
+    """Row ``i``'s six stat maps in :data:`_LAZY_STATS` order, decoded
+    from its stat run (or its eagerly decoded stat columns) on every
+    call."""
+    raw = cols.get(avro_io.RAW)
+    if raw is not None:
+        values = avro_io.decode_run(avro_io.RawRun(cols.run_key, raw[i]))
+        return tuple(values.get(name) for name in _LAZY_STATS)
+    return tuple(None if (c := cols.get(name)) is None else _as_int_map(c[i])
+                 for name in _LAZY_STATS)
+
+
+def inherited_first_row_ids(status, content, record_count, first_row_id,
+                            manifest_first_row_id: Optional[int]) -> list:
+    """v3 row-lineage inheritance (Iceberg spec 'Row Lineage' / 'First Row
+    ID Inheritance') over a manifest's columns, in manifest order: an
+    ADDED data entry whose ``first_row_id`` is null inherits the
+    manifest's first_row_id plus the cumulative record_count of the
+    *preceding inherited* (null first_row_id) ADDED data files in the
+    manifest — files carrying an explicit first_row_id do NOT advance the
+    running offset (reference: bound_iceberg_manifest_list_entry.cpp
+    BindEntry, which bumps next_row_id only when the entry's id was
+    inherited). Must see the FULL manifest, BEFORE any filtering —
+    dropping earlier entries would shift the running offsets. Returns the
+    new ``first_row_id`` column."""
+    out = list(first_row_id)
+    if manifest_first_row_id is None:
+        return out
+    rid = manifest_first_row_id
+    for i, (s, c, n) in enumerate(zip(status, content, record_count)):
+        if s == STATUS_ADDED and not c and out[i] is None:
+            out[i] = rid
+            rid += n or 0
     return out
 
 
 def inherit_first_row_ids(entries: list[ManifestEntry],
                           manifest_first_row_id: Optional[int]) -> None:
-    """v3 row-lineage inheritance (Iceberg spec 'Row Lineage' / 'First Row
-    ID Inheritance'): an ADDED data entry whose data_file.first_row_id is
-    null inherits the manifest's first_row_id plus the cumulative
-    record_count of the *preceding inherited* (null first_row_id) ADDED data
-    files in the manifest — files carrying an explicit first_row_id do NOT
-    advance the running offset (reference:
-    bound_iceberg_manifest_list_entry.cpp BindEntry, which bumps next_row_id
-    only when the entry's id was inherited). Must be called on the FULL
-    entry list in manifest order, BEFORE any filtering — dropping earlier
-    entries would shift the running offsets."""
+    """:func:`inherited_first_row_ids` applied to ``entries`` in place."""
     if manifest_first_row_id is None:
         return
-    rid = manifest_first_row_id
-    for e in entries:
-        if e.status != STATUS_ADDED or e.data_file.content != CONTENT_DATA:
-            continue
-        if e.data_file.first_row_id is None:
-            e.data_file.first_row_id = rid
-            rid += e.data_file.record_count
+    dfs = [e.data_file for e in entries]
+    ids = inherited_first_row_ids(
+        (e.status for e in entries), (df.content for df in dfs),
+        (df.record_count for df in dfs), (df.first_row_id for df in dfs),
+        manifest_first_row_id)
+    for df, rid in zip(dfs, ids):
+        df.first_row_id = rid
 
 
 # ---------------------------------------------------------------------------

@@ -6,9 +6,9 @@ per-manifest batches (``iceberg_multi_file_list.cpp:437-498``; benchmarks
 answer: manifest pruning stays on the driver (the manifest LIST is one
 small Avro file holding the partition summaries), then the surviving data
 manifests are read and file-pruned in parallel on executors — each task
-decodes its manifests with the pure-Python Avro reader, applies the same
-bound file filter and ships back only the surviving entries, one pickled
-blob per manifest. The pipeline is the driver planner's own
+decodes its manifests into columns with the pure-Python Avro reader,
+applies the same bound file filter and ships back only the surviving
+entries' columns, one pickled blob per manifest. The pipeline is the driver planner's own
 (``scan_plan._plan_scan``), given a Spark session."""
 
 from __future__ import annotations
@@ -36,11 +36,10 @@ def plan_scan_distributed(
     file-pruned on executors once more than ``manifest_threshold``
     (default ``fanout.DRIVER_MAX``) survive manifest pruning.
 
-    ``lean=True`` strips per-column stat maps from surviving entries ON
-    THE EXECUTOR, before they are pickled back: the driver's task list
-    then carries only read-relevant fields (~3x smaller at 1e6 entries),
-    and the collect ships ~3x fewer bytes. Pruning still sees full
-    stats — the strip happens after file pruning."""
+    ``lean=True`` leaves the stat-run column out of the surviving
+    entries' columns ON THE EXECUTOR, before they are pickled back: the
+    collect ships fewer bytes and the driver's tasks carry only
+    read-relevant fields. Pruning still sees full stats."""
     with ice_types.pinned_time_flag():
         return _plan_scan(tm, snapshot, where, spark=spark,
                           manifest_threshold=manifest_threshold,

@@ -17,6 +17,17 @@ Scale notes (100 TB design):
   above ``fanout.DRIVER_MAX`` surviving data manifests a planner given a
   Spark session (``plan_scan_distributed``) reads and file-prunes them in
   one Spark job and the driver stays O(#manifests + surviving entries).
+- the plan is columnar, like the reference's late materialization
+  (benchmark/metadata_late_materialization/): a manifest decodes into
+  per-field columns (``mf.read_manifest(path).columns``), sequence-number
+  and row-lineage inheritance and the live/deleted split run over those
+  columns, and file pruning evaluates a row of them — its partition half
+  once per distinct partition tuple, its stats decoded from the row's raw
+  stat run only when a predicate leaf needs them. The surviving rows
+  travel (and, on executors, pickle) as a few lists per manifest, and
+  ``ScanPlan.tasks`` builds its ``FileScanTask`` objects on first access:
+  ``len``, the row counts and ``has_deletes`` of a plan with no delete
+  files never build one.
 """
 
 from __future__ import annotations
@@ -25,10 +36,12 @@ import dataclasses
 import datetime as _dt
 import logging
 import os
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 from decimal import Decimal
 from typing import Any, Optional
 
+from ..metadata import avro_io
 from ..metadata import manifest as mf
 
 #: per-event scan-planning log, the analogue of the reference's
@@ -59,11 +72,65 @@ class FileScanTask:
         return bool(self.positional_deletes or self.equality_deletes)
 
 
+class _PlannedTasks(Sequence):
+    """A planner's tasks, kept as the columns of the surviving entries:
+    one ``(spec id, ColumnTable of mf.TASK_COLUMNS)`` per data manifest.
+    ``len`` and, when no delete file may apply, the row counts read the
+    columns. The first index or iteration builds every
+    :class:`FileScanTask` once (:func:`_assemble_tasks`: path
+    localization and delete attachment) and keeps the list, so a change
+    made to a task sticks."""
+
+    __slots__ = ("_chunks", "_n", "_build", "may_delete", "_tasks")
+
+    def __init__(self, chunks: list, build, may_delete: bool):
+        self._chunks = chunks
+        self._n = sum(len(cols) for _, cols in chunks)
+        self._build = build
+        self.may_delete = may_delete
+        self._tasks: Optional[list[FileScanTask]] = None
+
+    def _list(self) -> list[FileScanTask]:
+        if self._tasks is None:
+            self._tasks = self._build(self._chunks)
+            self._chunks = self._build = None
+        return self._tasks
+
+    def record_counts(self):
+        """Each task's record count, from the columns until built."""
+        if self._tasks is not None:
+            return (t.data_file.record_count for t in self._tasks)
+        return (n or 0 for _, cols in self._chunks
+                for n in cols["record_count"])
+
+    def __len__(self) -> int:
+        return self._n if self._tasks is None else len(self._tasks)
+
+    def __getitem__(self, i):
+        return self._list()[i]
+
+    def __iter__(self):
+        return iter(self._list())
+
+    def __eq__(self, other) -> bool:
+        if isinstance(other, _PlannedTasks):
+            other = other._list()
+        if not isinstance(other, list):
+            return NotImplemented
+        return self._list() == other
+
+    def __reduce__(self):
+        return list, (self._list(),)
+
+    def __repr__(self) -> str:
+        return repr(self._list())
+
+
 @dataclass
 class ScanPlan:
     tm: TableMetadata
     snapshot: Optional[Snapshot]
-    tasks: list[FileScanTask]
+    tasks: Sequence[FileScanTask]
     residual: Optional[str]
     schema_id: Optional[int]
     stats: dict = field(default_factory=dict)
@@ -78,16 +145,26 @@ class ScanPlan:
     def spark_schema(self):
         return ice_types.schema_to_struct(self.schema_json)
 
+    def _task_rows(self):
+        """``(record count, delete files)`` per task; the columns of a
+        planner's unbuilt tasks answer when no delete file may apply."""
+        tasks = self.tasks
+        if isinstance(tasks, _PlannedTasks) and not tasks.may_delete:
+            return ((n, ()) for n in tasks.record_counts())
+        return ((t.data_file.record_count,
+                 [*t.positional_deletes, *(d for _, d in t.equality_deletes)])
+                for t in tasks)
+
     @property
     def has_deletes(self) -> bool:
-        return any(t.has_deletes for t in self.tasks)
+        return any(deletes for _, deletes in self._task_rows())
 
     def exact_row_count(self) -> Optional[int]:
         """count(*) from metadata when no deletes apply
         (reference: iceberg_multi_file_list.cpp:395-427)."""
         if self.residual or self.has_deletes:
             return None
-        return sum(t.data_file.record_count for t in self.tasks)
+        return sum(n for n, _ in self._task_rows())
 
     def estimated_row_count(self) -> int:
         """Cardinality ESTIMATE, valid even when deletes apply (reference:
@@ -102,16 +179,13 @@ class ScanPlan:
         prunes their referenced files, an estimate otherwise (a delete row
         may target a pruned file; equality-delete rows remove ≥0 rows
         each)."""
-        total = sum(t.data_file.record_count for t in self.tasks)
+        total = 0
         # delete file -> (its row count, rows of kept tasks it applies to)
         scope: dict[str, list[int]] = {}
-        for t in self.tasks:
-            rows = int(t.data_file.record_count or 0)
-            for d in t.positional_deletes:
-                ent = scope.setdefault(d.file_path,
-                                       [int(d.record_count or 0), 0])
-                ent[1] += rows
-            for _, d in t.equality_deletes:
+        for n, deletes in self._task_rows():
+            total += n
+            rows = int(n or 0)
+            for d in deletes:
                 ent = scope.setdefault(d.file_path,
                                        [int(d.record_count or 0), 0])
                 ent[1] += rows
@@ -315,53 +389,96 @@ class _FileFilter:
             return True
         parts, part_pred, _ = self._bind_spec(spec)
         summaries = manifest.partitions
+        data = manifest.content == mf.MANIFEST_DATA
         by_col = {}
         for k, (i, _, src_name, rt, _, _) in enumerate(parts):
             summ = summaries[i]
+            # a summary with nulls and no bounds: every value is NULL (or
+            # NaN, which only a float can hold), as file pruning already
+            # assumes of a null partition value. Not for delete
+            # manifests: a delete file with a null partition value applies
+            # to every partition (_partitions_overlap)
+            all_null = (data and summ.contains_null
+                        and summ.lower_bound is None
+                        and summ.upper_bound is None
+                        and isinstance(rt, str)
+                        and ice_types.primitive_name(rt)
+                        not in ("float", "double"))
             st = P.ColumnStats(
                 lower=ice_types.decode_bound(rt, summ.lower_bound) if rt else None,
                 upper=ice_types.decode_bound(rt, summ.upper_bound) if rt else None,
                 contains_null=summ.contains_null,
                 contains_nan=summ.contains_nan,
+                all_null=all_null,
             )
             by_col[src_name] = (st, k)
         return part_pred(by_col)
 
     def matches(self, entry: mf.ManifestEntry, spec: PartitionSpec) -> bool:
-        if self.pred is None:
-            return True
+        """Whether one entry's file may hold matching rows."""
         df = entry.data_file
+        return bool(self.keep_rows(
+            spec, tuple(df.partition), [tuple(df.partition.values())],
+            lambda i: tuple(getattr(df, name) for name in mf._LAZY_STATS),
+            [0]))
 
-        # 1. partition-value pruning (exact, transformed space); when two
-        # partition fields share a source column the last one wins
-        memo = {}
+    def keep_rows(self, spec: PartitionSpec, names: tuple, partitions,
+                  stats_of, rows, decoded: Optional[dict] = None) -> list:
+        """The rows of ``rows`` whose file may hold matching rows. Row
+        ``i`` has the partition tuple ``partitions[i]`` (fields named
+        ``names``) and the six stat maps ``stats_of(i)`` (in
+        ``mf._LAZY_STATS`` order), asked for only when a predicate leaf
+        needs them; ``decoded`` collects those per row.
+
+        1. Partition values prune exactly, in transformed space; when two
+           partition fields share a source column the last one wins. This
+           depends only on the partition tuple, so it runs once per
+           distinct tuple, and so does a whole verdict that read no stats.
+        2. Column stats prune in source space. A non-null identity
+           partition value stands in for its column's stats."""
+        if self.pred is None:
+            return list(rows)
         parts, part_pred, exact = self._bind_spec(spec)
-        if parts:
-            partition = df.partition
-            by_col = {}
-            for k, (_, name, src_name, rt, _, _) in enumerate(parts):
-                if name in partition:
-                    v = _norm_partition_value(partition[name], rt)
-                    st = P.ColumnStats(lower=v, upper=v,
-                                       contains_null=v is None,
-                                       all_null=v is None)
-                    by_col[src_name] = (st, k)
-                    if k in exact and v is not None:
-                        memo[src_name] = st  # every row holds v
-            if by_col and not part_pred(by_col):
-                return False
+        at = {name: j for j, name in enumerate(names)}
+        bound = [(k, at[name], src_name, rt)
+                 for k, (_, name, src_name, rt, _, _) in enumerate(parts)
+                 if name in at]
+        coerced = self.coerced
+        column_stats = self._column_stats
+        by_tuple: dict = {}
+        kept = []
+        for i in rows:
+            values = partitions[i]
+            ent = by_tuple.get(values)
+            if ent is None:
+                ent = by_tuple[values] = _partition_verdict(
+                    bound, part_pred, exact, values)
+            verdict, memo = ent
+            if verdict is None:
+                row: dict = {}
+                stats = None
 
-        # 2. column-stat pruning in source space
+                def stats_for(col):
+                    nonlocal stats
+                    st = memo.get(col, _UNSET)
+                    if st is _UNSET:
+                        st = row.get(col, _UNSET)
+                        if st is _UNSET:
+                            if stats is None:
+                                stats = stats_of(i)
+                                if decoded is not None:
+                                    decoded[i] = stats
+                            st = row[col] = column_stats(stats, col)
+                    return st
+                verdict = P.match_bounds(coerced, stats_for)
+                if not row:  # decided by the partition tuple alone
+                    ent[0] = verdict
+            if verdict:
+                kept.append(i)
+        return kept
 
-        def stats_for(col) -> Optional[P.ColumnStats]:
-            st = memo.get(col, _UNSET)
-            if st is _UNSET:
-                st = memo[col] = self._column_stats(df, col)
-            return st
-
-        return P.match_bounds(self.coerced, stats_for)
-
-    def _column_stats(self, df: mf.DataFile, col) -> Optional[P.ColumnStats]:
+    def _column_stats(self, stats: tuple, col) -> Optional[P.ColumnStats]:
+        _, value_counts, null_counts, _, lower_bounds, upper_bounds = stats
         if isinstance(col, P.VariantRef):
             # shredded-variant bounds: the variant column's lower/upper blobs
             # are serialized variant OBJECTS keyed by JSON path (reference:
@@ -375,10 +492,10 @@ class _FileFilter:
             fid = f["id"]
             lower = upper = None
             try:
-                if df.lower_bounds and fid in df.lower_bounds:
-                    lower = ice_variant.decode_bounds(df.lower_bounds[fid]).get(col.path)
-                if df.upper_bounds and fid in df.upper_bounds:
-                    upper = ice_variant.decode_bounds(df.upper_bounds[fid]).get(col.path)
+                if lower_bounds and fid in lower_bounds:
+                    lower = ice_variant.decode_bounds(lower_bounds[fid]).get(col.path)
+                if upper_bounds and fid in upper_bounds:
+                    upper = ice_variant.decode_bounds(upper_bounds[fid]).get(col.path)
             except (ValueError, IndexError, KeyError, UnicodeDecodeError):
                 return None  # undecodable bounds: conservative
             if lower is None and upper is None:
@@ -397,12 +514,12 @@ class _FileFilter:
             # rows the mapping makes NULL (column_mapping_delete.test)
             return None
         lower = upper = None
-        if df.lower_bounds and fid in df.lower_bounds:
-            lower = ice_types.decode_bound(f["type"], df.lower_bounds[fid])
-        if df.upper_bounds and fid in df.upper_bounds:
-            upper = ice_types.decode_bound(f["type"], df.upper_bounds[fid])
-        nulls = (df.null_value_counts or {}).get(fid)
-        values = (df.value_counts or {}).get(fid)
+        if lower_bounds and fid in lower_bounds:
+            lower = ice_types.decode_bound(f["type"], lower_bounds[fid])
+        if upper_bounds and fid in upper_bounds:
+            upper = ice_types.decode_bound(f["type"], upper_bounds[fid])
+        nulls = (null_counts or {}).get(fid)
+        values = (value_counts or {}).get(fid)
         if lower is None and upper is None and nulls is None:
             return None
         contains_null = nulls is None or nulls > 0
@@ -481,6 +598,26 @@ def _compile_transformed(pred: P.Predicate, parts: list):
             return True
         return P.match_bounds(tp, lambda c: st if c == col else None)
     return leaf
+
+
+def _partition_verdict(bound: list, part_pred, exact: set,
+                       values: tuple) -> list:
+    """``[False, memo]`` when a partition tuple prunes its files, else
+    ``[None, memo]`` (undecided); ``memo`` maps the source column of each
+    exact identity field with a non-null value to its stats. ``bound``
+    holds ``(index into parts, index into values, source column, result
+    type)``."""
+    by_col, memo = {}, {}
+    for k, j, src_name, rt in bound:
+        v = _norm_partition_value(values[j], rt)
+        st = P.ColumnStats(lower=v, upper=v, contains_null=v is None,
+                           all_null=v is None)
+        by_col[src_name] = (st, k)
+        if k in exact and v is not None:
+            memo[src_name] = st  # every row holds v
+    if by_col and not part_pred(by_col):
+        return [False, memo]
+    return [None, memo]
 
 
 def _unmapped_field_ids(tm: TableMetadata) -> frozenset:
@@ -741,8 +878,19 @@ def strip_file_stats(df: "mf.DataFile") -> "mf.DataFile":
     stats were never decoded loses its raw run undecoded."""
     if df.split_offsets is None and all(
             v is None for v in mf.stored_stats(df)):
-        return df  # already stripped (by the manifest reader, before pickling)
+        return df  # already stripped
     return dataclasses.replace(df, **dict.fromkeys(_STAT_FIELDS))
+
+
+#: the task columns a lean plan leaves out: the stat maps and the split
+#: offsets, which nothing reads once a file is planned in
+_LEAN_DROPS = frozenset(_STAT_FIELDS + (avro_io.RAW,))
+
+#: data-file formats the scan reads: the reference refuses everything
+#: non-parquet (iceberg_multi_file_list.cpp:528-529); we additionally read
+#: ORC through Spark's native source and Avro data files through the
+#: arrow plane's pure-Python codec (r12)
+_DATA_FORMATS = ("parquet", "orc", "avro")
 
 
 def _check_delete_format(d: mf.DataFile) -> None:
@@ -791,72 +939,72 @@ def _live_entries(entries, manifest_seq: Optional[int]):
         yield e
 
 
-def _assemble_tasks(tm: TableMetadata, entries, pos_deletes: list,
-                    eq_deletes: list, filt: _FileFilter, *,
-                    lean: bool = False) -> list[FileScanTask]:
-    """FileScanTasks for the ``(entry, spec_id)`` data entries that
-    survived file pruning: data-format check, path localization and
-    delete attachment (equality deletes are pruned through the plan's
-    ``filt``)."""
+def _check_data_formats(chunks: list) -> None:
+    for _, cols in chunks:
+        for fmt in set(mf.column(cols, "file_format", "PARQUET")):
+            if (fmt or "PARQUET").lower() not in _DATA_FORMATS:
+                raise NotImplementedError(
+                    f"File format '{fmt}' not supported, "
+                    "only supports 'parquet', 'orc' and 'avro' currently")
+
+
+def _assemble_tasks(tm: TableMetadata, chunks: list, pos_deletes: list,
+                    eq_deletes: list, filt: _FileFilter,
+                    lean: bool) -> list[FileScanTask]:
+    """FileScanTasks for the surviving data entries, given per data
+    manifest as ``(spec id, columns)``: path localization and delete
+    attachment (equality deletes are pruned through the plan's ``filt``;
+    a lean plan's delete files lose their stats)."""
     from ..io import normalize_path
 
     has_deletes = bool(pos_deletes or eq_deletes)
     pos_idx = _DeleteIndex(pos_deletes)
     eq_idx = _DeleteIndex(eq_deletes)
     tasks: list[FileScanTask] = []
-    for e, spec_id in entries:
-        fmt = (e.data_file.file_format or "PARQUET").lower()
-        if fmt not in ("parquet", "orc", "avro"):
-            # reference refuses everything non-parquet
-            # (iceberg_multi_file_list.cpp:528-529); we additionally read
-            # ORC through Spark's native source and Avro data files
-            # through the arrow plane's pure-Python codec (r12)
-            raise NotImplementedError(
-                f"File format '{e.data_file.file_format}' not supported, "
-                "only supports 'parquet', 'orc' and 'avro' currently")
-        orig_path = e.data_file.file_path
-        e.data_file.file_path = _localize(tm, e.data_file.file_path)
-        task = FileScanTask(
-            data_file=(strip_file_stats(e.data_file) if lean
-                       else e.data_file),
-            sequence_number=e.sequence_number or 0,
-            spec_id=spec_id,
-            first_row_id=e.data_file.first_row_id,
-        )
-        tasks.append(task)
-        if not has_deletes:
-            continue
-        data_paths = (orig_path, e.data_file.file_path)
-        data_seq = e.sequence_number or 0
-        norm_paths = {normalize_path(p) for p in data_paths}
-        for de, dspec in pos_idx.candidates(e, spec_id, norm_paths):
-            # positional deletes apply at delete.seq >= data.seq
-            # (reference: iceberg_file_pruner.cpp:340-356)
-            if (de.sequence_number or 0) >= data_seq \
-                    and _partitions_overlap(e, de, spec_id, dspec, data_paths) \
-                    and _pos_delete_path_overlap(de, data_paths):
-                df2 = de.data_file
-                _check_delete_format(df2)
-                df2.file_path = _localize(tm, df2.file_path)
-                if df2.referenced_data_file:
-                    # keep the DV ref joinable against the localized scan
-                    # file column (moved tables record relative refs)
-                    df2.referenced_data_file = _localize(
-                        tm, df2.referenced_data_file)
-                task.positional_deletes.append(
-                    strip_file_stats(df2) if lean else df2)
-        for de, dspec in eq_idx.candidates(e, spec_id, norm_paths):
-            # equality deletes apply strictly after: delete.seq > data.seq
-            if (de.sequence_number or 0) > data_seq \
-                    and _partitions_overlap(e, de, spec_id, dspec, data_paths) \
-                    and _eq_delete_bounds_overlap(e, de, filt.fields_by_id) \
-                    and filt.eq_delete_matches(de):
-                df2 = de.data_file
-                _check_delete_format(df2)
-                df2.file_path = _localize(tm, df2.file_path)
-                task.equality_deletes.append(
-                    ((de.sequence_number or 0),
-                     strip_file_stats(df2) if lean else df2))
+    for spec_id, cols in chunks:
+        for df, seq in zip(mf.data_files(cols), cols["sequence_number"]):
+            orig_path = df.file_path
+            df.file_path = _localize(tm, orig_path)
+            task = FileScanTask(df, seq or 0, spec_id,
+                                first_row_id=df.first_row_id)
+            tasks.append(task)
+            if not has_deletes:
+                continue
+            data_paths = (orig_path, df.file_path)
+            data_seq = seq or 0
+            norm_paths = {normalize_path(p) for p in data_paths}
+            for de, dspec in pos_idx.candidates(task, spec_id, norm_paths):
+                # positional deletes apply at delete.seq >= data.seq
+                # (reference: iceberg_file_pruner.cpp:340-356)
+                if (de.sequence_number or 0) >= data_seq \
+                        and _partitions_overlap(task, de, spec_id, dspec,
+                                                data_paths) \
+                        and _pos_delete_path_overlap(de, data_paths):
+                    df2 = de.data_file
+                    _check_delete_format(df2)
+                    df2.file_path = _localize(tm, df2.file_path)
+                    if df2.referenced_data_file:
+                        # keep the DV ref joinable against the localized
+                        # scan file column (moved tables record relative
+                        # refs)
+                        df2.referenced_data_file = _localize(
+                            tm, df2.referenced_data_file)
+                    task.positional_deletes.append(
+                        strip_file_stats(df2) if lean else df2)
+            for de, dspec in eq_idx.candidates(task, spec_id, norm_paths):
+                # equality deletes apply strictly after: delete.seq > data.seq
+                if (de.sequence_number or 0) > data_seq \
+                        and _partitions_overlap(task, de, spec_id, dspec,
+                                                data_paths) \
+                        and _eq_delete_bounds_overlap(task, de,
+                                                      filt.fields_by_id) \
+                        and filt.eq_delete_matches(de):
+                    df2 = de.data_file
+                    _check_delete_format(df2)
+                    df2.file_path = _localize(tm, df2.file_path)
+                    task.equality_deletes.append(
+                        ((de.sequence_number or 0),
+                         strip_file_stats(df2) if lean else df2))
     return tasks
 
 
@@ -872,10 +1020,11 @@ def plan_scan(
     _plan_scan; the TimeType capability probe is pinned for the pass so
     the per-bound decode loops don't pay a py4j conf round trip per file).
 
-    ``lean=True`` strips per-column stats from planned tasks
-    (:func:`strip_file_stats`) — the scan/read path never consults them
-    after pruning; callers that DO (scan_order's bound-ordered reads,
-    statistics aggregation) must plan without it."""
+    ``lean=True`` plans tasks without per-column stats or split offsets
+    (the manifest reader does not keep them past file pruning) — the
+    scan/read path never consults them after pruning; callers that DO
+    (scan_order's bound-ordered reads, statistics aggregation) must plan
+    without it."""
     with ice_types.pinned_time_flag():
         return _plan_scan(tm, snapshot, where,
                           snapshot_schema=snapshot_schema, lean=lean)
@@ -885,42 +1034,76 @@ def _data_manifest_reader(tm: TableMetadata, pred: P.Predicate,
                           schema_json: dict, where: str | None, lean: bool):
     """Per-task function for :func:`fanout.map_items` over the data
     manifests' ``(path, spec id, sequence number, first row id)`` items.
-    Yields ``(live data entries, surviving entries, delete entries)`` per
-    manifest; delete-content entries of a data manifest are returned for
-    the caller to classify. One bound file filter per task."""
+    Yields ``(live data entries, kept, delete entries)`` per manifest:
+    ``kept`` holds the surviving rows' ``mf.TASK_COLUMNS`` (none of
+    :data:`_LEAN_DROPS` when ``lean``), with inherited sequence numbers
+    and first row ids, or is None; delete-content entries of a data
+    manifest come as :class:`mf.ManifestEntry` objects for the caller to
+    classify. One bound file filter per task."""
+    names = [c for c in mf.TASK_COLUMNS if not (lean and c in _LEAN_DROPS)]
+    deleted, deletes_content = mf.STATUS_DELETED, (
+        mf.CONTENT_POSITION_DELETES, mf.CONTENT_EQUALITY_DELETES)
 
     def read(items):
         filt = _FileFilter(tm, pred, schema_json)
         debug = _log.isEnabledFor(logging.DEBUG)
         for path, spec_id, seq, first_row_id in items:
             spec = tm.partition_specs.get(spec_id, PartitionSpec(spec_id, []))
-            entries = mf.read_manifest(_localize(tm, path))
-            # row-lineage inheritance runs over the FULL list before
-            # pruning — offsets depend on every preceding ADDED entry
-            mf.inherit_first_row_ids(entries, first_row_id)
-            live, kept, deletes = 0, [], []
-            for e in _live_entries(entries, seq):
-                if e.data_file.content in (mf.CONTENT_POSITION_DELETES,
-                                           mf.CONTENT_EQUALITY_DELETES):
-                    deletes.append(e)
-                    continue
-                live += 1
-                if not filt.matches(e, spec):
-                    if debug:
+            cols = mf.read_manifest(_localize(tm, path)).columns
+            status = mf.column(cols, "status", mf.STATUS_ADDED)
+            content = mf.column(cols, "content")
+            data, delete_rows = [], []
+            for i, (s, c) in enumerate(zip(status, content)):
+                if s != deleted:
+                    (delete_rows if c in deletes_content else data).append(i)
+            deletes = list(_live_entries(mf.manifest_entries(
+                cols.take(delete_rows, cols.columns)), seq)) \
+                if delete_rows else []
+            decoded: dict = {}
+            kept = filt.keep_rows(
+                spec, cols.struct_names.get("partition", ()),
+                mf.column(cols, "partition", ()),
+                lambda i: mf.row_stats(cols, i), data, decoded)
+            if debug and len(kept) < len(data):
+                paths, keep = cols["file_path"], set(kept)
+                for i in data:
+                    if i not in keep:
                         _log.debug(
                             "skipped data_file %s: partition column with "
                             "transform [%s] or column bounds does not match "
-                            "filter %r", e.data_file.file_path,
+                            "filter %r", paths[i],
                             ", ".join(f.transform for f in spec.fields), where)
-                    continue
-                if lean:
-                    # strip before the entry is pickled back to the driver
-                    e = dataclasses.replace(
-                        e, data_file=strip_file_stats(e.data_file))
-                kept.append(e)
-            yield live, kept, deletes
+            yield len(data), _kept_columns(
+                cols, kept, names, seq, first_row_id, decoded), deletes
 
     return read
+
+
+def _kept_columns(cols, kept: list, names: list, seq: Optional[int],
+                  first_row_id: Optional[int], decoded: dict):
+    """The ``names`` columns of a manifest's ``kept`` rows, with sequence
+    numbers (Iceberg spec: sequence-number inheritance) and v3 first row
+    ids inherited from the manifest (over the FULL manifest: offsets
+    depend on every preceding ADDED entry). A row whose stats pruning
+    decoded keeps them decoded."""
+    if not kept:
+        return None
+    out = cols.take(kept, names)
+    columns = out.columns
+    seqs = columns.get("sequence_number")
+    if seqs is None or None in seqs:
+        columns["sequence_number"] = [
+            seq if s is None else s for s in seqs or [None] * len(kept)]
+    if first_row_id is not None and "first_row_id" in names:
+        ids = mf.inherited_first_row_ids(
+            mf.column(cols, "status", mf.STATUS_ADDED),
+            mf.column(cols, "content"), mf.column(cols, "record_count"),
+            mf.column(cols, "first_row_id"), first_row_id)
+        columns["first_row_id"] = [ids[i] for i in kept]
+    raw = cols.get(avro_io.RAW)
+    if decoded and raw is not None and avro_io.RAW in columns:
+        columns[avro_io.RAW] = [decoded.get(i, raw[i]) for i in kept]
+    return out
 
 
 def _plan_scan(
@@ -985,15 +1168,16 @@ def _plan_scan(
     results = fanout.map_items(spark, items, read, io_path=tm.location,
                                driver_max=manifest_threshold)
 
-    survivors: list[tuple[list, int]] = []  # (entries, spec_id) per manifest
+    chunks: list = []  # (spec_id, kept columns) per data manifest
     pos_deletes: list[tuple[mf.ManifestEntry, int]] = []
     eq_deletes: list[tuple[mf.ManifestEntry, int]] = []
     for m in matching:
         if m.content == mf.MANIFEST_DATA:
             live, kept, deletes = next(results)
             stats["files_total"] += live
-            stats["files_pruned"] += live - len(kept)
-            survivors.append((kept, m.partition_spec_id))
+            stats["files_pruned"] += live - (len(kept) if kept else 0)
+            if kept:
+                chunks.append((m.partition_spec_id, kept))
         else:
             deletes = _live_entries(
                 mf.read_manifest(_localize(tm, m.manifest_path)),
@@ -1004,17 +1188,13 @@ def _plan_scan(
             else:
                 pos_deletes.append((e, m.partition_spec_id))
     stats["delete_files"] = len(pos_deletes) + len(eq_deletes)
+    _check_data_formats(chunks)
 
-    def _surviving():
-        # release each manifest's entries once its tasks exist
-        survivors.reverse()
-        while survivors:
-            kept, spec_id = survivors.pop()
-            for e in kept:
-                yield e, spec_id
+    def build(chunks):
+        return _assemble_tasks(tm, chunks, pos_deletes, eq_deletes, filt,
+                               lean)
 
-    tasks = _assemble_tasks(tm, _surviving(), pos_deletes, eq_deletes, filt,
-                            lean=lean)
+    tasks = _PlannedTasks(chunks, build, bool(pos_deletes or eq_deletes))
     plan = ScanPlan(tm, snapshot, tasks, where, scan_schema_id, stats)
     stats["estimated_rows"] = plan.estimated_row_count()
     return plan

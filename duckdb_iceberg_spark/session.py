@@ -36,17 +36,22 @@ _SUN_PATH_MAX = 107
 #: what Spark appends to the socket directory: ``/.<uuid4>.sock``
 _SOCKET_NAME_LEN = len("/." + "0" * 36 + ".sock")
 _SOCKET_DIR_PREFIX = "spark-py-"
+#: the longest ``spark.python.unix.domain.socket.dir`` Spark 4.1 accepts
+#: (it refuses 61 characters or more, and then every Python task fails)
+_SPARK_SOCKET_DIR_MAX = 60
 _socket_dir_path: str | None = None
 
 
 def _socket_dir_base(tmp: str) -> str:
     """The directory that holds the Python-worker socket directory:
-    ``tmp`` when a socket in ``mkdtemp(prefix=_SOCKET_DIR_PREFIX,
-    dir=tmp)`` (8 random characters) fits in ``sun_path``, else
-    ``/tmp``. A socket path that does not fit fails every bind, and with
-    it every Python task."""
+    ``tmp`` when ``mkdtemp(prefix=_SOCKET_DIR_PREFIX, dir=tmp)`` (8
+    random characters) is short enough for Spark's own limit and a socket
+    in it fits in ``sun_path``, else ``/tmp``. A socket directory that
+    breaks either rule fails every Python task."""
     longest = os.path.join(tmp, _SOCKET_DIR_PREFIX + "x" * 8)
-    if len(os.fsencode(longest)) + _SOCKET_NAME_LEN <= _SUN_PATH_MAX:
+    if (len(longest) <= _SPARK_SOCKET_DIR_MAX
+            and len(os.fsencode(longest)) + _SOCKET_NAME_LEN
+            <= _SUN_PATH_MAX):
         return tmp
     return "/tmp"
 

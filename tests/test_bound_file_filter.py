@@ -140,3 +140,32 @@ def test_predicate_is_bound_once_per_plan(tmp_path, monkeypatch):
         seen.append(dict(counts))
     assert seen[0]["transform_predicate"] > 0 and seen[0]["coerce_literal"] > 0
     assert seen[0] == seen[1]
+
+
+def test_all_null_partition_manifest_is_pruned(tmp_path):
+    """An identity-partition summary with nulls and no bounds says every
+    value is NULL: a comparison prunes the manifest unopened, IS NULL
+    keeps it. Float summaries keep such manifests (NaN has no bound)."""
+    enc = ice_types.encode_bound
+    for name, spark_type, ice_type, value, where in [
+            ("int", T.IntegerType(), "int", 5, "k = 5"),
+            ("double", T.DoubleType(), "double", 5.5, "k = 5.5")]:
+        schema = T.StructType([T.StructField("k", spark_type),
+                               T.StructField("w", T.LongType())])
+        b = enc(ice_type, value)
+        tm = _metadata_only_table(str(tmp_path / name), schema, ["k"], [
+            ({"k": None}, [({2: enc("long", 1)}, {2: enc("long", 9)})]),
+            ({"k": value}, [({1: b}, {1: b})])])
+        snap = tm.select_snapshot()
+        plan = plan_scan(tm, snap, where)
+        assert len(plan.tasks) == 1 and plan.stats["files_pruned"] == \
+            (1 if name == "double" else 0)
+        assert plan.stats["manifests_pruned"] == \
+            (0 if name == "double" else 1), name
+        if name == "int":
+            nulls = plan_scan(tm, snap, "k IS NULL")
+            assert nulls.stats["manifests_pruned"] == 1
+            assert [t.data_file.partition for t in nulls.tasks] == \
+                [{"k": None}]
+            assert plan_scan(tm, snap, "k IS NOT NULL").stats[
+                "manifests_pruned"] == 1

@@ -5,6 +5,7 @@ Metadata only: no Spark session and no data files."""
 import copy
 import dataclasses
 import datetime as dt
+import gc
 import io
 import json
 import pickle
@@ -67,7 +68,7 @@ def _undecoded(df) -> bool:
 def _read_eager(path, monkeypatch):
     with monkeypatch.context() as m:
         m.setattr(mf, "_read_avro_clean",
-                  lambda p, what: avro_io.read_avro_file(p))
+                  lambda p, what: avro_io.read_avro_file(p, raw=()))
         mf.clear_manifest_cache()
         out = mf.read_manifest(path)
     mf.clear_manifest_cache()
@@ -189,8 +190,8 @@ def test_map_typed_and_non_contiguous_stats_decode_eagerly(tmp_path,
             ("split", split_run, lambda n, kv: kv)]:
         dst = str(tmp_path / f"{name}.avro")
         _rewrite(src, dst, edit_fields, edit_stats)
-        _, _, records = avro_io.read_avro_file(dst, raw=mf._LAZY_STATS)
-        assert avro_io.RAW not in records[0]["data_file"], name
+        _, _, table = avro_io.read_avro_file(dst, raw=mf._LAZY_STATS)
+        assert avro_io.RAW not in table, name
         mf.clear_manifest_cache()
         got = mf.read_manifest(dst)
         assert not any(type(v) is avro_io.RawRun
@@ -248,9 +249,10 @@ def test_run_skips_sized_blocks_and_leaves_other_types_eager():
                 body.getvalue())
 
     [eager] = avro_io.read_avro_file(data)[2]
-    [lazy] = avro_io.read_avro_file(data, raw=("c", "b"))[2]
-    assert lazy["a"] == 1 and lazy["z"] == "end"
-    assert avro_io.decode_run(lazy[avro_io.RAW]) == {
+    lazy = avro_io.read_avro_file(data, raw=("c", "b"))[2]
+    assert len(lazy) == 1 and lazy["a"] == [1] and lazy["z"] == ["end"]
+    run = avro_io.RawRun(lazy.run_key, lazy[avro_io.RAW][0])
+    assert avro_io.decode_run(run) == {
         "c": {1: 10, 2: 300}, "b": {7: b"\x01"}}
     assert eager["c"] == [{"key": 1, "value": 10}, {"key": 2, "value": 300}]
 
@@ -260,16 +262,30 @@ def test_run_skips_sized_blocks_and_leaves_other_types_eager():
     avro_io._encode(body, other[1]["type"], [{"key": "x", "value": 1.5}])
     data = _ocf({"type": "record", "name": "r", "fields": other},
                 body.getvalue())
-    assert avro_io.read_avro_file(data, raw=("s",))[2] == \
+    table = avro_io.read_avro_file(data, raw=("s",))[2]
+    assert avro_io.RAW not in table
+    assert [{"a": a, "s": kv} for a, kv in zip(table["a"], table["s"])] == \
         avro_io.read_avro_file(data)[2]
 
 
 def _unpickled_size(blob: bytes) -> int:
-    tracemalloc.start()
-    kept = pickle.loads(blob)  # noqa: F841 (held while measured)
-    size = tracemalloc.get_traced_memory()[0]
-    tracemalloc.stop()
-    return size
+    """Bytes an unpickled ``blob`` holds: the least of three measurements
+    with the cyclic collector off, so allocations elsewhere in the process
+    during one window do not count."""
+    sizes = []
+    was_enabled = gc.isenabled()
+    gc.disable()
+    try:
+        for _ in range(3):
+            tracemalloc.start()
+            kept = pickle.loads(blob)  # noqa: F841 (held while measured)
+            sizes.append(tracemalloc.get_traced_memory()[0])
+            tracemalloc.stop()
+            del kept
+    finally:
+        if was_enabled:
+            gc.enable()
+    return min(sizes)
 
 
 def test_undecoded_entry_pickles_as_bytes(tmp_path):

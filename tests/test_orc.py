@@ -198,33 +198,26 @@ def test_unsupported_data_format_refusal_text(spark, sf_dir, tmp_path):
     loc = str(tmp_path / "region_avro_claim")
     write_iceberg(src, loc)
     tm = load_table_metadata(loc)
-    # forge the format field in-memory and re-plan
     snap = tm.select_snapshot()
     plan = plan_scan(tm, snap)
     assert plan.tasks
     from duckdb_iceberg_spark.metadata import manifest as mf
 
-    real = mf.read_manifest
-
-    def forged(path, *a, **kw):
-        entries = real(path, *a, **kw)
+    # forge the format field in the manifests (the planner reads their
+    # columns, not entry objects) and re-plan
+    for m in mf.read_manifest_list(snap.manifest_list):
+        entries = mf.read_manifest(m.manifest_path)
         for e in entries:
             if e.data_file.content == mf.CONTENT_DATA:
                 e.data_file.file_format = "CSV"
-        return entries
-
-    import duckdb_iceberg_spark.plans.scan_plan as sp
-
-    orig = sp.mf.read_manifest
-    sp.mf.read_manifest = forged
-    try:
-        with pytest.raises(
-                NotImplementedError,
-                match=r"File format 'CSV' not supported, only supports "
-                      r"'parquet', 'orc' and 'avro' currently"):
-            plan_scan(tm, snap)
-    finally:
-        sp.mf.read_manifest = orig
+        mf.write_manifest(m.manifest_path, entries, tm,
+                          tm.partition_specs[m.partition_spec_id])
+    mf.clear_manifest_cache()
+    with pytest.raises(
+            NotImplementedError,
+            match=r"File format 'CSV' not supported, only supports "
+                  r"'parquet', 'orc' and 'avro' currently"):
+        plan_scan(tm, snap)
 
 
 def test_unsupported_delete_format_refusal_text(spark, sf_dir, tmp_path):

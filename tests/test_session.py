@@ -43,15 +43,24 @@ def test_opt_out_and_cluster_masters_make_no_socket_dir(monkeypatch):
 
 
 def test_socket_dir_base_keeps_socket_paths_inside_sun_path():
-    def socket_path(base):
-        return os.path.join(base, session._SOCKET_DIR_PREFIX + "x" * 8,
-                            f".{uuid.uuid4()}.sock")
+    """The socket directory stays within Spark's 60-character limit on
+    ``spark.python.unix.domain.socket.dir`` (the tighter rule here) and
+    its sockets within the 107-byte ``sun_path``."""
+    def socket_dir(base):
+        return os.path.join(base, session._SOCKET_DIR_PREFIX + "x" * 8)
 
     assert session._socket_dir_base("/tmp") == "/tmp"
-    fits = "/" + "a" * (107 - len(socket_path("/")) - 1)
-    assert len(socket_path(fits)) == 107
+    fits = "/" + "a" * (60 - len(socket_dir("/")) - 1)
+    assert len(socket_dir(fits)) == 60
     assert session._socket_dir_base(fits) == fits
+    assert len(socket_dir(fits + "a")) == 61
     assert session._socket_dir_base(fits + "a") == "/tmp"
+    # within sun_path (a 43-46 character TMPDIR) but over Spark's limit
+    for n in range(43, 47):
+        tmp = "/" + "b" * (n - 1)
+        sock = os.path.join(socket_dir(tmp), f".{uuid.uuid4()}.sock")
+        assert len(sock) <= 107
+        assert session._socket_dir_base(tmp) == "/tmp"
     # a perfbench-style TMPDIR under a checkout is already too long
     work = "/home/user/checkouts/repo/.perfbench_work/plan_large-31-12345/tmp"
     assert session._socket_dir_base(work) == "/tmp"
